@@ -37,6 +37,14 @@ class CachedSearcher:
     """LRU page server over one index snapshot."""
 
     def __init__(self, index, size: int = 512, window: int = 80):
+        if hasattr(index, "field_stats"):
+            # the page kernel is wand_topk over plain analyzed terms; a
+            # multi-field dictionary holds only field-prefixed keys, so
+            # every lookup would miss and every page come back empty
+            raise ValueError(
+                "CachedSearcher serves single-field indexes only; query a "
+                "multi-field index through dismax_topk / "
+                "solr_select_physical(qf=...)")
         self.index = index
         self.size = int(size)
         self.window = int(window)
@@ -98,9 +106,14 @@ class SearcherManager:
     (``plans/generations.py append_delta`` / ``maybe_compact``), opens a
     fresh searcher over the new chain head and AUTOWARMS it from the
     retiring searcher's most-recently-used request signatures BEFORE the
-    swap (``solrconfig.xml:38-43`` ``autowarmCount``) — so the first
-    page requests after a commit hit the warmed window instead of
-    re-running the kernel.
+    swap — so the first page requests after a commit hit the warmed
+    window instead of re-running the kernel.
+
+    Provenance: autowarming is the Solr mechanism modelled here
+    (``autowarmCount`` on the caches, ``solrconfig.xml:38-43``); the
+    reference config itself ships ``autowarmCount="0"``, so a searcher
+    there starts cold on every commit. ``autowarm_count=0`` reproduces
+    that; the default of 16 is this engine's choice, not the reference's.
 
     The warm cost is bounded: ``autowarm_count`` kernel runs of
     ``window`` rows each, exactly Solr's regeneration bill. The swap is

@@ -106,6 +106,15 @@ def _resolve_range_buckets(range_buckets: int | str, spark: SparkSession,
     return max(1, par_term, mem_term)
 
 
+def union_by_name(parts: list) -> DataFrame:
+    """Union same-kind stage tables of several generations by column
+    name (a column absent from an older generation reads as null)."""
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
+    return out
+
+
 class InvertedIndex:
     """Handle to a built physical index (paths + cached stats).
 
@@ -118,20 +127,25 @@ class InvertedIndex:
     ``dictionary``/``stats`` are the newest store's (committed fully
     adjusted at append time), and the query kernels drop deleted ids via
     :meth:`deleted_array`.
+
+    The chain walk, readers and tombstone masks serve every index kind.
+    What differs per kind — stats loading, block-max cap rescaling, and
+    the few lifecycle hooks the generation code calls (``_tokenize``,
+    ``_doc_rows``, ``_adjusted_stats``, ``_build_segments``,
+    ``_kind_meta``, ``_built_meta``) — is overridden by
+    ``plans/multifield.py MultiFieldIndex``.
     """
 
     def __init__(self, store: IndexStore, spark: SparkSession, chain: str):
         self.store = store
         self.spark = spark
         self.chain = chain
-        stats = store.read_stage(spark, "stats").collect()[0]
-        self.n_docs = int(stats["n_docs"])
-        self.avgdl = float(stats["avgdl"])
         # build-time salt count from the manifest: query paths size their
         # salt repartition from it (n_salts caps useful parallelism)
         meta = self.store.get_meta()
         self.n_salts = int(meta.get("n_salts", 16))
-        self.has_positions = bool(meta.get("positions", False))
+        self._stats_rows = store.read_stage(spark, "stats").collect()
+        self._load_stats(meta)
         # generation chain, newest first (self.store == stores[0]); a
         # plain build has exactly one store and every property reduces to
         # the single-stage read
@@ -146,15 +160,29 @@ class InvertedIndex:
             self.stores.append(ps)
             parent = ps.get_meta().get("parent")
 
-    def _gen_avgdl(self, store: IndexStore) -> float:
-        """The avgdl a generation's block-max caps were BUILT with (its
-        ``max_wnorm`` values bound BM25 weights only at that avgdl)."""
-        v = store.get_meta().get("built_avgdl")
-        if v is not None:
-            return float(v)
-        return float(
-            store.read_stage(self.spark, "stats").collect()[0]["avgdl"]
-        )
+    def _load_stats(self, meta: dict) -> None:
+        self.n_docs = int(self._stats_rows[0]["n_docs"])
+        self.avgdl = float(self._stats_rows[0]["avgdl"])
+        self.has_positions = bool(meta.get("positions", False))
+
+    def _rescaled_segments(self, store: IndexStore) -> DataFrame:
+        """One generation's segments with caps kept upper bounds at the
+        CURRENT avgdl. BM25 weight grows with avgdl, bounded by the ratio
+        w(avgdl_now)/w(avgdl_built) <= avgdl_now/avgdl_built, so scaling
+        a generation's caps by max(1, ratio) keeps block-max pruning
+        exact, merely slackened by the corpus drift since that generation
+        was built (a tiered merge rebuilds caps tight again)."""
+        seg = store.read_stage(self.spark, "segments")
+        built = store.get_meta().get("built_avgdl")
+        if built is None:
+            built = store.read_stage(self.spark, "stats").collect()[0][
+                "avgdl"]
+        scale = self.avgdl / max(float(built), 1e-12)
+        if scale > 1.0:
+            seg = seg.withColumn(
+                "max_wnorm", F.col("max_wnorm") * F.lit(float(scale))
+            )
+        return seg
 
     @property
     def segments(self) -> DataFrame:
@@ -164,53 +192,28 @@ class InvertedIndex:
         # group — the kernel invariant — holds across generations because
         # append_delta assigns doc ids ABOVE every ancestor's max (updated
         # docs get fresh ids; their old ids are tombstoned, never reused).
-        # Cap safety: BM25 weight grows with avgdl, bounded by the ratio
-        # w(avgdl_now)/w(avgdl_built) <= avgdl_now/avgdl_built, so scaling
-        # a generation's caps by max(1, ratio) keeps them upper bounds
-        # under the CURRENT avgdl — block-max pruning stays exact, merely
-        # slackened by the corpus drift since that generation was built
-        # (a tiered merge rebuilds caps tight again).
-        parts = []
-        for st in self.stores:
-            seg = st.read_stage(self.spark, "segments")
-            scale = self.avgdl / max(self._gen_avgdl(st), 1e-12)
-            if scale > 1.0:
-                seg = seg.withColumn(
-                    "max_wnorm", F.col("max_wnorm") * F.lit(float(scale))
-                )
-            parts.append(seg)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        return union_by_name(
+            [self._rescaled_segments(st) for st in self.stores])
+
+    def _live(self, stage: str) -> DataFrame:
+        out = union_by_name(
+            [st.read_stage(self.spark, stage) for st in self.stores])
+        dels = self.deletes_df()
+        if dels is not None:
+            out = out.join(F.broadcast(dels), "doc_id", "left_anti")
         return out
 
     @property
     def docs(self) -> DataFrame:
         if len(self.stores) == 1:
             return self.store.read_stage(self.spark, "docs")
-        out = None
-        for st in self.stores:
-            d = st.read_stage(self.spark, "docs")
-            out = d if out is None else out.unionByName(
-                d, allowMissingColumns=True
-            )
-        dels = self.deletes_df()
-        if dels is not None:
-            out = out.join(F.broadcast(dels), "doc_id", "left_anti")
-        return out
+        return self._live("docs")
 
     def live_tf(self) -> DataFrame:
         """Chain-wide PACKED tf rows of live (non-deleted) docs — the
         input a tiered merge / full rebuild re-segments (compact rows;
         no re-tokenization ever)."""
-        out = None
-        for st in self.stores:
-            t = st.read_stage(self.spark, "tf")
-            out = t if out is None else out.unionByName(t)
-        dels = self.deletes_df()
-        if dels is not None:
-            out = out.join(F.broadcast(dels), "doc_id", "left_anti")
-        return out
+        return self._live("tf")
 
     @property
     def filters(self) -> DataFrame | None:
@@ -220,15 +223,10 @@ class InvertedIndex:
         ``fq`` clauses. None when absent; for a generation chain, every
         generation must carry the stage (else None — the fq caller then
         fails loudly instead of silently missing newer docs)."""
-        parts = []
-        for st in self.stores:
-            if not st.stage_complete("filters"):
-                return None
-            parts.append(st.read_stage(self.spark, "filters"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        if not all(st.stage_complete("filters") for st in self.stores):
+            return None
+        return union_by_name(
+            [st.read_stage(self.spark, "filters") for st in self.stores])
 
     def deletes_df(self) -> DataFrame | None:
         """Cumulative tombstoned doc ids (newest generation's ``deletes``
@@ -315,6 +313,58 @@ class InvertedIndex:
             self._dict_cached = cached
         return cached
 
+    # -- per-kind generation lifecycle hooks (plans/generations.py) -------
+
+    def _kind_meta(self) -> dict:
+        """Build parameters every generation of the chain inherits."""
+        return {"positions": self.has_positions}
+
+    def _tokenize(self, with_ids: DataFrame, text_col: str,
+                  html_col: str | None) -> DataFrame:
+        """Packed tf rows of a delta, analyzed like the base."""
+        return tokenize_and_count_packed(
+            with_ids, key_col="doc_id", text_col=text_col, chain=self.chain,
+            html_col=html_col, positions=self.has_positions,
+        )
+
+    def _doc_rows(self, tf: DataFrame) -> DataFrame:
+        """The docs-stage rows of a tf stage (one packed row per doc)."""
+        return tf.select("doc_id", "doc_len")
+
+    def _adjusted_stats(self, delta_tf: DataFrame,
+                        removed_tf: DataFrame | None) -> DataFrame:
+        """This index's stats plus the delta's tf rows minus the
+        tombstoned docs' tf rows."""
+        def agg(tf):
+            r = tf.agg(F.count("*").alias("n"),
+                       F.sum("doc_len").alias("t")).collect()[0]
+            return int(r["n"]), int(r["t"] or 0)
+
+        n_add, t_add = agg(delta_tf)
+        n_rm, t_rm = agg(removed_tf) if removed_tf is not None else (0, 0)
+        n_docs = self.n_docs - n_rm + n_add
+        total = int(self._stats_rows[0]["total_tokens"]) - t_rm + t_add
+        avgdl = (float(total) / n_docs) if n_docs else 0.0
+        return self.spark.createDataFrame(
+            [(n_docs, avgdl, total)],
+            "n_docs long, avgdl double, total_tokens long",
+        )
+
+    def _built_meta(self, stats_rows: list) -> dict:
+        """Manifest record of the avgdl a generation's caps were built at."""
+        return {"built_avgdl": float(stats_rows[0]["avgdl"])}
+
+    def _build_segments(self, tf: DataFrame, stats_rows: list,
+                        n_salts: int, block_size: int,
+                        range_buckets: int | str, n_rows: int) -> DataFrame:
+        """Segments of packed tf rows, caps built tight at ``stats_rows``."""
+        return build_segments_packed(
+            tf, avgdl=float(stats_rows[0]["avgdl"]), n_salts=n_salts,
+            block_size=block_size,
+            range_buckets=_resolve_range_buckets(
+                range_buckets, self.spark, n_salts, n_rows),
+        )
+
 
 def _filter_packed(with_ids: DataFrame, filter_cols) -> DataFrame:
     """Synthetic packed-tf rows for METADATA filter postings: one
@@ -341,13 +391,17 @@ def _filter_packed(with_ids: DataFrame, filter_cols) -> DataFrame:
 
 
 def open_index(spark: SparkSession, path: str) -> InvertedIndex:
-    """Re-open a committed index (or generation-chain head) from its
-    store directory — analyzer chain and build parameters come from the
-    manifest, so a restarted driver needs only the path (the embedded
-    ``SolrCoreProxy`` re-open analog, ``MarcImporter.java:456-491``)."""
+    """Re-open a committed index (or generation-chain head) of either
+    kind from its store directory — the kind, analyzer chain and build
+    parameters come from the manifest, so a restarted driver needs only
+    the path (the embedded ``SolrCoreProxy`` re-open analog,
+    ``MarcImporter.java:456-491``)."""
     store = IndexStore(path)
-    chain = store.get_meta().get("chain", "text")
-    return InvertedIndex(store, spark, chain)
+    meta = store.get_meta()
+    cls = InvertedIndex
+    if meta.get("multifield"):
+        from .multifield import MultiFieldIndex as cls
+    return cls(store, spark, meta.get("chain", "text"))
 
 
 def build_index(
@@ -670,8 +724,7 @@ def incremental_update(
     ``delta_docs`` rows REPLACE base docs with the same id (upsert).
     """
     # chain-aware reads: for a generational index (append_delta) these
-    # union every generation's stages and drop tombstoned ids, so this
-    # full-merge path doubles as the FORCE-MERGE (Solr optimize) — the
+    # union every generation's stages and drop tombstoned ids, so the
     # output is always a single-generation snapshot with deletes applied
     # physically and caps rebuilt tight at the current avgdl
     old_tf = index.live_tf()  # packed per-doc rows

@@ -32,184 +32,112 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import tokenize_and_count_packed_fields
 from ..operators.segments import build_segments_packed
-from .build import _resolve_range_buckets, assign_doc_ids
+from .build import InvertedIndex, _resolve_range_buckets, assign_doc_ids
 from .lineage import IndexStore, config_fingerprint
 
 FIELD_SEP = "\x1f"
 
 
-class MultiFieldIndex:
-    """Handle to a built multi-field index: same duck-typed surface the
-    block-max scorer uses (``spark``, ``n_salts``, ``segments``,
-    ``cached_dictionary``) plus per-field collection stats."""
+class MultiFieldIndex(InvertedIndex):
+    """Handle to a built multi-field index: the :class:`InvertedIndex`
+    chain handle (same readers, tombstone masks and generation
+    lifecycle) with per-FIELD collection stats, per-field cap rescaling
+    and the per-(doc, field) tf layout behind the lifecycle hooks."""
 
-    def __init__(self, store: IndexStore, spark: SparkSession, chain: str):
-        self.store = store
-        self.spark = spark
-        self.chain = chain
-        meta = store.get_meta()
-        self.n_salts = int(meta.get("n_salts", 16))
+    def _load_stats(self, meta: dict) -> None:
         self.sep = meta.get("field_sep", FIELD_SEP)
         self.fields = list(meta.get("fields", []))
+        self.field_limits = meta.get("field_limits") or {}
         # per-field (n_docs, avgdl) — a handful of rows, driver-resident
         self.field_stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-            for r in store.read_stage(spark, "stats").collect()
+            for r in self._stats_rows
         }
-        # generation chain, newest first (append_delta_multifield) —
-        # same model as plans/build.py InvertedIndex
-        self.stores = [self.store]
-        seen = {self.store.path}
-        parent = meta.get("parent")
-        while parent:
-            if parent in seen:
-                raise ValueError(f"generation chain cycle at {parent}")
-            seen.add(parent)
-            ps = IndexStore(parent)
-            self.stores.append(ps)
-            parent = ps.get_meta().get("parent")
 
-    def _gen_field_avgdl(self, store: IndexStore) -> dict:
-        """Per-field avgdl a generation's caps were built with."""
-        v = store.get_meta().get("built_field_avgdl")
-        if v:
-            return {str(k): float(x) for k, x in v.items()}
-        return {r["field"]: float(r["avgdl"])
-                for r in store.read_stage(self.spark, "stats").collect()}
+    def _rescaled_segments(self, store: IndexStore) -> DataFrame:
+        """Per-FIELD cap rescaling under corpus drift (the single-field
+        argument, applied per field since each field has its own avgdl):
+        scale_f = max(1, avgdl_now_f / avgdl_built_f), selected by the
+        term-key's field prefix."""
+        seg = store.read_stage(self.spark, "segments")
+        built = store.get_meta().get("built_field_avgdl") or {
+            r["field"]: r["avgdl"]
+            for r in store.read_stage(self.spark, "stats").collect()}
+        fld = F.substring_index(F.col("term"), self.sep, 1)
+        scale_expr = None
+        for fname, (_, avgdl_now) in self.field_stats.items():
+            s = avgdl_now / max(float(built.get(fname, avgdl_now)), 1e-12)
+            if s > 1.0:
+                case = (fld == fname, F.lit(s))
+                scale_expr = (F.when(*case) if scale_expr is None
+                              else scale_expr.when(*case))
+        if scale_expr is None:
+            return seg
+        return seg.withColumn(
+            "max_wnorm", F.col("max_wnorm") * scale_expr.otherwise(1.0))
 
-    @property
-    def segments(self) -> DataFrame:
-        if len(self.stores) == 1:
-            return self.store.read_stage(self.spark, "segments")
-        # per-FIELD cap rescaling under corpus drift (the single-field
-        # chain's avgdl argument, applied per field since each field has
-        # its own avgdl): scale_f = max(1, avgdl_now_f / avgdl_built_f),
-        # selected by the term-key's field prefix
-        parts = []
-        for st in self.stores:
-            seg = st.read_stage(self.spark, "segments")
-            built = self._gen_field_avgdl(st)
-            scale_expr = None
-            needs = False
-            fld = F.substring_index(F.col("term"), self.sep, 1)
-            for fname, (_, avgdl_now) in self.field_stats.items():
-                s = avgdl_now / max(built.get(fname, avgdl_now), 1e-12)
-                if s > 1.0:
-                    needs = True
-                cond = F.when(fld == fname, F.lit(float(max(1.0, s))))
-                scale_expr = (cond if scale_expr is None
-                              else scale_expr.when(
-                                  fld == fname, F.lit(float(max(1.0, s)))))
-            if needs and scale_expr is not None:
-                seg = seg.withColumn(
-                    "max_wnorm",
-                    F.col("max_wnorm") * scale_expr.otherwise(F.lit(1.0)))
-            parts.append(seg)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+    def _kind_meta(self) -> dict:
+        return {"fields": self.fields, "field_sep": self.sep,
+                "field_limits": self.field_limits, "multifield": True}
 
-    @property
-    def docs(self) -> DataFrame:
-        if len(self.stores) == 1:
-            return self.store.read_stage(self.spark, "docs")
-        out = None
-        for st in self.stores:
-            d = st.read_stage(self.spark, "docs")
-            out = d if out is None else out.unionByName(
-                d, allowMissingColumns=True)
-        dels = self.deletes_df()
-        if dels is not None:
-            out = out.join(F.broadcast(dels), "doc_id", "left_anti")
-        return out
+    def _tokenize(self, with_ids: DataFrame, text_col: str,
+                  html_col: str | None) -> DataFrame:
+        if html_col is not None:
+            raise ValueError("a multi-field index tokenizes text_col; "
+                             "html_col is not supported")
+        return tokenize_and_count_packed_fields(
+            with_ids, [(n, self.field_limits.get(n)) for n in self.fields],
+            key_col="doc_id", text_col=text_col, chain=self.chain,
+            sep=self.sep)
 
-    def live_tf(self) -> DataFrame:
-        out = None
-        for st in self.stores:
-            t = st.read_stage(self.spark, "tf")
-            out = t if out is None else out.unionByName(t)
-        dels = self.deletes_df()
-        if dels is not None:
-            out = out.join(F.broadcast(dels), "doc_id", "left_anti")
-        return out
+    def _doc_rows(self, tf: DataFrame) -> DataFrame:
+        # one packed row per doc within any single field
+        return tf.filter(F.col("field") == self.fields[0]).select("doc_id")
 
-    def deletes_df(self) -> DataFrame | None:
-        if self.store.stage_complete("deletes"):
-            return self.store.read_stage(self.spark, "deletes")
-        return None
+    def _adjusted_stats(self, delta_tf: DataFrame,
+                        removed_tf: DataFrame | None) -> DataFrame:
+        def agg(tf, n, t):
+            return tf.groupBy("field").agg(F.count("*").alias(n),
+                                           F.sum("doc_len").alias(t))
 
-    def deleted_array(self):
-        """Sorted tombstone ids for kernel masking (see
-        plans/build.py InvertedIndex.deleted_array)."""
-        if hasattr(self, "_del_arr"):
-            return self._del_arr
-        import numpy as np
-
-        dels = self.deletes_df()
-        if dels is None:
-            self._del_arr = None
+        adj = self.store.read_stage(self.spark, "stats").join(
+            agg(delta_tf, "d_n", "d_t"), "field", "left")
+        if removed_tf is not None:
+            adj = adj.join(agg(removed_tf, "r_n", "r_t"), "field", "left")
         else:
-            arr = np.sort(np.asarray(
-                [r["doc_id"] for r in dels.select("doc_id").collect()],
-                dtype=np.int64))
-            self._del_arr = arr if arr.size else None
-        return self._del_arr
+            adj = adj.withColumn("r_n", F.lit(0)).withColumn(
+                "r_t", F.lit(0))
+        return adj.select(
+            "field",
+            (F.col("n_docs") + F.coalesce("d_n", F.lit(0))
+             - F.coalesce("r_n", F.lit(0))).alias("n_docs"),
+            (F.col("total_tokens") + F.coalesce("d_t", F.lit(0))
+             - F.coalesce("r_t", F.lit(0))).alias("total_tokens"),
+        ).withColumn(
+            "avgdl",
+            F.when(F.col("n_docs") > 0,
+                   F.col("total_tokens").cast("double")
+                   / F.col("n_docs")).otherwise(F.lit(0.0)),
+        ).select("field", "n_docs", "avgdl", "total_tokens")
 
-    def del_postings(self) -> DataFrame | None:
-        """Index-resident tombstone postings (see plans/build.py
-        InvertedIndex.del_postings)."""
-        if self.store.stage_complete("del_segments"):
-            return self.store.read_stage(self.spark, "del_segments")
-        return None
+    def _built_meta(self, stats_rows: list) -> dict:
+        return {"built_field_avgdl": {r["field"]: float(r["avgdl"])
+                                      for r in stats_rows}}
 
-    def n_deletes(self) -> int:
-        if not self.store.stage_complete("deletes"):
-            return 0
-        try:
-            return int(self.store.lineage()["stages"]["deletes"]["rows"])
-        except (KeyError, TypeError, ValueError):
-            return int(self.deletes_df().count())
-
-    def delete_masks(self):
-        """(array, postings) with at most one non-None — small sets ship
-        as a driver array, large sets stay index-resident per salt (see
-        plans/build.py InvertedIndex.delete_masks)."""
-        dels = self.deletes_df()
-        if dels is None:
-            return None, None
-        cap = int(self.spark.conf.get("spark.marc.delArrayMaxIds",
-                                      "262144"))
-        tbl = self.del_postings()
-        if tbl is not None and self.n_deletes() > cap:
-            return None, tbl
-        return self.deleted_array(), None
-
-    @property
-    def filters(self) -> DataFrame | None:
-        """Unscored fq filter postings (``filter_cols`` build option) —
-        same contract as the single-field index's ``filters`` stage
-        (chain: every generation must carry it, else None)."""
-        parts = []
-        for st in self.stores:
-            if not st.stage_complete("filters"):
-                return None
-            parts.append(st.read_stage(self.spark, "filters"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
-
-    @property
-    def dictionary(self) -> DataFrame:
-        return self.store.read_stage(self.spark, "dictionary")
-
-    def cached_dictionary(self) -> DataFrame:
-        cached = getattr(self, "_dict_cached", None)
-        if cached is None:
-            cached = self.dictionary.persist()
-            self._dict_cached = cached
-        return cached
+    def _build_segments(self, tf: DataFrame, stats_rows: list,
+                        n_salts: int, block_size: int,
+                        range_buckets: int | str, n_rows: int) -> DataFrame:
+        favg = self.spark.createDataFrame(
+            [(r["field"], float(r["avgdl"])) for r in stats_rows],
+            "field string, _favgdl double")
+        return build_segments_packed(
+            tf.join(F.broadcast(favg), "field"), avgdl=0.0,
+            n_salts=n_salts, block_size=block_size,
+            range_buckets=_resolve_range_buckets(
+                range_buckets, self.spark, n_salts,
+                n_rows // max(len(self.fields), 1)),
+            avgdl_col="_favgdl",
+        )
 
 
 def build_multifield_index(
@@ -363,14 +291,4 @@ def build_multifield_index(
             "filter_cols": list(filter_cols or []),
         })
 
-    return MultiFieldIndex(store, spark, chain)
-
-
-def open_multifield_index(spark: SparkSession, path: str) -> MultiFieldIndex:
-    """Re-open a committed multi-field index (or generation-chain head)
-    from its store directory — fields, separator and build parameters
-    come from the manifest (the multifield twin of
-    ``plans/build.py open_index``)."""
-    store = IndexStore(path)
-    chain = store.get_meta().get("chain", "text")
     return MultiFieldIndex(store, spark, chain)

@@ -48,7 +48,7 @@ class SelectResponse:
     highlights: DataFrame | None = None  # (key, matched_term, match_pos, snippet)
     facet_ranges: DataFrame | None = None  # (facet_field, bucket_start, count)
     facet_pivots: DataFrame | None = None  # (pivot, outer_value, outer_count, inner_value, count)
-    next_cursor_mark: "tuple | None" = None  # cursorMark paging: last page row's sort-key values
+    next_cursor_mark: "tuple | str | None" = None  # last row's sort-key values, or the sent mark when exhausted
     params: dict = field(default_factory=dict)
 
     def response_frame(self, key_col: str = "doc_id") -> DataFrame:
@@ -113,8 +113,9 @@ def solr_select(
     order (keyset predicate BEFORE the top-k —
     ``functions/sort_spec.cursor_page`` — so deep pages never pay a
     top-(start+rows) sort), and ``next_cursor_mark`` carries the last
-    row's sort-key values. ``start`` must be 0 with a cursor (Solr
-    rejects the combination too).
+    row's sort-key values — or, on an empty page, the mark that was
+    sent (``"*"`` included; Solr's exhausted-cursor contract). ``start``
+    must be 0 with a cursor (Solr rejects the combination too).
 
     ``qf_fields``: edismax multi-field mode — the reference's DEFAULT
     handler (``solrconfig.xml:67-83``: edismax ``qf`` with per-field
@@ -123,7 +124,8 @@ def solr_select(
     DisjunctionMaxQuery sum (per-field df/avgdl, ``max + tie*rest``) and
     everything downstream (fq semi-join, paging, facet battery over the
     match set, highlighting) composes unchanged — one request, one
-    scored match set.
+    scored match set. The ``tie`` default of 0.1 is this engine's; the
+    reference handler ships ``tie=0.01``, so pass it for parity.
 
     ``q=None`` (or ``"*:*"``) is MatchAllDocsQuery: every fq-surviving
     doc matches at score 1.0 (Lucene's constant), ordered by key — the
@@ -207,8 +209,10 @@ def solr_select(
         page = page.withColumn(
             "rank", F.row_number().over(Window.orderBy(*sort_columns(sort))))
         last = page.orderBy(F.desc("rank")).limit(1).collect()
+        # an exhausted cursor echoes the mark it was sent ("*" included),
+        # as Solr does
         next_cursor = (tuple(last[0][f] for f in fields) if last
-                       else (cur if cur is not None else None))
+                       else (cur if cur is not None else "*"))
         page = page.select(key_col, "score", "rank")
     elif sort:
         from ..functions.sort_spec import parse_sort_spec, sort_columns
@@ -495,9 +499,10 @@ def solr_select_physical(
         if cursor_mark is not None:
             fnames = [f for f, _ in fields]
             last = page.orderBy(F.desc("rank")).limit(1).collect()
+            # exhausted: echo the sent mark ("*" included), as Solr does
             next_cursor = (tuple(last[0][f] for f in fnames) if last
                            else (tuple(cursor_mark)
-                                 if cursor_mark != "*" else None))
+                                 if cursor_mark != "*" else "*"))
     elif qf is not None:
         page = dismax_topk(index, q, qf=qf, tie=tie, k=start + rows,
                            min_match=min_match, filter_queries=fqs,

@@ -2488,7 +2488,7 @@ def q_select_request(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25_dismax_gen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edismax dismax over a THREE-GENERATION MULTI-FIELD index chain
-    (plans/generations.py append_delta_multifield): base build on
+    (plans/generations.py append_delta): base build on
     doc_id<300, then two O(|delta|) appends — half the remaining docs
     plus text UPSERTS of every (doc_id%50==7) base doc, then the other
     half plus DELETES of every (doc_id%50==13) base doc. Per-FIELD
@@ -2500,7 +2500,7 @@ def q_bm25_dismax_gen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from .operators.wand import dismax_topk
-    from .plans.generations import append_delta_multifield
+    from .plans.generations import append_delta
     from .plans.multifield import build_multifield_index
 
     docs = _load(spark, sf_dir, "documents").withColumn(
@@ -2525,11 +2525,11 @@ def q_bm25_dismax_gen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         fields=[("title", 8), ("body", None)], key_col="url",
         text_col="text", chain="simple", n_salts=8, block_size=64,
     )
-    idx = append_delta_multifield(
+    idx = append_delta(
         spark, idx, _scratch(f"msps_dmgen1_{tag}"),
         delta_docs=new1.unionByName(mods), key_col="url",
     )
-    idx = append_delta_multifield(
+    idx = append_delta(
         spark, idx, _scratch(f"msps_dmgen2_{tag}"),
         delta_docs=new2, delete_keys=dels, key_col="url",
     )

@@ -215,6 +215,7 @@ def stream_index_generations(
     keep: int = 1,
     schema=None,
     searcher_manager=None,
+    fields=None,
 ):
     """The Solr autoCommit loop as Structured Streaming: each micro-batch
     of pages becomes ONE index GENERATION (``plans/generations.py
@@ -224,6 +225,12 @@ def stream_index_generations(
     ``<autoCommit maxDocs=20000 openSearcher=false>`` + background-merge
     lifecycle of the reference's Solr core
     (``profiling/solr/conf/solrconfig.xml:30-33``).
+
+    ``fields``: a ``build_multifield_index`` field list
+    ``[(name, token_limit), ...]`` makes the chain a MULTI-FIELD (edismax)
+    index — the reference's default handler index; it is used only for
+    the FIRST batch's base build, later generations inherit it from the
+    base manifest. ``None`` builds the single-field index.
 
     Durability/restart: the live chain head is published in
     ``<index_root>/CURRENT`` via atomic rename AFTER each batch commits
@@ -237,16 +244,18 @@ def stream_index_generations(
     ``searcher_manager``: optional
     :class:`..operators.resultcache.SearcherManager` — each published
     batch triggers its ``commit`` (new searcher + autowarm), the Solr
-    newSearcher/autowarmCount lifecycle.
+    newSearcher/autowarmCount lifecycle. It serves the single-field
+    index only (``CachedSearcher`` refuses a multi-field handle).
 
     Blocks until the AvailableNow drain completes; returns the final
-    :class:`~..plans.build.InvertedIndex` handle (or None if nothing was
-    ever indexed).
+    index handle of the chain's kind (or None if nothing was ever
+    indexed).
     """
     import os
 
     from ..plans.build import build_index, open_index
     from ..plans.generations import append_delta, maybe_compact
+    from ..plans.multifield import build_multifield_index
 
     current_ptr = os.path.join(index_root, "CURRENT")
     os.makedirs(index_root, exist_ok=True)
@@ -273,7 +282,7 @@ def stream_index_generations(
         # generation (or its compaction), the batch was fully applied and
         # the replay must be a no-op (re-appending would route
         # append_delta at a live store of its own chain, which
-        # plans/generations.py _guard_out_path now refuses loudly).
+        # plans/generations.py _guard_out_path refuses loudly).
         if os.path.exists(current_ptr):
             with open(current_ptr) as f:
                 head = os.path.basename(f.read().strip().rstrip("/"))
@@ -290,11 +299,12 @@ def stream_index_generations(
         docs = batch_df.select(key_col, text_col)
         idx = _current()
         if idx is None:
-            idx = build_index(
-                spark, docs, os.path.join(index_root, f"gen_{batch_id}"),
-                key_col=key_col, text_col=text_col, chain=chain,
-                n_salts=n_salts, block_size=block_size,
-            )
+            base = os.path.join(index_root, f"gen_{batch_id}")
+            kw = dict(key_col=key_col, text_col=text_col, chain=chain,
+                      n_salts=n_salts, block_size=block_size)
+            idx = (build_index(spark, docs, base, **kw) if fields is None
+                   else build_multifield_index(spark, docs, base,
+                                               fields=fields, **kw))
             if dels is not None and dels.limit(1).count():
                 idx = append_delta(
                     spark, idx,
@@ -314,118 +324,6 @@ def stream_index_generations(
             # Solr's commit hook: open a new searcher over the published
             # head and autowarm it from the retiring searcher's MRU keys
             # (operators/resultcache.py SearcherManager)
-            searcher_manager.commit(idx)
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _current()
-
-
-def stream_index_generations_multifield(
-    spark: SparkSession,
-    source_dir: str,
-    index_root: str,
-    checkpoint_dir: str,
-    fields,
-    key_col: str = "url",
-    text_col: str = "text",
-    chain: str = "simple",
-    n_salts: int = 16,
-    block_size: int = 128,
-    delete_col: str | None = None,
-    max_generations: int = 4,
-    keep: int = 1,
-    schema=None,
-    searcher_manager=None,
-):
-    """:func:`stream_index_generations` for the MULTI-FIELD (edismax)
-    index — the reference's DEFAULT handler index gets the same
-    autoCommit lifecycle: each micro-batch becomes one generation
-    (``plans/generations.py append_delta_multifield``), the chain is
-    bounded by ``maybe_compact_multifield``, the head publishes via the
-    same atomic CURRENT pointer with the same replay-idempotence guard,
-    and an optional ``searcher_manager`` is committed per publish.
-
-    ``fields``: the ``build_multifield_index`` field list
-    ``[(name, token_limit), ...]`` — used only for the FIRST batch's
-    base build; later generations inherit from the base manifest.
-
-    Blocks until the AvailableNow drain completes; returns the final
-    :class:`~..plans.multifield.MultiFieldIndex` (or None)."""
-    import os
-
-    from ..plans.generations import (
-        append_delta_multifield,
-        maybe_compact_multifield,
-    )
-    from ..plans.multifield import (
-        build_multifield_index,
-        open_multifield_index,
-    )
-
-    current_ptr = os.path.join(index_root, "CURRENT")
-    os.makedirs(index_root, exist_ok=True)
-
-    def _publish(path: str) -> None:
-        tmp = current_ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(path)
-        os.replace(tmp, current_ptr)
-
-    def _current():
-        if os.path.exists(current_ptr):
-            with open(current_ptr) as f:
-                return open_multifield_index(spark, f.read().strip())
-        return None
-
-    stream = spark.readStream.schema(
-        schema or WEB_PAGES_SCHEMA).parquet(source_dir)
-
-    def process(batch_df, batch_id: int) -> None:
-        # at-least-once replay guard: CURRENT naming this batch's
-        # generation (or its compaction) means the batch fully applied
-        if os.path.exists(current_ptr):
-            with open(current_ptr) as f:
-                head = os.path.basename(f.read().strip().rstrip("/"))
-            if head in (f"gen_{batch_id}", f"gen_{batch_id}_d",
-                        f"compact_{batch_id}"):
-                return
-        if batch_df.isEmpty():
-            return
-        dels = None
-        if delete_col and delete_col in batch_df.columns:
-            dels = batch_df.filter(F.col(delete_col)).select(key_col)
-            batch_df = batch_df.filter(
-                ~F.coalesce(F.col(delete_col), F.lit(False)))
-        docs = batch_df.select(key_col, text_col)
-        idx = _current()
-        if idx is None:
-            idx = build_multifield_index(
-                spark, docs, os.path.join(index_root, f"gen_{batch_id}"),
-                fields=fields, key_col=key_col, text_col=text_col,
-                chain=chain, n_salts=n_salts, block_size=block_size,
-            )
-            if dels is not None and dels.limit(1).count():
-                idx = append_delta_multifield(
-                    spark, idx,
-                    os.path.join(index_root, f"gen_{batch_id}_d"),
-                    delete_keys=dels, key_col=key_col)
-        else:
-            idx = append_delta_multifield(
-                spark, idx, os.path.join(index_root, f"gen_{batch_id}"),
-                delta_docs=docs, delete_keys=dels, key_col=key_col,
-            )
-        idx = maybe_compact_multifield(
-            spark, idx, os.path.join(index_root, f"compact_{batch_id}"),
-            max_generations=max_generations, keep=keep,
-        )
-        _publish(idx.store.path)
-        if searcher_manager is not None:
             searcher_manager.commit(idx)
 
     q = (

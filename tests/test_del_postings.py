@@ -23,7 +23,7 @@ from marc_solr_profiling_spark.operators.wand import (
 from marc_solr_profiling_spark.plans.build import build_index
 from marc_solr_profiling_spark.plans.generations import (
     append_delta,
-    force_merge,
+    maybe_compact,
     merge_generations,
 )
 
@@ -191,7 +191,7 @@ def test_merge_rebuilds_filter_postings(spark, workdir, docs, chain):
               merged, None, filter_queries=["lang:en"]).collect()}
     assert nf["__num_found__"] == en
 
-    opt = force_merge(spark, chain, f"{workdir}/optimized")
+    opt = merge_generations(spark, chain, f"{workdir}/optimized", keep=0)
     got_o = sorted(
         (r["facet_field"], r["facet_value"], r["count"])
         for r in facet_match_counts(
@@ -224,10 +224,6 @@ def test_multifield_postings_mode_matches_array(spark, workdir, docs):
         dismax_topk,
         matching_doc_ids,
     )
-    from marc_solr_profiling_spark.plans.generations import (
-        append_delta_multifield,
-        maybe_compact_multifield,
-    )
     from marc_solr_profiling_spark.plans.multifield import (
         MultiFieldIndex,
         build_multifield_index,
@@ -239,7 +235,7 @@ def test_multifield_postings_mode_matches_array(spark, workdir, docs):
         f"{workdir}/mfdp_base", fields=[("title", 8), ("body", None)],
         key_col="url", chain="simple", n_salts=4, block_size=32,
     )
-    g1 = append_delta_multifield(
+    g1 = append_delta(
         spark, base, f"{workdir}/mfdp_g1",
         delta_docs=d.filter("doc_id >= 300").select("url", "text"),
         delete_keys=d.filter("doc_id % 7 = 2 AND doc_id < 300")
@@ -270,11 +266,11 @@ def test_multifield_postings_mode_matches_array(spark, workdir, docs):
     assert arr_mode == post_mode
 
     # the compaction policy bounds the multifield chain too
-    g2 = append_delta_multifield(
+    g2 = append_delta(
         spark, g1, f"{workdir}/mfdp_g2",
         delete_keys=d.filter("doc_id % 19 = 1").select("url"),
         key_col="url")
-    compacted = maybe_compact_multifield(
+    compacted = maybe_compact(
         spark, g2, f"{workdir}/mfdp_c", max_generations=2, keep=1)
     assert len(compacted.stores) <= 2
     assert snap(compacted)[0] == snap(g2)[0]

@@ -15,7 +15,7 @@ from marc_solr_profiling_spark.operators.wand import wand_topk
 from marc_solr_profiling_spark.plans.build import build_index
 from marc_solr_profiling_spark.plans.generations import (
     append_delta,
-    force_merge,
+    merge_generations,
 )
 
 from conftest import SF_DIR
@@ -95,7 +95,8 @@ def test_fq_without_filter_stage_raises(spark, workdir, docs):
 
 def test_fq_across_generations_and_merge(spark, workdir, docs):
     """fq over a 2-generation chain with deletes equals a from-scratch
-    filtered rebuild; force_merge keeps the fq surface working."""
+    filtered rebuild; an optimize (merge keep=0) keeps the fq surface
+    working."""
     d = docs.withColumn("url", F.format_string("d%05d", F.col("doc_id")))
     base = d.filter("doc_id < 300").select("url", "text", "lang", "source")
     rest = d.filter("doc_id >= 300").select("url", "text", "lang", "source")
@@ -122,7 +123,7 @@ def test_fq_across_generations_and_merge(spark, workdir, docs):
     got, want = urls(chain), urls(ref)
     assert [s for _, s in got] == [s for _, s in want]
     assert set(got) == set(want)
-    merged = force_merge(spark, chain, f"{workdir}/g_opt")
+    merged = merge_generations(spark, chain, f"{workdir}/g_opt", keep=0)
     got_m = urls(merged)
     assert [s for _, s in got_m] == [s for _, s in want]
     assert set(got_m) == set(want)

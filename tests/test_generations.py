@@ -12,17 +12,28 @@ from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.corpus import generate_web_pages
 from marc_solr_profiling_spark.operators.phrase import phrase_topk
-from marc_solr_profiling_spark.operators.wand import wand_topk, wand_topk_batch
+from marc_solr_profiling_spark.operators.wand import (
+    dismax_topk,
+    wand_topk,
+    wand_topk_batch,
+)
 from marc_solr_profiling_spark.plans.build import build_index
 from marc_solr_profiling_spark.plans.generations import (
     append_delta,
-    force_merge,
     maybe_compact,
     merge_generations,
+)
+from marc_solr_profiling_spark.plans.multifield import (
+    MultiFieldIndex,
+    build_multifield_index,
 )
 
 QUERIES = ["the of and", "fresh content", "voyage", "time new said",
            "sea captain whale"]
+# the lifecycle tests below run over both index kinds
+KINDS = ["single", "multi"]
+FIELDS = [("title", 8), ("body", None)]
+QF = {"title": 2.0, "body": 1.0}
 
 
 @pytest.fixture(scope="module")
@@ -44,8 +55,22 @@ def docs(spark):
     d.unpersist()
 
 
+def _build(spark, kind, df, path):
+    kw = dict(key_col="url", chain="text", n_salts=4, block_size=32)
+    if kind == "single":
+        return build_index(spark, df, path, **kw)
+    return build_multifield_index(spark, df, path, fields=FIELDS, **kw)
+
+
 def _topk_urls(idx, q, k=10):
-    rows = wand_topk(idx, q, k=k, with_url=True).collect()
+    """Top-k (url, score) of either index kind: BM25 for single-field,
+    edismax dismax over ``QF`` for multi-field."""
+    if isinstance(idx, MultiFieldIndex):
+        rows = dismax_topk(idx, q, qf=QF, tie=0.1, k=k, round_to=6).join(
+            idx.docs.select("doc_id", "url"), "doc_id").collect()
+        rows = sorted(rows, key=lambda r: (-r["score"], r["url"]))
+    else:
+        rows = wand_topk(idx, q, k=k, with_url=True).collect()
     return [(r["url"], round(r["score"], 9)) for r in rows]
 
 
@@ -164,13 +189,12 @@ def test_pure_delete_generation(spark, workdir, docs):
     _assert_same_results(gen, ref)
 
 
-def test_merge_generations_keep_base(spark, workdir, docs):
+@pytest.mark.parametrize("kind", KINDS)
+def test_merge_generations_keep_base(spark, workdir, docs, kind):
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
-    idx0 = build_index(
-        spark, docs.filter(n < 150), f"{workdir}/d_base", key_col="url",
-        chain="text", n_salts=4, block_size=32,
-    )
-    idx1 = append_delta(spark, idx0, f"{workdir}/d_g1",
+    idx0 = _build(spark, kind, docs.filter(n < 150),
+                  f"{workdir}/d_base_{kind}")
+    idx1 = append_delta(spark, idx0, f"{workdir}/d_g1_{kind}",
                         delta_docs=docs.filter((n >= 150) & (n < 200)),
                         key_col="url")
     # delete one url from the BASE and one from GEN1 — after a keep=1
@@ -178,19 +202,23 @@ def test_merge_generations_keep_base(spark, workdir, docs):
     # carried forward in the delete set
     del_base = docs.filter(n == 3).select("url")
     del_g1 = docs.filter(n == 160).select("url")
-    idx2 = append_delta(spark, idx1, f"{workdir}/d_g2",
+    idx2 = append_delta(spark, idx1, f"{workdir}/d_g2_{kind}",
                         delta_docs=docs.filter(n >= 200),
                         delete_keys=del_base.union(del_g1), key_col="url")
     assert len(idx2.stores) == 3
 
-    merged = merge_generations(spark, idx2, f"{workdir}/d_merged", keep=1)
+    merged = merge_generations(spark, idx2, f"{workdir}/d_merged_{kind}",
+                               keep=1)
     assert len(merged.stores) == 2
     # only the base-generation tombstone survives in the delete set
     dels = merged.deletes_df()
     assert dels is not None and dels.count() == 1
     _assert_same_results(merged, idx2)
-    assert merged.n_docs == idx2.n_docs
-    assert abs(merged.avgdl - idx2.avgdl) < 1e-12
+    if kind == "single":
+        assert merged.n_docs == idx2.n_docs
+        assert abs(merged.avgdl - idx2.avgdl) < 1e-12
+    else:
+        assert merged.field_stats == idx2.field_stats
 
 
 def test_force_merge_collapses_chain(spark, workdir, docs):
@@ -203,28 +231,28 @@ def test_force_merge_collapses_chain(spark, workdir, docs):
                         delta_docs=docs.filter(n >= 200),
                         delete_keys=docs.filter(n % 9 == 4).select("url"),
                         key_col="url")
-    merged = force_merge(spark, idx1, f"{workdir}/e_opt")
+    merged = merge_generations(spark, idx1, f"{workdir}/e_opt", keep=0)
     assert len(merged.stores) == 1
     assert merged.deletes_df() is None  # deletes applied physically
     _assert_same_results(merged, idx1)
     assert merged.n_docs == idx1.n_docs
 
 
-def test_maybe_compact_policy(spark, workdir, docs):
+@pytest.mark.parametrize("kind", KINDS)
+def test_maybe_compact_policy(spark, workdir, docs, kind):
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
-    idx = build_index(
-        spark, docs.filter(n < 100), f"{workdir}/f_base", key_col="url",
-        chain="text", n_salts=4, block_size=32,
-    )
+    idx = _build(spark, kind, docs.filter(n < 100),
+                 f"{workdir}/f_base_{kind}")
     for i, lo in enumerate([100, 150, 200]):
         idx = append_delta(
-            spark, idx, f"{workdir}/f_g{i}",
+            spark, idx, f"{workdir}/f_g{i}_{kind}",
             delta_docs=docs.filter((n >= lo) & (n < lo + 50)),
             key_col="url")
     assert len(idx.stores) == 4
-    same = maybe_compact(spark, idx, f"{workdir}/f_c0", max_generations=4)
+    same = maybe_compact(spark, idx, f"{workdir}/f_c0_{kind}",
+                         max_generations=4)
     assert same is idx  # under threshold: no-op
-    compacted = maybe_compact(spark, idx, f"{workdir}/f_c1",
+    compacted = maybe_compact(spark, idx, f"{workdir}/f_c1_{kind}",
                               max_generations=3, keep=1)
     assert len(compacted.stores) == 2
     _assert_same_results(compacted, idx)
@@ -260,8 +288,9 @@ def test_positional_chain_phrase_masking(spark, workdir, docs):
             == {(r["url"], round(r["score"], 9)) for r in want})
 
 
+@pytest.mark.parametrize("kind", KINDS)
 def test_kill_mid_append_resumes_without_recompute(spark, workdir, docs,
-                                                   monkeypatch):
+                                                   monkeypatch, kind):
     """Kill-mid-APPEND resume (the north-rule resumability criterion for
     the generational path): abort append_delta after its tf stage commits
     but before the delta segments commit, re-run, and assert via lineage
@@ -272,13 +301,12 @@ def test_kill_mid_append_resumes_without_recompute(spark, workdir, docs,
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
     base = docs.filter(n < 200)
     delta = docs.filter(n >= 200)
-    kw = dict(key_col="url", chain="text", n_salts=4, block_size=32)
-    idx0 = build_index(spark, base, f"{workdir}/h_base", **kw)
+    idx0 = _build(spark, kind, base, f"{workdir}/h_base_{kind}")
 
-    ref = append_delta(spark, idx0, f"{workdir}/h_ref", delta_docs=delta,
-                       key_col="url")
+    ref = append_delta(spark, idx0, f"{workdir}/h_ref_{kind}",
+                       delta_docs=delta, key_col="url")
 
-    out = f"{workdir}/h_resume"
+    out = f"{workdir}/h_resume_{kind}"
     real_commit = lin.IndexStore.commit_stage
 
     def failing_commit(self, stage, df, **kwargs):
@@ -315,14 +343,6 @@ def test_multifield_generation_chain(spark, workdir, docs):
     a from-scratch rebuild of the live corpus (per-field stats and the
     field-scoped dictionary exactly adjusted; tombstones masked in the
     dismax kernel; per-field cap rescaling)."""
-    from marc_solr_profiling_spark.operators.wand import dismax_topk
-    from marc_solr_profiling_spark.plans.generations import (
-        append_delta_multifield,
-    )
-    from marc_solr_profiling_spark.plans.multifield import (
-        build_multifield_index,
-    )
-
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
     base = docs.filter(n < 200)
     mods = base.filter(F.xxhash64("url") % 9 == 0).withColumn(
@@ -335,7 +355,7 @@ def test_multifield_generation_chain(spark, workdir, docs):
         spark, base, f"{workdir}/mf_base", fields=fields, key_col="url",
         chain="text", n_salts=4, block_size=32,
     )
-    idx1 = append_delta_multifield(
+    idx1 = append_delta(
         spark, idx0, f"{workdir}/mf_g1",
         delta_docs=docs.filter(n >= 200).unionByName(mods),
         delete_keys=dels, key_col="url",
@@ -373,15 +393,6 @@ def test_multifield_generation_chain(spark, workdir, docs):
 def test_multifield_force_merge(spark, workdir, docs):
     """Collapsing a multifield chain (merge keep=0 — the optimize
     analog) keeps dismax results identical and drops the delete set."""
-    from marc_solr_profiling_spark.operators.wand import dismax_topk
-    from marc_solr_profiling_spark.plans.generations import (
-        append_delta_multifield,
-        merge_generations_multifield,
-    )
-    from marc_solr_profiling_spark.plans.multifield import (
-        build_multifield_index,
-    )
-
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
     fields = [("title", 8), ("body", None)]
     idx0 = build_multifield_index(
@@ -389,14 +400,13 @@ def test_multifield_force_merge(spark, workdir, docs):
         fields=fields, key_col="url", chain="text", n_salts=4,
         block_size=32,
     )
-    idx1 = append_delta_multifield(
+    idx1 = append_delta(
         spark, idx0, f"{workdir}/mfm_g1",
         delta_docs=docs.filter(n >= 200),
         delete_keys=docs.filter(n % 13 == 5).select("url"),
         key_col="url",
     )
-    merged = merge_generations_multifield(
-        spark, idx1, f"{workdir}/mfm_opt", keep=0)
+    merged = merge_generations(spark, idx1, f"{workdir}/mfm_opt", keep=0)
     assert len(merged.stores) == 1
     assert merged.deletes_df() is None
     qf = {"title": 2.0, "body": 1.0}
@@ -478,31 +488,46 @@ def test_grouped_phys_over_generation_chain(spark, workdir, docs):
     assert res(chain) == res(ref)
 
 
-def test_append_refuses_live_chain_out_path(spark, workdir, docs):
+@pytest.mark.parametrize("kind", KINDS)
+def test_append_refuses_live_chain_out_path(spark, workdir, docs, kind):
     """append_delta(out_path=<a live store of the chain>) must fail
     loudly: set_fingerprint would wipe the ancestor's stages and write a
     self-referential parent (the at-least-once replay corruption)."""
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
-    base = build_index(
-        spark, docs.filter(n < 60), f"{workdir}/guard_base", key_col="url",
-        chain="text", n_salts=4, block_size=32,
-    )
+    base_path = f"{workdir}/guard_base_{kind}"
+    g1_path = f"{workdir}/guard_g1_{kind}"
+    base = _build(spark, kind, docs.filter(n < 60), base_path)
     with pytest.raises(ValueError, match="live store"):
         append_delta(
-            spark, base, f"{workdir}/guard_base",
+            spark, base, base_path,
             delta_docs=docs.filter((n >= 60) & (n < 70)), key_col="url",
         )
     g1 = append_delta(
-        spark, base, f"{workdir}/guard_g1",
+        spark, base, g1_path,
         delta_docs=docs.filter((n >= 60) & (n < 70)), key_col="url",
     )
-    for bad in (f"{workdir}/guard_base", f"{workdir}/guard_g1"):
+    for bad in (base_path, g1_path):
         with pytest.raises(ValueError, match="live store"):
             append_delta(
                 spark, g1, bad,
                 delta_docs=docs.filter((n >= 70) & (n < 75)),
                 key_col="url",
             )
+
+
+def test_append_to_single_doc_base_gets_fresh_id(spark, workdir, docs):
+    """A base holding only doc id 0 must hand the delta id 1: id 0 is
+    the max, not an empty chain, and reusing it would put two docs on
+    one id."""
+    n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
+    base = build_index(
+        spark, docs.filter(n == 1), f"{workdir}/one_base", key_col="url",
+        chain="text", n_salts=4, block_size=32,
+    )
+    g1 = append_delta(spark, base, f"{workdir}/one_g1",
+                      delta_docs=docs.filter(n == 2), key_col="url")
+    assert sorted(r["doc_id"] for r in g1.docs.collect()) == [0, 1]
+    assert g1.n_docs == 2
 
 
 def test_append_dedups_same_key_within_delta(spark, workdir, docs):
@@ -536,3 +561,19 @@ def test_append_dedups_same_key_within_delta(spark, workdir, docs):
                       delta_docs=delta2, key_col="url")
     assert g2.docs.filter(F.col("url") == dup_url).count() == 1
     assert g2.n_docs == 50
+    # equal warc_ts: the survivor is fixed by the row itself, never by
+    # how the delta happens to be partitioned
+    tied = spark.createDataFrame(
+        [(dup_url, "tied body elderberry", "2024-09-01 00:00:00"),
+         (dup_url, "tied body feijoa", "2024-09-01 00:00:00")],
+        "url string, text string, warc_ts string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    survivors = set()
+    for parts in (1, 7):
+        g = append_delta(spark, g2, f"{workdir}/dup_tie_{parts}",
+                         delta_docs=tied.repartition(parts), key_col="url")
+        assert g.docs.filter(F.col("url") == dup_url).count() == 1
+        survivors.add(tuple(wand_topk(g, w, k=5).count()
+                            for w in ("elderberry", "feijoa")))
+    assert len(survivors) == 1
+    assert sorted(survivors.pop()) == [0, 1]

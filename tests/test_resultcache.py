@@ -196,3 +196,25 @@ def test_streaming_commit_drives_searcher_manager(spark, tmp_path):
     assert sm.searcher.stats.misses == 1
     sm.search("voyage", 0, 5)
     assert sm.searcher.stats.hits == 1
+
+
+def test_multifield_index_is_refused(spark, idx, tmp_path):
+    """The page kernel looks up plain analyzed terms, which a multi-field
+    dictionary never holds (its keys are field-prefixed): a searcher
+    over one would serve empty pages for every query. Opening it and
+    committing it both fail loudly instead."""
+    from marc_solr_profiling_spark.plans.multifield import (
+        build_multifield_index,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    mf = build_multifield_index(
+        spark, docs.filter("doc_id < 100"), str(tmp_path / "mf"),
+        fields=[("title", 8), ("body", None)], key_col="doc_id",
+        id_col="doc_id", chain="simple", n_salts=4, block_size=32,
+    )
+    with pytest.raises(ValueError, match="multi-field"):
+        rc.SearcherManager(mf)
+    sm = rc.SearcherManager(idx, size=8, window=10)
+    with pytest.raises(ValueError, match="multi-field"):
+        sm.commit(mf)

@@ -430,3 +430,38 @@ def test_cursor_mark_through_select(spark, docs, tmp_path):
         gp.extend(r.docs.collect())
         cur = r.next_cursor_mark
     assert [r["doc_id"] for r in gp] == [r["doc_id"] for r in want]
+
+
+# a sort-key mark past every doc: "n_chars desc" never goes below -1
+PAST_END = (-1, 10**9)
+
+
+def test_exhausted_cursor_echoes_sent_mark(spark, docs):
+    """An empty cursor page echoes the mark it was sent ("*" included),
+    Solr's exhausted-cursor contract; a None would silently turn the
+    next request into offset page 1."""
+    sort = "n_chars desc, doc_id asc"
+    r = solr_select(docs, "zzqqxnomatch", rows=10, sort=sort,
+                    cursor_mark="*")
+    assert r.docs.count() == 0 and r.next_cursor_mark == "*"
+    r = solr_select(docs, Q, rows=10, sort=sort, cursor_mark=PAST_END)
+    assert r.docs.count() == 0 and r.next_cursor_mark == PAST_END
+
+
+def test_exhausted_cursor_echoes_sent_mark_physical(spark, docs, tmp_path):
+    """The physical /select keeps the same exhausted-cursor contract."""
+    from marc_solr_profiling_spark.plans.build import build_index
+    from marc_solr_profiling_spark.plans.select import solr_select_physical
+
+    idx = build_index(
+        spark, docs, str(tmp_path / "cur_end_idx"), key_col="doc_id",
+        id_col="doc_id", chain="simple", n_salts=4, block_size=32,
+    )
+    meta = docs.select("doc_id", "n_chars")
+    sort = "n_chars desc, doc_id asc"
+    r = solr_select_physical(idx, meta, "zzqqxnomatch", rows=10, sort=sort,
+                             cursor_mark="*")
+    assert r.docs.count() == 0 and r.next_cursor_mark == "*"
+    r = solr_select_physical(idx, meta, Q, rows=10, sort=sort,
+                             cursor_mark=PAST_END)
+    assert r.docs.count() == 0 and r.next_cursor_mark == PAST_END

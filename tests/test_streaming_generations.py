@@ -12,14 +12,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.corpus import generate_web_pages
-from marc_solr_profiling_spark.operators.wand import wand_topk
+from marc_solr_profiling_spark.operators.wand import dismax_topk, wand_topk
 from marc_solr_profiling_spark.plans.build import build_index
+from marc_solr_profiling_spark.plans.multifield import build_multifield_index
 from marc_solr_profiling_spark.streaming.ingest import (
     stream_index_generations,
 )
 
 SCHEMA = "url string, text string, is_delete boolean"
 QUERIES = ["the of and", "voyage", "time new said"]
+FIELDS = [("title", 8), ("body", None)]
+QF = {"title": 2.0, "body": 1.0}
 
 
 @pytest.fixture(scope="module")
@@ -125,15 +128,34 @@ def test_stream_generations_end_to_end(spark, workdir, docs):
     assert os.path.exists(os.path.join(root, "CURRENT"))
 
 
-def test_stream_replay_is_idempotent(spark, workdir, docs):
+def _multifield_results(ix, q):
+    rows = dismax_topk(ix, q, qf=QF, tie=0.1, k=10, round_to=6).join(
+        ix.docs.select("doc_id", "url"), "doc_id").collect()
+    return ({(r["url"], r["score"]) for r in rows},
+            sorted((r["score"] for r in rows), reverse=True))
+
+
+def _same_multifield_results(spark, idx, live, workdir, tag):
+    ref = build_multifield_index(
+        spark, live, f"{workdir}/mf_ref_{tag}", fields=FIELDS,
+        key_col="url", chain="text", n_salts=4, block_size=32)
+    for q in QUERIES:
+        g, gs = _multifield_results(idx, q)
+        w, ws = _multifield_results(ref, q)
+        assert gs == ws, (tag, q)
+        assert g == w, (tag, q)
+
+
+@pytest.mark.parametrize("kind", ["single", "multi"])
+def test_stream_replay_is_idempotent(spark, workdir, docs, kind):
     """foreachBatch is at-least-once: a driver crash between _publish and
     the checkpoint commit re-runs the batch with the SAME batch_id. The
     replay must be a no-op — before the guard it re-entered append_delta
     with out_path == the published head itself, wiping the head's stages
     and writing a self-referential parent (chain destroyed)."""
-    src = f"{workdir}/re_src"
-    root = f"{workdir}/re_idx"
-    ckpt = f"{workdir}/re_ckpt"
+    src = f"{workdir}/re_src_{kind}"
+    root = f"{workdir}/re_idx_{kind}"
+    ckpt = f"{workdir}/re_ckpt_{kind}"
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
     _drop(docs.filter(n < 80), src, "d1")
 
@@ -142,65 +164,47 @@ def test_stream_replay_is_idempotent(spark, workdir, docs):
             spark, src, root, cp, key_col="url", chain="text",
             n_salts=4, block_size=32, delete_col="is_delete",
             max_generations=3, keep=1, schema=SCHEMA,
+            fields=FIELDS if kind == "multi" else None,
         )
+
+    def top(ix):
+        if kind == "multi":
+            return _multifield_results(ix, "voyage")
+        return [(r["url"], round(r["score"], 9)) for r in
+                wand_topk(ix, "voyage", k=10, with_url=True).collect()]
 
     idx = run(ckpt)
     assert idx is not None and len(idx.stores) == 1
-    before = wand_topk(idx, "voyage", k=10, with_url=True).collect()
+    before = top(idx)
 
     # simulate the lost checkpoint commit: a fresh checkpoint re-delivers
     # the same files as batch 0 — CURRENT already names gen_0, so the
     # replayed batch must be skipped, not re-applied
-    idx2 = run(f"{workdir}/re_ckpt2")
+    idx2 = run(f"{workdir}/re_ckpt2_{kind}")
     assert idx2 is not None and len(idx2.stores) == 1
-    after = wand_topk(idx2, "voyage", k=10, with_url=True).collect()
-    assert ([(r["url"], round(r["score"], 9)) for r in before]
-            == [(r["url"], round(r["score"], 9)) for r in after])
-    _same_results(spark, idx2, docs.filter(n < 80), workdir, "replay")
+    assert before == top(idx2)
+    same = _same_results if kind == "single" else _same_multifield_results
+    same(spark, idx2, docs.filter(n < 80), workdir, f"replay_{kind}")
 
 
 def test_stream_generations_multifield(spark, workdir, docs):
     """The multifield (edismax) autoCommit loop: drops become
     generations, dismax results equal a from-scratch rebuild of the
     live set, compaction bounds the chain, replay is a no-op."""
-    from marc_solr_profiling_spark.operators.wand import dismax_topk
-    from marc_solr_profiling_spark.plans.multifield import (
-        build_multifield_index,
-    )
-    from marc_solr_profiling_spark.streaming.ingest import (
-        stream_index_generations_multifield,
-    )
-
     src = f"{workdir}/mf_src"
     root = f"{workdir}/mf_idx"
     ckpt = f"{workdir}/mf_ckpt"
     n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
-    fields = [("title", 8), ("body", None)]
-    qf = {"title": 2.0, "body": 1.0}
-
     def run(cp=ckpt):
-        return stream_index_generations_multifield(
-            spark, src, root, cp, fields=fields, key_col="url",
+        return stream_index_generations(
+            spark, src, root, cp, fields=FIELDS, key_col="url",
             chain="text", n_salts=4, block_size=32,
             delete_col="is_delete", max_generations=3, keep=1,
             schema=SCHEMA,
         )
 
     def same(idx, live, tag):
-        ref = build_multifield_index(
-            spark, live, f"{workdir}/mf_ref_{tag}", fields=fields,
-            key_col="url", chain="text", n_salts=4, block_size=32)
-        for q in QUERIES:
-            def res(ix):
-                rows = dismax_topk(ix, q, qf=qf, tie=0.1, k=10,
-                                   round_to=6).join(
-                    ix.docs.select("doc_id", "url"), "doc_id").collect()
-                return ({(r["url"], r["score"]) for r in rows},
-                        sorted((r["score"] for r in rows), reverse=True))
-            g, gs = res(idx)
-            w, ws = res(ref)
-            assert gs == ws, (tag, q)
-            assert g == w, (tag, q)
+        _same_multifield_results(spark, idx, live, workdir, tag)
 
     _drop(docs.filter(n < 100), src, "m1")
     idx = run()
