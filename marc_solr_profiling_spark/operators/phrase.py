@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.analyzer import ANALYZERS
 from ..oracle import bm25_idf
+from ..session import local_frame
 from .segments import decode_block_positions
 from .varbyte import delta_decode, varbyte_decode
 from .wand import (B, K1, _by_salt, _delete_state, _drop_del_rows,
@@ -116,16 +117,19 @@ def phrase_topk(
     # full ORDERED sequence (duplicates kept — "buffalo buffalo" must
     # require two adjacent occurrences); distinct set only for lookups
     seq_terms = list(ANALYZERS[index.chain](phrase))
-    empty = spark.createDataFrame([], "doc_id long, score double")
+
+    def empty() -> DataFrame:
+        return local_frame(spark, [], "doc_id long, score double")
+
     if not seq_terms:
-        return empty
+        return empty()
     uniq_terms = list(dict.fromkeys(seq_terms))
     drows = index.cached_dictionary().filter(
         F.col("term").isin(uniq_terms)
     ).collect()
     if len(drows) < len(uniq_terms):
         # conjunction: a phrase term absent from the corpus matches nothing
-        return empty
+        return empty()
     idf_by_term = {
         r["term"]: bm25_idf(index.n_docs, int(r["df"])) for r in drows
     }

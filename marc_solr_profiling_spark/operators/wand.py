@@ -47,6 +47,7 @@ reference's (score, internal docid) collector.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 from typing import Iterator, List, Sequence
 
 import numpy as np
@@ -57,6 +58,7 @@ from pyspark.sql import functions as F
 from ..functions.analyzer import ANALYZERS
 from ..functions.mm_spec import parse_mm_spec
 from ..oracle import bm25_idf
+from ..session import local_frame
 from .varbyte import delta_decode, varbyte_decode
 
 K1 = 1.2
@@ -134,8 +136,7 @@ def _salt_dels(sub: "pd.DataFrame", arr):
     rows = sub[sub["term"] == DEL_TERM]
     if not len(rows):
         return arr
-    ids = np.unique(np.concatenate(
-        [delta_decode(g).astype(np.int64) for g in rows["doc_gaps"]]))
+    ids = np.unique(_ids(rows))
     return ids if arr is None else np.union1d(arr, ids)
 
 
@@ -150,6 +151,145 @@ def _analyze_query(query: str, chain: str) -> List[str]:
     for t in ANALYZERS[chain](query):
         if t not in out:
             out.append(t)
+    return out
+
+
+def _ids(rows: "pd.DataFrame") -> np.ndarray:
+    """Doc ids of posting-block rows (one salt: a term's blocks are
+    disjoint, so the ids of one term are distinct)."""
+    return np.concatenate(
+        [delta_decode(g).astype(np.int64) for g in rows["doc_gaps"]])
+
+
+def _member(vals: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Boolean mask: which of ``vals`` occur in the sorted id array."""
+    if sorted_ids.size == 0:
+        return np.zeros(vals.size, dtype=bool)
+    pos = np.clip(np.searchsorted(sorted_ids, vals), 0, sorted_ids.size - 1)
+    return sorted_ids[pos] == vals
+
+
+@dataclass(frozen=True)
+class _MatchSpec:
+    """What defines a request's match set, resolved on the driver.
+
+    ``terms``: the index terms scanned for ``q`` (field-scoped keys for a
+    multi-field index); ``group_of``: key -> base-term group when ``mm``
+    counts distinct base terms (edismax ``qf``), else None; ``mm``: the
+    resolved minimum-should-match; ``fq_terms``: filter-posting terms
+    every match must carry; ``match_all``: ``q`` is MatchAllDocsQuery."""
+
+    terms: tuple
+    group_of: "dict | None"
+    mm: int
+    fq_terms: tuple
+    match_all: bool
+
+
+def _match_spec(index, query, min_match, filter_queries,
+                term_groups) -> _MatchSpec:
+    match_all = query is None or query.strip() == "*:*"
+    if match_all:
+        terms, group_of, n = [], None, 0
+    elif term_groups is not None:
+        # multi-field (edismax qf) indexes: field-scoped keys of one base
+        # term share a group; mm counts DISTINCT GROUPS
+        terms, group_of = list(term_groups), dict(term_groups)
+        n = len(set(term_groups.values()))
+    else:
+        terms, group_of = _analyze_query(query, index.chain), None
+        n = len(terms)
+    return _MatchSpec(
+        terms=tuple(terms), group_of=group_of,
+        mm=0 if match_all else parse_mm_spec(min_match, n),
+        fq_terms=tuple(filter_queries or ()), match_all=match_all)
+
+
+def _salt_match(sub: "pd.DataFrame", spec: _MatchSpec, sdels):
+    """One salt's sorted match set: docs carrying at least ``spec.mm``
+    distinct query terms (groups), ∩ every fq set, minus tombstones.
+    None means every live doc (match-all without fq). Complete per salt
+    by the salt-placement invariant; no scoring."""
+    match = None
+    if not spec.match_all:
+        if spec.group_of is None:
+            qset = set(spec.terms)
+            parts = [_ids(rows) for t, rows in sub.groupby("term", sort=False)
+                     if t in qset]
+        else:
+            # dedupe WITHIN each base-term group first (title+body hits
+            # of one term count once)
+            by_group: dict[int, list] = {}
+            for t, rows in sub.groupby("term", sort=False):
+                g = spec.group_of.get(t)
+                if g is not None:
+                    by_group.setdefault(g, []).append(_ids(rows))
+            parts = [np.unique(np.concatenate(arrs))
+                     for arrs in by_group.values()]
+        if not parts:
+            return np.empty(0, dtype=np.int64)
+        uniq, counts = np.unique(np.concatenate(parts), return_counts=True)
+        match = uniq[counts >= spec.mm]
+    for ft in spec.fq_terms:
+        if match is not None and match.size == 0:
+            break
+        frows = sub[sub["term"] == ft]
+        inc = (np.unique(_ids(frows)) if len(frows)
+               else np.empty(0, dtype=np.int64))
+        # match-all: the first fq set IS the match
+        match = inc if match is None else match[_member(match, inc)]
+    if match is not None and sdels is not None and match.size:
+        match = match[~_member(match, sdels)]
+    return match
+
+
+def _salt_facet_counts(sub: "pd.DataFrame", prefixes, fq_set, match,
+                       sdels) -> "dict[str, int]":
+    """One salt's per-value facet counts ``|value postings ∩ match|``
+    over the filter postings of the ``field:`` ``prefixes`` — Lucene's
+    per-segment bitset facet counting. ``match`` None counts the live
+    postings (match-all)."""
+    out: dict[str, int] = {}
+    if not prefixes or (match is not None and match.size == 0):
+        return out
+    is_facet = sub["term"].str.startswith(tuple(prefixes))
+    for t, rows in sub[is_facet].groupby("term", sort=False):
+        if t in fq_set and match is not None:
+            # its intersection with the match is the match itself
+            n = int(match.size)
+        elif match is not None:
+            n = int(_member(np.unique(_ids(rows)), match).sum())
+        elif sdels is not None:
+            n = int((~_member(_ids(rows), sdels)).sum())
+        else:
+            n = int(_ids(rows).size)
+        if n:
+            out[t] = n
+    return out
+
+
+def _filter_scan(index, fq_terms, prefixes=()) -> "DataFrame | None":
+    """The filter-posting rows a kernel pass needs: the fq terms and
+    every value of the faceted fields (None when neither is asked)."""
+    pred = None
+    for c in ([F.col("term").startswith(p) for p in prefixes]
+              + [F.col("term") == ft for ft in fq_terms]):
+        pred = c if pred is None else (pred | c)
+    if pred is None:
+        return None
+    filters_tbl = getattr(index, "filters", None)
+    if filters_tbl is None:
+        raise ValueError(
+            "filter_queries / index-only facets need an index built with "
+            "filter_cols (no 'filters' stage present)")
+    return filters_tbl.filter(pred)
+
+
+def _union_scan(parts) -> DataFrame:
+    parts = [p for p in parts if p is not None]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
     return out
 
 
@@ -596,15 +736,18 @@ def wand_topk(
     ex_terms = (_analyze_query(exclude_query, index.chain)
                 if exclude_query else [])
     ex_set = set(ex_terms)
-    empty = spark.createDataFrame([], "doc_id long, score double")
+
+    def empty() -> DataFrame:
+        return local_frame(spark, [], "doc_id long, score double")
+
     if not qterms:
-        return empty
+        return empty()
     drows = index.cached_dictionary().filter(
         F.col("term").isin(qterms)
     ).collect()
     # (few terms: a literal In is fine here; the batch path broadcast-joins)
     if not drows:
-        return empty
+        return empty()
     boosts: dict[str, float] = {}
     if term_boosts:
         for raw, w in term_boosts.items():
@@ -617,7 +760,7 @@ def wand_topk(
         # matches no doc that survives; drop it from the scoring set
     }
     if not idf_by_term:
-        return empty
+        return empty()
     avgdl = index.avgdl
     kk = int(k)
     mm = parse_mm_spec(min_match, len(qterms))
@@ -632,13 +775,9 @@ def wand_topk(
     # decodes only its own ids.
     dels, del_tbl = _delete_state(index)
     fq_terms = list(filter_queries or [])
-    filters_tbl = None
-    if fq_terms:
-        filters_tbl = getattr(index, "filters", None)
-        if filters_tbl is None:
-            raise ValueError(
-                "filter_queries need an index built with filter_cols "
-                "(no 'filters' stage present)")
+    # fq clause postings ride the same salted scan (same block schema,
+    # zero caps — they never score, only gate)
+    fscan = _filter_scan(index, fq_terms)
     # restrict_ids: a request-sized explicit id set (QueryElevation's
     # score fetch) — one more include-set for the kernel
     restrict = (np.unique(np.asarray(list(restrict_ids), dtype=np.int64))
@@ -667,10 +806,7 @@ def wand_topk(
             if ex_set:
                 ex_rows = sub[sub["term"].isin(ex_set)]
                 if len(ex_rows):
-                    excl = np.unique(np.concatenate(
-                        [delta_decode(g).astype(np.int64)
-                         for g in ex_rows["doc_gaps"]]
-                    ))
+                    excl = np.unique(_ids(ex_rows))
             if sdels is not None:
                 excl = sdels if excl is None else np.union1d(excl, sdels)
             incs = None
@@ -678,11 +814,8 @@ def wand_topk(
                 incs = []
                 for ft in fq_terms:
                     frows = sub[sub["term"] == ft]
-                    incs.append(
-                        np.unique(np.concatenate(
-                            [delta_decode(g).astype(np.int64)
-                             for g in frows["doc_gaps"]]))
-                        if len(frows) else np.empty(0, dtype=np.int64))
+                    incs.append(np.unique(_ids(frows)) if len(frows)
+                                else np.empty(0, dtype=np.int64))
             if restrict is not None:
                 incs = (incs or []) + [restrict]
             bsets = None
@@ -694,11 +827,8 @@ def wand_topk(
                     + [(terms >= lo) & (terms <= hi) for lo, hi in ranges]
                 ):
                     rows = sub[pd_pred]
-                    bsets.append(
-                        np.unique(np.concatenate(
-                            [delta_decode(g).astype(np.int64)
-                             for g in rows["doc_gaps"]]))
-                        if len(rows) else np.empty(0, dtype=np.int64))
+                    bsets.append(np.unique(_ids(rows)) if len(rows)
+                                 else np.empty(0, dtype=np.int64))
                 wall = ([b for b in bsets if b.size])
                 if wall:
                     wu, wc = np.unique(np.concatenate(wall),
@@ -754,13 +884,8 @@ def wand_topk(
         seg_pred = seg_pred | F.col("term").startswith(p)
     for lo, hi in ranges:
         seg_pred = seg_pred | F.col("term").between(lo, hi)
-    matched = index.segments.filter(seg_pred)
-    if fq_terms:
-        # fq clause postings ride the same salted scan (same block schema,
-        # zero caps — they never score, only gate)
-        matched = matched.unionByName(
-            filters_tbl.filter(F.col("term").isin(fq_terms)))
-    matched = _with_del_rows(matched, del_tbl)
+    matched = _with_del_rows(
+        _union_scan([index.segments.filter(seg_pred), fscan]), del_tbl)
     candidates = _by_salt(matched, index).mapInPandas(
         score, schema="doc_id long, score double"
     )
@@ -772,6 +897,32 @@ def wand_topk(
     return topk
 
 
+
+
+def _dismax_terms(index, query: str, qf: dict, tie: float):
+    """Base query terms and their field-scoped keys -> base-term group."""
+    if not 0.0 <= float(tie) <= 1.0:
+        raise ValueError("tie must be in [0, 1] (dismax UB needs it)")
+    sep = getattr(index, "sep", "\x1f")
+    qterms = _analyze_query(query, index.chain)
+    return qterms, {f + sep + t: gi
+                    for f in qf for gi, t in enumerate(qterms)}
+
+
+def _dismax_weights(index, drows, qf: dict):
+    """Per-key boosted idf and per-field avgdl of the dictionary rows."""
+    sep = getattr(index, "sep", "\x1f")
+    idf_by_term: dict[str, float] = {}
+    avgdl_by_term: dict[str, float] = {}
+    for r in drows:
+        key = r["term"]
+        fld = key.partition(sep)[0]
+        n_docs_f, avgdl_f = index.field_stats[fld]
+        # boost folds into the per-key weight: caps (idf*max_wnorm) then
+        # bound the BOOSTED field score, keeping the UB machinery exact
+        idf_by_term[key] = float(qf[fld]) * bm25_idf(n_docs_f, int(r["df"]))
+        avgdl_by_term[key] = avgdl_f
+    return idf_by_term, avgdl_by_term
 
 
 def dismax_topk(
@@ -805,45 +956,22 @@ def dismax_topk(
     ``round_to``: rank by rounded scores (oracle tie contract) with
     eps-slackened pruning.
     """
-    if not 0.0 <= float(tie) <= 1.0:
-        raise ValueError("tie must be in [0, 1] (dismax UB needs it)")
-    spark = index.spark
-    sep = getattr(index, "sep", "\x1f")
-    qterms = _analyze_query(query, index.chain)
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    qterms, group_of = _dismax_terms(index, query, qf, tie)
     if not qterms:
-        return empty
-    keys = [f + sep + t for f in qf for t in qterms]
+        return local_frame(index.spark, [], "doc_id long, score double")
+    keys = list(group_of)
     drows = index.cached_dictionary().filter(
         F.col("term").isin(keys)
     ).collect()
     if not drows:
-        return empty
-    group_of: dict[str, int] = {}
-    idf_by_term: dict[str, float] = {}
-    avgdl_by_term: dict[str, float] = {}
-    for r in drows:
-        key = r["term"]
-        fld, _, base = key.partition(sep)
-        n_docs_f, avgdl_f = index.field_stats[fld]
-        # boost folds into the per-key weight: caps (idf*max_wnorm) then
-        # bound the BOOSTED field score, keeping the UB machinery exact
-        idf_by_term[key] = float(qf[fld]) * bm25_idf(n_docs_f, int(r["df"]))
-        avgdl_by_term[key] = avgdl_f
-        group_of[key] = qterms.index(base)
+        return local_frame(index.spark, [], "doc_id long, score double")
+    idf_by_term, avgdl_by_term = _dismax_weights(index, drows, qf)
     kk = int(k)
     mm = parse_mm_spec(min_match, len(qterms))
     n_groups = len(qterms)
     tie_f = float(tie)
     dels, del_tbl = _delete_state(index)
     fq_terms = list(filter_queries or [])
-    filters_tbl = None
-    if fq_terms:
-        filters_tbl = getattr(index, "filters", None)
-        if filters_tbl is None:
-            raise ValueError(
-                "filter_queries need an index built with filter_cols "
-                "(no 'filters' stage present)")
     fq_set = set(fq_terms)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -866,11 +994,8 @@ def dismax_topk(
                 incs = []
                 for ft in fq_terms:
                     frows = sub[sub["term"] == ft]
-                    incs.append(
-                        np.unique(np.concatenate(
-                            [delta_decode(g).astype(np.int64)
-                             for g in frows["doc_gaps"]]))
-                        if len(frows) else np.empty(0, dtype=np.int64))
+                    incs.append(np.unique(_ids(frows)) if len(frows)
+                                else np.empty(0, dtype=np.int64))
                 sub = sub[~sub["term"].isin(fq_set)]
                 if not len(sub):
                     continue
@@ -894,12 +1019,9 @@ def dismax_topk(
             {"doc_id": all_ids[sel], "score": all_scores[sel]}
         )
 
-    matched = index.segments.filter(F.col("term").isin(keys))
-    if fq_terms:
-        matched = matched.unionByName(
-            filters_tbl.filter(F.col("term").isin(fq_terms)),
-            allowMissingColumns=True)
-    matched = _with_del_rows(matched, del_tbl)
+    fscan = _filter_scan(index, fq_terms)
+    matched = _with_del_rows(_union_scan(
+        [index.segments.filter(F.col("term").isin(keys)), fscan]), del_tbl)
     candidates = _by_salt(matched, index).mapInPandas(
         score, schema="doc_id long, score double"
     )
@@ -962,7 +1084,7 @@ def wand_topk_batch(
     # broadcast-join, NOT isin: a literal In over thousands of query terms
     # generates enormous codegen (multi-second compile); a broadcast hash
     # join keeps the probe per-row and the plan small
-    qterms_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
+    qterms_df = local_frame(spark, [(t,) for t in all_terms], "term string")
     drows = index.cached_dictionary().join(
         F.broadcast(qterms_df), "term"
     ).collect()
@@ -1261,34 +1383,14 @@ def matching_doc_ids(
     matched only in the title still counts once — the dismax mm
     contract). When given, the keys of ``term_groups`` are used as the
     scan terms and ``query`` is not re-analyzed."""
-    spark = index.spark
-    match_all = query is None or query.strip() == "*:*"
-    if term_groups is not None:
-        qterms = list(term_groups)
-        n_groups = len(set(term_groups.values()))
-    elif match_all:
-        qterms = []
-        n_groups = 0
-    else:
-        qterms = _analyze_query(query, index.chain)
-        n_groups = len(qterms)
-    if not qterms and not match_all:
-        return spark.createDataFrame([], "doc_id long")
-    mm = 0 if match_all else parse_mm_spec(min_match, n_groups)
+    spec = _match_spec(index, query, min_match, filter_queries, term_groups)
+    if not spec.terms and not spec.match_all:
+        return local_frame(index.spark, [], "doc_id long")
     dels, del_tbl = _delete_state(index)
-    fq_terms = list(filter_queries or [])
-    filters_tbl = None
-    if fq_terms:
-        filters_tbl = getattr(index, "filters", None)
-        if filters_tbl is None:
-            raise ValueError(
-                "filter_queries need an index built with filter_cols "
-                "(no 'filters' stage present)")
-    if match_all and not fq_terms:
+    fscan = _filter_scan(index, spec.fq_terms)
+    if spec.match_all and fscan is None:
         # every live doc matches — the docs stage IS the bitset
         return index.docs.select("doc_id")
-    qset = set(qterms)
-    group_of = dict(term_groups) if term_groups is not None else None
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lst = list(batches)
@@ -1300,68 +1402,15 @@ def matching_doc_ids(
         out = []
         for _, sub in pdf.groupby("salt", sort=False):
             sdels = _salt_dels(sub, dels)
-            uniq = None
-            if not match_all:
-                if group_of is None:
-                    parts = []
-                    for t, rows in sub.groupby("term", sort=False):
-                        if t not in qset:
-                            continue
-                        parts.append(np.concatenate(
-                            [delta_decode(g).astype(np.int64)
-                             for g in rows["doc_gaps"]]))
-                else:
-                    # multi-field: dedupe WITHIN each base-term group
-                    # first (title+body hits of one term count once)
-                    by_group: dict[int, list] = {}
-                    for t, rows in sub.groupby("term", sort=False):
-                        g = group_of.get(t)
-                        if g is None:
-                            continue
-                        by_group.setdefault(g, []).append(np.concatenate(
-                            [delta_decode(x).astype(np.int64)
-                             for x in rows["doc_gaps"]]))
-                    parts = [np.unique(np.concatenate(arrs))
-                             for arrs in by_group.values()]
-                if not parts:
-                    continue
-                uniq, counts = np.unique(np.concatenate(parts),
-                                         return_counts=True)
-                keep = counts >= mm
-                uniq = uniq[keep]
-            for ft in fq_terms:
-                if uniq is not None and uniq.size == 0:
-                    break
-                frows = sub[sub["term"] == ft]
-                if not len(frows):
-                    uniq = np.empty(0, dtype=np.int64)
-                    break
-                inc = np.unique(np.concatenate(
-                    [delta_decode(g).astype(np.int64)
-                     for g in frows["doc_gaps"]]))
-                if uniq is None:  # match-all: first fq set IS the match
-                    uniq = inc
-                    continue
-                pos = np.clip(np.searchsorted(inc, uniq), 0, inc.size - 1)
-                uniq = uniq[inc[pos] == uniq]
-            if uniq is None:
-                continue
-            if sdels is not None and uniq.size:
-                pos = np.clip(np.searchsorted(sdels, uniq), 0,
-                              sdels.size - 1)
-                uniq = uniq[sdels[pos] != uniq]
-            if uniq.size:
-                out.append(uniq)
+            match = _salt_match(_drop_del_rows(sub), spec, sdels)
+            if match is not None and match.size:
+                out.append(match)
         if out:
             yield pd.DataFrame({"doc_id": np.concatenate(out)})
 
-    matched = (index.segments.filter(F.col("term").isin(qterms))
-               if qterms else None)
-    if fq_terms:
-        fpart = filters_tbl.filter(F.col("term").isin(fq_terms))
-        matched = (fpart if matched is None else matched.unionByName(
-            fpart, allowMissingColumns=True))
-    matched = _with_del_rows(matched, del_tbl)
+    qscan = (index.segments.filter(F.col("term").isin(list(spec.terms)))
+             if spec.terms else None)
+    matched = _with_del_rows(_union_scan([qscan, fscan]), del_tbl)
     return _by_salt(matched, index).mapInPandas(emit, schema="doc_id long")
 
 
@@ -1400,9 +1449,8 @@ def mlt_topk_phys(
         .filter(F.col("df") >= int(min_doc_freq))
         .collect()
     )
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not rows:
-        return empty
+        return local_frame(spark, [], "doc_id long, score double")
     n = index.n_docs
     ranked = sorted(
         rows, key=lambda r: (-(r["tf"] * math.log(n / r["df"])), r["term"])
@@ -1441,28 +1489,13 @@ def facet_match_counts(
     MatchAllDocsQuery battery (the reference's profiling request):
     counts are live posting sizes per value and ``__num_found__`` is the
     live doc count — still one metadata-only pass."""
-    spark = index.spark
-    filters_tbl = getattr(index, "filters", None)
-    if filters_tbl is None:
+    if getattr(index, "filters", None) is None:
         raise ValueError(
             "facet_match_counts needs an index built with filter_cols")
+    spec = _match_spec(index, query, min_match, filter_queries, term_groups)
     prefixes = [f + ":" for f in facet_fields]
-    fq_terms = list(filter_queries or [])
+    fq_set = set(spec.fq_terms)
     dels, del_tbl = _delete_state(index)
-    match_all = query is None or query.strip() == "*:*"
-    # term_groups: multi-field (edismax qf) indexes — field-scoped keys
-    # of one base term share a group; mm counts DISTINCT GROUPS (see
-    # matching_doc_ids)
-    if term_groups is not None and not match_all:
-        qterms = list(term_groups)
-        mm = parse_mm_spec(min_match, len(set(term_groups.values())))
-    else:
-        qterms = [] if match_all else _analyze_query(query, index.chain)
-        mm = 0 if match_all else parse_mm_spec(min_match, len(qterms))
-    qset = set(qterms)
-    group_of = (dict(term_groups)
-                if term_groups is not None and not match_all else None)
-    fq_set = set(fq_terms)
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lst = list(batches)
@@ -1477,99 +1510,23 @@ def facet_match_counts(
             sub = _drop_del_rows(sub)
             if not len(sub):
                 continue
-            # the salt's match set
-            match = None
-            if not match_all:
-                if group_of is None:
-                    parts = [
-                        np.concatenate([delta_decode(g).astype(np.int64)
-                                        for g in rows["doc_gaps"]])
-                        for t, rows in sub.groupby("term", sort=False)
-                        if t in qset
-                    ]
-                else:
-                    by_group: dict[int, list] = {}
-                    for t, rows in sub.groupby("term", sort=False):
-                        g = group_of.get(t)
-                        if g is None:
-                            continue
-                        by_group.setdefault(g, []).append(np.concatenate(
-                            [delta_decode(x).astype(np.int64)
-                             for x in rows["doc_gaps"]]))
-                    parts = [np.unique(np.concatenate(arrs))
-                             for arrs in by_group.values()]
-                if not parts:
-                    continue
-                uniq, counts = np.unique(np.concatenate(parts),
-                                         return_counts=True)
-                match = uniq[counts >= mm]
-            for ft in fq_terms:
-                frows = sub[sub["term"] == ft]
-                inc = (np.unique(np.concatenate(
-                    [delta_decode(g).astype(np.int64)
-                     for g in frows["doc_gaps"]]))
-                    if len(frows) else np.empty(0, dtype=np.int64))
-                if match is None:  # match-all: first fq set IS the match
-                    match = inc
-                elif match.size:
-                    pos = np.clip(np.searchsorted(inc, match), 0,
-                                  max(inc.size - 1, 0))
-                    match = (match[inc[pos] == match] if inc.size
-                             else match[:0])
-            if sdels is not None and match is not None and match.size:
-                pos = np.clip(np.searchsorted(sdels, match), 0,
-                              sdels.size - 1)
-                match = match[sdels[pos] != match]
+            match = _salt_match(sub, spec, sdels)
             if match is not None:
                 out_t.append("__num_found__")
                 out_c.append(int(match.size))
-                if match.size == 0:
-                    continue
-            # facet terms of this salt
-            is_facet = sub["term"].str.startswith(tuple(prefixes)) \
-                if prefixes else None
-            if is_facet is None:
-                continue
-            for t, rows in sub[is_facet].groupby("term", sort=False):
-                if t in fq_set and match is not None:
-                    # its intersection with match is match itself
-                    out_t.append(t)
-                    out_c.append(int(match.size))
-                    continue
-                ids = np.concatenate(
-                    [delta_decode(g).astype(np.int64)
-                     for g in rows["doc_gaps"]])
-                if match is not None:
-                    ids = np.unique(ids)
-                    pos = np.clip(np.searchsorted(match, ids), 0,
-                                  match.size - 1)
-                    n = int((match[pos] == ids).sum())
-                elif sdels is not None:
-                    pos = np.clip(np.searchsorted(sdels, ids), 0,
-                                  sdels.size - 1)
-                    n = int((sdels[pos] != ids).sum())
-                else:
-                    n = int(ids.size)
-                if n:
-                    out_t.append(t)
-                    out_c.append(n)
+            for t, n in _salt_facet_counts(sub, prefixes, fq_set, match,
+                                           sdels).items():
+                out_t.append(t)
+                out_c.append(n)
         if out_t:
             yield pd.DataFrame({"fterm": out_t, "count": out_c})
 
-    pred = None
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pred = c if pred is None else (pred | c)
-    for ft in fq_terms:
-        c = F.col("term") == ft
-        pred = c if pred is None else (pred | c)
-    matched = filters_tbl.filter(pred) if pred is not None \
-        else filters_tbl.limit(0)
-    if not match_all:
-        matched = index.segments.filter(
-            F.col("term").isin(qterms)
-        ).unionByName(matched, allowMissingColumns=True)
-    matched = _with_del_rows(matched, del_tbl)
+    fscan = _filter_scan(index, spec.fq_terms, prefixes)
+    if fscan is None:
+        fscan = index.filters.limit(0)
+    qscan = (index.segments.filter(F.col("term").isin(list(spec.terms)))
+             if spec.terms else None)
+    matched = _with_del_rows(_union_scan([qscan, fscan]), del_tbl)
     per_salt = _by_salt(matched, index).mapInPandas(
         emit, schema="fterm string, count long")
     agg = per_salt.groupBy("fterm").agg(F.sum("count").alias("count"))
@@ -1581,14 +1538,140 @@ def facet_match_counts(
         .otherwise(split.getItem(1)).alias("facet_value"),
         "count",
     )
-    if match_all and not fq_terms:
-        # every live doc matches; __num_found__ comes from the stats
-        # stage (no salt emitted it — the kernel saw only facet terms)
-        nf = spark.createDataFrame(
-            [("__num_found__", None, int(index.n_docs))],
-            "facet_field string, facet_value string, count long")
-        out = out.unionByName(nf)
+    if spec.match_all and not spec.fq_terms:
+        # every live doc matches; __num_found__ is the live doc count (no
+        # salt emitted it — the kernel saw only facet terms)
+        out = out.unionByName(local_frame(
+            index.spark, [("__num_found__", None, int(index.n_docs))],
+            "facet_field string, facet_value string, count long"))
     return out
+
+
+@dataclass
+class SelectPass:
+    """What one relevance ``/select`` needs from the postings: numFound,
+    the top-k page on the kernel's order and the index-only facet counts
+    (``'field:value' -> |value postings ∩ match|``)."""
+
+    num_found: int
+    doc_ids: np.ndarray  # top-k, (score desc, doc_id asc)
+    scores: np.ndarray   # kernel scores (dismax: rounded when round_to)
+    facet_counts: "dict[str, int]"
+
+
+def select_pass(
+    index,
+    query: str,
+    k: int,
+    min_match: int | str = 1,
+    filter_queries: "Sequence[str] | None" = None,
+    facet_fields: "Sequence[str]" = (),
+    qf: "dict[str, float] | None" = None,
+    tie: float = 0.1,
+    round_to: int | None = None,
+) -> SelectPass:
+    """One relevance request from ONE salted kernel pass — Solr's
+    ``SolrIndexSearcher.getDocListAndSet``, where one search feeds both
+    the top-k collector and the facet DocSet.
+
+    The pass scans the query postings ∪ the fq / faceted-field filter
+    postings ∪ the tombstone rows. Per salt it computes the match set
+    (:func:`matching_doc_ids`' kernel), its size, the per-value facet
+    counts (:func:`facet_match_counts`' kernel) and the block-max top-k
+    restricted to the match set (the :func:`wand_topk` kernel, or the
+    :func:`dismax_topk` one when ``qf`` is given; a doc outside the match
+    never raises theta, so pruning stays exact). One ``collect()``
+    returns at most ``n_parts x k`` page rows plus the counts; the
+    driver merges them on (score desc, doc_id asc). Scores are the
+    kernel's own: raw for ``qf=None``, ranked-and-rounded for dismax
+    with ``round_to`` (the :func:`dismax_topk` contract)."""
+    group_of = None
+    if qf is not None:
+        qterms, group_of = _dismax_terms(index, query, qf, tie)
+    spec = _match_spec(index, query, min_match, filter_queries, group_of)
+    if spec.match_all:
+        raise ValueError("select_pass answers a relevance q; q=*:* pages "
+                         "over matching_doc_ids")
+    kk = int(k)
+    prefixes = [f + ":" for f in facet_fields]
+    fscan = _filter_scan(index, spec.fq_terms, prefixes)
+    none = SelectPass(0, np.empty(0, dtype=np.int64), np.empty(0), {})
+    if not spec.terms:
+        return none
+    drows = index.cached_dictionary().filter(
+        F.col("term").isin(list(spec.terms))).collect()
+    if not drows:
+        # no query term is in the index: the match set is empty
+        return none
+    if qf is not None:
+        weights, avgdl_by_term = _dismax_weights(index, drows, qf)
+        kernel_kw = dict(avgdl=0.0, group_of=group_of, n_groups=len(qterms),
+                         tie=float(tie), avgdl_by_term=avgdl_by_term,
+                         round_to=round_to)
+    else:
+        weights = {r["term"]: bm25_idf(index.n_docs, int(r["df"]))
+                   for r in drows}
+        kernel_kw = dict(avgdl=index.avgdl)
+    dels, del_tbl = _delete_state(index)
+    fq_set = set(spec.fq_terms)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lst = list(batches)
+        if not lst:
+            return
+        pdf = pd.concat(lst, ignore_index=True)
+        if len(pdf) == 0:
+            return
+        theta = -math.inf
+        id_parts, score_parts = [], []
+        n_found = 0
+        counts: dict[str, int] = {}
+        for _, sub in pdf.groupby("salt", sort=False):
+            sdels = _salt_dels(sub, dels)
+            sub = _drop_del_rows(sub)
+            if not len(sub):
+                continue
+            match = _salt_match(sub, spec, sdels)
+            n_found += int(match.size)
+            for t, n in _salt_facet_counts(sub, prefixes, fq_set, match,
+                                           sdels).items():
+                counts[t] = counts.get(t, 0) + n
+            srows = sub[sub["term"].isin(weights)]
+            if not (kk and match.size and len(srows)):
+                continue
+            ids, scores, _, theta = _score_blocks_bmw(
+                srows, weights, kk, min_match=spec.mm, theta0=theta,
+                include_sets=[match], **kernel_kw)
+            id_parts.append(ids)
+            score_parts.append(scores)
+        ids = (np.concatenate(id_parts) if id_parts
+               else np.empty(0, dtype=np.int64))
+        scores = np.concatenate(score_parts) if score_parts else np.empty(0)
+        sel = _topk_exact(ids, scores, kk)
+        page = pd.DataFrame({"doc_id": ids[sel], "score": scores[sel]})
+        tally = pd.DataFrame({"fterm": ["__num_found__", *counts],
+                              "count": [n_found, *counts.values()]})
+        out = pd.concat([page, tally], ignore_index=True)
+        yield out.astype({"doc_id": "Int64", "count": "Int64"})
+
+    qscan = index.segments.filter(F.col("term").isin(list(spec.terms)))
+    matched = _with_del_rows(_union_scan([qscan, fscan]), del_tbl)
+    rows = _by_salt(matched, index).mapInPandas(
+        run, schema="doc_id long, score double, fterm string, count long"
+    ).collect()
+    n_found, counts, ids, scores = 0, {}, [], []
+    for r in rows:
+        if r["fterm"] is None:
+            ids.append(r["doc_id"])
+            scores.append(r["score"])
+        elif r["fterm"] == "__num_found__":
+            n_found += r["count"]
+        else:
+            counts[r["fterm"]] = counts.get(r["fterm"], 0) + r["count"]
+    ids_a = np.asarray(ids, dtype=np.int64)
+    scores_a = np.asarray(scores, dtype=np.float64)
+    sel = _topk_exact(ids_a, scores_a, kk)
+    return SelectPass(int(n_found), ids_a[sel], scores_a[sel], counts)
 
 
 def grouped_topk_phys(

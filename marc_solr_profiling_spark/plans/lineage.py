@@ -45,6 +45,8 @@ class IndexStore:
         # independent stages (docs || segments) commit from concurrent
         # driver threads; the manifest read-modify-write must be atomic
         self._lock = threading.Lock()
+        # stage -> (session, committed_at, frame): see read_stage
+        self._frames: dict[str, tuple] = {}
 
     # -- manifest -----------------------------------------------------------
     def _read_manifest(self) -> dict:
@@ -159,10 +161,28 @@ class IndexStore:
                     "partitions": lineage,
                 }
                 self._write_manifest(m)
-        return spark.read.parquet(self.stage_path(stage))
+        return self.read_stage(spark, stage)
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self.stage_path(stage))
+        """The committed stage as a DataFrame, resolved once per store.
+
+        ``spark.read.parquet`` runs a schema-inference job (~150 ms) on
+        every call; a committed stage is immutable, so its frame is kept,
+        keyed on the session and the manifest's ``committed_at`` — a
+        recommit at this path (through any store instance) is read
+        afresh. A stage not in the manifest is never cached."""
+        entry = self._read_manifest()["stages"].get(stage)
+        if entry is None:
+            return spark.read.parquet(self.stage_path(stage))
+        key = (spark, entry.get("committed_at"))
+        with self._lock:
+            hit = self._frames.get(stage)
+            if hit is not None and hit[:2] == key:
+                return hit[2]
+        df = spark.read.parquet(self.stage_path(stage))
+        with self._lock:
+            self._frames[stage] = (*key, df)
+        return df
 
     def lineage(self) -> dict:
         return self._read_manifest()

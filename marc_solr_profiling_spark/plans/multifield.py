@@ -53,6 +53,10 @@ class MultiFieldIndex(InvertedIndex):
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
             for r in self._stats_rows
         }
+        # every doc has a row in every field, so any field's count is the
+        # live doc count (the single-field ``n_docs``)
+        self.n_docs = max((n for n, _ in self.field_stats.values()),
+                          default=0)
 
     def _rescaled_segments(self, store: IndexStore) -> DataFrame:
         """Per-FIELD cap rescaling under corpus drift (the single-field

@@ -15,12 +15,18 @@ workload's ``q=*:*`` battery; this plan answers the general case where
 
 Scale shape: the match set is computed ONCE (the same Catalyst-visible
 BM25 plan as ``bm25_topk_sql_plan(return_all_scored=True)``) and
-persisted; numFound is its count, the page is a bounded top-(start+rows)
-sort over it, the facet battery is ONE stack()+groupBy pass over the
-match-set semi-join (one shuffle for all fields), and highlighting is
-pure string expressions over the page join — the corpus text is scanned
-exactly once for scoring and once (pruned to the page keys) for
-snippets. Nothing is collected to the driver except numFound.
+persisted for the request; numFound is its count, the page is a bounded
+top-(start+rows) sort over it, the facet battery is ONE stack()+groupBy
+pass over the match-set semi-join (one shuffle for all fields), and
+highlighting is pure string expressions over the page join — the corpus
+text is scanned exactly once for scoring and once (pruned to the page
+keys) for snippets. Only the bounded sections reach the driver: the
+page (start+rows rows) and the facet / range / pivot batteries are
+collected into local frames before the match set is released, so no
+request leaves a cached block behind.
+
+The physical twin (:func:`solr_select_physical`) answers the relevance
+request from ONE salted kernel pass over the postings.
 """
 
 from __future__ import annotations
@@ -28,19 +34,27 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import ANALYZERS
 from ..operators.bm25 import bm25_topk_sql_plan
 from ..operators.facets import facet_multi
+from ..session import local_frame
 
 
 @dataclass
 class SelectResponse:
-    """The sections of one /select response, each still a lazy plan
-    (materialize what the caller reads — Solr's response writer streams
-    sections the same way)."""
+    """The sections of one /select response as DataFrames (read what the
+    caller needs — Solr's response writer streams sections the same
+    way). The bounded sections — the page and the facet batteries — are
+    driver-built local frames wherever the request computed them
+    already (the physical relevance pass, or a section collected before
+    a persisted match set was released): reading them runs no Spark job.
+    Highlights, and facets counted by a metadata join over an unpersisted
+    match set, stay lazy plans."""
 
     num_found: int
     docs: DataFrame                      # (key, score, rank) — the page
@@ -55,12 +69,11 @@ class SelectResponse:
         """Flatten every section into one narrow frame
         ``(section, k, v, num, ord)`` — the oracle-comparable wire form
         (Solr's JSON response as rows)."""
-        spark = self.docs.sparkSession
-        meta = spark.createDataFrame(
+        out = local_frame(
+            self.docs.sparkSession,
             [("meta", "num_found", None, float(self.num_found), 0)],
             "section string, k string, v string, num double, ord int",
         )
-        out = meta
         docs = self.docs.select(
             F.lit("doc").alias("section"),
             F.col(key_col).cast("string").alias("k"),
@@ -167,9 +180,9 @@ def solr_select(
             docs, q, key_col=key_col, chain=chain, round_to=round_to,
             min_match=min_match, filter_query=fq, return_all_scored=True,
         )
-    # one scored match set feeds numFound + page + facets: persist it
-    # (executor-resident; released when the handle is GC'd — the Solr
-    # queryResultCache analog for the duration of the request)
+    # one scored match set feeds numFound + page + facets: persist it for
+    # the request (the Solr queryResultCache analog), released once the
+    # bounded sections are collected
     matched = matched.persist()
     n_found = matched.count()
 
@@ -208,12 +221,6 @@ def solr_select(
         page = cursor_page(frame, sort, cur, page_size=rows)
         page = page.withColumn(
             "rank", F.row_number().over(Window.orderBy(*sort_columns(sort))))
-        last = page.orderBy(F.desc("rank")).limit(1).collect()
-        # an exhausted cursor echoes the mark it was sent ("*" included),
-        # as Solr does
-        next_cursor = (tuple(last[0][f] for f in fields) if last
-                       else (cur if cur is not None else "*"))
-        page = page.select(key_col, "score", "rank")
     elif sort:
         from ..functions.sort_spec import parse_sort_spec, sort_columns
 
@@ -241,6 +248,13 @@ def solr_select(
         )
     if start:
         page = page.filter(F.col("rank") > start)
+    page, page_rows = _materialize(page)
+    if cursor_mark is not None:
+        # an exhausted cursor echoes the mark it was sent ("*" included),
+        # as Solr does
+        last = max(page_rows, key=lambda r: r["rank"], default=None)
+        next_cursor = (tuple(last[f] for f in fields) if last is not None
+                       else (cur if cur is not None else "*"))
 
     facets = None
     ranges_out = None
@@ -281,35 +295,15 @@ def solr_select(
         for p in pparts[1:]:
             pivots_out = pivots_out.unionByName(p)
 
+    facets, ranges_out, pivots_out = (
+        None if sec is None else _materialize(sec)[0]
+        for sec in (facets, ranges_out, pivots_out))
+    matched.unpersist()
+
     highlights = None
     if hl and not match_all:
-        qterms: list[str] = []
-        for t in ANALYZERS[chain](q):
-            if t not in qterms:
-                qterms.append(t)
-        NOPOS = 1 << 30
-        lower = F.lower(F.col(text_col))
-        cands = F.array(*[
-            F.struct(
-                F.when(F.locate(t, lower) > 0, F.locate(t, lower))
-                .otherwise(F.lit(NOPOS)).cast("int").alias("pos"),
-                F.lit(t).alias("term"),
-            )
-            for t in sorted(qterms)
-        ])
-        best = F.array_min(cands)
-        found = best["pos"] < NOPOS
-        start_at = F.greatest(best["pos"] - 30, F.lit(1))
-        highlights = (
-            page.join(docs.select(key_col, text_col), key_col)
-            .select(
-                key_col,
-                F.when(found, best["term"]).alias("matched_term"),
-                F.when(found, best["pos"]).cast("int").alias("match_pos"),
-                F.when(found, F.substring(F.col(text_col), start_at,
-                                          hl_frag_chars)).alias("snippet"),
-            )
-        )
+        highlights = _highlights(page, docs, key_col, text_col,
+                                 ANALYZERS[chain](q), hl_frag_chars)
 
     return SelectResponse(
         num_found=n_found,
@@ -322,6 +316,8 @@ def solr_select(
         params={"q": q, "start": start, "rows": rows,
                 "facet_fields": list(facet_fields)},
     )
+
+
 
 
 def solr_select_physical(
@@ -346,36 +342,48 @@ def solr_select_physical(
     cursor_mark: "tuple | list | str | None" = None,
 ) -> SelectResponse:
     """The /select request answered FROM THE PHYSICAL INDEX — how Solr
-    actually executes it: the QueryComponent's match bitset comes from
-    the postings (``operators/wand.matching_doc_ids`` — no scoring, no
-    text scan), ``fq`` clauses are indexed filter postings
-    (``build_index(filter_cols=...)``), the page is block-max WAND
-    top-(start+rows), and the facet battery counts the match set by
-    semi-joining the metadata table (the docvalues analog) against the
-    match ids. The corpus TEXT is never touched at query time.
+    actually executes it: ``fq`` clauses are indexed filter postings
+    (``build_index(filter_cols=...)``), the match bitset and the page
+    come from the postings, and the corpus TEXT is never touched at
+    query time.
 
-    ``meta_docs``: table carrying ``key_col`` + the facet columns,
-    aligned with the index's doc ids (build the index with
-    ``id_col=key_col``). When every facet field is covered by the
-    index's ``filter_cols`` stage, numFound AND the facet battery come
-    from ONE index-only kernel pass (``wand.facet_match_counts`` —
-    Lucene's per-segment bitset facet counting) and ``meta_docs`` may be
-    None: the whole request is answered from the index alone."""
+    The relevance request (a ``q`` with optional ``fq``, paging, ``mm``,
+    ``qf``) is ONE salted kernel pass (``wand.select_pass``) — the
+    analog of Solr's ``SolrIndexSearcher.getDocListAndSet``, where one
+    search feeds both the top-k collector and the facet DocSet: per salt
+    it emits the match-set size, the block-max top-(start+rows) and, for
+    facet fields covered by the index's ``filter_cols``, the per-value
+    counts of the match set (Lucene's per-segment bitset facet
+    counting). One ``collect()`` brings back at most ``n_parts x k``
+    page rows plus the counts; the page (scores rounded by ``F.round``,
+    ranked by (score desc, key asc)) and the facets are then driver-built
+    local frames, so reading them runs no Spark job. ``meta_docs`` may
+    be None for such a request: it is answered from the index alone.
+
+    ``meta_docs``: table carrying ``key_col`` + the facet / sort /
+    stored-text columns, aligned with the index's doc ids (build the
+    index with ``id_col=key_col``). Facet fields outside ``filter_cols``
+    count the match set (``wand.matching_doc_ids``) semi-joined to it
+    (the docvalues analog); ``sort=`` (with or without ``cursor_mark``)
+    and ``q=None``/``'*:*'`` page over the match set joined to its sort
+    columns, with index-only facets from ``wand.facet_match_counts``.
+    Those shapes return their page (and any facets counted from a
+    persisted match set) as local frames too, so nothing they persist
+    outlives the call. ``hl=True`` joins the page to ``meta_docs``'
+    ``text_col``."""
     from pyspark.sql import Window
 
     from ..operators.wand import (
-        dismax_topk,
         facet_match_counts,
         matching_doc_ids,
-        wand_topk,
+        select_pass,
     )
 
+    spark = index.spark
     # edismax qf mode (the reference's DEFAULT handler,
     # solrconfig.xml:67-83): ``index`` is a MULTI-FIELD index
-    # (plans/multifield.py), the page comes from the dismax block-max
-    # kernel, and the match bitset / facet battery run over the same
-    # field-scoped postings with mm counting distinct BASE terms (the
-    # term_groups contract of matching_doc_ids/facet_match_counts)
+    # (plans/multifield.py) and mm counts distinct BASE terms over its
+    # field-scoped postings (the term_groups contract of the kernels)
     term_groups = None
     if qf is not None:
         sep = getattr(index, "sep", "\x1f")
@@ -391,152 +399,99 @@ def solr_select_physical(
     # Lucene's constant score 1.0, keyed order — the reference's
     # profiling request shape, same contract as the logical solr_select
     match_all = q is None or q.strip() == "*:*"
+    relevance = not (match_all or sort)
+
+    if relevance:
+        res = select_pass(
+            index, q, k=start + rows, min_match=min_match,
+            filter_queries=fqs,
+            facet_fields=list(facet_fields) if index_only else (),
+            qf=qf, tie=tie, round_to=round_to)
+        n_found = res.num_found
+        counts = [(*t.split(":", 1), n) for t, n in res.facet_counts.items()]
+    elif index_only:
+        fm = facet_match_counts(
+            index, q, facet_fields=list(facet_fields), filter_queries=fqs,
+            min_match=min_match, term_groups=term_groups).collect()
+        n_found = sum(r["count"] for r in fm
+                      if r["facet_field"] == "__num_found__")
+        counts = [tuple(r) for r in fm
+                  if r["facet_field"] != "__num_found__"]
+    match = persisted = None
+    if not relevance or (facet_fields and not index_only):
+        match = matching_doc_ids(index, q, min_match=min_match,
+                                 filter_queries=fqs, term_groups=term_groups)
+    if not (relevance or index_only):
+        # numFound, the page and the facet join all read the match set
+        match = persisted = match.persist()
+        n_found = match.count()
 
     facets = None
     if index_only:
-        # one pass: match-set size + per-value intersection counts,
-        # straight from the postings
-        fm = facet_match_counts(
-            index, q, facet_fields=list(facet_fields),
-            filter_queries=fqs, min_match=min_match,
-            term_groups=term_groups,
-        ).persist()
-        n_found = int(
-            fm.filter(F.col("facet_field") == "__num_found__")
-            .agg(F.sum("count")).collect()[0][0] or 0
-        )
-        w = Window.partitionBy("facet_field").orderBy(
-            F.desc("count"), F.asc("facet_value"))
-        facets = (
-            fm.filter(F.col("facet_field") != "__num_found__")
-            .filter(F.col("count") >= facet_mincount)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= facet_limit)
-            .orderBy("facet_field", "rank")
-        )
-    else:
-        match = matching_doc_ids(
-            index, q, min_match=min_match, filter_queries=fqs,
-            term_groups=term_groups,
-        ).persist()
-        n_found = match.count()
-    if match_all:
-        # constant-score page over the match bitset (no scoring kernel —
-        # wand_topk analyzes '*:*' to zero terms): keyed order by
-        # default, field order under sort= (docvalues join, like the
-        # sort path below), score 1.0 either way (Lucene's constant)
-        m = (matching_doc_ids(index, q, filter_queries=fqs,
-                              term_groups=term_groups)
-             if index_only else match)
-        frame = m.withColumnRenamed("doc_id", key_col).withColumn(
-            "score", F.lit(1.0))
-        if sort:
-            from ..functions.sort_spec import parse_sort_spec, sort_columns
-
-            if meta_docs is None:
-                raise ValueError("field sorting needs meta_docs")
-            extra = [f for f, _ in parse_sort_spec(sort)
-                     if f not in (key_col, "score")]
-            if extra:
-                frame = frame.join(
-                    meta_docs.select(key_col, *extra), key_col)
-            keys = sort_columns(sort)
-        else:
-            keys = [F.asc(key_col)]
-        page = (
-            frame.orderBy(*keys).limit(start + rows)
-            .withColumn("rank",
-                        F.row_number().over(Window.orderBy(*keys)))
-        )
-        if start:
-            page = page.filter(F.col("rank") > start)
-
-    next_cursor = None
-    if match_all:
-        pass  # page built above (incl. sort= handling)
-    elif sort:
-        # Solr field sorting (sort=... replaces relevance): the page is
-        # the match bitset joined to the metadata table's sort columns
-        # (docvalues analog), bounded-sorted — no scoring at all. A spec
-        # referencing 'score' IS the default path; use sort=None.
-        # ``cursor_mark``: keyset deep paging over the same frame (the
-        # cursor predicate filters the match bitset BEFORE the top-k).
-        from ..functions.sort_spec import (
-            cursor_after_expr,
-            parse_sort_spec,
-            sort_columns,
-        )
-
-        fields = parse_sort_spec(sort)
-        if any(f == "score" for f, _ in fields):
-            raise ValueError(
-                "sort specs referencing 'score' are the default "
-                "relevance path — pass sort=None")
-        if meta_docs is None:
-            raise ValueError("field sorting needs meta_docs")
-        if cursor_mark is not None and start:
-            raise ValueError("cursorMark cannot be combined with start="
-                             " (Solr rejects this too)")
-        extra = [f for f, _ in fields if f != key_col]
-        # the index-only facet path never materialized the id frame;
-        # fetch it here (one postings pass, no scoring)
-        m = (matching_doc_ids(index, q, min_match=min_match,
-                              filter_queries=fqs,
-                              term_groups=term_groups)
-             if index_only else match)
-        frame = m.withColumnRenamed("doc_id", key_col).join(
-            meta_docs.select(key_col, *extra), key_col)
-        if cursor_mark is not None and cursor_mark != "*":
-            frame = frame.filter(
-                cursor_after_expr(sort, tuple(cursor_mark)))
-        keys = sort_columns(sort)
-        limit_n = rows if cursor_mark is not None else start + rows
-        page = (
-            frame.orderBy(*keys).limit(limit_n)
-            .withColumn("rank", F.row_number().over(Window.orderBy(*keys)))
-            .withColumn("score", F.lit(None).cast("double"))
-        )
-        if cursor_mark is not None:
-            fnames = [f for f, _ in fields]
-            last = page.orderBy(F.desc("rank")).limit(1).collect()
-            # exhausted: echo the sent mark ("*" included), as Solr does
-            next_cursor = (tuple(last[0][f] for f in fnames) if last
-                           else (tuple(cursor_mark)
-                                 if cursor_mark != "*" else "*"))
-    elif qf is not None:
-        page = dismax_topk(index, q, qf=qf, tie=tie, k=start + rows,
-                           min_match=min_match, filter_queries=fqs,
-                           round_to=round_to)
-        page = page.withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"),
-                                               F.asc("doc_id"))),
-        )
-        if key_col != "doc_id":
-            page = page.withColumnRenamed("doc_id", key_col)
-    else:
-        page = wand_topk(index, q, k=start + rows, with_url=False,
-                         min_match=min_match, filter_queries=fqs)
-        if round_to is not None:
-            page = page.select(
-                "doc_id", F.round("score", round_to).alias("score"))
-        page = page.withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"),
-                                               F.asc("doc_id"))),
-        )
-        if key_col != "doc_id":
-            page = page.withColumnRenamed("doc_id", key_col)
-    if start:
-        page = page.filter(F.col("rank") > start)
-
-    if facet_fields and not index_only:
+        facets = _facet_frame(spark, counts, facet_mincount, facet_limit)
+    elif facet_fields:
         domain = meta_docs.join(
             match.withColumnRenamed("doc_id", key_col), key_col,
             "left_semi")
         facets = facet_multi(domain, list(facet_fields), limit=facet_limit)
         if facet_mincount > 1:
             facets = facets.filter(F.col("count") >= facet_mincount)
+
+    next_cursor = None
+    if relevance:
+        page = _relevance_page(spark, res, key_col, round_to, start)
+    else:
+        # match-all: constant-score page over the match bitset, keyed
+        # order by default. sort=: Solr field sorting replaces relevance —
+        # the match bitset joined to the metadata table's sort columns
+        # (docvalues analog), bounded-sorted, no scoring; a spec naming
+        # 'score' IS the relevance path. ``cursor_mark``: keyset deep
+        # paging (the cursor predicate filters the match bitset BEFORE
+        # the top-k)
+        from ..functions.sort_spec import (
+            cursor_after_expr,
+            parse_sort_spec,
+            sort_columns,
+        )
+
+        fields = parse_sort_spec(sort) if sort else []
+        cursor = None if match_all else cursor_mark
+        if not match_all:
+            if any(f == "score" for f, _ in fields):
+                raise ValueError(
+                    "sort specs referencing 'score' are the default "
+                    "relevance path — pass sort=None")
+            if cursor is not None and start:
+                raise ValueError("cursorMark cannot be combined with start="
+                                 " (Solr rejects this too)")
+        if sort and meta_docs is None:
+            raise ValueError("field sorting needs meta_docs")
+        frame = match.withColumnRenamed("doc_id", key_col).withColumn(
+            "score", F.lit(1.0) if match_all else F.lit(None).cast("double"))
+        extra = [f for f, _ in fields if f not in (key_col, "score")]
+        if extra:
+            frame = frame.join(meta_docs.select(key_col, *extra), key_col)
+        if cursor is not None and cursor != "*":
+            frame = frame.filter(cursor_after_expr(sort, tuple(cursor)))
+        keys = sort_columns(sort) if sort else [F.asc(key_col)]
+        page = (
+            frame.orderBy(*keys)
+            .limit(rows if cursor is not None else start + rows)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*keys)))
+        )
+        if start:
+            page = page.filter(F.col("rank") > start)
+        page, page_rows = _materialize(page)
+        if cursor is not None:
+            # exhausted: echo the sent mark ("*" included), as Solr does
+            last = max(page_rows, key=lambda r: r["rank"], default=None)
+            next_cursor = (
+                tuple(last[f] for f, _ in fields) if last is not None
+                else (tuple(cursor) if cursor != "*" else "*"))
+    if persisted is not None:
+        if facets is not None:
+            facets = _materialize(facets)[0]
+        persisted.unpersist()
 
     highlights = None
     if hl and not match_all:
@@ -547,34 +502,8 @@ def solr_select_physical(
             raise ValueError(
                 f"hl=True needs meta_docs with a {text_col!r} column "
                 "(the stored-field table)")
-
-        qterms: list[str] = []
-        for t in ANALYZERS[index.chain](q):
-            if t not in qterms:
-                qterms.append(t)
-        NOPOS = 1 << 30
-        lower = F.lower(F.col(text_col))
-        cands = F.array(*[
-            F.struct(
-                F.when(F.locate(t, lower) > 0, F.locate(t, lower))
-                .otherwise(F.lit(NOPOS)).cast("int").alias("pos"),
-                F.lit(t).alias("term"),
-            )
-            for t in sorted(qterms)
-        ])
-        best = F.array_min(cands)
-        found = best["pos"] < NOPOS
-        start_at = F.greatest(best["pos"] - 30, F.lit(1))
-        highlights = (
-            page.join(meta_docs.select(key_col, text_col), key_col)
-            .select(
-                key_col,
-                F.when(found, best["term"]).alias("matched_term"),
-                F.when(found, best["pos"]).cast("int").alias("match_pos"),
-                F.when(found, F.substring(F.col(text_col), start_at,
-                                          hl_frag_chars)).alias("snippet"),
-            )
-        )
+        highlights = _highlights(page, meta_docs, key_col, text_col,
+                                 ANALYZERS[index.chain](q), hl_frag_chars)
 
     return SelectResponse(
         num_found=n_found,
@@ -584,4 +513,79 @@ def solr_select_physical(
         next_cursor_mark=next_cursor,
         params={"q": q, "fq": list(fq), "start": start, "rows": rows,
                 "facet_fields": list(facet_fields), "physical": True},
+    )
+
+
+def _materialize(df: DataFrame):
+    """Collect a small section (a page, a facet battery) into a local
+    frame, so it no longer reads the persisted match set it came from.
+    Returns the frame and the collected rows."""
+    rows = df.collect()
+    return local_frame(df.sparkSession, [tuple(r) for r in rows],
+                       df.schema), rows
+
+
+def _relevance_page(spark, res, key_col: str, round_to: int | None,
+                    start: int) -> DataFrame:
+    """The kernel's top-(start+rows) as the ranked page frame. Scores
+    round in the JVM (``F.round``: HALF_UP on the JVM's decimal form —
+    the projection every other path applies; a LocalRelation
+    projection, so no job), then rank by (rounded score desc, key asc)."""
+    schema = f"`{key_col}` long, score double"
+    pdf = pd.DataFrame({key_col: res.doc_ids, "score": res.scores})
+    if round_to is not None and len(pdf):
+        rounded = local_frame(spark, pdf, schema).select(
+            F.round("score", round_to).alias("score")).collect()
+        pdf["score"] = [r["score"] for r in rounded]
+    pdf = pdf.sort_values(["score", key_col], ascending=[False, True])
+    pdf["rank"] = np.arange(1, len(pdf) + 1, dtype=np.int32)
+    return local_frame(spark, pdf[pdf["rank"] > start],
+                       schema + ", rank int")
+
+
+def _facet_frame(spark, counts, mincount: int, limit: int) -> DataFrame:
+    """``(field, value, count)`` match-set counts as the facet section:
+    per field, count desc then value asc, at most ``limit`` values of at
+    least ``mincount`` (facet.limit / facet.mincount)."""
+    kept = sorted((c for c in counts if c[2] >= mincount),
+                  key=lambda c: (c[0], -c[2], c[1]))
+    out, rank, prev = [], 0, None
+    for fld, val, n in kept:
+        rank = rank + 1 if fld == prev else 1
+        prev = fld
+        if rank <= limit:
+            out.append((fld, val, int(n), rank))
+    return local_frame(
+        spark, out,
+        "facet_field string, facet_value string, count long, rank int")
+
+
+def _highlights(page: DataFrame, stored: DataFrame, key_col: str,
+                text_col: str, tokens, frag_chars: int) -> DataFrame:
+    """First-fragment snippets of the page rows: the earliest query
+    term in each stored text (same semantics as ``operators/bm25.py
+    highlight_topk``)."""
+    qterms = list(dict.fromkeys(tokens))
+    NOPOS = 1 << 30
+    lower = F.lower(F.col(text_col))
+    cands = F.array(*[
+        F.struct(
+            F.when(F.locate(t, lower) > 0, F.locate(t, lower))
+            .otherwise(F.lit(NOPOS)).cast("int").alias("pos"),
+            F.lit(t).alias("term"),
+        )
+        for t in sorted(qterms)
+    ])
+    best = F.array_min(cands)
+    found = best["pos"] < NOPOS
+    start_at = F.greatest(best["pos"] - 30, F.lit(1))
+    return (
+        page.join(stored.select(key_col, text_col), key_col)
+        .select(
+            key_col,
+            F.when(found, best["term"]).alias("matched_term"),
+            F.when(found, best["pos"]).cast("int").alias("match_pos"),
+            F.when(found, F.substring(F.col(text_col), start_at,
+                                      frag_chars)).alias("snippet"),
+        )
     )

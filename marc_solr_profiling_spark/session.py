@@ -112,3 +112,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A small driver-side DataFrame that collects without a Spark job.
+
+    ``rows``: a pandas DataFrame or a sequence of tuples in ``schema``
+    order (a DDL string or StructType). The frame is built from pandas
+    through Arrow — a LocalRelation, ~40 ms and 0 jobs — where a
+    list-based ``createDataFrame`` parallelizes an RDD and costs one job
+    (~400 ms) when collected, even when empty. An empty pandas frame
+    also takes the RDD path, so an empty frame is one null row filtered
+    away (the optimizer folds it to an empty LocalRelation)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructField, StructType
+
+    struct = (schema if isinstance(schema, StructType)
+              else StructType.fromDDL(schema))
+    # nullable throughout: the empty frame below is built from a null row
+    struct = StructType([StructField(f.name, f.dataType, True)
+                         for f in struct])
+    names = struct.fieldNames()
+    pdf = (rows[names] if isinstance(rows, pd.DataFrame)
+           else pd.DataFrame(list(rows), columns=names))
+    if len(pdf) == 0:
+        null_row = pd.DataFrame({n: [None] for n in names})
+        return spark.createDataFrame(null_row, struct).where(F.lit(False))
+    return spark.createDataFrame(pdf, struct)
