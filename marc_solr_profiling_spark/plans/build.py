@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import ANALYZERS
@@ -24,7 +24,10 @@ from ..operators.postings import (
     with_tokens,
 )
 from ..operators.segments import build_segments, build_segments_packed
+from ..session import local_frame
 from .lineage import IndexStore, config_fingerprint
+
+STATS_SCHEMA = "n_docs long, avgdl double, total_tokens long"
 
 
 def assign_doc_ids(docs: DataFrame, key_col: str = "url",
@@ -57,9 +60,8 @@ def assign_doc_ids(docs: DataFrame, key_col: str = "url",
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
-    )
+    offset_df = local_frame(
+        spark, list(offsets.items()), "_pid int, _offset long")
     w = Window.partitionBy("_pid").orderBy(key_col)
     out = (
         arranged.join(F.broadcast(offset_df), "_pid")
@@ -106,6 +108,50 @@ def _resolve_range_buckets(range_buckets: int | str, spark: SparkSession,
     return max(1, par_term, mem_term)
 
 
+def run_concurrently(spark: SparkSession, *branches) -> list:
+    """Run zero-argument callables (one branch of a commit DAG each) on
+    their own driver threads and return their results in order.
+
+    Every branch is joined before anything is raised — a failed branch
+    never leaves another still writing to the store unreported — and
+    then the first failed branch's error is re-raised. The threads
+    inherit the caller's Spark local properties (job group, description,
+    scheduler pool), so their jobs stay attributed to the caller."""
+    if len(branches) == 1:
+        return [branches[0]()]
+    import threading
+
+    from pyspark import inheritable_thread_target
+
+    # classic Spark with pinned threads returns a decorator; otherwise
+    # (pinned-thread mode off) the session comes back and there are no
+    # per-thread properties to carry
+    inherit = inheritable_thread_target(spark)
+    if inherit is spark:
+        inherit = lambda fn: fn  # noqa: E731
+    results: list = [None] * len(branches)
+    errors: list = [None] * len(branches)
+
+    def runner(i: int, fn):
+        def run() -> None:
+            try:
+                results[i] = fn()
+            except BaseException as e:  # surfaced after every join
+                errors[i] = e
+        return inherit(run)
+
+    threads = [threading.Thread(target=runner(i, fn), name=f"commit-{i}")
+               for i, fn in enumerate(branches)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
+
+
 def union_by_name(parts: list) -> DataFrame:
     """Union same-kind stage tables of several generations by column
     name (a column absent from an older generation reads as null)."""
@@ -131,8 +177,9 @@ class InvertedIndex:
     The chain walk, readers and tombstone masks serve every index kind.
     What differs per kind — stats loading, block-max cap rescaling, and
     the few lifecycle hooks the generation code calls (``_tokenize``,
-    ``_doc_rows``, ``_adjusted_stats``, ``_build_segments``,
-    ``_kind_meta``, ``_built_meta``) — is overridden by
+    ``_doc_rows``, ``_tf_totals``, ``_adjusted_stats``,
+    ``_build_segments``, ``_kind_meta``, ``_built_meta``, and the
+    ``_stats_schema``) — is overridden by
     ``plans/multifield.py MultiFieldIndex``.
     """
 
@@ -144,7 +191,7 @@ class InvertedIndex:
         # salt repartition from it (n_salts caps useful parallelism)
         meta = self.store.get_meta()
         self.n_salts = int(meta.get("n_salts", 16))
-        self._stats_rows = store.read_stage(spark, "stats").collect()
+        self._stats_rows = store.stage_rows("stats")
         self._load_stats(meta)
         # generation chain, newest first (self.store == stores[0]); a
         # plain build has exactly one store and every property reduces to
@@ -175,8 +222,7 @@ class InvertedIndex:
         seg = store.read_stage(self.spark, "segments")
         built = store.get_meta().get("built_avgdl")
         if built is None:
-            built = store.read_stage(self.spark, "stats").collect()[0][
-                "avgdl"]
+            built = store.stage_rows("stats")[0]["avgdl"]
         scale = self.avgdl / max(float(built), 1e-12)
         if scale > 1.0:
             seg = seg.withColumn(
@@ -331,24 +377,23 @@ class InvertedIndex:
         """The docs-stage rows of a tf stage (one packed row per doc)."""
         return tf.select("doc_id", "doc_len")
 
-    def _adjusted_stats(self, delta_tf: DataFrame,
-                        removed_tf: DataFrame | None) -> DataFrame:
-        """This index's stats plus the delta's tf rows minus the
-        tombstoned docs' tf rows."""
-        def agg(tf):
-            r = tf.agg(F.count("*").alias("n"),
-                       F.sum("doc_len").alias("t")).collect()[0]
-            return int(r["n"]), int(r["t"] or 0)
+    _stats_schema = STATS_SCHEMA
 
-        n_add, t_add = agg(delta_tf)
-        n_rm, t_rm = agg(removed_tf) if removed_tf is not None else (0, 0)
+    def _tf_totals(self, tf: DataFrame) -> dict:
+        """``{None: (rows, Σ doc_len)}`` of packed tf rows (one job)."""
+        r = tf.agg(F.count("*").alias("n"),
+                   F.sum("doc_len").alias("t")).collect()[0]
+        return {None: (int(r["n"]), int(r["t"] or 0))}
+
+    def _adjusted_stats(self, add: dict, removed: dict) -> list:
+        """This index's stats row plus the delta's ``_tf_totals`` minus
+        the tombstoned docs' — driver arithmetic, no job."""
+        n_add, t_add = add.get(None, (0, 0))
+        n_rm, t_rm = removed.get(None, (0, 0))
         n_docs = self.n_docs - n_rm + n_add
         total = int(self._stats_rows[0]["total_tokens"]) - t_rm + t_add
         avgdl = (float(total) / n_docs) if n_docs else 0.0
-        return self.spark.createDataFrame(
-            [(n_docs, avgdl, total)],
-            "n_docs long, avgdl double, total_tokens long",
-        )
+        return [Row(n_docs=n_docs, avgdl=avgdl, total_tokens=total)]
 
     def _built_meta(self, stats_rows: list) -> dict:
         """Manifest record of the avgdl a generation's caps were built at."""
@@ -452,6 +497,15 @@ def build_index(
       dictionary  (term, df, cf)
       segments    (term, salt, block_id, ..., doc_gaps, tfs, max_wnorm)
 
+    Commit order is a small DAG, not a chain: tf, then stats (a driver-
+    held row: its tf rows come from the manifest and Σ doc_len from one
+    scan), then concurrent branches {segments → dictionary}, {docs},
+    {filters} (and {tf} itself in overlap mode), run by
+    :func:`run_concurrently` with the caller's job group inherited. Each
+    commit records its schema in the manifest, so reading a committed
+    stage back (here, on resume, or from any later handle) runs no
+    schema-inference job.
+
     ``id_col``: pass the name of an existing unique numeric column to use
     it as doc_id directly (skips the assignment sort); otherwise dense ids
     are assigned in ``key_col`` order.
@@ -463,8 +517,8 @@ def build_index(
     and run one bucket per salt).
 
     ``overlap_tf_write``: persist the packed tf and run its parquet
-    commit on a driver thread concurrently with the segment shuffle that
-    consumes the same cache — the tf sink stops being a barrier and the
+    commit as one more DAG branch, concurrently with the segment shuffle
+    that consumes the same cache — the tf sink stops being a barrier and the
     snapshot is never read back (it still commits, so stage resume is
     unchanged). Default OFF: measured a wash-to-slight-loss on this
     sandbox (tools/ab_overlap.py, 320k docs local[8], interleaved
@@ -511,10 +565,7 @@ def build_index(
                 _persist_handle=persisted,
             )
 
-    import threading
-
-    tf_err: list[BaseException] = []
-    tf_thread = None
+    totals = None  # (n_docs, total_tokens) once known on the driver
     if need_tf:
         # column pruning before the analyzer stage: the build needs only
         # (doc_id, text) here — never carry html payloads into the Python
@@ -530,8 +581,8 @@ def build_index(
             html_col=html_col, positions=positions,
         )
         if overlap_tf_write:
-            # OVERLAP MODE (default): persist the packed tf and run its
-            # parquet commit on a thread WHILE the segment shuffle
+            # OVERLAP MODE: persist the packed tf and commit it as one
+            # branch of the commit DAG below WHILE the segment shuffle
             # consumes the same cache — the tf write (the build's largest
             # sink) stops being a barrier in front of the build's only
             # full-volume exchange, and the committed snapshot is never
@@ -549,25 +600,7 @@ def build_index(
             row = tf.agg(
                 F.count("*").alias("n"), F.sum("doc_len").alias("t")
             ).collect()[0]
-            n_docs_val = int(row["n"])
-            total_tokens = int(row["t"] or 0)
-            if not store.stage_complete("stats"):
-                avgdl_val = (
-                    float(total_tokens) / n_docs_val if n_docs_val else 0.0
-                )
-                store.commit_stage("stats", spark.createDataFrame(
-                    [(n_docs_val, avgdl_val, total_tokens)],
-                    "n_docs long, avgdl double, total_tokens long",
-                ))
-
-            def _commit_tf() -> None:
-                try:
-                    store.commit_stage("tf", tf)
-                except BaseException as e:  # surfaced after join()
-                    tf_err.append(e)
-
-            tf_thread = threading.Thread(target=_commit_tf, name="tf-commit")
-            tf_thread.start()
+            totals = (int(row["n"]), int(row["t"] or 0))
         else:
             # strict mode: commit first, build segments from the snapshot
             # (no executor memory/disk spent on a cache — the knob for
@@ -577,65 +610,47 @@ def build_index(
     else:
         tf = store.read_stage(spark, "tf")
 
-    if not store.stage_complete("stats"):
+    need_stats = not store.stage_complete("stats")
+    if not need_stats:
+        row = store.stage_rows("stats")[0]
+        totals = (int(row["n_docs"]), int(row["total_tokens"]))
+    elif totals is None:
         # stats straight off the committed tf snapshot: n_docs is the tf
         # stage's manifest row count (one packed row per doc — zero jobs),
         # total_tokens = sum(doc_len) (one pruned-column scan over n_docs
         # ints, scalar partial agg, no shuffle). Decoupling stats from
-        # docs lets the segments stage start right after tf, and the docs
-        # commit run CONCURRENTLY with it (thread below) — a serial chain
-        # tf -> docs -> stats -> segments would pay ~5-17 s of small-stage
-        # wall per build that a multi-job scheduler absorbs for free.
-        n_docs_val = int(store.lineage()["stages"]["tf"]["rows"])
-        total_tokens = tf.agg(F.sum("doc_len")).collect()[0][0] or 0
-        avgdl_val = (float(total_tokens) / n_docs_val) if n_docs_val else 0.0
-        stats = spark.createDataFrame(
-            [(int(n_docs_val), avgdl_val, int(total_tokens))],
-            "n_docs long, avgdl double, total_tokens long",
-        )
-        store.commit_stage("stats", stats)
+        # docs lets the segments stage start right after tf, with the
+        # docs commit running CONCURRENTLY with it
+        totals = (int(store.lineage()["stages"]["tf"]["rows"]),
+                  int(tf.agg(F.sum("doc_len")).collect()[0][0] or 0))
+    n_docs_val, total_tokens = totals
+    avgdl_val = (float(total_tokens) / n_docs_val) if n_docs_val else 0.0
+    if need_stats:
+        store.commit_stage("stats", local_frame(
+            spark, [(n_docs_val, avgdl_val, total_tokens)], STATS_SCHEMA))
 
-    docs_err: list[BaseException] = []
-    docs_thread = None
-    if need_docs:
-        def _commit_docs() -> None:
-            try:
-                # derived from the committed tf snapshot — one packed row
-                # per doc, so (doc_id, doc_len) needs NO dedup shuffle —
-                # joined back to the (pruned) key column of the input; no
-                # re-tokenization
-                doc_lens = tf.select("doc_id", "doc_len")
-                if key_col != "doc_id":
-                    doc_tbl = doc_lens.join(
-                        with_ids.select("doc_id", key_col), "doc_id"
-                    )
-                else:
-                    doc_tbl = doc_lens
-                # sorted within partitions (row-group pruning on doc_id)
-                # without a range repartition: the range sampler costs an
-                # extra pass, and the doc table is only ever point-joined,
-                # never range-scanned
-                store.commit_stage("docs", doc_tbl, partition_sort=["doc_id"])
-            except BaseException as e:  # surfaced after join()
-                docs_err.append(e)
+    def _commit_docs() -> None:
+        # derived from the tf rows — one packed row per doc, so
+        # (doc_id, doc_len) needs NO dedup shuffle — joined back to the
+        # (pruned) key column of the input; no re-tokenization
+        doc_tbl = tf.select("doc_id", "doc_len")
+        if key_col != "doc_id":
+            doc_tbl = doc_tbl.join(with_ids.select("doc_id", key_col),
+                                   "doc_id")
+        # sorted within partitions (row-group pruning on doc_id) without
+        # a range repartition: the range sampler costs an extra pass, and
+        # the doc table is only ever point-joined, never range-scanned
+        store.commit_stage("docs", doc_tbl, partition_sort=["doc_id"])
 
-        docs_thread = threading.Thread(target=_commit_docs, name="docs-commit")
-        docs_thread.start()
-
-    try:
+    def _commit_segments_then_dictionary() -> None:
         if not store.stage_complete("segments"):
-            stats_row = store.read_stage(spark, "stats").collect()[0]
             segs = build_segments_packed(
                 tf,
-                avgdl=float(stats_row["avgdl"]),
+                avgdl=avgdl_val,
                 n_salts=n_salts,
                 block_size=block_size,
                 range_buckets=_resolve_range_buckets(
-                    range_buckets, spark, n_salts,
-                    # n_docs from the stats stage, NOT the tf manifest:
-                    # in overlap mode the tf commit is still in flight here
-                    int(stats_row["n_docs"]),
-                ),
+                    range_buckets, spark, n_salts, n_docs_val),
             )
             # make_blocks emits rows already sorted by (term, salt, block)
             # — parquet row-group min/max on term therefore prunes
@@ -643,24 +658,22 @@ def build_index(
             # extra shuffle: a repartitionByRange here would re-run the
             # whole segment build just to sample range bounds.
             store.commit_stage("segments", segs)
-    finally:
-        # join even when the segments commit raises: otherwise the
-        # non-daemon commit threads keep writing to a failed build's store
-        # and their own errors would go unreported
-        if docs_thread is not None:
-            docs_thread.join()
-        if tf_thread is not None:
-            tf_thread.join()
-    if docs_err:
-        raise docs_err[0]
-    if tf_err:
-        raise tf_err[0]
+        if not store.stage_complete("dictionary"):
+            # derived from the (compact) segment blocks instead of a
+            # second full tf scan: df = Σ n_postings, cf = Σ tf_sum per
+            # term. groupBy already hash-partitions by term; a within-
+            # partition sort gives sorted parquet row groups (term
+            # pruning) without an extra range-sampling pass
+            dictionary = store.read_stage(spark, "segments").groupBy(
+                "term").agg(F.sum("n_postings").alias("df"),
+                            F.sum("tf_sum").alias("cf"))
+            store.commit_stage("dictionary", dictionary,
+                               partition_sort=["term"])
 
-    if need_filters:
+    def _commit_filters() -> None:
         # metadata filter postings (fq bitsets) — same salt layout and
         # block format as the scored segments, committed as their own
-        # stage so the scoring dictionary/stats never see them; runs
-        # before the id-assignment cache is released
+        # stage so the scoring dictionary/stats never see them
         store.commit_stage(
             "filters",
             build_segments_packed(
@@ -669,27 +682,25 @@ def build_index(
             ),
         )
 
-    for cached in persisted:
-        cached.unpersist()
-
-    if not store.stage_complete("dictionary"):
-        # derived from the (compact) segment blocks instead of a second full
-        # tf scan: df = Σ n_postings, cf = Σ tf_sum per term
-        segs_tbl = store.read_stage(spark, "segments")
-        dictionary = segs_tbl.groupBy("term").agg(
-            F.sum("n_postings").alias("df"), F.sum("tf_sum").alias("cf")
-        )
-        # groupBy already hash-partitions by term; a within-partition sort
-        # gives sorted parquet row groups (term pruning) without an extra
-        # range-sampling pass
-        store.commit_stage("dictionary", dictionary, partition_sort=["term"])
+    # the commit DAG: segments → dictionary beside the docs, filters and
+    # (overlap mode) tf commits, which share only the cached inputs
+    branches = [_commit_segments_then_dictionary]
+    if need_tf and overlap_tf_write:
+        branches.append(lambda: store.commit_stage("tf", tf))
+    if need_docs:
+        branches.append(_commit_docs)
+    if need_filters:
+        branches.append(_commit_filters)
+    try:
+        run_concurrently(spark, *branches)
+    finally:
+        for cached in persisted:
+            cached.unpersist()
 
     if "built_avgdl" not in store.get_meta():
         # the avgdl the segment caps were built with — generation-chain
         # readers (append_delta) scale caps by current/built to stay exact
-        store.set_meta({"built_avgdl": float(
-            store.read_stage(spark, "stats").collect()[0]["avgdl"]
-        )})
+        store.set_meta({"built_avgdl": avgdl_val})
 
     return InvertedIndex(store, spark, chain)
 
@@ -811,7 +822,7 @@ def incremental_update(
             ),
         )
     if not store.stage_complete("segments"):
-        avgdl = float(store.read_stage(spark, "stats").collect()[0]["avgdl"])
+        avgdl = float(store.stage_rows("stats")[0]["avgdl"])
         segs = build_segments_packed(
             tf, avgdl=avgdl, n_salts=n_salts, block_size=block_size,
             range_buckets=_resolve_range_buckets(
@@ -831,7 +842,7 @@ def incremental_update(
         )
     if "built_avgdl" not in store.get_meta():
         store.set_meta({"built_avgdl": float(
-            store.read_stage(spark, "stats").collect()[0]["avgdl"]
+            store.stage_rows("stats")[0]["avgdl"]
         )})
     return InvertedIndex(store, spark, index.chain)
 

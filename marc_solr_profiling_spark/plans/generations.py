@@ -25,10 +25,10 @@ One lifecycle serves both index kinds — the single-field
 ``MultiFieldIndex`` (``plans/multifield.py``). They differ only where the
 data differs (how a delta is tokenized, the shape of the stats stage,
 the avgdl segments are built at, the manifest meta), and the handle's
-lifecycle hooks (``_tokenize``, ``_doc_rows``, ``_adjusted_stats``,
-``_build_segments``, ``_kind_meta``, ``_built_meta``) carry exactly
-those differences; every function here returns a handle of the same
-kind it was given.
+lifecycle hooks (``_tokenize``, ``_doc_rows``, ``_tf_totals``,
+``_adjusted_stats``, ``_build_segments``, ``_kind_meta``,
+``_built_meta``) carry exactly those differences; every function here
+returns a handle of the same kind it was given.
 
 Why scores stay exact (the rank-identity contract vs a full rebuild):
 
@@ -62,7 +62,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.segments import build_segments_packed
-from .build import InvertedIndex, _filter_packed, assign_doc_ids, union_by_name
+from ..session import local_frame
+from .build import (
+    InvertedIndex,
+    _filter_packed,
+    assign_doc_ids,
+    run_concurrently,
+    union_by_name,
+)
 from .lineage import IndexStore, config_fingerprint
 
 
@@ -164,6 +171,54 @@ def _key_expr(df: DataFrame, key_col: str):
     return F.col(key_col)
 
 
+def _next_doc_id(spark: SparkSession, index: InvertedIndex) -> int:
+    """First doc id of a new generation: above every id that any
+    generation's docs stage holds, tombstoned rows included (reusing
+    their ids would overlap block ranges across generations and break
+    the kernel invariant). Each docs stage's manifest entry records its
+    ``doc_id_max`` from the parquet footers, so this is driver
+    arithmetic; a chain with a store whose manifest predates that key
+    runs the max aggregation instead."""
+    entries = [st.lineage()["stages"].get("docs", {})
+               for st in index.stores]
+    if all("doc_id_max" in e for e in entries):
+        maxes = [e["doc_id_max"] for e in entries
+                 if e["doc_id_max"] is not None]
+        max_id = max(maxes) if maxes else None
+    else:
+        max_id = union_by_name(
+            [st.read_stage(spark, "docs").select("doc_id")
+             for st in index.stores]).agg(F.max("doc_id")).collect()[0][0]
+    return 0 if max_id is None else int(max_id) + 1
+
+
+def _adjusted_dictionary(index: InvertedIndex, delta_tf: DataFrame,
+                         removed_tf: DataFrame | None) -> DataFrame:
+    """The chain head's dictionary plus the delta's per-term (df, cf)
+    minus the tombstoned docs', both read off packed tf rows (one row
+    per doc, so a term's rows count its docs) — the dictionary never
+    waits for the delta's segments."""
+    def terms(tf: DataFrame, sign: int) -> DataFrame:
+        z = tf.select(F.explode(F.arrays_zip("terms", "tfs")).alias("z"))
+        return z.select(F.col("z.terms").alias("term"),
+                        F.lit(sign).alias("d_df"),
+                        (F.col("z.tfs") * F.lit(sign)).alias("d_cf"))
+
+    parts = [terms(delta_tf, 1)]
+    if removed_tf is not None:
+        parts.append(terms(removed_tf, -1))
+    delta = union_by_name(parts).groupBy("term").agg(
+        F.sum("d_df").alias("d_df"), F.sum("d_cf").alias("d_cf"))
+    d = index.dictionary.join(delta, "term", "full_outer")
+    return d.select(
+        "term",
+        (F.coalesce("df", F.lit(0)) + F.coalesce("d_df", F.lit(0)))
+        .cast("long").alias("df"),
+        (F.coalesce("cf", F.lit(0)) + F.coalesce("d_cf", F.lit(0)))
+        .cast("long").alias("cf"),
+    ).filter(F.col("df") > 0)
+
+
 def append_delta(
     spark: SparkSession,
     index: InvertedIndex,
@@ -184,6 +239,13 @@ def append_delta(
     kernel-compatible (same salt function domain, same analyzer). Every
     stage commit is manifest-gated, so a killed append resumes from its
     last committed stage without re-tokenizing.
+
+    The commits run as a small DAG (:func:`plans.build.run_concurrently`):
+    {tombstones → ``deletes`` → ``del_segments``} beside {doc ids →
+    {``tf`` → ``docs``} ∥ {``filters``}}; then the stats by driver
+    arithmetic; then {``stats``}, {``segments``} and {``dictionary``}
+    side by side. The delta and the delete keys are persisted once and
+    released on return.
     """
     _guard_out_path(index, out_path)
     meta = index.store.get_meta()
@@ -199,188 +261,187 @@ def append_delta(
                 f"delta_docs lacks column(s) {missing} — fq over the "
                 "chain would silently miss the new generation")
 
-    if delta_docs is not None and delete_keys is not None:
-        # deletes WIN over same-batch upserts — the reference applies the
-        # .del file AFTER the import pass (MarcImporter.java:348-416 runs
-        # deleteRecords after importRecords), so a key in both never
-        # survives
-        delta_docs = delta_docs.join(
-            F.broadcast(delete_keys.select(
-                F.col(delete_keys.columns[0]).alias(key_col)).distinct()),
-            key_col, "left_anti",
-        )
-    if delta_docs is not None:
-        delta_docs = _dedup_delta(delta_docs, key_col)
-
-    store = IndexStore(out_path)
-    store.set_fingerprint(config_fingerprint({
-        "parent": index.store.path,
-        "chain": chain,
-        "n_salts": n_salts,
-        "block_size": block_size,
-        "key_col": key_col,
-        "version": 1,
-        **index._kind_meta(),
-    }))
-
-    # ---- tombstones: old ids of deleted + upserted keys -----------------
-    live = index.docs  # chain union minus current deletes
-    _key_expr(live, key_col)
-    keys = None
-    if delete_keys is not None:
-        keys = delete_keys.select(F.col(delete_keys.columns[0])
-                                  .alias(key_col))
-    if delta_docs is not None:
-        dk = delta_docs.select(F.col(key_col))
-        keys = dk if keys is None else keys.union(dk)
-    tombstones = removed_tf = None
-    if keys is not None:
-        # the delta is driver-small relative to the corpus by definition
-        # of an increment; broadcast it against the docs table (compact
-        # columns only) — the Lucene analog resolves each delete term
-        # against the term dictionary, same O(|delta|) probe shape
-        tombstones = live.join(
-            F.broadcast(keys.distinct()), key_col
-        ).select("doc_id").persist()
-        # the tombstoned docs' tf rows: their removed stats and per-term
-        # (df, cf) contributions, read from the chain's COMPACT packed
-        # rows (docs stages are doc_id-sorted so row-group min/max prunes
-        # most of the scan at scale) — never a re-tokenize
-        chain_tf = union_by_name(
-            [st.read_stage(spark, "tf").drop("pos") for st in index.stores])
-        removed_tf = chain_tf.join(
-            F.broadcast(tombstones), "doc_id").persist()
-
-    # cumulative deletes stage (ids-only; reclaimed by merge_generations)
-    old_dels = index.deletes_df()
-    new_dels = None
-    if tombstones is not None:
-        new_dels = tombstones
-        if old_dels is not None:
-            new_dels = old_dels.select("doc_id").union(new_dels).distinct()
-    elif old_dels is not None:
-        new_dels = old_dels.select("doc_id")
-    if new_dels is not None and not store.stage_complete("deletes"):
-        store.commit_stage("deletes", new_dels, partition_sort=["doc_id"])
-    if new_dels is not None:
-        # index-resident tombstone postings (per-salt liveDocs): the
-        # large-delete-set query path reads these in the salted scan
-        # instead of a driver-collected array (delete_masks threshold)
-        _commit_del_segments(
-            store, store.read_stage(spark, "deletes"), n_salts, block_size)
-
-    # ---- delta ingest: fresh ids ABOVE every ancestor's max -------------
     persisted: list = []
-    if delta_docs is not None:
-        # max over ALL docs stages (including tombstoned rows — their ids
-        # must never be reused, or block ranges across generations would
-        # overlap and the kernel invariant would break)
-        all_ids = union_by_name(
-            [st.read_stage(spark, "docs").select("doc_id")
-             for st in index.stores])
-        max_id = all_ids.agg(F.max("doc_id")).collect()[0][0]
-        next_id = 0 if max_id is None else int(max_id) + 1
-        cols = ([key_col, text_col] + ([html_col] if html_col else [])
-                + filter_cols)
-        with_ids = assign_doc_ids(
-            delta_docs.select(*dict.fromkeys(cols)), key_col=key_col,
-            _persist_handle=persisted,
-        ).withColumn("doc_id", F.col("doc_id") + F.lit(next_id))
-        if not store.stage_complete("tf"):
-            # persisted: a cached plan keeps its un-coalesced shuffle
-            # partitioning, which fixes the tf stage's file layout
-            delta_tf = index._tokenize(with_ids, text_col, html_col)
-            persisted.append(delta_tf.persist())
-            store.commit_stage("tf", delta_tf)
-        tf_stage = store.read_stage(spark, "tf")
-        if not store.stage_complete("docs"):
-            doc_tbl = index._doc_rows(tf_stage)
-            if key_col != "doc_id":
-                doc_tbl = doc_tbl.join(
-                    with_ids.select("doc_id", key_col), "doc_id")
-            store.commit_stage("docs", doc_tbl, partition_sort=["doc_id"])
-    else:
-        # a pure-delete generation still needs (empty) tf/docs stages so
-        # chain unions stay uniform
-        for st in ("tf", "docs"):
-            if not store.stage_complete(st):
-                store.commit_stage(
-                    st, index.store.read_stage(spark, st).limit(0))
-        tf_stage = store.read_stage(spark, "tf")
+    try:
+        def keep(df: DataFrame) -> DataFrame:
+            cached = df.persist()
+            persisted.append(cached)
+            return cached
 
-    if filter_cols and not store.stage_complete("filters"):
-        # fq bitsets for the delta generation (chain fq needs every
-        # generation's stage; a pure-delete gen commits an empty one)
+        del_keys = None
+        if delete_keys is not None:
+            del_keys = keep(delete_keys.select(
+                F.col(delete_keys.columns[0]).alias(key_col)).distinct())
         if delta_docs is not None:
-            fsegs = build_segments_packed(
-                _filter_packed(with_ids, filter_cols), avgdl=1.0,
-                n_salts=n_salts, block_size=block_size,
-            )
+            if del_keys is not None:
+                # deletes WIN over same-batch upserts — the reference
+                # applies the .del file AFTER the import pass
+                # (MarcImporter.java:348-416 runs deleteRecords after
+                # importRecords), so a key in both never survives
+                delta_docs = delta_docs.join(
+                    F.broadcast(del_keys), key_col, "left_anti")
+            delta_docs = keep(_dedup_delta(delta_docs, key_col))
+
+        store = IndexStore(out_path)
+        store.set_fingerprint(config_fingerprint({
+            "parent": index.store.path,
+            "chain": chain,
+            "n_salts": n_salts,
+            "block_size": block_size,
+            "key_col": key_col,
+            "version": 1,
+            **index._kind_meta(),
+        }))
+        need_stats = not store.stage_complete("stats")
+        need_dictionary = not store.stage_complete("dictionary")
+
+        # ---- branch: tombstones (old ids of deleted + upserted keys) ----
+        live = index.docs  # chain union minus current deletes
+        _key_expr(live, key_col)
+        keys = del_keys
+        if delta_docs is not None:
+            dk = delta_docs.select(F.col(key_col))
+            keys = dk if keys is None else keys.union(dk)
+        old_dels = index.deletes_df()
+
+        def tombstone_branch() -> tuple:
+            """(tombstoned docs' tf rows or None, their ``_tf_totals``)."""
+            tombstones = None
+            if keys is not None:
+                # the delta is driver-small relative to the corpus by
+                # definition of an increment; broadcast it against the docs
+                # table (compact columns only) — the Lucene analog resolves
+                # each delete term against the term dictionary, same
+                # O(|delta|) probe shape
+                tombstones = keep(live.join(
+                    F.broadcast(keys.distinct()), key_col).select("doc_id"))
+            # cumulative deletes stage (ids-only; reclaimed by
+            # merge_generations)
+            new_dels = tombstones
+            if old_dels is not None:
+                new_dels = old_dels.select("doc_id")
+                if tombstones is not None:
+                    new_dels = new_dels.union(tombstones).distinct()
+            if new_dels is not None:
+                if not store.stage_complete("deletes"):
+                    store.commit_stage("deletes", new_dels,
+                                       partition_sort=["doc_id"])
+                # index-resident tombstone postings (per-salt liveDocs): the
+                # large-delete-set query path reads these in the salted scan
+                # instead of a driver-collected array (delete_masks threshold)
+                _commit_del_segments(store, store.read_stage(spark, "deletes"),
+                                     n_salts, block_size)
+            if tombstones is None or not (need_stats or need_dictionary):
+                return None, {}
+            # the tombstoned docs' tf rows: their removed stats and per-term
+            # (df, cf) contributions, read from the chain's COMPACT packed
+            # rows (docs stages are doc_id-sorted so row-group min/max prunes
+            # most of the scan at scale) — never a re-tokenize
+            chain_tf = union_by_name(
+                [st.read_stage(spark, "tf").drop("pos")
+                 for st in index.stores])
+            removed_tf = keep(chain_tf.join(F.broadcast(tombstones), "doc_id"))
+            return removed_tf, (index._tf_totals(removed_tf) if need_stats
+                                else {})
+
+        # ---- branch: delta ingest, fresh ids ABOVE every ancestor's max -
+        def delta_branch() -> tuple:
+            """(the committed delta tf stage, its ``_tf_totals``)."""
+            if delta_docs is None:
+                # a pure-delete generation still needs (empty) tf/docs/filters
+                # stages so chain unions stay uniform
+                empty = ("tf", "docs") + (("filters",) if filter_cols
+                                          else ())
+                for st in empty:
+                    if not store.stage_complete(st):
+                        store.commit_stage(
+                            st, index.store.read_stage(spark, st).limit(0))
+                return store.read_stage(spark, "tf"), {}
+            need_tf = not store.stage_complete("tf")
+            need_docs = not store.stage_complete("docs")
+            need_filters = bool(filter_cols) and not store.stage_complete(
+                "filters")
+            with_ids = None
+            if need_tf or need_filters or (need_docs
+                                           and key_col != "doc_id"):
+                cols = ([key_col, text_col] + ([html_col] if html_col else [])
+                        + filter_cols)
+                with_ids = assign_doc_ids(
+                    delta_docs.select(*dict.fromkeys(cols)), key_col=key_col,
+                    _persist_handle=persisted,
+                ).withColumn("doc_id", F.col("doc_id")
+                             + F.lit(_next_doc_id(spark, index)))
+
+            def tf_then_docs():
+                if need_tf:
+                    # persisted: a cached plan keeps its un-coalesced shuffle
+                    # partitioning, which fixes the tf stage's file layout
+                    store.commit_stage("tf", keep(
+                        index._tokenize(with_ids, text_col, html_col)))
+                tf_stage = store.read_stage(spark, "tf")
+                if need_docs:
+                    doc_tbl = index._doc_rows(tf_stage)
+                    if key_col != "doc_id":
+                        doc_tbl = doc_tbl.join(
+                            with_ids.select("doc_id", key_col), "doc_id")
+                    store.commit_stage("docs", doc_tbl,
+                                       partition_sort=["doc_id"])
+                return tf_stage
+
+            def filters():
+                # fq bitsets for the delta generation (chain fq needs every
+                # generation's stage)
+                store.commit_stage("filters", build_segments_packed(
+                    _filter_packed(with_ids, filter_cols), avgdl=1.0,
+                    n_salts=n_salts, block_size=block_size))
+
+            tf_stage = run_concurrently(
+                spark, tf_then_docs, *([filters] if need_filters else []))[0]
+            return tf_stage, (index._tf_totals(tf_stage) if need_stats else {})
+
+        (tf_stage, added), (removed_tf, removed) = run_concurrently(
+            spark, delta_branch, tombstone_branch)
+
+        # ---- exactly-adjusted global stats: driver arithmetic -----------
+        if need_stats:
+            stats_rows = index._adjusted_stats(added, removed)
         else:
-            fsegs = index.store.read_stage(spark, "filters").limit(0)
-        store.commit_stage("filters", fsegs)
-    for cached in persisted:
-        cached.unpersist()
+            stats_rows = store.stage_rows("stats")
 
-    # ---- exactly-adjusted global stats ----------------------------------
-    if not store.stage_complete("stats"):
-        store.commit_stage(
-            "stats", index._adjusted_stats(tf_stage, removed_tf))
-    stats_rows = store.read_stage(spark, "stats").collect()
+        def commit_stats():
+            store.commit_stage("stats", local_frame(
+                spark, [tuple(r) for r in stats_rows], index._stats_schema))
 
-    # ---- delta segments (built tight at the NEW stats) ------------------
-    if not store.stage_complete("segments"):
-        store.commit_stage("segments", index._build_segments(
-            tf_stage, stats_rows, n_salts, block_size, "auto",
-            int(store.lineage()["stages"]["tf"]["rows"])))
+        def commit_segments():
+            # delta segments, built tight at the NEW stats
+            store.commit_stage("segments", index._build_segments(
+                tf_stage, stats_rows, n_salts, block_size, "auto",
+                int(store.lineage()["stages"]["tf"]["rows"])))
 
-    # ---- exactly-adjusted dictionary ------------------------------------
-    if not store.stage_complete("dictionary"):
-        delta_dict = (
-            store.read_stage(spark, "segments").groupBy("term").agg(
-                F.sum("n_postings").alias("df_add"),
-                F.sum("tf_sum").alias("cf_add"),
-            )
-        )
-        d = index.dictionary.join(delta_dict, "term", "full_outer")
-        if removed_tf is not None:
-            removed = (
-                removed_tf
-                .select(F.explode(F.arrays_zip("terms", "tfs")).alias("z"))
-                .select(F.col("z.terms").alias("term"),
-                        F.col("z.tfs").alias("tf"))
-                .groupBy("term")
-                .agg(F.count("*").alias("df_rm"),
-                     F.sum("tf").alias("cf_rm"))
-            )
-            d = d.join(removed, "term", "full_outer")
-        else:
-            d = d.withColumn("df_rm", F.lit(0)).withColumn(
-                "cf_rm", F.lit(0))
-        adjusted = (
-            d.select(
-                "term",
-                (F.coalesce("df", F.lit(0)) + F.coalesce("df_add", F.lit(0))
-                 - F.coalesce("df_rm", F.lit(0))).alias("df"),
-                (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_add", F.lit(0))
-                 - F.coalesce("cf_rm", F.lit(0))).alias("cf"),
-            )
-            .filter(F.col("df") > 0)
-        )
-        store.commit_stage("dictionary", adjusted, partition_sort=["term"])
+        def commit_dictionary():
+            store.commit_stage(
+                "dictionary",
+                _adjusted_dictionary(index, tf_stage, removed_tf),
+                partition_sort=["term"])
 
-    store.set_meta({
-        "parent": index.store.path,
-        "n_salts": n_salts, "chain": chain, "block_size": block_size,
-        "key_col": key_col, "filter_cols": filter_cols,
-        "generation": len(index.stores),
-        **index._kind_meta(), **index._built_meta(stats_rows),
-    })
+        run_concurrently(spark, *[
+            fn for fn, need in ((commit_stats, need_stats),
+                                (commit_segments,
+                                 not store.stage_complete("segments")),
+                                (commit_dictionary, need_dictionary))
+            if need])
 
-    for cached in (tombstones, removed_tf):
-        if cached is not None:
+        store.set_meta({
+            "parent": index.store.path,
+            "n_salts": n_salts, "chain": chain, "block_size": block_size,
+            "key_col": key_col, "filter_cols": filter_cols,
+            "generation": len(index.stores),
+            **index._kind_meta(), **index._built_meta(stats_rows),
+        })
+        return type(index)(store, spark, chain)
+    finally:
+        for cached in persisted:
             cached.unpersist()
-    return type(index)(store, spark, chain)
 
 
 def merge_generations(
@@ -407,7 +468,9 @@ def merge_generations(
     the carried delete set), and one salted shuffle rebuilds their
     segments with caps tight at the current stats. Stats/dictionary are
     copied — a merge does not change the live corpus, so the adjusted
-    values are already correct.
+    values are already correct. The commits run as concurrent branches:
+    {``tf`` → ``segments``}, {``docs``, ``stats``, ``dictionary``},
+    {``deletes`` → ``del_segments``} and {``filters``}.
     """
     chain_len = len(index.stores)
     if keep < 0 or keep >= chain_len:
@@ -449,19 +512,27 @@ def merge_generations(
                 F.broadcast(applied), "doc_id", "left_anti")
         if keep == 0 or carried.limit(1).count() == 0:
             carried = None
-    if carried is not None:
+
+    def deletes():
         store.commit_stage("deletes", carried, partition_sort=["doc_id"])
         _commit_del_segments(
             store, store.read_stage(spark, "deletes"), n_salts, bs)
 
-    store.commit_stage("tf", merged_tf)
-    store.commit_stage("docs", merged_docs, partition_sort=["doc_id"])
-    # global stats/dictionary are unchanged by a merge — copy the already
-    # adjusted tables from the chain head
-    store.commit_stage("stats", index.store.read_stage(spark, "stats"))
-    store.commit_stage("dictionary", index.dictionary,
-                       partition_sort=["term"])
-    if all(st.stage_complete("filters") for st in merged_stores):
+    def tf_then_segments():
+        store.commit_stage("tf", merged_tf)
+        store.commit_stage("segments", index._build_segments(
+            store.read_stage(spark, "tf"), index._stats_rows, n_salts, bs,
+            range_buckets, int(store.lineage()["stages"]["tf"]["rows"])))
+
+    def docs_stats_dictionary():
+        store.commit_stage("docs", merged_docs, partition_sort=["doc_id"])
+        # global stats/dictionary are unchanged by a merge — copy the
+        # already adjusted tables from the chain head
+        store.commit_stage("stats", index.store.read_stage(spark, "stats"))
+        store.commit_stage("dictionary", index.dictionary,
+                           partition_sort=["term"])
+
+    def filters():
         # only the MERGED tiers' filter rows move into this store (a kept
         # ancestor keeps its own stage — the chain union would
         # double-count its rows otherwise). Block re-layout is unneeded
@@ -473,12 +544,17 @@ def merge_generations(
         if applied is not None:
             fout = _rebuild_filters_minus(fout, applied, n_salts, bs)
         store.commit_stage("filters", fout)
-    if applied is not None:
-        applied.unpersist()
 
-    store.commit_stage("segments", index._build_segments(
-        store.read_stage(spark, "tf"), index._stats_rows, n_salts, bs,
-        range_buckets, int(store.lineage()["stages"]["tf"]["rows"])))
+    branches = [tf_then_segments, docs_stats_dictionary]
+    if carried is not None:
+        branches.append(deletes)
+    if all(st.stage_complete("filters") for st in merged_stores):
+        branches.append(filters)
+    try:
+        run_concurrently(spark, *branches)
+    finally:
+        if applied is not None:
+            applied.unpersist()
 
     store.set_meta({
         "parent": parent,

@@ -26,13 +26,35 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# the key Spark's parquet writer stores its row schema under
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def config_fingerprint(conf: dict[str, Any]) -> str:
     return hashlib.sha256(
         json.dumps(conf, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
+
+
+def _footer_facts(md) -> tuple:
+    """(Spark schema as a JSON dict or None, max of a top-level int
+    ``doc_id`` column or None) from one parquet footer."""
+    kv = md.metadata or {}
+    schema = (json.loads(kv[_SPARK_SCHEMA_KEY])
+              if _SPARK_SCHEMA_KEY in kv else None)
+    doc_max = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            col = rg.column(c)
+            st = col.statistics
+            if (col.path_in_schema == "doc_id" and st is not None
+                    and st.has_min_max):
+                doc_max = (st.max if doc_max is None
+                           else max(doc_max, st.max))
+    return schema, doc_max
 
 
 class IndexStore:
@@ -130,15 +152,16 @@ class IndexStore:
                 f for f in os.listdir(out) if f.endswith(".parquet")
             )
 
-            def _footer(args: tuple[int, str]) -> dict:
+            def _footer(args: tuple[int, str]) -> tuple[dict, tuple]:
                 i, name = args
                 fpath = os.path.join(out, name)
+                md = pq.ParquetFile(fpath).metadata
                 return {
                     "partition": i,
                     "file": name,
-                    "rows": pq.ParquetFile(fpath).metadata.num_rows,
+                    "rows": md.num_rows,
                     "bytes": os.path.getsize(fpath),
-                }
+                }, _footer_facts(md)
 
             # footer reads release the GIL inside pyarrow; a thread pool
             # turns ~64 serial driver-side reads into one parallel sweep
@@ -147,27 +170,47 @@ class IndexStore:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(16, len(names) or 1)) as ex:
-                lineage = list(ex.map(_footer, enumerate(names)))
+                footers = list(ex.map(_footer, enumerate(names)))
+            lineage = [row for row, _ in footers]
+            facts = [f for _, f in footers]
+            entry = {
+                "committed_at": time.time(),
+                # stage metrics next to the per-partition lineage rows:
+                # wall duration + output volume (the Iceberg snapshot
+                # summary analog — added-files/records/size)
+                "duration_sec": round(time.time() - t_start, 3),
+                "rows": int(sum(x["rows"] for x in lineage)),
+                "bytes": int(sum(x["bytes"] for x in lineage)),
+                "partitions": lineage,
+            }
+            # driver-held facts from the same footers: the written Spark
+            # schema (read_stage then skips schema inference) and the
+            # doc_id max (the next generation's first id without a job)
+            schemas = [f[0] for f in facts if f[0] is not None]
+            if schemas:
+                entry["schema"] = schemas[0]
+                types = {fld["name"]: fld["type"]
+                         for fld in schemas[0]["fields"]}
+                # a file with rows but no min/max statistics leaves the
+                # key out: readers then run the aggregation
+                maxes = [f[1] for f, row in zip(facts, lineage)
+                         if row["rows"]]
+                if (types.get("doc_id") in ("long", "integer")
+                        and None not in maxes):
+                    entry["doc_id_max"] = max(maxes, default=None)
             with self._lock:
                 m = self._read_manifest()
-                m["stages"][stage] = {
-                    "committed_at": time.time(),
-                    # stage metrics next to the per-partition lineage rows:
-                    # wall duration + output volume (the Iceberg snapshot
-                    # summary analog — added-files/records/size)
-                    "duration_sec": round(time.time() - t_start, 3),
-                    "rows": int(sum(x["rows"] for x in lineage)),
-                    "bytes": int(sum(x["bytes"] for x in lineage)),
-                    "partitions": lineage,
-                }
+                m["stages"][stage] = entry
                 self._write_manifest(m)
         return self.read_stage(spark, stage)
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        """The committed stage as a DataFrame, resolved once per store.
+        """The committed stage as a DataFrame, resolved once per store
+        and with no Spark job.
 
-        ``spark.read.parquet`` runs a schema-inference job (~150 ms) on
-        every call; a committed stage is immutable, so its frame is kept,
+        A bare ``spark.read.parquet`` runs a schema-inference job
+        (~150 ms); a committed stage reads with the schema its manifest
+        entry recorded. The stage is immutable, so its frame is kept,
         keyed on the session and the manifest's ``committed_at`` — a
         recommit at this path (through any store instance) is read
         afresh. A stage not in the manifest is never cached."""
@@ -179,10 +222,28 @@ class IndexStore:
             hit = self._frames.get(stage)
             if hit is not None and hit[:2] == key:
                 return hit[2]
-        df = spark.read.parquet(self.stage_path(stage))
+        reader = spark.read
+        if "schema" in entry:
+            # the schema commit_stage recorded from the footers: no job
+            # (a manifest written before the key existed infers it)
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        df = reader.parquet(self.stage_path(stage))
         with self._lock:
             self._frames[stage] = (*key, df)
         return df
+
+    def stage_rows(self, stage: str) -> list:
+        """A driver-sized committed stage (the stats rows) as a list of
+        ``Row``, like ``read_stage(...).collect()`` but read from its
+        parquet files on the driver — no Spark job."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Row
+
+        entry = self._read_manifest()["stages"][stage]
+        return [Row(**r)
+                for part in entry["partitions"]
+                for r in pq.read_table(os.path.join(
+                    self.stage_path(stage), part["file"])).to_pylist()]
 
     def lineage(self) -> dict:
         return self._read_manifest()

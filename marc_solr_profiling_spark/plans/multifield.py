@@ -27,11 +27,12 @@ conservative sum bound (tie <= 1 implies dismax <= sum of field scores).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import tokenize_and_count_packed_fields
 from ..operators.segments import build_segments_packed
+from ..session import local_frame
 from .build import InvertedIndex, _resolve_range_buckets, assign_doc_ids
 from .lineage import IndexStore, config_fingerprint
 
@@ -66,7 +67,7 @@ class MultiFieldIndex(InvertedIndex):
         seg = store.read_stage(self.spark, "segments")
         built = store.get_meta().get("built_field_avgdl") or {
             r["field"]: r["avgdl"]
-            for r in store.read_stage(self.spark, "stats").collect()}
+            for r in store.stage_rows("stats")}
         fld = F.substring_index(F.col("term"), self.sep, 1)
         scale_expr = None
         for fname, (_, avgdl_now) in self.field_stats.items():
@@ -98,31 +99,27 @@ class MultiFieldIndex(InvertedIndex):
         # one packed row per doc within any single field
         return tf.filter(F.col("field") == self.fields[0]).select("doc_id")
 
-    def _adjusted_stats(self, delta_tf: DataFrame,
-                        removed_tf: DataFrame | None) -> DataFrame:
-        def agg(tf, n, t):
-            return tf.groupBy("field").agg(F.count("*").alias(n),
-                                           F.sum("doc_len").alias(t))
+    _stats_schema = ("field string, n_docs long, avgdl double,"
+                     " total_tokens long")
 
-        adj = self.store.read_stage(self.spark, "stats").join(
-            agg(delta_tf, "d_n", "d_t"), "field", "left")
-        if removed_tf is not None:
-            adj = adj.join(agg(removed_tf, "r_n", "r_t"), "field", "left")
-        else:
-            adj = adj.withColumn("r_n", F.lit(0)).withColumn(
-                "r_t", F.lit(0))
-        return adj.select(
-            "field",
-            (F.col("n_docs") + F.coalesce("d_n", F.lit(0))
-             - F.coalesce("r_n", F.lit(0))).alias("n_docs"),
-            (F.col("total_tokens") + F.coalesce("d_t", F.lit(0))
-             - F.coalesce("r_t", F.lit(0))).alias("total_tokens"),
-        ).withColumn(
-            "avgdl",
-            F.when(F.col("n_docs") > 0,
-                   F.col("total_tokens").cast("double")
-                   / F.col("n_docs")).otherwise(F.lit(0.0)),
-        ).select("field", "n_docs", "avgdl", "total_tokens")
+    def _tf_totals(self, tf: DataFrame) -> dict:
+        return {r["field"]: (int(r["n"]), int(r["t"] or 0))
+                for r in tf.groupBy("field").agg(
+                    F.count("*").alias("n"),
+                    F.sum("doc_len").alias("t")).collect()}
+
+    def _adjusted_stats(self, add: dict, removed: dict) -> list:
+        out = []
+        for r in self._stats_rows:
+            f = r["field"]
+            (n_add, t_add), (n_rm, t_rm) = (add.get(f, (0, 0)),
+                                            removed.get(f, (0, 0)))
+            n = int(r["n_docs"]) + n_add - n_rm
+            t = int(r["total_tokens"]) + t_add - t_rm
+            out.append(Row(field=f, n_docs=n,
+                           avgdl=(float(t) / n) if n > 0 else 0.0,
+                           total_tokens=t))
+        return out
 
     def _built_meta(self, stats_rows: list) -> dict:
         return {"built_field_avgdl": {r["field"]: float(r["avgdl"])
@@ -131,8 +128,8 @@ class MultiFieldIndex(InvertedIndex):
     def _build_segments(self, tf: DataFrame, stats_rows: list,
                         n_salts: int, block_size: int,
                         range_buckets: int | str, n_rows: int) -> DataFrame:
-        favg = self.spark.createDataFrame(
-            [(r["field"], float(r["avgdl"])) for r in stats_rows],
+        favg = local_frame(
+            self.spark, [(r["field"], float(r["avgdl"])) for r in stats_rows],
             "field string, _favgdl double")
         return build_segments_packed(
             tf.join(F.broadcast(favg), "field"), avgdl=0.0,
@@ -289,7 +286,7 @@ def build_multifield_index(
         store.set_meta({
             "built_field_avgdl": {
                 r["field"]: float(r["avgdl"])
-                for r in store.read_stage(spark, "stats").collect()
+                for r in store.stage_rows("stats")
             },
             "key_col": key_col,
             "filter_cols": list(filter_cols or []),
