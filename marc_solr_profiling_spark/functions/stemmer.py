@@ -135,8 +135,9 @@ _STEP4 = (
 # idea, keyed on the final letter here): a suffix can only match a word
 # sharing its last character, so scanning any other bucket is wasted
 # endswith calls — the suffix scan was 74% of the analysis miss chain
-# before this (tools/prof_tf_kernel.py). Bucket order preserves the
-# original tuple order, so first-match semantics are unchanged.
+# before this (a per-phase profile of the tf kernel). Bucket order
+# preserves the original tuple order, so first-match semantics are
+# unchanged.
 def _bucket_by_last(pairs):
     out: dict = {}
     for p in pairs:

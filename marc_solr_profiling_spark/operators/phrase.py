@@ -34,15 +34,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.analyzer import ANALYZERS
-from ..oracle import bm25_idf
 from ..session import local_frame
 from .segments import decode_block_positions
 from .varbyte import delta_decode, varbyte_decode
-from .wand import (B, K1, _by_salt, _delete_state, _drop_del_rows,
-                   _salt_dels, _topk_exact, _with_del_rows)
+from .wand import (_bm25, _member, _merged_topk, _search, _Salt,
+                   _topk_exact, _topk_frame, resolve_plan)
 
 
 def _decode_term(
@@ -113,49 +111,21 @@ def phrase_topk(
             "phrase_topk needs a positional index "
             "(build_index(..., positions=True))"
         )
-    spark = index.spark
     # full ORDERED sequence (duplicates kept — "buffalo buffalo" must
     # require two adjacent occurrences); distinct set only for lookups
     seq_terms = list(ANALYZERS[index.chain](phrase))
-
-    def empty() -> DataFrame:
-        return local_frame(spark, [], "doc_id long, score double")
-
-    if not seq_terms:
-        return empty()
-    uniq_terms = list(dict.fromkeys(seq_terms))
-    drows = index.cached_dictionary().filter(
-        F.col("term").isin(uniq_terms)
-    ).collect()
-    if len(drows) < len(uniq_terms):
+    plan = resolve_plan(index, phrase)
+    uniq_terms = list(plan.terms)
+    if not seq_terms or len(plan.weights) < len(uniq_terms):
         # conjunction: a phrase term absent from the corpus matches nothing
-        return empty()
-    idf_by_term = {
-        r["term"]: bm25_idf(index.n_docs, int(r["df"])) for r in drows
-    }
-    avgdl = index.avgdl
+        return local_frame(index.spark, [], "doc_id long, score double")
     kk = int(k)
-    # generational index (plans/generations.py): tombstoned docs leave
-    # the candidate set before position verification; large delete sets
-    # ride the scan as per-salt DEL_TERM postings instead of a driver
-    # array (wand.py _delete_state)
-    dels, del_tbl = _delete_state(index)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
         id_parts, score_parts = [], []
-        for _, salt_pdf in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(salt_pdf, dels)
-            salt_pdf = _drop_del_rows(salt_pdf)
-            if not len(salt_pdf):
-                continue
+        for s in salts:
             by_term = {
-                t: sub for t, sub in salt_pdf.groupby("term", sort=False)
+                t: sub for t, sub in s.rows.groupby("term", sort=False)
             }
             if len(by_term) < len(uniq_terms):
                 continue
@@ -177,10 +147,10 @@ def phrase_topk(
                     break
             if cand is None or cand.size == 0:
                 continue
-            if sdels is not None:
-                pos_d = np.clip(np.searchsorted(sdels, cand), 0,
-                                sdels.size - 1)
-                cand = cand[sdels[pos_d] != cand]
+            # generational index: tombstoned docs leave the candidate set
+            # before position verification
+            if s.dels is not None:
+                cand = cand[~_member(cand, s.dels)]
                 if cand.size == 0:
                     continue
             # adjacency verification, vectorized across ALL candidates at
@@ -265,34 +235,17 @@ def phrase_topk(
             for t in uniq_terms:
                 idx, tfs, dls = lookup[t]
                 j = idx[matched_ci]
-                tf = tfs[j].astype(np.float64)
-                dl = dls[j]
-                totals += (
-                    idf_by_term[t] * tf * (K1 + 1.0)
-                    / (tf + K1 * (1.0 - B + B * dl / avgdl))
-                )
+                totals += _bm25(plan.weights[t], plan.avgdl[t],
+                                tfs[j].astype(np.float64), dls[j])
             if round_to is not None:
                 scale = 10.0 ** round_to
                 totals = np.floor(totals * scale + 0.5) / scale
             top = _topk_exact(matched, totals, kk)
             id_parts.append(matched[top])
             score_parts.append(totals[top])
-        if not id_parts:
-            return
-        all_ids = np.concatenate(id_parts)
-        all_scores = np.concatenate(score_parts)
-        sel = _topk_exact(all_ids, all_scores, kk)
-        yield pd.DataFrame(
-            {"doc_id": all_ids[sel], "score": all_scores[sel]}
-        )
+        if id_parts:
+            ids, scores = _merged_topk(id_parts, score_parts, kk)
+            yield pd.DataFrame({"doc_id": ids, "score": scores})
 
-    matched = _with_del_rows(
-        index.segments.filter(F.col("term").isin(uniq_terms)), del_tbl)
-    candidates = _by_salt(matched, index).mapInPandas(
-        score, schema="doc_id long, score double"
-    )
-    topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
-    if with_url:
-        topk = topk.join(index.docs.select("doc_id", "url"), "doc_id", "left")
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk
+    candidates = _search(index, plan, collect, "doc_id long, score double")
+    return _topk_frame(index, candidates, kk, with_url)

@@ -43,7 +43,7 @@ class CachedSearcher:
             # every lookup would miss and every page come back empty
             raise ValueError(
                 "CachedSearcher serves single-field indexes only; query a "
-                "multi-field index through dismax_topk / "
+                "multi-field index through wand_topk(qf=...) / "
                 "solr_select_physical(qf=...)")
         self.index = index
         self.size = int(size)

@@ -1,18 +1,38 @@
-"""Query-time top-k over the compressed physical index: block-max WAND.
+"""Query-time reads of the compressed physical index: one salted searcher,
+many collectors.
 
 Spark restatement of the reference's search handler (``solrconfig.xml:
 64-83``: relevance top-k, rows=20, sort=score desc, edismax ``q.op=AND`` /
-``mm`` minimum-should-match): query terms are analyzed with the index's own
-chain, their idfs come from the dictionary (a broadcast-joined lookup of a
-handful of terms), and matching posting blocks are scored inside
-``mapInPandas`` with a bounded per-partition top-k — the per-partition
-min-heap of the north star — then merged globally.
+``mm`` minimum-should-match, ``qf``/``tie``) in Lucene's
+``IndexSearcher.search(query, collector)`` shape. Every physical read is
+three pieces:
+
+* **The plan** (:func:`resolve_plan`, driver side, once per query): the
+  query analyzed with the index's own chain (or field-scoped under
+  edismax ``qf``), the dictionary lookup of its terms, boosted idf and
+  avgdl per scored key, ``mm``, ``tie``, ``round_to``, MUST_NOT terms,
+  ``fq`` terms, faceted fields and CONSTANT_SCORE bonus clauses.
+* **The pass** (:func:`_search`): ONE scan of the plan's query-term
+  ``segments`` ∪ fq/facet ``filters`` ∪ ``del_segments`` tombstone rows,
+  repartitioned by salt (:func:`_by_salt`), ONE ``mapInPandas`` that
+  splits each salt into tombstones and postings (:class:`_Salt`) and
+  hands the salts of its partition to a collector.
+* **The collectors**: top-k (:func:`wand_topk`), the /select DocList +
+  DocSet (:func:`select_pass`), the match set
+  (:func:`matching_doc_ids`), facet counts (:func:`facet_match_counts`),
+  groups, explain, the dense and sparse batch kernels, and phrase
+  (``operators/phrase.py``). Scoring collectors call the block-max
+  kernel :func:`_score_blocks_bmw` with the plan and a per-salt
+  :class:`Mask` (include sets, exclude set, bonus sets); a top-k-only
+  collector never builds the match set, so block-max pruning stays its
+  only decode path.
 
 Partitioning invariant that makes this work: blocks are salted by
 hash(doc_id), so every query term's postings for a given document share a
-salt. Repartitioning matched blocks by salt therefore co-locates complete
-per-document score contributions — each partition computes exact totals
-for its doc subset independently. No cross-partition accumulation exists.
+salt — and so do its filter postings and its tombstone posting.
+Repartitioning matched blocks by salt therefore co-locates complete
+per-document contributions — each partition computes exact totals, match
+sets and masks for its doc subset independently.
 
 Block-max pruning (multi-term, EXACT — the document-at-a-time cap-sum
 walk, vectorized block-at-a-time):
@@ -47,8 +67,10 @@ reference's (score, internal docid) collector.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
-from typing import Iterator, List, Sequence
+from dataclasses import dataclass, field, replace
+from functools import cached_property, reduce
+from operator import or_
+from typing import Callable, Iterator, List, Sequence
 
 import numpy as np
 import pandas as pd
@@ -59,10 +81,19 @@ from ..functions.analyzer import ANALYZERS
 from ..functions.mm_spec import parse_mm_spec
 from ..oracle import bm25_idf
 from ..session import local_frame
+from .segments import DEL_TERM
 from .varbyte import delta_decode, varbyte_decode
 
 K1 = 1.2
 B = 0.75
+# query keys up to this many are a literal ``isin``; more are a
+# broadcast join — a literal In over thousands of batch terms generates
+# enormous codegen (multi-second compile)
+_ISIN_MAX = 64
+# wand_topk_batch(mode="auto"): below this share of matched posting
+# volume held by terms of several queries, the batch is sparse
+_SPARSE_SHARE = 0.25
+_NO_IDS = np.empty(0, dtype=np.int64)
 
 
 def _salt_partitions(index) -> int:
@@ -81,7 +112,7 @@ def _salt_partitions(index) -> int:
     if override:
         return max(1, int(override))
     cores = index.spark.sparkContext.defaultParallelism
-    return max(1, min(int(getattr(index, "n_salts", 16)), 4 * cores))
+    return max(1, min(int(index.n_salts), 4 * cores))
 
 
 def _by_salt(matched: DataFrame, index) -> DataFrame:
@@ -100,50 +131,9 @@ def _by_salt(matched: DataFrame, index) -> DataFrame:
     from .routing import exact_route_expr
 
     n_parts = _salt_partitions(index)
-    n_salts = max(1, int(getattr(index, "n_salts", 16)))
+    n_salts = max(1, int(index.n_salts))
     route = exact_route_expr(index.spark, F.col("salt"), n_salts, n_parts)
     return matched.repartition(n_parts, route.alias("_salt_route"))
-
-
-def _delete_state(index):
-    """Tombstone masking inputs for a kernel call: ``(arr, tbl)``.
-
-    ``arr`` — driver-collected sorted id array (small delete sets, the
-    fast path); ``tbl`` — the index-resident ``del_segments`` posting
-    table to UNION into the salted scan (large sets; each kernel decodes
-    only its salt's ids via :func:`_salt_dels`). At most one is non-None;
-    the split point is ``spark.marc.delArrayMaxIds`` (see
-    ``plans/build.py InvertedIndex.delete_masks``). Indexes without the
-    ``delete_masks`` API (plain builds) fall back to the array."""
-    fn = getattr(index, "delete_masks", None)
-    if fn is not None:
-        return fn()
-    return getattr(index, "deleted_array", lambda: None)(), None
-
-
-def _with_del_rows(matched: DataFrame, del_tbl) -> DataFrame:
-    if del_tbl is None:
-        return matched
-    return matched.unionByName(del_tbl, allowMissingColumns=True)
-
-
-def _salt_dels(sub: "pd.DataFrame", arr):
-    """This salt's sorted tombstone ids: the driver array when present,
-    else decoded from the salt's ``DEL_TERM`` posting rows riding the
-    scan (per-segment liveDocs — nothing global, nothing driver-side)."""
-    from .segments import DEL_TERM
-
-    rows = sub[sub["term"] == DEL_TERM]
-    if not len(rows):
-        return arr
-    ids = np.unique(_ids(rows))
-    return ids if arr is None else np.union1d(arr, ids)
-
-
-def _drop_del_rows(sub: "pd.DataFrame") -> "pd.DataFrame":
-    from .segments import DEL_TERM
-
-    return sub[sub["term"] != DEL_TERM]
 
 
 def _analyze_query(query: str, chain: str) -> List[str]:
@@ -161,136 +151,28 @@ def _ids(rows: "pd.DataFrame") -> np.ndarray:
         [delta_decode(g).astype(np.int64) for g in rows["doc_gaps"]])
 
 
+def _decode(rows: "pd.DataFrame"):
+    """(ids, tfs, dls) of posting-block rows, concatenated in row order."""
+    return (_ids(rows),
+            np.concatenate([varbyte_decode(b).astype(np.float64)
+                            for b in rows["tfs"]]),
+            np.concatenate([varbyte_decode(b).astype(np.float64)
+                            for b in rows["dls"]]))
+
+
+def _bm25(weight: float, avgdl: float, tfs: np.ndarray,
+          dls: np.ndarray) -> np.ndarray:
+    """Per-posting BM25 contribution of one (boosted-idf) scored key."""
+    return weight * tfs * (K1 + 1.0) / (
+        tfs + K1 * (1.0 - B + B * dls / avgdl))
+
+
 def _member(vals: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
     """Boolean mask: which of ``vals`` occur in the sorted id array."""
     if sorted_ids.size == 0:
         return np.zeros(vals.size, dtype=bool)
     pos = np.clip(np.searchsorted(sorted_ids, vals), 0, sorted_ids.size - 1)
     return sorted_ids[pos] == vals
-
-
-@dataclass(frozen=True)
-class _MatchSpec:
-    """What defines a request's match set, resolved on the driver.
-
-    ``terms``: the index terms scanned for ``q`` (field-scoped keys for a
-    multi-field index); ``group_of``: key -> base-term group when ``mm``
-    counts distinct base terms (edismax ``qf``), else None; ``mm``: the
-    resolved minimum-should-match; ``fq_terms``: filter-posting terms
-    every match must carry; ``match_all``: ``q`` is MatchAllDocsQuery."""
-
-    terms: tuple
-    group_of: "dict | None"
-    mm: int
-    fq_terms: tuple
-    match_all: bool
-
-
-def _match_spec(index, query, min_match, filter_queries,
-                term_groups) -> _MatchSpec:
-    match_all = query is None or query.strip() == "*:*"
-    if match_all:
-        terms, group_of, n = [], None, 0
-    elif term_groups is not None:
-        # multi-field (edismax qf) indexes: field-scoped keys of one base
-        # term share a group; mm counts DISTINCT GROUPS
-        terms, group_of = list(term_groups), dict(term_groups)
-        n = len(set(term_groups.values()))
-    else:
-        terms, group_of = _analyze_query(query, index.chain), None
-        n = len(terms)
-    return _MatchSpec(
-        terms=tuple(terms), group_of=group_of,
-        mm=0 if match_all else parse_mm_spec(min_match, n),
-        fq_terms=tuple(filter_queries or ()), match_all=match_all)
-
-
-def _salt_match(sub: "pd.DataFrame", spec: _MatchSpec, sdels):
-    """One salt's sorted match set: docs carrying at least ``spec.mm``
-    distinct query terms (groups), ∩ every fq set, minus tombstones.
-    None means every live doc (match-all without fq). Complete per salt
-    by the salt-placement invariant; no scoring."""
-    match = None
-    if not spec.match_all:
-        if spec.group_of is None:
-            qset = set(spec.terms)
-            parts = [_ids(rows) for t, rows in sub.groupby("term", sort=False)
-                     if t in qset]
-        else:
-            # dedupe WITHIN each base-term group first (title+body hits
-            # of one term count once)
-            by_group: dict[int, list] = {}
-            for t, rows in sub.groupby("term", sort=False):
-                g = spec.group_of.get(t)
-                if g is not None:
-                    by_group.setdefault(g, []).append(_ids(rows))
-            parts = [np.unique(np.concatenate(arrs))
-                     for arrs in by_group.values()]
-        if not parts:
-            return np.empty(0, dtype=np.int64)
-        uniq, counts = np.unique(np.concatenate(parts), return_counts=True)
-        match = uniq[counts >= spec.mm]
-    for ft in spec.fq_terms:
-        if match is not None and match.size == 0:
-            break
-        frows = sub[sub["term"] == ft]
-        inc = (np.unique(_ids(frows)) if len(frows)
-               else np.empty(0, dtype=np.int64))
-        # match-all: the first fq set IS the match
-        match = inc if match is None else match[_member(match, inc)]
-    if match is not None and sdels is not None and match.size:
-        match = match[~_member(match, sdels)]
-    return match
-
-
-def _salt_facet_counts(sub: "pd.DataFrame", prefixes, fq_set, match,
-                       sdels) -> "dict[str, int]":
-    """One salt's per-value facet counts ``|value postings ∩ match|``
-    over the filter postings of the ``field:`` ``prefixes`` — Lucene's
-    per-segment bitset facet counting. ``match`` None counts the live
-    postings (match-all)."""
-    out: dict[str, int] = {}
-    if not prefixes or (match is not None and match.size == 0):
-        return out
-    is_facet = sub["term"].str.startswith(tuple(prefixes))
-    for t, rows in sub[is_facet].groupby("term", sort=False):
-        if t in fq_set and match is not None:
-            # its intersection with the match is the match itself
-            n = int(match.size)
-        elif match is not None:
-            n = int(_member(np.unique(_ids(rows)), match).sum())
-        elif sdels is not None:
-            n = int((~_member(_ids(rows), sdels)).sum())
-        else:
-            n = int(_ids(rows).size)
-        if n:
-            out[t] = n
-    return out
-
-
-def _filter_scan(index, fq_terms, prefixes=()) -> "DataFrame | None":
-    """The filter-posting rows a kernel pass needs: the fq terms and
-    every value of the faceted fields (None when neither is asked)."""
-    pred = None
-    for c in ([F.col("term").startswith(p) for p in prefixes]
-              + [F.col("term") == ft for ft in fq_terms]):
-        pred = c if pred is None else (pred | c)
-    if pred is None:
-        return None
-    filters_tbl = getattr(index, "filters", None)
-    if filters_tbl is None:
-        raise ValueError(
-            "filter_queries / index-only facets need an index built with "
-            "filter_cols (no 'filters' stage present)")
-    return filters_tbl.filter(pred)
-
-
-def _union_scan(parts) -> DataFrame:
-    parts = [p for p in parts if p is not None]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
 
 
 def _topk_exact(uniq: np.ndarray, totals: np.ndarray, k: int):
@@ -308,6 +190,169 @@ def _topk_exact(uniq: np.ndarray, totals: np.ndarray, k: int):
     idx = np.flatnonzero(totals >= thresh)
     order = np.lexsort((uniq[idx], -totals[idx]))[:k]
     return idx[order]
+
+
+def _merged_topk(id_parts: list, score_parts: list, k: int):
+    """(ids, scores) of the top-k over distinct-doc parts."""
+    if not id_parts:
+        return _NO_IDS, np.empty(0)
+    ids = np.concatenate(id_parts)
+    scores = np.concatenate(score_parts)
+    sel = _topk_exact(ids, scores, k)
+    return ids[sel], scores[sel]
+
+
+# ---------------------------------------------------------------------------
+# the plan: one driver-side resolver for every collector
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class QueryPlan:
+    """A query resolved on the driver — what the pass scans and how the
+    kernel scores.
+
+    ``terms``: index keys of ``q`` (field-scoped ``field<sep>term`` under
+    edismax ``qf``); ``group_of``: key -> base-term group when ``mm``
+    counts distinct base terms and the kernel combines per-field scores
+    by dismax (``max + tie * (sum - max)``), else None; ``n_groups``: the
+    number of groups; ``mm``: the resolved minimum-should-match;
+    ``weights``: boosted idf of each scored key present in the dictionary
+    (MUST_NOT keys dropped); ``df``: its document frequency; ``avgdl``:
+    the collection average document length of each scored key (per field
+    under ``qf``); ``round_to``:
+    rank by half-up-rounded scores; ``exclude``: MUST_NOT keys; ``fq``:
+    filter-posting terms every match must carry; ``facet_prefixes``:
+    ``field:`` prefixes of counted facet fields; ``bonus_prefixes`` /
+    ``bonus_ranges``: CONSTANT_SCORE wildcard / term-range clauses
+    (+1.0 each); ``restrict``: a request-sized sorted id include set;
+    ``match_all``: ``q`` is MatchAllDocsQuery."""
+
+    terms: tuple = ()
+    group_of: "dict | None" = None
+    n_groups: int = 0
+    mm: int = 1
+    weights: dict = field(default_factory=dict)
+    df: dict = field(default_factory=dict)
+    avgdl: dict = field(default_factory=dict)
+    tie: float = 0.0
+    round_to: "int | None" = None
+    exclude: tuple = ()
+    fq: tuple = ()
+    facet_prefixes: tuple = ()
+    bonus_prefixes: tuple = ()
+    bonus_ranges: tuple = ()
+    restrict: "np.ndarray | None" = None
+    match_all: bool = False
+
+
+def _term_frame(spark, keys) -> DataFrame:
+    return local_frame(spark, [(t,) for t in keys], "term string")
+
+
+def _dictionary_rows(index, keys) -> list:
+    d = index.cached_dictionary()
+    if len(keys) <= _ISIN_MAX:
+        return d.filter(F.col("term").isin(list(keys))).collect()
+    return d.join(F.broadcast(_term_frame(index.spark, keys)),
+                  "term").collect()
+
+
+def resolve_plan(
+    index,
+    query: "str | None",
+    min_match: int | str = 1,
+    *,
+    qf: "dict[str, float] | None" = None,
+    tie: float = 0.1,
+    round_to: int | None = None,
+    pre_analyzed: bool = False,
+    exclude_query: str | None = None,
+    term_boosts: "dict[str, float] | None" = None,
+    term_groups: "dict[str, int] | None" = None,
+    filter_queries: "Sequence[str] | None" = None,
+    facet_fields: "Sequence[str]" = (),
+    score: bool = True,
+) -> QueryPlan:
+    """Resolve one query against ``index``: analyze, look its keys up in
+    the dictionary (``score=True``; one small job) and fold boosts into
+    per-key weights.
+
+    ``pre_analyzed``: ``query`` is whitespace-joined INDEX TERMS (e.g.
+    MoreLikeThis interesting terms read back from the index) — not
+    pushed through the analyzer again (stemming is not idempotent).
+    ``qf``: {field: boost} over a multi-field index — each base term
+    becomes one key per field, weighted ``boost_f * idf_f`` with that
+    field's avgdl (boosts fold into the per-key weight, so block caps
+    ``weight * max_wnorm`` bound the boosted field score and pruning
+    stays exact). ``term_groups``: index key -> group given directly
+    (``query`` is then not analyzed). ``score=False`` skips the
+    dictionary: match-only collectors need no weights."""
+    if (filter_queries or facet_fields) and index.filters is None:
+        raise ValueError(
+            "filter_queries / index-only facets need an index built with "
+            "filter_cols (no 'filters' stage present)")
+    match_all = query is None or query.strip() == "*:*"
+    sep = None
+    group_of = None
+    if match_all:
+        base, terms = [], []
+    elif term_groups is not None:
+        terms, group_of = list(term_groups), dict(term_groups)
+        base = sorted(set(group_of.values()))
+    elif qf is not None:
+        if not 0.0 <= float(tie) <= 1.0:
+            raise ValueError("tie must be in [0, 1] (dismax UB needs it)")
+        from ..plans.multifield import MultiFieldIndex
+
+        if not isinstance(index, MultiFieldIndex):
+            raise ValueError("qf= needs a multi-field index "
+                             "(plans/multifield.py)")
+        sep = index.sep
+        base = _analyze_query(query, index.chain)
+        group_of = {f + sep + t: gi for f in qf for gi, t in enumerate(base)}
+        terms = list(group_of)
+    else:
+        base = (list(dict.fromkeys(query.split())) if pre_analyzed
+                else _analyze_query(query, index.chain))
+        terms = base
+    exclude = (_analyze_query(exclude_query, index.chain)
+               if exclude_query else [])
+    if sep is not None:
+        exclude = [f + sep + t for f in qf for t in exclude]
+    plan = QueryPlan(
+        terms=tuple(terms), group_of=group_of,
+        n_groups=len(base) if group_of is not None else 0,
+        mm=0 if match_all else parse_mm_spec(min_match, len(base)),
+        tie=float(tie) if group_of is not None else 0.0, round_to=round_to,
+        exclude=tuple(exclude), fq=tuple(filter_queries or ()),
+        facet_prefixes=tuple(f + ":" for f in facet_fields),
+        match_all=match_all)
+    if not (score and terms):
+        return plan
+    boosts: dict[str, float] = {}
+    for raw, w in (term_boosts or {}).items():
+        for t in _analyze_query(raw, index.chain):
+            boosts[t] = float(w)
+    ex_set = set(exclude)
+    weights: dict[str, float] = {}
+    df: dict[str, int] = {}
+    avgdl: dict[str, float] = {}
+    for r in _dictionary_rows(index, terms):
+        key = r["term"]
+        if key in ex_set:
+            # a term both scored and prohibited matches no doc that
+            # survives; drop it from the scoring set
+            continue
+        if sep is None:
+            n_docs, avgdl[key], w = index.n_docs, index.avgdl, 1.0
+            bterm = key
+        else:
+            fld, _, bterm = key.partition(sep)
+            (n_docs, avgdl[key]), w = index.field_stats[fld], float(qf[fld])
+        df[key] = int(r["df"])
+        weights[key] = w * boosts.get(bterm, 1.0) * bm25_idf(n_docs, df[key])
+    return replace(plan, weights=weights, df=df, avgdl=avgdl)
 
 
 # ---------------------------------------------------------------------------
@@ -345,87 +390,97 @@ def _range_max(tables: list[np.ndarray], lo: np.ndarray,
 # ---------------------------------------------------------------------------
 
 
+@dataclass(frozen=True)
+class Mask:
+    """Which docs of one salt may qualify, and their constant bonuses.
+
+    ``include``: SORTED id arrays — a doc must be in EVERY one (Solr
+    ``fq`` filterCache bitsets decoded from unscored filter postings,
+    an explicit restrict set, or a precomputed match set). ``exclude``:
+    SORTED ids never admitted (MUST_NOT clauses ∪ tombstones). ``bonus``:
+    SORTED id arrays, one per CONSTANT_SCORE clause — +1.0 per set a doc
+    is in (Lucene's CONSTANT_SCORE_REWRITE contribution)."""
+
+    include: tuple = ()
+    exclude: "np.ndarray | None" = None
+    bonus: tuple = ()
+
+    def admit(self, ids: np.ndarray) -> np.ndarray:
+        keep = np.ones(ids.size, dtype=bool)
+        for inc in self.include:
+            keep &= _member(ids, inc)
+        if self.exclude is not None:
+            keep &= ~_member(ids, self.exclude)
+        return keep
+
+    def add_bonus(self, ids: np.ndarray, totals: np.ndarray) -> None:
+        for bs in self.bonus:
+            totals[_member(ids, bs)] += 1.0
+
+
+_OPEN = Mask()
+
+
 def _score_blocks_bmw(
     pdf: pd.DataFrame,
-    idf_by_term: dict[str, float],
+    plan: QueryPlan,
     k: int,
-    avgdl: float,
-    min_match: int = 1,
     theta0: float = -math.inf,
-    group_of: dict[str, int] | None = None,
-    n_groups: int = 0,
-    tie: float = 0.0,
-    avgdl_by_term: dict[str, float] | None = None,
-    round_to: int | None = None,
+    mask: Mask = _OPEN,
     decode_cache: dict | None = None,
-    exclude_ids: np.ndarray | None = None,
-    bonus_sets: "list[np.ndarray] | None" = None,
-    include_sets: "list[np.ndarray] | None" = None,
 ) -> tuple[np.ndarray, np.ndarray, int, float]:
     """Score ONE SALT's matched blocks with block-max pruning.
 
-    All rows must share a salt: within one salt, a term's blocks cover
-    disjoint ascending doc ranges (the overlap search requires it), and a
-    doc's postings for every query term live in this salt, so totals are
-    complete. ``theta0`` carries a lower bound on the global k-th score
-    from previously scored salts (pruning stays exact: theta only ever
-    UNDERSTATES the final k-th score).
+    All rows must share a salt and carry a key of ``plan.weights``:
+    within one salt, a term's blocks cover disjoint ascending doc ranges
+    (the overlap search requires it), and a doc's postings for every
+    query term live in this salt, so totals are complete. ``theta0``
+    carries a lower bound on the global k-th score from previously
+    scored salts (pruning stays exact: theta only ever UNDERSTATES the
+    final k-th score).
 
-    DISMAX mode (``group_of`` given): term keys are field-scoped
+    DISMAX mode (``plan.group_of`` given): term keys are field-scoped
     (``field<sep>term``); ``group_of`` maps each key to its base query
     term. Per (doc, base term) the combine is DisjunctionMaxQuery's
     ``max + tie * (sum - max)`` over the per-field scores (boosts are
-    folded into ``idf_by_term``), and the doc total sums the per-term
+    folded into ``plan.weights``), and the doc total sums the per-term
     dismaxes. The block-max UB machinery is UNCHANGED and stays exact:
     the additive sum over keys bounds the dismax combine whenever
     ``tie <= 1`` (dismax = (1-tie)*max + tie*sum <= sum), and a partial
     observation only understates both max and sum, so phase-1 thetas
-    remain lower bounds. ``min_match`` counts distinct BASE terms.
+    remain lower bounds. ``plan.mm`` counts distinct BASE terms.
 
-    ``avgdl_by_term``: per-key collection average (multi-field indexes
-    have per-field avgdl); keys absent fall back to the scalar.
+    ``plan.round_to``: rank by half-up-rounded scores (the oracle
+    contract for tie-heavy dismax results). Pruning thresholds are
+    slackened by one rounding grid step (eps = 10^-round_to): a doc can
+    displace the raw k-th in ROUNDED order only if its raw score is
+    within half a step, so every survivor's blocks keep UB >= theta - eps
+    and stay decoded. ``theta`` is tracked on RAW scores throughout
+    (never overstated by round-up).
 
-    ``round_to``: rank by half-up-rounded scores (the oracle contract for
-    tie-heavy dismax results). Pruning thresholds are slackened by one
-    rounding grid step (eps = 10^-round_to): a doc can displace the raw
-    k-th in ROUNDED order only if its raw score is within half a step, so
-    every survivor's blocks keep UB >= theta - eps and stay decoded.
-    ``theta`` is tracked on RAW scores throughout (never overstated by
-    round-up).
+    ``mask``: docs outside ``mask.include`` or inside ``mask.exclude``
+    are dropped inside ``accumulate`` so they never qualify, never raise
+    theta (theta from survivors only UNDERSTATES the true k-th — pruning
+    stays exact) and never reach the heap; scores are untouched (fq never
+    scores, Solr's cached-filter contract). Block UBs do not know about
+    ``mask.bonus``, so every pruning comparison is slackened by the
+    number of bonus sets (the maximum possible bonus): a block is only
+    skipped when even UB + max-bonus cannot reach theta. Bonus-ONLY docs
+    (matching no scored term) never enter this kernel; the caller emits
+    them separately.
 
-    ``exclude_ids``: SORTED doc ids to exclude (MUST_NOT clauses, decoded
-    from the excluded terms' postings of this same salt — complete by
-    the salt-placement invariant). Excluded docs are dropped inside
-    ``accumulate`` so they never qualify, never raise theta (theta from
-    survivors only UNDERSTATES the true k-th — pruning stays exact) and
-    never reach the heap; the UB machinery is untouched.
-
-    ``bonus_sets``: SORTED doc-id arrays, one per CONSTANT_SCORE
-    multi-term clause (wildcard / term range) of this salt — each doc
-    present in a set gets +1.0 added to its total (Lucene's
-    CONSTANT_SCORE_REWRITE contribution). Block UBs do not know about
-    bonuses, so every pruning comparison is slackened by
-    ``len(bonus_sets)`` (the maximum possible bonus): a block is only
-    skipped when even UB + max-bonus cannot reach theta — pruning stays
-    exact, it just prunes less when constant clauses are present.
-    Bonus-ONLY docs (matching no scored term) never enter this kernel;
-    the caller emits them separately.
-
-    ``include_sets``: SORTED doc-id arrays, one per Solr ``fq`` filter
-    clause of this salt (decoded from unscored FILTER postings — the
-    filterCache-bitset intersection done per salt). A doc must be in
-    EVERY set to qualify; filtered-out docs never raise theta (theta
-    understates the filtered k-th — pruning stays exact) and scores are
-    untouched (fq never scores, Solr's cached-filter contract).
+    ``decode_cache`` (sparse-batch mode): raw block decodes shared across
+    the queries of one salt.
 
     Returns (doc_ids, scores) of the salt's top-k among docs matching at
-    least ``min_match`` distinct query terms, the number of blocks skipped
+    least ``plan.mm`` distinct query terms, the number of blocks skipped
     without decoding, and the updated theta.
     """
+    weights, group_of, tie = plan.weights, plan.group_of, plan.tie
+    min_match, round_to, n_groups = plan.mm, plan.round_to, plan.n_groups
     uniq_terms = pd.unique(pdf["term"])
-    n_terms = len(uniq_terms)
     eps = 0.0 if round_to is None else 10.0 ** (-round_to)
-    bonus_slack = float(len(bonus_sets)) if bonus_sets else 0.0
+    bonus_slack = float(len(mask.bonus))
     grp_arr = (
         None if group_of is None
         else np.asarray([group_of[t] for t in uniq_terms], dtype=np.int64)
@@ -438,7 +493,7 @@ def _score_blocks_bmw(
         sub = pdf[pdf["term"] == t]
         first = sub["first_doc"].to_numpy(dtype=np.int64)
         order = np.argsort(first, kind="stable")
-        caps = idf_by_term[t] * sub["max_wnorm"].to_numpy(dtype=np.float64)
+        caps = weights[t] * sub["max_wnorm"].to_numpy(dtype=np.float64)
         per[t] = {
             "first": first[order],
             "last": sub["last_doc"].to_numpy(dtype=np.int64)[order],
@@ -475,14 +530,8 @@ def _score_blocks_bmw(
     ub_all, ref_all = ub_all[order], ref_all[order]
     n_blocks = ub_all.size
 
-    idf_arr = np.asarray([idf_by_term[t] for t in uniq_terms])
-    avgdl_arr = (
-        np.full(n_terms, avgdl)
-        if avgdl_by_term is None
-        else np.asarray(
-            [avgdl_by_term.get(t, avgdl) for t in uniq_terms]
-        )
-    )
+    idf_arr = np.asarray([weights[t] for t in uniq_terms])
+    avgdl_arr = np.asarray([plan.avgdl[t] for t in uniq_terms])
 
     ids_parts: list[np.ndarray] = []
     w_parts: list[np.ndarray] = []
@@ -492,57 +541,28 @@ def _score_blocks_bmw(
         ti, j = ref_all[bi]
         t = uniq_terms[ti]
         d = per[t]
-        # ``decode_cache`` (sparse-batch mode): raw block decodes are
-        # shared across the queries of one salt — a block needed by two
-        # queries is byte-decoded once; the (cheap, vectorized) weight
-        # computation stays per-call because idf context can differ
-        if decode_cache is not None:
-            ck = (t, int(d["first"][j]))
-            raw = decode_cache.get(ck)
-            if raw is None:
-                raw = (
-                    delta_decode(d["gaps"][j]).astype(np.int64),
-                    varbyte_decode(d["tfs"][j]).astype(np.float64),
-                    varbyte_decode(d["dls"][j]).astype(np.float64),
-                )
+        # a block needed by two queries of one salt is byte-decoded once;
+        # the (cheap, vectorized) weight computation stays per-call
+        ck = (t, int(d["first"][j]))
+        raw = None if decode_cache is None else decode_cache.get(ck)
+        if raw is None:
+            raw = (
+                delta_decode(d["gaps"][j]).astype(np.int64),
+                varbyte_decode(d["tfs"][j]).astype(np.float64),
+                varbyte_decode(d["dls"][j]).astype(np.float64),
+            )
+            if decode_cache is not None:
                 decode_cache[ck] = raw
-            ids, tfs, dls = raw
-        else:
-            ids = delta_decode(d["gaps"][j]).astype(np.int64)
-            tfs = varbyte_decode(d["tfs"][j]).astype(np.float64)
-            dls = varbyte_decode(d["dls"][j]).astype(np.float64)
-        w = idf_arr[ti] * tfs * (K1 + 1.0) / (
-            tfs + K1 * (1.0 - B + B * dls / avgdl_arr[ti])
-        )
+        ids, tfs, dls = raw
         ids_parts.append(ids)
-        w_parts.append(w)
+        w_parts.append(_bm25(idf_arr[ti], avgdl_arr[ti], tfs, dls))
         t_parts.append(int(ti))
 
-    def _drop_excluded(uniq, totals, counts):
-        if include_sets is not None and uniq.size:
-            keep = np.ones(uniq.size, dtype=bool)
-            for inc in include_sets:
-                if inc.size == 0:
-                    keep[:] = False
-                    break
-                pos = np.clip(np.searchsorted(inc, uniq), 0, inc.size - 1)
-                keep &= inc[pos] == uniq
+    def masked(uniq, totals, counts):
+        if uniq.size and (mask.include or mask.exclude is not None):
+            keep = mask.admit(uniq)
             uniq, totals, counts = uniq[keep], totals[keep], counts[keep]
-        if exclude_ids is None or exclude_ids.size == 0 or uniq.size == 0:
-            return uniq, totals, counts
-        pos = np.clip(
-            np.searchsorted(exclude_ids, uniq), 0, exclude_ids.size - 1)
-        keep = exclude_ids[pos] != uniq
-        return uniq[keep], totals[keep], counts[keep]
-
-    def _add_bonus(uniq, totals, counts):
-        if not bonus_sets or uniq.size == 0:
-            return uniq, totals, counts
-        for bs in bonus_sets:
-            if bs.size == 0:
-                continue
-            pos = np.clip(np.searchsorted(bs, uniq), 0, bs.size - 1)
-            totals[bs[pos] == uniq] += 1.0
+        mask.add_bonus(uniq, totals)
         return uniq, totals, counts
 
     def accumulate():
@@ -556,7 +576,7 @@ def _score_blocks_bmw(
             totals = np.zeros(uniq.size)
             np.add.at(totals, inv, all_w)
             counts = np.bincount(inv, minlength=uniq.size)
-            return _add_bonus(*_drop_excluded(uniq, totals, counts))
+            return masked(uniq, totals, counts)
         # dismax: two-level accumulate — per (doc, base term) max+sum
         # over field-scoped keys, combine, then sum per doc
         all_g = np.concatenate(
@@ -576,7 +596,7 @@ def _score_blocks_bmw(
         # distinct base terms per doc (a term matched in several fields
         # counts once — edismax mm semantics)
         counts = np.bincount(docpos, minlength=uniq.size)
-        return _add_bonus(*_drop_excluded(uniq, totals, counts))
+        return masked(uniq, totals, counts)
 
     # phase 1: decode in UB order until k qualifying docs, derive theta
     theta = theta0
@@ -665,6 +685,186 @@ def _score_blocks_bmw(
     return uniq[sel], ranked[sel], n_skipped, theta
 
 
+# ---------------------------------------------------------------------------
+# the pass: one salted scan, one mapInPandas, salts handed to a collector
+# ---------------------------------------------------------------------------
+
+
+class _Salt:
+    """One salt of the scan: its posting rows with the tombstone rows
+    split off (``dels``: this salt's sorted tombstone ids — per-segment
+    liveDocs, decoded from the ``DEL_TERM`` rows riding the scan, nothing
+    global and nothing driver-side), and the plan's per-salt id sets,
+    each decoded at most once."""
+
+    def __init__(self, rows: "pd.DataFrame", plan: QueryPlan):
+        dead = (rows["term"] == DEL_TERM).to_numpy()
+        self.plan = plan
+        self.dels = np.unique(_ids(rows[dead])) if dead.any() else None
+        self.rows = rows[~dead] if dead.any() else rows
+
+    def ids(self, pred) -> np.ndarray:
+        """Sorted distinct doc ids of the rows where ``pred`` holds."""
+        rows = self.rows[pred]
+        return np.unique(_ids(rows)) if len(rows) else _NO_IDS
+
+    @cached_property
+    def score_rows(self) -> "pd.DataFrame":
+        return self.rows[self.rows["term"].isin(self.plan.weights)]
+
+    @cached_property
+    def fq_sets(self) -> list:
+        return [self.ids(self.rows["term"] == t) for t in self.plan.fq]
+
+    @cached_property
+    def bonus_sets(self) -> list:
+        terms = self.rows["term"]
+        return ([self.ids(terms.str.startswith(p))
+                 for p in self.plan.bonus_prefixes]
+                + [self.ids((terms >= lo) & (terms <= hi))
+                   for lo, hi in self.plan.bonus_ranges])
+
+    @cached_property
+    def excluded(self) -> "np.ndarray | None":
+        """MUST_NOT ids ∪ tombstones (None when neither)."""
+        ex = (self.ids(self.rows["term"].isin(self.plan.exclude))
+              if self.plan.exclude else _NO_IDS)
+        if self.dels is not None:
+            ex = np.union1d(ex, self.dels)
+        return ex if ex.size else None
+
+    def mask(self) -> Mask:
+        """fq ∩ restrict include sets, MUST_NOT ∪ tombstones, bonuses."""
+        inc = list(self.fq_sets)
+        if self.plan.restrict is not None:
+            inc.append(self.plan.restrict)
+        return Mask(tuple(inc), self.excluded, tuple(self.bonus_sets))
+
+    @cached_property
+    def match(self) -> "np.ndarray | None":
+        """Sorted match set: docs carrying at least ``mm`` distinct query
+        terms (groups), ∩ every fq set, minus tombstones. None means
+        every live doc (match-all without fq). No scoring."""
+        plan = self.plan
+        match = None
+        if not plan.match_all:
+            group_of = plan.group_of or {t: t for t in plan.terms}
+            by_group: dict = {}
+            for t, rows in self.rows.groupby("term", sort=False):
+                g = group_of.get(t)
+                if g is not None:
+                    by_group.setdefault(g, []).append(_ids(rows))
+            # dedupe WITHIN each base-term group first (title+body hits
+            # of one term count once)
+            parts = [a[0] if len(a) == 1 else np.unique(np.concatenate(a))
+                     for a in by_group.values()]
+            if not parts:
+                return _NO_IDS
+            uniq, counts = np.unique(np.concatenate(parts),
+                                     return_counts=True)
+            match = uniq[counts >= plan.mm]
+        for inc in self.fq_sets:
+            # match-all: the first fq set IS the match
+            match = inc if match is None else match[_member(match, inc)]
+        if match is not None and self.dels is not None and match.size:
+            match = match[~_member(match, self.dels)]
+        return match
+
+    def facet_counts(self, match) -> "dict[str, int]":
+        """Per-value facet counts ``|value postings ∩ match|`` over the
+        filter postings of the faceted fields — Lucene's per-segment
+        bitset facet counting. ``match`` None counts the live postings
+        (match-all)."""
+        out: dict[str, int] = {}
+        prefixes = self.plan.facet_prefixes
+        if not prefixes or (match is not None and match.size == 0):
+            return out
+        fq_set = set(self.plan.fq)
+        is_facet = self.rows["term"].str.startswith(prefixes)
+        for t, rows in self.rows[is_facet].groupby("term", sort=False):
+            if t in fq_set and match is not None:
+                # its intersection with the match is the match itself
+                n = int(match.size)
+            elif match is not None:
+                n = int(_member(np.unique(_ids(rows)), match).sum())
+            elif self.dels is not None:
+                n = int((~_member(_ids(rows), self.dels)).sum())
+            else:
+                n = int(_ids(rows).size)
+            if n:
+                out[t] = n
+        return out
+
+
+def _search(index, plan: QueryPlan,
+            collector: "Callable[[Iterator[_Salt]], Iterator[pd.DataFrame]]",
+            schema: str) -> DataFrame:
+    """The one salted pass — Lucene's ``IndexSearcher.search(query,
+    collector)``. Scans the plan's query-term (and MUST_NOT / bonus)
+    ``segments`` rows ∪ its fq / faceted-field ``filters`` rows ∪ the
+    ``del_segments`` tombstone rows, co-locates each salt in one
+    partition, and hands the partition's non-empty salts (tombstones
+    split off) to ``collector``, which yields the partition's output
+    frames in ``schema``. Lazy: the caller decides how it is read."""
+    keys = list(dict.fromkeys(plan.terms + plan.exclude))
+    bonus = ([F.col("term").startswith(p) for p in plan.bonus_prefixes]
+             + [F.col("term").between(lo, hi)
+                for lo, hi in plan.bonus_ranges])
+    filters = ([F.col("term").startswith(p) for p in plan.facet_prefixes]
+               + [F.col("term") == ft for ft in plan.fq])
+    parts = []
+    if len(keys) > _ISIN_MAX and not bonus:
+        parts.append(index.segments.join(
+            F.broadcast(_term_frame(index.spark, keys)), "term"))
+    elif keys or bonus:
+        parts.append(index.segments.filter(
+            reduce(or_, bonus, F.col("term").isin(keys))))
+    if filters:
+        # resolve_plan refused fq / facets on an index without them
+        parts.append(index.filters.filter(reduce(or_, filters)))
+    if not parts:
+        parts.append(index.segments.limit(0))
+    tombstones = index.del_postings()
+    if tombstones is not None:
+        parts.append(tombstones)
+    scan = parts[0]
+    for p in parts[1:]:
+        scan = scan.unionByName(p, allowMissingColumns=True)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lst = list(batches)
+        if not lst:
+            return
+        pdf = pd.concat(lst, ignore_index=True)
+        if len(pdf) == 0:
+            return
+        # a partition may hold several salts; each is complete on its own
+        # (block ranges are only disjoint within a salt, and each doc's
+        # full contribution lives in exactly one salt)
+        salts = (_Salt(sub, plan) for _, sub in pdf.groupby("salt",
+                                                            sort=False))
+        yield from collector(s for s in salts if len(s.rows))
+
+    return _by_salt(scan, index).mapInPandas(run, schema=schema)
+
+
+def _topk_frame(index, candidates: DataFrame, k: int,
+                with_url: bool) -> DataFrame:
+    """The global (score desc, doc_id asc) top-k of per-partition
+    candidates, with the doc's url when asked and the docs stage has one
+    (indexes keyed on a non-url column have none)."""
+    topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    if with_url and "url" in index.docs.columns:
+        topk = topk.join(index.docs.select("doc_id", "url"), "doc_id", "left")
+        topk = topk.orderBy(F.desc("score"), F.asc("doc_id"))
+    return topk
+
+
+# ---------------------------------------------------------------------------
+# collectors
+# ---------------------------------------------------------------------------
+
+
 def wand_topk(
     index,
     query: str,
@@ -679,8 +879,26 @@ def wand_topk(
     filter_queries: "Sequence[str] | None" = None,
     pre_analyzed: bool = False,
     restrict_ids: "Sequence[int] | None" = None,
+    qf: "dict[str, float] | None" = None,
+    tie: float = 0.1,
+    round_to: int | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score[, url]) for one query over a built index.
+
+    ``qf``: edismax multi-field top-k over a MULTI-FIELD physical index
+    (plans/multifield.py) — the reference's default handler shape
+    (``solrconfig.xml:64-83``)::
+
+        score(d) = sum over query terms t of
+                     max_f(s_f) + tie * (sum_f(s_f) - max_f(s_f))
+        s_f      = boost_f * BM25_f(t, d)   [per-field df, avgdl, norms]
+
+    Field-scoped term keys are just more terms to the block machinery;
+    the dismax combine replaces the additive accumulate and pruning stays
+    exact because the additive UB bounds the dismax total for
+    ``tie <= 1``. ``min_match`` then counts distinct BASE query terms (a
+    term matched only in the title still counts once). ``round_to``: rank
+    by rounded scores (oracle tie contract) with eps-slackened pruning.
 
     ``filter_queries``: Solr ``fq`` clauses answered FROM THE INDEX's
     unscored filter postings (``build_index(filter_cols=...)`` — the
@@ -702,14 +920,15 @@ def wand_topk(
     ``exclude_query``: prohibited clauses (``-term`` /
     BooleanClause.Occur.MUST_NOT) answered FROM THE INDEX: the excluded
     terms' postings travel through the same salted scan as the scoring
-    postings (a doc's postings for every term live in one salt, so
-    per-salt exclusion is complete), are decoded to sorted doc-id
-    arrays, and are masked out inside the kernel's accumulator — before
-    theta derivation and heap entry, so block-max pruning stays exact.
+    postings, are decoded to per-salt sorted doc-id arrays, and are
+    masked out inside the kernel's accumulator — before theta derivation
+    and heap entry, so block-max pruning stays exact. Tombstoned docs of
+    a generation chain ride the same exclusion.
     ``term_boosts``: per-clause boosts (the query parser's ``term^2``),
-    folded into the per-term idf weight exactly like the dismax qf
-    weights (:func:`dismax_topk`) — block caps are ``weight *
+    folded into the per-term weight — block caps are ``weight *
     max_wnorm``, so pruning bounds scale with the boost and stay exact.
+    ``restrict_ids``: a request-sized explicit id set (QueryElevation's
+    score fetch) — one more include set for the kernel.
 
     ``wildcard`` / ``term_range``: CONSTANT_SCORE multi-term clauses
     (``pre*`` / ``[lo TO hi]``) answered FROM THE INDEX: each clause is
@@ -717,148 +936,53 @@ def wand_topk(
     min/max row-group pruning applies), its matching postings ride the
     same salted scan, and its per-salt doc set becomes a +1.0 bonus
     inside the kernel (pruning slackened by the clause count — see
-    ``_score_blocks_bmw`` bonus_sets). Docs matching ONLY constant
-    clauses are emitted at their bonus value and max-merged with the
-    kernel's rows per partition (a pruned doc's understated bonus row
-    provably never displaces a correct result: its own salt already
-    contributed k rows with larger totals). Unlike the logical plan,
-    scores here are rounded ONCE at the end (the logical twin rounds
-    the scored sum before adding the bonus); the oracle row's twin uses
-    the single-round form. A query with no scored clause still requires
-    ``query`` terms here (wildcard-only strings use the logical plan).
+    :class:`Mask`). Docs matching ONLY constant clauses are emitted at
+    their bonus value and max-merged with the kernel's rows per partition
+    (a pruned doc's understated bonus row provably never displaces a
+    correct result: its own salt already contributed k rows with larger
+    totals). Unlike the logical plan, scores here are rounded ONCE at the
+    end (the logical twin rounds the scored sum before adding the bonus);
+    the oracle row's twin uses the single-round form. A query with no
+    scored clause still requires ``query`` terms here (wildcard-only
+    strings use the logical plan).
     """
-    spark = index.spark
-    # pre_analyzed: the caller passes whitespace-joined INDEX TERMS (e.g.
-    # MoreLikeThis interesting terms read back from the index) — do not
-    # push them through the analyzer again (stemming is not idempotent)
-    qterms = (list(dict.fromkeys(query.split())) if pre_analyzed
-              else _analyze_query(query, index.chain))
-    ex_terms = (_analyze_query(exclude_query, index.chain)
-                if exclude_query else [])
-    ex_set = set(ex_terms)
-
-    def empty() -> DataFrame:
-        return local_frame(spark, [], "doc_id long, score double")
-
-    if not qterms:
-        return empty()
-    drows = index.cached_dictionary().filter(
-        F.col("term").isin(qterms)
-    ).collect()
-    # (few terms: a literal In is fine here; the batch path broadcast-joins)
-    if not drows:
-        return empty()
-    boosts: dict[str, float] = {}
-    if term_boosts:
-        for raw, w in term_boosts.items():
-            for t in _analyze_query(raw, index.chain):
-                boosts[t] = float(w)
-    idf_by_term = {
-        r["term"]: boosts.get(r["term"], 1.0)
-        * bm25_idf(index.n_docs, int(r["df"])) for r in drows
-        if r["term"] not in ex_set  # a term both scored and prohibited
-        # matches no doc that survives; drop it from the scoring set
-    }
-    if not idf_by_term:
-        return empty()
-    avgdl = index.avgdl
+    plan = resolve_plan(
+        index, query, min_match, qf=qf, tie=tie, round_to=round_to,
+        pre_analyzed=pre_analyzed, exclude_query=exclude_query,
+        term_boosts=term_boosts, filter_queries=filter_queries)
+    if not plan.weights:
+        return local_frame(index.spark, [], "doc_id long, score double")
+    plan = replace(
+        plan,
+        bonus_prefixes=((wildcard,) if isinstance(wildcard, str)
+                        else tuple(wildcard or ())),
+        bonus_ranges=(term_range,) if term_range is not None else (),
+        restrict=(np.unique(np.asarray(list(restrict_ids), dtype=np.int64))
+                  if restrict_ids is not None else None))
     kk = int(k)
-    mm = parse_mm_spec(min_match, len(qterms))
-    prefixes = ([wildcard] if isinstance(wildcard, str)
-                else list(wildcard or []))
-    ranges = [term_range] if term_range is not None else []
-    has_mt = bool(prefixes or ranges)
-    # generational index (plans/generations.py): tombstoned doc ids ride
-    # the MUST_NOT exclusion path — masked before theta/heap, pruning
-    # stays exact. Large delete sets never reach the driver: they ride
-    # the salted scan as DEL_TERM postings (del_tbl) and each salt
-    # decodes only its own ids.
-    dels, del_tbl = _delete_state(index)
-    fq_terms = list(filter_queries or [])
-    # fq clause postings ride the same salted scan (same block schema,
-    # zero caps — they never score, only gate)
-    fscan = _filter_scan(index, fq_terms)
-    # restrict_ids: a request-sized explicit id set (QueryElevation's
-    # score fetch) — one more include-set for the kernel
-    restrict = (np.unique(np.asarray(list(restrict_ids), dtype=np.int64))
-                if restrict_ids is not None else None)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        # a hash-repartitioned task may hold several salts; score each salt
-        # independently (block ranges are only disjoint within a salt, and
-        # each doc's full contribution lives in exactly one salt), carrying
-        # theta forward so later salts start with a tighter prune bound
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
+        # theta carries forward across the partition's salts, so later
+        # salts start with a tighter prune bound
         theta = -math.inf
         id_parts, score_parts = [], []
         n_skipped = 0
-        for _, sub in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(sub, dels)
-            sub = _drop_del_rows(sub)
-            if not len(sub):
-                continue
-            excl = None
-            if ex_set:
-                ex_rows = sub[sub["term"].isin(ex_set)]
-                if len(ex_rows):
-                    excl = np.unique(_ids(ex_rows))
-            if sdels is not None:
-                excl = sdels if excl is None else np.union1d(excl, sdels)
-            incs = None
-            if fq_terms:
-                incs = []
-                for ft in fq_terms:
-                    frows = sub[sub["term"] == ft]
-                    incs.append(np.unique(_ids(frows)) if len(frows)
-                                else np.empty(0, dtype=np.int64))
-            if restrict is not None:
-                incs = (incs or []) + [restrict]
-            bsets = None
-            if has_mt:
-                terms = sub["term"]
-                bsets = []
-                for pd_pred in (
-                    [terms.str.startswith(p) for p in prefixes]
-                    + [(terms >= lo) & (terms <= hi) for lo, hi in ranges]
-                ):
-                    rows = sub[pd_pred]
-                    bsets.append(np.unique(_ids(rows)) if len(rows)
-                                 else np.empty(0, dtype=np.int64))
-                wall = ([b for b in bsets if b.size])
+        for s in salts:
+            mask = s.mask()
+            if mask.bonus:
+                wall = [b for b in mask.bonus if b.size]
                 if wall:
                     wu, wc = np.unique(np.concatenate(wall),
                                        return_counts=True)
-                    if excl is not None and excl.size and wu.size:
-                        pos = np.clip(np.searchsorted(excl, wu), 0,
-                                      excl.size - 1)
-                        keep = excl[pos] != wu
-                        wu, wc = wu[keep], wc[keep]
-                    if incs is not None and wu.size:
-                        keep = np.ones(wu.size, dtype=bool)
-                        for inc in incs:
-                            if inc.size == 0:
-                                keep[:] = False
-                                break
-                            pos = np.clip(np.searchsorted(inc, wu), 0,
-                                          inc.size - 1)
-                            keep &= inc[pos] == wu
-                        wu, wc = wu[keep], wc[keep]
+                    keep = mask.admit(wu)
                     # docs matching only constant clauses: emitted at
                     # their bonus value, max-merged with kernel rows
-                    id_parts.append(wu)
-                    score_parts.append(wc.astype(np.float64))
-            srows = sub[sub["term"].isin(idf_by_term)]
-            if not len(srows):
+                    id_parts.append(wu[keep])
+                    score_parts.append(wc[keep].astype(np.float64))
+            if not len(s.score_rows):
                 continue
             ids, scores, nsk, theta = _score_blocks_bmw(
-                srows, idf_by_term, kk, avgdl, min_match=mm, theta0=theta,
-                exclude_ids=excl, bonus_sets=bsets, include_sets=incs,
-            )
+                s.score_rows, plan, kk, theta, mask)
             id_parts.append(ids)
             score_parts.append(scores)
             n_skipped += nsk
@@ -866,170 +990,18 @@ def wand_topk(
             skip_acc.add(int(n_skipped))
         if not id_parts:
             return
-        all_ids = np.concatenate(id_parts)
-        all_scores = np.concatenate(score_parts)
         # per-partition bounded top-k across its salts (docs are distinct
         # across salts; a doc's kernel row and bonus-only row max-merge —
         # the kernel total always dominates its own bonus row)
-        uniq_ids, inv = np.unique(all_ids, return_inverse=True)
+        uniq_ids, inv = np.unique(np.concatenate(id_parts),
+                                  return_inverse=True)
         best = np.full(uniq_ids.size, -np.inf)
-        np.maximum.at(best, inv, all_scores)
+        np.maximum.at(best, inv, np.concatenate(score_parts))
         sel = _topk_exact(uniq_ids, best, kk)
-        yield pd.DataFrame(
-            {"doc_id": uniq_ids[sel], "score": best[sel]}
-        )
+        yield pd.DataFrame({"doc_id": uniq_ids[sel], "score": best[sel]})
 
-    seg_pred = F.col("term").isin(list(idf_by_term) + sorted(ex_set))
-    for p in prefixes:
-        seg_pred = seg_pred | F.col("term").startswith(p)
-    for lo, hi in ranges:
-        seg_pred = seg_pred | F.col("term").between(lo, hi)
-    matched = _with_del_rows(
-        _union_scan([index.segments.filter(seg_pred), fscan]), del_tbl)
-    candidates = _by_salt(matched, index).mapInPandas(
-        score, schema="doc_id long, score double"
-    )
-    topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if with_url and "url" in index.docs.columns:
-        # indexes keyed on a non-url column have no url in the docs stage
-        topk = topk.join(index.docs.select("doc_id", "url"), "doc_id", "left")
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk
-
-
-
-
-def _dismax_terms(index, query: str, qf: dict, tie: float):
-    """Base query terms and their field-scoped keys -> base-term group."""
-    if not 0.0 <= float(tie) <= 1.0:
-        raise ValueError("tie must be in [0, 1] (dismax UB needs it)")
-    sep = getattr(index, "sep", "\x1f")
-    qterms = _analyze_query(query, index.chain)
-    return qterms, {f + sep + t: gi
-                    for f in qf for gi, t in enumerate(qterms)}
-
-
-def _dismax_weights(index, drows, qf: dict):
-    """Per-key boosted idf and per-field avgdl of the dictionary rows."""
-    sep = getattr(index, "sep", "\x1f")
-    idf_by_term: dict[str, float] = {}
-    avgdl_by_term: dict[str, float] = {}
-    for r in drows:
-        key = r["term"]
-        fld = key.partition(sep)[0]
-        n_docs_f, avgdl_f = index.field_stats[fld]
-        # boost folds into the per-key weight: caps (idf*max_wnorm) then
-        # bound the BOOSTED field score, keeping the UB machinery exact
-        idf_by_term[key] = float(qf[fld]) * bm25_idf(n_docs_f, int(r["df"]))
-        avgdl_by_term[key] = avgdl_f
-    return idf_by_term, avgdl_by_term
-
-
-def dismax_topk(
-    index,
-    query: str,
-    qf: dict[str, float],
-    tie: float = 0.1,
-    k: int = 10,
-    min_match: int | str = 1,
-    round_to: int | None = None,
-    with_url: bool = False,
-    skip_acc=None,
-    filter_queries: "Sequence[str] | None" = None,
-) -> DataFrame:
-    """Edismax multi-field top-k over a MULTI-FIELD physical index
-    (plans/multifield.py) — the reference's actual default handler shape
-    (``solrconfig.xml:64-83``: edismax ``qf`` per-field boosts + ``tie``):
-
-        score(d) = sum over query terms t of
-                     max_f(s_f) + tie * (sum_f(s_f) - max_f(s_f))
-        s_f      = boost_f * BM25_f(t, d)   [per-field df, avgdl, norms]
-
-    Execution is the SAME salted block-max mapInPandas scorer as
-    :func:`wand_topk` — field-scoped term keys are just more terms to the
-    block machinery; the dismax combine replaces the additive accumulate
-    (see ``_score_blocks_bmw`` dismax mode), and pruning stays exact
-    because the additive UB bounds the dismax total for ``tie <= 1``.
-
-    ``qf``: {field_name: boost}. ``min_match`` counts distinct BASE query
-    terms (a term matched only in the title still counts once).
-    ``round_to``: rank by rounded scores (oracle tie contract) with
-    eps-slackened pruning.
-    """
-    qterms, group_of = _dismax_terms(index, query, qf, tie)
-    if not qterms:
-        return local_frame(index.spark, [], "doc_id long, score double")
-    keys = list(group_of)
-    drows = index.cached_dictionary().filter(
-        F.col("term").isin(keys)
-    ).collect()
-    if not drows:
-        return local_frame(index.spark, [], "doc_id long, score double")
-    idf_by_term, avgdl_by_term = _dismax_weights(index, drows, qf)
-    kk = int(k)
-    mm = parse_mm_spec(min_match, len(qterms))
-    n_groups = len(qterms)
-    tie_f = float(tie)
-    dels, del_tbl = _delete_state(index)
-    fq_terms = list(filter_queries or [])
-    fq_set = set(fq_terms)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        theta = -math.inf
-        id_parts, score_parts = [], []
-        n_skipped = 0
-        for _, sub in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(sub, dels)
-            sub = _drop_del_rows(sub)
-            if not len(sub):
-                continue
-            incs = None
-            if fq_terms:
-                incs = []
-                for ft in fq_terms:
-                    frows = sub[sub["term"] == ft]
-                    incs.append(np.unique(_ids(frows)) if len(frows)
-                                else np.empty(0, dtype=np.int64))
-                sub = sub[~sub["term"].isin(fq_set)]
-                if not len(sub):
-                    continue
-            ids, scores, nsk, theta = _score_blocks_bmw(
-                sub, idf_by_term, kk, 0.0, min_match=mm, theta0=theta,
-                group_of=group_of, n_groups=n_groups, tie=tie_f,
-                avgdl_by_term=avgdl_by_term, round_to=round_to,
-                exclude_ids=sdels, include_sets=incs,
-            )
-            id_parts.append(ids)
-            score_parts.append(scores)
-            n_skipped += nsk
-        if skip_acc is not None:
-            skip_acc.add(int(n_skipped))
-        if not id_parts:
-            return
-        all_ids = np.concatenate(id_parts)
-        all_scores = np.concatenate(score_parts)
-        sel = _topk_exact(all_ids, all_scores, kk)
-        yield pd.DataFrame(
-            {"doc_id": all_ids[sel], "score": all_scores[sel]}
-        )
-
-    fscan = _filter_scan(index, fq_terms)
-    matched = _with_del_rows(_union_scan(
-        [index.segments.filter(F.col("term").isin(keys)), fscan]), del_tbl)
-    candidates = _by_salt(matched, index).mapInPandas(
-        score, schema="doc_id long, score double"
-    )
-    topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
-    if with_url and "url" in index.docs.columns:
-        topk = topk.join(index.docs.select("doc_id", "url"), "doc_id", "left")
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk
+    candidates = _search(index, plan, collect, "doc_id long, score double")
+    return _topk_frame(index, candidates, kk, with_url)
 
 
 def wand_topk_batch(
@@ -1037,14 +1009,13 @@ def wand_topk_batch(
     queries: Sequence[str],
     k: int = 10,
     mode: str = "auto",
-    sparse_share_threshold: float = 0.25,
     skip_acc=None,
 ) -> DataFrame:
     """Many queries in one pass: (qid, doc_id, score, rank).
 
     One segment scan serves all queries (the batch query driver of
     SURVEY.md §M3): blocks matching ANY query term are repartitioned by
-    salt once. Two partition-local kernels, chosen by ``mode``:
+    salt once. Two collectors, chosen by ``mode``:
 
     * **dense** — each partition decodes every matched block ONCE and
       scores every query against its doc subset. In a dense batch (hot
@@ -1060,9 +1031,8 @@ def wand_topk_batch(
 
     ``mode="auto"`` decides driver-side from the dictionary: the share of
     matched posting volume (df-weighted) belonging to terms used by MORE
-    than one query. Below ``sparse_share_threshold`` the batch is sparse.
-    The statistic costs nothing extra — the per-term dfs are already
-    collected for idf.
+    than one query. Below a quarter the batch is sparse. The statistic
+    costs nothing extra — the per-term dfs come with the idf lookup.
 
     Global merge (both modes): per-partition bounded candidate sets
     (<= k rows per qid each) are combined by a partial-aggregatable
@@ -1073,83 +1043,50 @@ def wand_topk_batch(
     candidate set per qid).
     """
     spark = index.spark
-    per_q_terms: dict[int, List[str]] = {
-        qid: _analyze_query(q, index.chain) for qid, q in enumerate(queries)
-    }
+    per_q_terms = {qid: _analyze_query(q, index.chain)
+                   for qid, q in enumerate(queries)}
     all_terms = sorted({t for ts in per_q_terms.values() for t in ts})
+    empty = local_frame(spark, [],
+                        "qid int, doc_id long, score double, rank int")
     if not all_terms:
-        return spark.createDataFrame(
-            [], "qid int, doc_id long, score double, rank int"
-        )
-    # broadcast-join, NOT isin: a literal In over thousands of query terms
-    # generates enormous codegen (multi-second compile); a broadcast hash
-    # join keeps the probe per-row and the plan small
-    qterms_df = local_frame(spark, [(t,) for t in all_terms], "term string")
-    drows = index.cached_dictionary().join(
-        F.broadcast(qterms_df), "term"
-    ).collect()
-    idf_by_term = {r["term"]: bm25_idf(index.n_docs, int(r["df"])) for r in drows}
-    avgdl = index.avgdl
+        return empty
+    plan = resolve_plan(index, " ".join(all_terms), pre_analyzed=True)
+    if not plan.weights:
+        return empty
+    # the scan needs only the terms the dictionary holds
+    plan = replace(plan, terms=tuple(plan.weights))
     kk = int(k)
-    qid_terms = {
-        qid: [t for t in ts if t in idf_by_term]
-        for qid, ts in per_q_terms.items()
-    }
-    dels, del_tbl = _delete_state(index)
-    del_resident = del_tbl is not None  # closure-safe flag (no DataFrame)
+    qid_terms = {qid: [t for t in ts if t in plan.weights]
+                 for qid, ts in per_q_terms.items()}
+
 
     if mode == "auto":
-        df_by_term = {r["term"]: int(r["df"]) for r in drows}
         fanin: dict[str, int] = {}
         for ts in qid_terms.values():
             for t in ts:
                 fanin[t] = fanin.get(t, 0) + 1
-        total_df = sum(df_by_term[t] for t in fanin) or 1
-        shared_df = sum(
-            df_by_term[t] for t, n in fanin.items() if n > 1
-        )
-        mode = (
-            "sparse" if shared_df / total_df < sparse_share_threshold
-            else "dense"
-        )
+        total_df = sum(plan.df[t] for t in fanin) or 1
+        shared_df = sum(plan.df[t] for t, n in fanin.items() if n > 1)
+        mode = "sparse" if shared_df / total_df < _SPARSE_SHARE else "dense"
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        # index-resident tombstones: a doc's delete posting shares its
-        # salt, so one per-salt sorted array masks every posting row
-        del_by_salt: dict[int, np.ndarray] = {}
-        if del_resident:
-            for s, sub in pdf.groupby("salt", sort=False):
-                sd = _salt_dels(sub, dels)
-                if sd is not None:
-                    del_by_salt[s] = sd
-            pdf = _drop_del_rows(pdf)
-        # decode each block once, bucket postings by term
+    def rows_of(qid, out_ids, out_scores):
+        return pd.DataFrame({
+            "qid": np.full(out_ids.size, qid, dtype=np.int32),
+            "doc_id": out_ids, "score": out_scores})
+
+    def dense(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
+        # decode each block once, bucket live postings by term
         by_term: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            ids = delta_decode(row.doc_gaps).astype(np.int64)
-            tfs = varbyte_decode(row.tfs).astype(np.float64)
-            dls = varbyte_decode(row.dls).astype(np.float64)
-            rdels = del_by_salt.get(row.salt) if del_resident else dels
-            if rdels is not None and ids.size:
-                # generational index: drop tombstoned postings at decode
-                pos = np.clip(np.searchsorted(rdels, ids), 0,
-                              rdels.size - 1)
-                keep = rdels[pos] != ids
-                if not keep.all():
+        for s in salts:
+            for t, rows in s.rows.groupby("term", sort=False):
+                ids, tfs, dls = _decode(rows)
+                if s.dels is not None:
+                    keep = ~_member(ids, s.dels)
                     ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if ids.size == 0:
-                    continue
-            w = (
-                idf_by_term[row.term] * tfs * (K1 + 1.0)
-                / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-            )
-            by_term.setdefault(row.term, []).append((ids, w))
+                if ids.size:
+                    by_term.setdefault(t, []).append(
+                        (ids, _bm25(plan.weights[t], plan.avgdl[t],
+                                    tfs, dls)))
         if not by_term:
             return
         # dense partition-local doc index, built ONCE: per-query
@@ -1158,21 +1095,15 @@ def wand_topk_batch(
         # batch the same hot term's array would otherwise be re-sorted by
         # every query that contains it
         term_arrays = {
-            t: (
-                np.concatenate([x[0] for x in parts]),
-                np.concatenate([x[1] for x in parts]),
-            )
+            t: (np.concatenate([x[0] for x in parts]),
+                np.concatenate([x[1] for x in parts]))
             for t, parts in by_term.items()
         }
         all_ids = np.unique(
-            np.concatenate([ids for ids, _ in term_arrays.values()])
-        )
-        n_docs_p = all_ids.size
-        term_pos = {
-            t: (ids, np.searchsorted(all_ids, ids), ws)
-            for t, (ids, ws) in term_arrays.items()
-        }
-        out_qid, out_ids, out_scores = [], [], []
+            np.concatenate([ids for ids, _ in term_arrays.values()]))
+        term_pos = {t: (ids, np.searchsorted(all_ids, ids), ws)
+                    for t, (ids, ws) in term_arrays.items()}
+        out = []
         for qid, terms in qid_terms.items():
             terms = [t for t in terms if t in term_pos]
             if not terms:
@@ -1182,114 +1113,60 @@ def wand_topk_batch(
                 # single-term query needs NO aggregation at all
                 ids, _, ws = term_pos[terms[0]]
                 sel = _topk_exact(ids, ws, kk)
-                out_qid.append(np.full(sel.size, qid, dtype=np.int32))
-                out_ids.append(ids[sel])
-                out_scores.append(ws[sel])
+                out.append(rows_of(qid, ids[sel], ws[sel]))
                 continue
             pos = np.concatenate([term_pos[t][1] for t in terms])
             ws = np.concatenate([term_pos[t][2] for t in terms])
-            totals = np.bincount(pos, weights=ws, minlength=n_docs_p)
+            totals = np.bincount(pos, weights=ws, minlength=all_ids.size)
             nz = np.flatnonzero(totals)
             sel = _topk_exact(all_ids[nz], totals[nz], kk)
-            out_qid.append(np.full(sel.size, qid, dtype=np.int32))
-            out_ids.append(all_ids[nz][sel])
-            out_scores.append(totals[nz][sel])
-        if not out_qid:
-            return
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(out_qid),
-                "doc_id": np.concatenate(out_ids),
-                "score": np.concatenate(out_scores),
-            }
-        )
+            out.append(rows_of(qid, all_ids[nz][sel], totals[nz][sel]))
+        if out:
+            yield pd.concat(out, ignore_index=True)
 
-    def score_sparse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        thetas: dict[int, float] = {qid: -math.inf for qid in qid_terms}
+    def sparse(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
+        thetas = {qid: -math.inf for qid in qid_terms}
         id_parts: dict[int, list] = {qid: [] for qid in qid_terms}
         sc_parts: dict[int, list] = {qid: [] for qid in qid_terms}
         n_skipped = 0
-        for _, sub in pdf.groupby("salt", sort=False):
+        for s in salts:
             # the decode cache lives per salt: block identity is
             # (term, first_doc), unique only within one salt's disjoint
             # ascending ranges
-            sdels = _salt_dels(sub, dels)
-            sub = _drop_del_rows(sub)
-            if not len(sub):
-                continue
             cache: dict = {}
-            present = set(pd.unique(sub["term"]))
+            mask = Mask(exclude=s.dels)
+            present = set(pd.unique(s.rows["term"]))
             for qid, terms in qid_terms.items():
                 qt = [t for t in terms if t in present]
                 if not qt:
                     continue
-                qsub = sub[sub["term"].isin(qt)]
                 ids, scores, nsk, thetas[qid] = _score_blocks_bmw(
-                    qsub, idf_by_term, kk, avgdl,
-                    theta0=thetas[qid], decode_cache=cache,
-                    exclude_ids=sdels,
-                )
+                    s.rows[s.rows["term"].isin(qt)], plan, kk,
+                    thetas[qid], mask, cache)
                 n_skipped += nsk
                 id_parts[qid].append(ids)
                 sc_parts[qid].append(scores)
         if skip_acc is not None:
             skip_acc.add(int(n_skipped))
-        out_qid, out_ids, out_scores = [], [], []
-        for qid in qid_terms:
-            if not id_parts[qid]:
-                continue
-            all_ids = np.concatenate(id_parts[qid])
-            all_sc = np.concatenate(sc_parts[qid])
-            sel = _topk_exact(all_ids, all_sc, kk)
-            out_qid.append(np.full(sel.size, qid, dtype=np.int32))
-            out_ids.append(all_ids[sel])
-            out_scores.append(all_sc[sel])
-        if not out_qid:
-            return
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(out_qid),
-                "doc_id": np.concatenate(out_ids),
-                "score": np.concatenate(out_scores),
-            }
-        )
+        out = [rows_of(qid, *_merged_topk(id_parts[qid], sc_parts[qid], kk))
+               for qid in qid_terms if id_parts[qid]]
+        if out:
+            yield pd.concat(out, ignore_index=True)
 
-    hit_df = spark.createDataFrame(
-        [(t,) for t in idf_by_term], "term string"
-    )
-    # no persist needed: _by_salt's computed placement has no sampler, so
-    # the segment scan + broadcast join execute exactly once per batch
-    matched = _with_del_rows(
-        index.segments.join(F.broadcast(hit_df), "term"), del_tbl)
-    kernel = score_sparse if mode == "sparse" else score
-    candidates = _by_salt(matched, index).mapInPandas(
-        kernel, schema="qid int, doc_id long, score double"
-    )
+    candidates = _search(index, plan, sparse if mode == "sparse" else dense,
+                         "qid int, doc_id long, score double")
     # tree-reduce top-k merge: (neg_score, doc_id) structs sort ascending ==
     # (score desc, doc_id asc); collect_list partial-aggregates map-side,
     # array_sort + slice keep k per qid, posexplode restores rank rows
     merged = candidates.groupBy("qid").agg(
         F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("score")).alias("ns"), F.col("doc_id")
-                    )
-                )
-            ),
+            F.array_sort(F.collect_list(F.struct(
+                (-F.col("score")).alias("ns"), F.col("doc_id")))),
             1, kk,
         ).alias("top")
     )
     return (
-        merged.select(
-            "qid", F.posexplode("top").alias("pos", "entry")
-        )
+        merged.select("qid", F.posexplode("top").alias("pos", "entry"))
         .select(
             "qid",
             F.col("entry.doc_id").alias("doc_id"),
@@ -1367,14 +1244,14 @@ def matching_doc_ids(
     ``min_match`` distinct query terms (∩ every ``fq`` filter set) — as a
     one-column DataFrame, decoded straight from the postings with NO
     scoring: Solr's QueryComponent bitset, which numFound and the facet
-    domain are computed from. One salted scan; per salt the kernel is a
-    concat + np.unique over the matched terms' id arrays (blocks of a
+    domain are computed from. One salted pass; per salt the collector is
+    a concat + np.unique over the matched terms' id arrays (blocks of a
     term are disjoint within a salt, so distinct-term counts are exact),
     an include-set intersection for fq, and the tombstone mask.
 
     ``query=None`` / ``"*:*"`` is MatchAllDocsQuery: with no fq the
     match set is every live doc (metadata-only ``docs`` stage read);
-    with fq the kernel intersects the fq filter postings alone — the
+    with fq the collector intersects the fq filter postings alone — the
     reference's match-all + filter profiling request.
 
     ``term_groups``: optional INDEX-TERM → group mapping for multi-field
@@ -1383,35 +1260,21 @@ def matching_doc_ids(
     matched only in the title still counts once — the dismax mm
     contract). When given, the keys of ``term_groups`` are used as the
     scan terms and ``query`` is not re-analyzed."""
-    spec = _match_spec(index, query, min_match, filter_queries, term_groups)
-    if not spec.terms and not spec.match_all:
+    plan = resolve_plan(index, query, min_match, term_groups=term_groups,
+                        filter_queries=filter_queries, score=False)
+    if not plan.terms and not plan.match_all:
         return local_frame(index.spark, [], "doc_id long")
-    dels, del_tbl = _delete_state(index)
-    fscan = _filter_scan(index, spec.fq_terms)
-    if spec.match_all and fscan is None:
+    if plan.match_all and not plan.fq:
         # every live doc matches — the docs stage IS the bitset
         return index.docs.select("doc_id")
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        out = []
-        for _, sub in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(sub, dels)
-            match = _salt_match(_drop_del_rows(sub), spec, sdels)
-            if match is not None and match.size:
-                out.append(match)
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
+        out = [s.match for s in salts]
+        out = [m for m in out if m.size]
         if out:
             yield pd.DataFrame({"doc_id": np.concatenate(out)})
 
-    qscan = (index.segments.filter(F.col("term").isin(list(spec.terms)))
-             if spec.terms else None)
-    matched = _with_del_rows(_union_scan([qscan, fscan]), del_tbl)
-    return _by_salt(matched, index).mapInPandas(emit, schema="doc_id long")
+    return _search(index, plan, collect, "doc_id long")
 
 
 def mlt_topk_phys(
@@ -1438,10 +1301,8 @@ def mlt_topk_phys(
     in-memory step the Solr handler performs. Corpus text is never read.
     """
     spark = index.spark
-    live_tf = (index.live_tf() if hasattr(index, "live_tf")
-               else index.store.read_stage(spark, "tf"))
     rows = (
-        live_tf.filter(F.col("doc_id") == int(doc_key))
+        index.live_tf().filter(F.col("doc_id") == int(doc_key))
         .select(F.explode(F.arrays_zip("terms", "tfs")).alias("z"))
         .select(F.col("z.terms").alias("term"), F.col("z.tfs").alias("tf"))
         .filter(F.col("tf") >= int(min_term_freq))
@@ -1477,10 +1338,10 @@ def facet_match_counts(
     min_match: int | str = 1,
     term_groups: "dict[str, int] | None" = None,
 ) -> DataFrame:
-    """FacetComponent executed entirely FROM THE INDEX: one salted kernel
-    pass emits, per salt, the q∩fq match-set size AND the per-value
-    facet counts — ``|facet_bitset ∩ match_bitset|`` over the unscored
-    filter postings (``build_index(filter_cols=...)``), exactly Lucene's
+    """FacetComponent executed entirely FROM THE INDEX: one salted pass
+    emits, per salt, the q∩fq match-set size AND the per-value facet
+    counts — ``|facet_bitset ∩ match_bitset|`` over the unscored filter
+    postings (``build_index(filter_cols=...)``), exactly Lucene's
     per-segment docvalues/bitset facet counting. No metadata table, no
     corpus text, no scoring at query time.
 
@@ -1489,46 +1350,26 @@ def facet_match_counts(
     MatchAllDocsQuery battery (the reference's profiling request):
     counts are live posting sizes per value and ``__num_found__`` is the
     live doc count — still one metadata-only pass."""
-    if getattr(index, "filters", None) is None:
+    if index.filters is None:
         raise ValueError(
             "facet_match_counts needs an index built with filter_cols")
-    spec = _match_spec(index, query, min_match, filter_queries, term_groups)
-    prefixes = [f + ":" for f in facet_fields]
-    fq_set = set(spec.fq_terms)
-    dels, del_tbl = _delete_state(index)
+    plan = resolve_plan(index, query, min_match, term_groups=term_groups,
+                        filter_queries=filter_queries,
+                        facet_fields=facet_fields, score=False)
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
         out_t, out_c = [], []
-        for _, sub in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(sub, dels)
-            sub = _drop_del_rows(sub)
-            if not len(sub):
-                continue
-            match = _salt_match(sub, spec, sdels)
-            if match is not None:
+        for s in salts:
+            if s.match is not None:
                 out_t.append("__num_found__")
-                out_c.append(int(match.size))
-            for t, n in _salt_facet_counts(sub, prefixes, fq_set, match,
-                                           sdels).items():
+                out_c.append(int(s.match.size))
+            for t, n in s.facet_counts(s.match).items():
                 out_t.append(t)
                 out_c.append(n)
         if out_t:
             yield pd.DataFrame({"fterm": out_t, "count": out_c})
 
-    fscan = _filter_scan(index, spec.fq_terms, prefixes)
-    if fscan is None:
-        fscan = index.filters.limit(0)
-    qscan = (index.segments.filter(F.col("term").isin(list(spec.terms)))
-             if spec.terms else None)
-    matched = _with_del_rows(_union_scan([qscan, fscan]), del_tbl)
-    per_salt = _by_salt(matched, index).mapInPandas(
-        emit, schema="fterm string, count long")
+    per_salt = _search(index, plan, collect, "fterm string, count long")
     agg = per_salt.groupBy("fterm").agg(F.sum("count").alias("count"))
     split = F.split(F.col("fterm"), ":", 2)
     out = agg.select(
@@ -1538,9 +1379,9 @@ def facet_match_counts(
         .otherwise(split.getItem(1)).alias("facet_value"),
         "count",
     )
-    if spec.match_all and not spec.fq_terms:
+    if plan.match_all and not plan.fq:
         # every live doc matches; __num_found__ is the live doc count (no
-        # salt emitted it — the kernel saw only facet terms)
+        # salt emitted it — the collector saw only facet terms)
         out = out.unionByName(local_frame(
             index.spark, [("__num_found__", None, int(index.n_docs))],
             "facet_field string, facet_value string, count long"))
@@ -1570,95 +1411,57 @@ def select_pass(
     tie: float = 0.1,
     round_to: int | None = None,
 ) -> SelectPass:
-    """One relevance request from ONE salted kernel pass — Solr's
+    """One relevance request from ONE salted pass — Solr's
     ``SolrIndexSearcher.getDocListAndSet``, where one search feeds both
     the top-k collector and the facet DocSet.
 
-    The pass scans the query postings ∪ the fq / faceted-field filter
-    postings ∪ the tombstone rows. Per salt it computes the match set
-    (:func:`matching_doc_ids`' kernel), its size, the per-value facet
-    counts (:func:`facet_match_counts`' kernel) and the block-max top-k
-    restricted to the match set (the :func:`wand_topk` kernel, or the
-    :func:`dismax_topk` one when ``qf`` is given; a doc outside the match
-    never raises theta, so pruning stays exact). One ``collect()``
-    returns at most ``n_parts x k`` page rows plus the counts; the
-    driver merges them on (score desc, doc_id asc). Scores are the
-    kernel's own: raw for ``qf=None``, ranked-and-rounded for dismax
-    with ``round_to`` (the :func:`dismax_topk` contract)."""
-    group_of = None
-    if qf is not None:
-        qterms, group_of = _dismax_terms(index, query, qf, tie)
-    spec = _match_spec(index, query, min_match, filter_queries, group_of)
-    if spec.match_all:
+    Per salt the collector computes the match set (the
+    :func:`matching_doc_ids` collector), its size, the per-value facet
+    counts (the :func:`facet_match_counts` collector) and the block-max
+    top-k restricted to the match set (a doc outside the match never
+    raises theta, so pruning stays exact). One ``collect()`` returns at
+    most ``n_parts x k`` page rows plus the counts; the driver merges
+    them on (score desc, doc_id asc). Scores are the kernel's own: raw
+    for ``qf=None``, ranked-and-rounded for dismax with ``round_to`` (the
+    :func:`wand_topk` ``qf`` contract)."""
+    plan = resolve_plan(
+        index, query, min_match, qf=qf, tie=tie,
+        round_to=round_to if qf is not None else None,
+        filter_queries=filter_queries, facet_fields=facet_fields)
+    if plan.match_all:
         raise ValueError("select_pass answers a relevance q; q=*:* pages "
                          "over matching_doc_ids")
-    kk = int(k)
-    prefixes = [f + ":" for f in facet_fields]
-    fscan = _filter_scan(index, spec.fq_terms, prefixes)
-    none = SelectPass(0, np.empty(0, dtype=np.int64), np.empty(0), {})
-    if not spec.terms:
-        return none
-    drows = index.cached_dictionary().filter(
-        F.col("term").isin(list(spec.terms))).collect()
-    if not drows:
+    if not plan.weights:
         # no query term is in the index: the match set is empty
-        return none
-    if qf is not None:
-        weights, avgdl_by_term = _dismax_weights(index, drows, qf)
-        kernel_kw = dict(avgdl=0.0, group_of=group_of, n_groups=len(qterms),
-                         tie=float(tie), avgdl_by_term=avgdl_by_term,
-                         round_to=round_to)
-    else:
-        weights = {r["term"]: bm25_idf(index.n_docs, int(r["df"]))
-                   for r in drows}
-        kernel_kw = dict(avgdl=index.avgdl)
-    dels, del_tbl = _delete_state(index)
-    fq_set = set(spec.fq_terms)
+        return SelectPass(0, _NO_IDS, np.empty(0), {})
+    kk = int(k)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
         theta = -math.inf
         id_parts, score_parts = [], []
         n_found = 0
         counts: dict[str, int] = {}
-        for _, sub in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(sub, dels)
-            sub = _drop_del_rows(sub)
-            if not len(sub):
-                continue
-            match = _salt_match(sub, spec, sdels)
+        for s in salts:
+            match = s.match
             n_found += int(match.size)
-            for t, n in _salt_facet_counts(sub, prefixes, fq_set, match,
-                                           sdels).items():
+            for t, n in s.facet_counts(match).items():
                 counts[t] = counts.get(t, 0) + n
-            srows = sub[sub["term"].isin(weights)]
-            if not (kk and match.size and len(srows)):
+            if not (kk and match.size and len(s.score_rows)):
                 continue
             ids, scores, _, theta = _score_blocks_bmw(
-                srows, weights, kk, min_match=spec.mm, theta0=theta,
-                include_sets=[match], **kernel_kw)
+                s.score_rows, plan, kk, theta, Mask(include=(match,)))
             id_parts.append(ids)
             score_parts.append(scores)
-        ids = (np.concatenate(id_parts) if id_parts
-               else np.empty(0, dtype=np.int64))
-        scores = np.concatenate(score_parts) if score_parts else np.empty(0)
-        sel = _topk_exact(ids, scores, kk)
-        page = pd.DataFrame({"doc_id": ids[sel], "score": scores[sel]})
+        ids, scores = _merged_topk(id_parts, score_parts, kk)
+        page = pd.DataFrame({"doc_id": ids, "score": scores})
         tally = pd.DataFrame({"fterm": ["__num_found__", *counts],
                               "count": [n_found, *counts.values()]})
         out = pd.concat([page, tally], ignore_index=True)
         yield out.astype({"doc_id": "Int64", "count": "Int64"})
 
-    qscan = index.segments.filter(F.col("term").isin(list(spec.terms)))
-    matched = _with_del_rows(_union_scan([qscan, fscan]), del_tbl)
-    rows = _by_salt(matched, index).mapInPandas(
-        run, schema="doc_id long, score double, fterm string, count long"
-    ).collect()
+    rows = _search(index, plan, collect,
+                   "doc_id long, score double, fterm string, count long"
+                   ).collect()
     n_found, counts, ids, scores = 0, {}, [], []
     for r in rows:
         if r["fterm"] is None:
@@ -1668,10 +1471,10 @@ def select_pass(
             n_found += r["count"]
         else:
             counts[r["fterm"]] = counts.get(r["fterm"], 0) + r["count"]
-    ids_a = np.asarray(ids, dtype=np.int64)
-    scores_a = np.asarray(scores, dtype=np.float64)
-    sel = _topk_exact(ids_a, scores_a, kk)
-    return SelectPass(int(n_found), ids_a[sel], scores_a[sel], counts)
+    ids_a, scores_a = _merged_topk(
+        [np.asarray(ids, dtype=np.int64)],
+        [np.asarray(scores, dtype=np.float64)], kk)
+    return SelectPass(int(n_found), ids_a, scores_a, counts)
 
 
 def grouped_topk_phys(
@@ -1696,90 +1499,47 @@ def grouped_topk_phys(
     score and returns one row per kept (group, doc):
     ``(group, group_found, rank, doc_id, score)`` — value-identical to
     the logical :func:`..bm25.bm25_grouped_topk`."""
-    spark = index.spark
-    filters_tbl = getattr(index, "filters", None)
-    if filters_tbl is None:
+    from pyspark.sql import Window
+
+    if index.filters is None:
         raise ValueError(
             "grouped_topk_phys needs an index built with filter_cols "
             f"covering {group_field!r}")
-    qterms = _analyze_query(query, index.chain)
-    empty = spark.createDataFrame(
-        [], f"{group_field} string, group_found long, rank long, "
-            "doc_id long, score double")
-    if not qterms:
-        return empty
-    drows = index.cached_dictionary().filter(
-        F.col("term").isin(qterms)).collect()
-    if not drows:
-        return empty
-    idf_by_term = {r["term"]: bm25_idf(index.n_docs, int(r["df"]))
-                   for r in drows}
-    avgdl = index.avgdl
-    mm = parse_mm_spec(min_match, len(qterms))
-    dels, del_tbl = _delete_state(index)
-    prefix = group_field + ":"
+    plan = resolve_plan(index, query, min_match, facet_fields=[group_field])
+    if not plan.weights:
+        return local_frame(
+            index.spark, [], f"{group_field} string, group_found long, "
+                             "rank long, doc_id long, score double")
     kpg = int(k_per_group)
-    qset = set(idf_by_term)
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
         g_out, d_out, s_out, c_out = [], [], [], []
-        for _, sub in pdf.groupby("salt", sort=False):
-            sdels = _salt_dels(sub, dels)
-            sub = _drop_del_rows(sub)
-            if not len(sub):
-                continue
+        for s in salts:
             id_parts, w_parts = [], []
-            for t, rows in sub.groupby("term", sort=False):
-                if t not in qset:
-                    continue
-                ids = np.concatenate(
-                    [delta_decode(g).astype(np.int64)
-                     for g in rows["doc_gaps"]])
-                tfs = np.concatenate(
-                    [varbyte_decode(b).astype(np.float64)
-                     for b in rows["tfs"]])
-                dls = np.concatenate(
-                    [varbyte_decode(b).astype(np.float64)
-                     for b in rows["dls"]])
+            for t, rows in s.score_rows.groupby("term", sort=False):
+                ids, tfs, dls = _decode(rows)
                 id_parts.append(ids)
-                w_parts.append(
-                    idf_by_term[t] * tfs * (K1 + 1.0)
-                    / (tfs + K1 * (1.0 - B + B * dls / avgdl)))
+                w_parts.append(_bm25(plan.weights[t], plan.avgdl[t],
+                                     tfs, dls))
             if not id_parts:
                 continue
-            all_ids = np.concatenate(id_parts)
-            uniq, inv = np.unique(all_ids, return_inverse=True)
+            uniq, inv = np.unique(np.concatenate(id_parts),
+                                  return_inverse=True)
             totals = np.zeros(uniq.size)
             np.add.at(totals, inv, np.concatenate(w_parts))
-            counts = np.bincount(inv, minlength=uniq.size)
-            keep = counts >= mm
+            keep = np.bincount(inv, minlength=uniq.size) >= plan.mm
+            if s.dels is not None:
+                keep &= ~_member(uniq, s.dels)
             uniq, totals = uniq[keep], totals[keep]
-            if sdels is not None and uniq.size:
-                pos = np.clip(np.searchsorted(sdels, uniq), 0,
-                              sdels.size - 1)
-                m = sdels[pos] != uniq
-                uniq, totals = uniq[m], totals[m]
             if uniq.size == 0:
                 continue
             if round_to is not None:
                 scale = 10.0 ** round_to
                 totals = np.floor(totals * scale + 0.5) / scale
-            grows = sub[sub["term"].str.startswith(prefix)]
+            grows = s.rows[s.rows["term"].str.startswith(
+                plan.facet_prefixes)]
             for gt, rows in grows.groupby("term", sort=False):
-                inc = np.concatenate(
-                    [delta_decode(g).astype(np.int64)
-                     for g in rows["doc_gaps"]])
-                inc = np.unique(inc)
-                pos = np.clip(np.searchsorted(inc, uniq), 0,
-                              max(inc.size - 1, 0))
-                member = (inc[pos] == uniq) if inc.size else \
-                    np.zeros(uniq.size, dtype=bool)
+                member = _member(uniq, np.unique(_ids(rows)))
                 n_mem = int(member.sum())
                 if not n_mem:
                     continue
@@ -1789,8 +1549,7 @@ def grouped_topk_phys(
                 s_out.append(0.0)
                 c_out.append(n_mem)
                 gu, gtot = uniq[member], totals[member]
-                sel = _topk_exact(gu, gtot, kpg)
-                for i in sel:
+                for i in _topk_exact(gu, gtot, kpg):
                     g_out.append(gval)
                     d_out.append(int(gu[i]))
                     s_out.append(float(gtot[i]))
@@ -1799,21 +1558,12 @@ def grouped_topk_phys(
             yield pd.DataFrame({"gval": g_out, "doc_id": d_out,
                                 "score": s_out, "n": c_out})
 
-    matched = index.segments.filter(
-        F.col("term").isin(list(qset))
-    ).unionByName(
-        filters_tbl.filter(F.col("term").startswith(prefix)),
-        allowMissingColumns=True)
-    matched = _with_del_rows(matched, del_tbl)
-    raw = _by_salt(matched, index).mapInPandas(
-        emit, schema="gval string, doc_id long, score double, n long")
-    raw = raw.persist()
+    raw = _search(index, plan, collect,
+                  "gval string, doc_id long, score double, n long").persist()
     counts = (
         raw.filter(F.col("n") >= 0)
         .groupBy("gval").agg(F.sum("n").cast("long").alias("group_found"))
     )
-    from pyspark.sql import Window
-
     cands = raw.filter(F.col("n") < 0)
     w = Window.partitionBy("gval").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = cands.withColumn("rank", F.row_number().over(w)) \
@@ -1892,19 +1642,18 @@ def explain_topk_phys(
     """DebugComponent score explanation FROM THE PHYSICAL INDEX
     (``debug=true`` — Lucene's explain walks the index structures for
     the requested docs, never the stored text): block-max WAND picks the
-    top-``k``, their ids (request-sized) ride a second restricted pass
-    over the same matched postings that emits one (doc, term, tf,
+    top-``k``, their ids (request-sized) ride a second pass over the
+    same matched postings whose collector emits one (doc, term, tf,
     doc_len) row per matched query term, and the BM25 quantities
     (df from the dictionary, collection stats) reassemble Lucene's
     'sum of:' tree rows — ``(doc_id, score, term, tf, df, doc_len,
     term_score)``, value-identical to the logical
     :func:`..bm25.explain_topk`."""
-    spark = index.spark
-    qterms = _analyze_query(query, index.chain)
-    empty = spark.createDataFrame(
-        [], "doc_id long, score double, term string, tf long, df long, "
-            "doc_len long, term_score double")
-    if not qterms:
+    empty = local_frame(
+        index.spark, [], "doc_id long, score double, term string, tf long, "
+                         "df long, doc_len long, term_score double")
+    plan = resolve_plan(index, query)
+    if not plan.weights:
         return empty
     top = wand_topk(index, query, k=k, with_url=False)
     if round_to is not None:
@@ -1914,43 +1663,24 @@ def explain_topk_phys(
                      dtype=np.int64)
     if ids.size == 0:
         return empty
-    qset = set(qterms)
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        d_out, t_out, tf_out, dl_out = [], [], [], []
-        for t, rows in pdf.groupby("term", sort=False):
-            if t not in qset:
-                continue
-            dids = np.concatenate(
-                [delta_decode(g).astype(np.int64)
-                 for g in rows["doc_gaps"]])
-            tfs = np.concatenate(
-                [varbyte_decode(b).astype(np.int64) for b in rows["tfs"]])
-            dls = np.concatenate(
-                [varbyte_decode(b).astype(np.int64) for b in rows["dls"]])
-            pos = np.clip(np.searchsorted(ids, dids), 0, ids.size - 1)
-            m = ids[pos] == dids
-            if m.any():
-                d_out.append(dids[m])
-                t_out.extend([t] * int(m.sum()))
-                tf_out.append(tfs[m])
-                dl_out.append(dls[m])
-        if d_out:
-            yield pd.DataFrame({
-                "doc_id": np.concatenate(d_out), "term": t_out,
-                "tf": np.concatenate(tf_out),
-                "doc_len": np.concatenate(dl_out)})
+    def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
+        out = []
+        for s in salts:
+            for t, rows in s.rows.groupby("term", sort=False):
+                dids, tfs, dls = _decode(rows)
+                m = _member(dids, ids)
+                if m.any():
+                    out.append(pd.DataFrame({
+                        "doc_id": dids[m], "term": t,
+                        "tf": tfs[m].astype(np.int64),
+                        "doc_len": dls[m].astype(np.int64)}))
+        if out:
+            yield pd.concat(out, ignore_index=True)
 
-    matched = index.segments.filter(F.col("term").isin(qterms))
-    rows = _by_salt(matched, index).mapInPandas(
-        emit, schema="doc_id long, term string, tf long, doc_len long")
-    d = index.cached_dictionary().select("term", "df")
+    rows = _search(index, plan, collect,
+                   "doc_id long, term string, tf long, doc_len long")
+    d = local_frame(index.spark, list(plan.df.items()), "term string, df long")
     n_docs, avgdl = float(index.n_docs), float(index.avgdl)
     term_score = (
         F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -1990,13 +1720,10 @@ def cluster_topk_phys(
     to the logical :func:`..bm25.cluster_topk`."""
     from pyspark.sql import Window
 
-    spark = index.spark
     qterms = set(_analyze_query(query, index.chain))
     top = wand_topk(index, query, k=k, with_url=False).select("doc_id")
-    live_tf = (index.live_tf() if hasattr(index, "live_tf")
-               else index.store.read_stage(spark, "tf"))
     cand = (
-        live_tf.join(F.broadcast(top), "doc_id")
+        index.live_tf().join(F.broadcast(top), "doc_id")
         .select("doc_id",
                 F.explode(F.arrays_zip("terms", "tfs")).alias("z"))
         .select("doc_id", F.col("z.terms").alias("term"),

@@ -81,7 +81,7 @@ def assign_doc_ids(docs: DataFrame, key_col: str = "url",
 # kernel arrays; 32 concurrent workers stay under ~1/4 of the sandbox RAM.
 # Without this term a 3.2M-doc build at n_salts=64 put ~50k docs (~20M
 # postings) in EVERY worker simultaneously and the host OOM-killed the JVM
-# (found by tools/sf1_run.py, round 3). Override per-build with the
+# (found by the round-3 3.2M-doc run). Override per-build with the
 # ``spark.marc.docsPerRangeBucket`` conf.
 _DOCS_PER_RANGE_BUCKET = 16_384
 
@@ -172,7 +172,7 @@ class InvertedIndex:
     ``segments``/``docs``/``live_tf`` union the whole chain,
     ``dictionary``/``stats`` are the newest store's (committed fully
     adjusted at append time), and the query kernels drop deleted ids via
-    :meth:`deleted_array`.
+    :meth:`del_postings`.
 
     The chain walk, readers and tombstone masks serve every index kind.
     What differs per kind — stats loading, block-max cap rescaling, and
@@ -281,35 +281,29 @@ class InvertedIndex:
             return self.store.read_stage(self.spark, "deletes")
         return None
 
-    def deleted_array(self):
-        """Sorted int64 numpy array of tombstoned doc ids for kernel-side
-        masking, or None. Driver-collected ONCE per handle and shipped in
-        the mapInPandas closures — the Lucene live-docs-bitmap analog
-        (deletes are bounded by the un-merged churn, reclaimed by
-        ``merge_generations``; the array is ids-only, never postings)."""
-        if hasattr(self, "_del_arr"):
-            return self._del_arr
-        import numpy as np
-
-        dels = self.deletes_df()
-        if dels is None:
-            self._del_arr = None
-        else:
-            rows = dels.select("doc_id").collect()
-            arr = np.sort(np.asarray([r["doc_id"] for r in rows],
-                                     dtype=np.int64))
-            self._del_arr = arr if arr.size else None
-        return self._del_arr
-
     def del_postings(self) -> DataFrame | None:
         """Tombstoned doc ids as PER-SALT segment-block postings (one
         synthetic ``DEL_TERM`` posting list, same salt layout and block
         schema as the scored postings; ``plans/generations.py
         append_delta`` commits the stage cumulatively like ``deletes``).
-        None for older stores that predate the stage."""
-        if self.store.stage_complete("del_segments"):
-            return self.store.read_stage(self.spark, "del_segments")
-        return None
+        Every query pass UNIONs it into its salted scan and each salt
+        decodes only its own ids (Lucene's per-segment liveDocs — nothing
+        global ever reaches the driver). None for a delete-free index.
+
+        A head whose ``deletes`` stage has no ``del_segments`` beside it
+        (written before index-resident tombstones) raises rather than
+        serve unmasked results."""
+        if not self.store.stage_complete("deletes"):
+            return None
+        if not self.store.stage_complete("del_segments"):
+            raise ValueError(
+                f"index {self.store.path} has tombstones but no "
+                "del_segments stage (written before index-resident "
+                "tombstones): construct its handle directly "
+                "(InvertedIndex / MultiFieldIndex(IndexStore(path), spark, "
+                "chain)) and rewrite it with merge_generations(spark, "
+                "index, out_path, keep=0), which applies them physically")
+        return self.store.read_stage(self.spark, "del_segments")
 
     def n_deletes(self) -> int:
         """Tombstone count from the newest store's manifest (no job)."""
@@ -319,28 +313,6 @@ class InvertedIndex:
             return int(self.store.lineage()["stages"]["deletes"]["rows"])
         except (KeyError, TypeError, ValueError):
             return int(self.deletes_df().count())
-
-    def delete_masks(self):
-        """Kernel-side tombstone masking strategy: ``(array, postings)``
-        with at most one non-None.
-
-        Small delete sets (< ``spark.marc.delArrayMaxIds``, default
-        262144 ids ≈ 2 MB serialized) ship as a driver-collected sorted
-        array in the task closures — the cheap path between merges.
-        Larger sets stay INDEX-RESIDENT: the ``del_segments`` stage rides
-        the same salted scan as the query postings and each kernel
-        decodes ONLY its salt's delete ids (Lucene's per-segment liveDocs
-        model — nothing global ever reaches the driver, so the mask is
-        bounded by merge cadence per salt, not per cluster)."""
-        dels = self.deletes_df()
-        if dels is None:
-            return None, None
-        cap = int(self.spark.conf.get("spark.marc.delArrayMaxIds",
-                                      "262144"))
-        tbl = self.del_postings()
-        if tbl is not None and self.n_deletes() > cap:
-            return None, tbl
-        return self.deleted_array(), None
 
     @property
     def dictionary(self) -> DataFrame:
@@ -446,7 +418,9 @@ def open_index(spark: SparkSession, path: str) -> InvertedIndex:
     cls = InvertedIndex
     if meta.get("multifield"):
         from .multifield import MultiFieldIndex as cls
-    return cls(store, spark, meta.get("chain", "text"))
+    index = cls(store, spark, meta.get("chain", "text"))
+    index.del_postings()  # a pre-del_segments tombstone head fails here
+    return index
 
 
 def build_index(
@@ -521,7 +495,7 @@ def build_index(
     that consumes the same cache — the tf sink stops being a barrier and the
     snapshot is never read back (it still commits, so stage resume is
     unchanged). Default OFF: measured a wash-to-slight-loss on this
-    sandbox (tools/ab_overlap.py, 320k docs local[8], interleaved
+    sandbox (an interleaved A/B at 320k docs local[8], interleaved
     medians 56.4 s strict vs 58.9 s overlapped) because the tmpfs sink
     makes the tf write pure CPU (parquet encode) — overlapping it just
     time-slices the same cores while paying the columnar-cache copy.

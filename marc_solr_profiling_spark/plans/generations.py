@@ -37,9 +37,9 @@ Why scores stay exact (the rank-identity contract vs a full rebuild):
   group the block doc-ranges of different generations are DISJOINT — the
   block-max kernel's one structural invariant (``operators/wand.py
   _score_blocks_bmw``) survives a plain union of generation segments;
-- deleted ids are masked inside the kernels through the existing
-  ``exclude_ids`` path (excluded docs never score, never raise theta —
-  pruning stays exact);
+- deleted ids ride every query pass as ``del_segments`` postings and
+  are masked inside the kernel through the MUST_NOT exclude set
+  (excluded docs never score, never raise theta — pruning stays exact);
 - stats (n_docs/avgdl, per field for the multi-field kind) and df/cf
   are re-derived EXACTLY at append time: parent values minus the
   tombstoned docs' contributions (read from the compact packed tf rows
@@ -326,9 +326,8 @@ def append_delta(
                 if not store.stage_complete("deletes"):
                     store.commit_stage("deletes", new_dels,
                                        partition_sort=["doc_id"])
-                # index-resident tombstone postings (per-salt liveDocs): the
-                # large-delete-set query path reads these in the salted scan
-                # instead of a driver-collected array (delete_masks threshold)
+                # index-resident tombstone postings (per-salt liveDocs):
+                # every query pass reads these in its salted scan
                 _commit_del_segments(store, store.read_stage(spark, "deletes"),
                                      n_salts, block_size)
             if tombstones is None or not (need_stats or need_dictionary):

@@ -19,7 +19,7 @@ single-field code verbatim, so the multi-field index inherits its scale
 shape: one full-volume shuffle (packed rows by salt), skew-immune at the
 exchange, computed partition placement.
 
-Query side: ``operators.wand.dismax_topk`` — per-term
+Query side: ``operators.wand.wand_topk(qf=...)`` — per-term
 ``max_f + tie * (sum_f - max_f)`` over boosted per-field BM25 scores
 (DisjunctionMaxQuery), with block-max pruning kept exact under the
 conservative sum bound (tie <= 1 implies dismax <= sum of field scores).

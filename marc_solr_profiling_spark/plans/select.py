@@ -376,6 +376,7 @@ def solr_select_physical(
     from ..operators.wand import (
         facet_match_counts,
         matching_doc_ids,
+        resolve_plan,
         select_pass,
     )
 
@@ -383,14 +384,9 @@ def solr_select_physical(
     # edismax qf mode (the reference's DEFAULT handler,
     # solrconfig.xml:67-83): ``index`` is a MULTI-FIELD index
     # (plans/multifield.py) and mm counts distinct BASE terms over its
-    # field-scoped postings (the term_groups contract of the kernels)
-    term_groups = None
-    if qf is not None:
-        sep = getattr(index, "sep", "\x1f")
-        base_terms = ([] if q is None or q.strip() == "*:*" else [
-            t for t in dict.fromkeys(ANALYZERS[index.chain](q))])
-        term_groups = {f + sep + t: gi
-                       for f in qf for gi, t in enumerate(base_terms)}
+    # field-scoped postings (the term_groups contract of the collectors)
+    term_groups = (resolve_plan(index, q, qf=qf, tie=tie, score=False)
+                   .group_of if qf is not None else None)
 
     fqs = list(fq) or None
     fcols = set(index.store.get_meta().get("filter_cols", []) or [])

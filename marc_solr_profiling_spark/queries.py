@@ -1127,7 +1127,7 @@ def q_bm25_dismax_phys_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-identical."""
     import hashlib
 
-    from .operators.wand import dismax_topk
+    from .operators.wand import wand_topk
     from .plans.multifield import build_multifield_index
 
     docs = _load(spark, sf_dir, "documents")
@@ -1138,9 +1138,9 @@ def q_bm25_dismax_phys_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="doc_id", id_col="doc_id", text_col="text",
         chain="simple", n_salts=8, block_size=64,
     )
-    out = dismax_topk(
+    out = wand_topk(
         idx, FLAGSHIP_QUERY, qf={"title": 2.0, "body": 1.0},
-        tie=0.1, k=10, round_to=4,
+        tie=0.1, k=10, round_to=4, with_url=False,
     )
     return out.select("doc_id", "score")
 
@@ -2499,7 +2499,7 @@ def q_bm25_dismax_gen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm25_gen_topk)."""
     import hashlib
 
-    from .operators.wand import dismax_topk
+    from .operators.wand import wand_topk
     from .plans.generations import append_delta
     from .plans.multifield import build_multifield_index
 
@@ -2533,8 +2533,8 @@ def q_bm25_dismax_gen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, idx, _scratch(f"msps_dmgen2_{tag}"),
         delta_docs=new2, delete_keys=dels, key_col="url",
     )
-    out = dismax_topk(idx, FLAGSHIP_QUERY, qf={"title": 2.0, "body": 1.0},
-                      tie=0.1, k=10, round_to=4)
+    out = wand_topk(idx, FLAGSHIP_QUERY, qf={"title": 2.0, "body": 1.0},
+                    tie=0.1, k=10, round_to=4, with_url=False)
     return out.join(idx.docs.select("doc_id", "url"), "doc_id").select(
         "url", "score").orderBy(F.desc("score"), F.asc("url"))
 

@@ -1,12 +1,16 @@
-"""Index-resident tombstones: large delete sets ride the salted scan as
-DEL_TERM postings (``del_segments`` stage) and each kernel decodes only
-its salt's ids — no driver-side collect bounded only by merge cadence
-(the Lucene per-segment liveDocs model). Every query family must be
-value-identical between the driver-array fast path and the
-postings-resident path; and after a tiered/force merge the FILTER
-postings must drop physically-applied tombstones (facet counters count
-them directly)."""
+"""Index-resident tombstones: delete sets ride the salted scan as
+DEL_TERM postings (``del_segments`` stage) and each collector decodes
+only its salt's ids — no driver-side collect bounded only by merge
+cadence (the Lucene per-segment liveDocs model). Every query family over
+a chain with tombstones must be value-identical to the same chain
+optimized with ``merge_generations(keep=0)``, where the tombstones are
+applied physically and the doc ids stay the same; after a tiered/force
+merge the FILTER postings must drop physically-applied tombstones
+(facet counters count them directly); and a head with tombstones but no
+``del_segments`` must refuse to serve."""
 
+import json
+import os
 import shutil
 import tempfile
 
@@ -20,17 +24,21 @@ from marc_solr_profiling_spark.operators.wand import (
     wand_topk,
     wand_topk_batch,
 )
-from marc_solr_profiling_spark.plans.build import build_index
+from marc_solr_profiling_spark.plans.build import (
+    InvertedIndex,
+    build_index,
+    open_index,
+)
 from marc_solr_profiling_spark.plans.generations import (
     append_delta,
     maybe_compact,
     merge_generations,
 )
+from marc_solr_profiling_spark.plans.lineage import IndexStore
 
 from conftest import SF_DIR
 
 Q = "spark merge window stream"
-CAP_KEY = "spark.marc.delArrayMaxIds"
 
 
 @pytest.fixture(scope="module")
@@ -75,12 +83,11 @@ def chain(spark, workdir, docs):
     return g2
 
 
-def _reopen(spark, idx):
-    """Fresh handle (drops the cached _del_arr so delete_masks re-reads
-    the conf) over the same store chain."""
-    from marc_solr_profiling_spark.plans.build import InvertedIndex
-
-    return InvertedIndex(idx.store, spark, idx.chain)
+def _optimized(spark, idx, path):
+    """The same chain with its tombstones applied physically."""
+    opt = merge_generations(spark, idx, path, keep=0)
+    assert opt.deletes_df() is None and len(opt.stores) == 1
+    return opt
 
 
 def _snapshot(idx):
@@ -121,19 +128,12 @@ def test_del_segments_stage_exists(spark, chain):
     assert chain.n_deletes() > 0
 
 
-def test_postings_mode_matches_array_mode(spark, chain):
-    arr_mode = _snapshot(_reopen(spark, chain))
-    arr, tbl = _reopen(spark, chain).delete_masks()
-    assert arr is not None and tbl is None  # default cap: array path
-    spark.conf.set(CAP_KEY, "0")
-    try:
-        h = _reopen(spark, chain)
-        arr, tbl = h.delete_masks()
-        assert arr is None and tbl is not None  # forced postings path
-        post_mode = _snapshot(h)
-    finally:
-        spark.conf.unset(CAP_KEY)
-    assert arr_mode == post_mode
+def test_postings_mode_matches_array_mode(spark, workdir, chain):
+    """Every delete-consuming family masked through the postings equals
+    the optimized chain, which has no tombstones left to mask."""
+    assert chain.del_postings() is not None
+    want = _snapshot(_optimized(spark, chain, f"{workdir}/cmp_optimized"))
+    assert _snapshot(chain) == want
 
 
 def test_postings_mode_positional_phrase(spark, workdir, docs):
@@ -149,16 +149,12 @@ def test_postings_mode_positional_phrase(spark, workdir, docs):
         ).select("doc_id"),
         key_col="doc_id",
     )
+    assert g1.del_postings() is not None
     want = [(r["doc_id"], round(r["score"], 9))
-            for r in phrase_topk(g1, "spark stream", k=10).collect()]
-    spark.conf.set(CAP_KEY, "0")
-    try:
-        h = _reopen(spark, g1)
-        assert h.delete_masks()[1] is not None
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in phrase_topk(h, "spark stream", k=10).collect()]
-    finally:
-        spark.conf.unset(CAP_KEY)
+            for r in phrase_topk(_optimized(spark, g1, f"{workdir}/pos_opt"),
+                                 "spark stream", k=10).collect()]
+    got = [(r["doc_id"], round(r["score"], 9))
+           for r in phrase_topk(g1, "spark stream", k=10).collect()]
     assert got == want
 
 
@@ -202,30 +198,21 @@ def test_merge_rebuilds_filter_postings(spark, workdir, docs, chain):
 
 def test_postings_mode_after_merge(spark, workdir, docs, chain):
     """Carried (un-applied) deletes survive a merge as rebuilt
-    del_segments; postings mode stays identical to array mode."""
+    del_segments; the merged chain stays identical to its optimized
+    form."""
     merged = merge_generations(spark, chain, f"{workdir}/merged2", keep=1)
     if merged.deletes_df() is None:
         pytest.skip("no carried deletes in this layout")
     assert merged.store.stage_complete("del_segments")
-    arr_mode = _snapshot(_reopen(spark, merged))
-    spark.conf.set(CAP_KEY, "0")
-    try:
-        post_mode = _snapshot(_reopen(spark, merged))
-    finally:
-        spark.conf.unset(CAP_KEY)
-    assert arr_mode == post_mode
+    want = _snapshot(_optimized(spark, merged, f"{workdir}/merged2_opt"))
+    assert _snapshot(merged) == want
 
 
 def test_multifield_postings_mode_matches_array(spark, workdir, docs):
     """The index-resident tombstone path through the DISMAX kernel
-    (multi-field chain): postings mode == array mode for dismax top-k
-    and the term-group match bitset."""
-    from marc_solr_profiling_spark.operators.wand import (
-        dismax_topk,
-        matching_doc_ids,
-    )
+    (multi-field chain): dismax top-k and the term-group match bitset
+    equal the optimized chain's."""
     from marc_solr_profiling_spark.plans.multifield import (
-        MultiFieldIndex,
         build_multifield_index,
     )
 
@@ -250,20 +237,14 @@ def test_multifield_postings_mode_matches_array(spark, workdir, docs):
 
     def snap(ix):
         top = [(r["doc_id"], round(r["score"], 9)) for r in
-               dismax_topk(ix, Q, qf=qf, tie=0.1, k=12).collect()]
+               wand_topk(ix, Q, qf=qf, tie=0.1, k=12,
+                         with_url=False).collect()]
         match = sorted(r["doc_id"] for r in matching_doc_ids(
             ix, Q, min_match=2, term_groups=groups).collect())
         return top, match
 
-    arr_mode = snap(MultiFieldIndex(g1.store, spark, g1.chain))
-    spark.conf.set(CAP_KEY, "0")
-    try:
-        h = MultiFieldIndex(g1.store, spark, g1.chain)
-        assert h.delete_masks()[1] is not None
-        post_mode = snap(h)
-    finally:
-        spark.conf.unset(CAP_KEY)
-    assert arr_mode == post_mode
+    assert g1.del_postings() is not None
+    assert snap(g1) == snap(_optimized(spark, g1, f"{workdir}/mfdp_opt"))
 
     # the compaction policy bounds the multifield chain too
     g2 = append_delta(
@@ -274,3 +255,32 @@ def test_multifield_postings_mode_matches_array(spark, workdir, docs):
         spark, g2, f"{workdir}/mfdp_c", max_generations=2, keep=1)
     assert len(compacted.stores) <= 2
     assert snap(compacted)[0] == snap(g2)[0]
+
+
+def test_tombstones_without_del_segments_refuse_to_serve(spark, workdir,
+                                                         chain):
+    """A head whose ``deletes`` stage has no ``del_segments`` beside it
+    (written before index-resident tombstones) fails at open, naming the
+    rewrite; a handle made directly never serves unmasked results; the
+    named rewrite gives the masked results back."""
+    legacy = f"{workdir}/legacy_head"
+    shutil.copytree(chain.store.path, legacy)
+    manifest = os.path.join(legacy, "manifest.json")
+    with open(manifest) as f:
+        m = json.load(f)
+    del m["stages"]["del_segments"]
+    with open(manifest, "w") as f:
+        json.dump(m, f)
+
+    with pytest.raises(ValueError, match="merge_generations"):
+        open_index(spark, legacy)
+    h = InvertedIndex(IndexStore(legacy), spark, chain.chain)
+    for read in (lambda: wand_topk(h, Q, k=12).collect(),
+                 lambda: matching_doc_ids(h, Q).collect()):
+        with pytest.raises(ValueError, match="del_segments"):
+            read()
+    fixed = merge_generations(spark, h, f"{workdir}/legacy_opt", keep=0)
+    want = [(r["doc_id"], round(r["score"], 9))
+            for r in wand_topk(chain, Q, k=12).collect()]
+    assert [(r["doc_id"], round(r["score"], 9))
+            for r in wand_topk(fixed, Q, k=12).collect()] == want

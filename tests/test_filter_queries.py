@@ -133,7 +133,7 @@ def test_dismax_fq_through_multifield_index(spark, workdir, docs):
     """Edismax + fq — the reference's actual default request combo
     (edismax qf/tie + cached filter): fq gates the dismax result without
     touching scores, verified against the unfiltered dismax scores."""
-    from marc_solr_profiling_spark.operators.wand import dismax_topk
+    from marc_solr_profiling_spark.operators.wand import wand_topk
     from marc_solr_profiling_spark.plans.multifield import (
         build_multifield_index,
     )
@@ -145,7 +145,8 @@ def test_dismax_fq_through_multifield_index(spark, workdir, docs):
     )
     qf = {"title": 2.0, "body": 1.0}
     n = docs.count()
-    all_scored = dismax_topk(idx, Q, qf=qf, tie=0.1, k=n, round_to=6)
+    all_scored = wand_topk(idx, Q, qf=qf, tie=0.1, k=n, round_to=6,
+                           with_url=False)
     want = [
         (r["doc_id"], r["score"])
         for r in all_scored.join(
@@ -154,7 +155,8 @@ def test_dismax_fq_through_multifield_index(spark, workdir, docs):
     ]
     got = [
         (r["doc_id"], r["score"])
-        for r in dismax_topk(idx, Q, qf=qf, tie=0.1, k=10, round_to=6,
+        for r in wand_topk(idx, Q, qf=qf, tie=0.1, k=10, round_to=6,
+                           with_url=False,
                              filter_queries=["lang:fr"]).collect()
     ]
     assert got == want

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from marc_solr_profiling_spark.corpus import generate_web_pages
 from marc_solr_profiling_spark.operators.phrase import phrase_topk
 from marc_solr_profiling_spark.operators.wand import (
-    dismax_topk,
     wand_topk,
     wand_topk_batch,
 )
@@ -66,7 +65,8 @@ def _topk_urls(idx, q, k=10):
     """Top-k (url, score) of either index kind: BM25 for single-field,
     edismax dismax over ``QF`` for multi-field."""
     if isinstance(idx, MultiFieldIndex):
-        rows = dismax_topk(idx, q, qf=QF, tie=0.1, k=k, round_to=6).join(
+        rows = wand_topk(idx, q, qf=QF, tie=0.1, k=k, round_to=6,
+                         with_url=False).join(
             idx.docs.select("doc_id", "url"), "doc_id").collect()
         rows = sorted(rows, key=lambda r: (-r["score"], r["url"]))
     else:
@@ -110,7 +110,7 @@ def test_append_upsert_delete_rank_identity(spark, workdir, docs):
         key_col="url",
     )
     assert len(gen1.stores) == 2
-    assert gen1.deleted_array() is not None
+    assert gen1.del_postings() is not None
 
     dead = {r["url"] for r in del_keys.collect()}
     live = _live(docs, dead, mods.filter(~F.col("url").isin(list(dead))))
@@ -377,7 +377,8 @@ def test_multifield_generation_chain(spark, workdir, docs):
     qf = {"title": 2.0, "body": 1.0}
     for q in QUERIES:
         def urls(ix):
-            out = dismax_topk(ix, q, qf=qf, tie=0.1, k=10, round_to=6)
+            out = wand_topk(ix, q, qf=qf, tie=0.1, k=10, round_to=6,
+                            with_url=False)
             rows = out.join(ix.docs.select("doc_id", "url"),
                             "doc_id").collect()
             return {(r["url"], r["score"]) for r in rows}, \
@@ -412,7 +413,8 @@ def test_multifield_force_merge(spark, workdir, docs):
     qf = {"title": 2.0, "body": 1.0}
     for q in QUERIES[:3]:
         def res(ix):
-            out = dismax_topk(ix, q, qf=qf, tie=0.1, k=10, round_to=6)
+            out = wand_topk(ix, q, qf=qf, tie=0.1, k=10, round_to=6,
+                            with_url=False)
             rows = out.join(ix.docs.select("doc_id", "url"),
                             "doc_id").collect()
             return ({(r["url"], r["score"]) for r in rows},

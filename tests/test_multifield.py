@@ -1,5 +1,5 @@
 """Multi-field PHYSICAL index (plans/multifield.py) + block-max dismax
-(operators/wand.py dismax_topk) — the edismax qf/tie default handler
+(operators/wand.py wand_topk(qf=...)) — the edismax qf/tie default handler
 (profiling/solr/conf/solrconfig.xml:64-83) through the salted varbyte
 segment machinery. Gate: value-identical to the scan-side dismax plan
 (bm25_dismax_topk_plan), which is itself oracle-green."""
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.corpus import generate_query_set, generate_web_pages
 from marc_solr_profiling_spark.operators.bm25 import bm25_dismax_topk_plan
-from marc_solr_profiling_spark.operators.wand import dismax_topk
+from marc_solr_profiling_spark.operators.wand import wand_topk
 from marc_solr_profiling_spark.plans.multifield import build_multifield_index
 
 N_DOCS = 200
@@ -67,8 +67,8 @@ def test_field_stats_shape(mf_index):
 
 @pytest.mark.parametrize("query", generate_query_set(30, seed=9)[:8])
 def test_dismax_phys_matches_scan(mf_index, pages, query):
-    got = dismax_topk(
-        mf_index, query, qf=QF, tie=0.1, k=10, round_to=6
+    got = wand_topk(
+        mf_index, query, with_url=False, qf=QF, tie=0.1, k=10, round_to=6
     ).collect()
     want = _scan_dismax(pages, query, k=10, tie=0.1, round_to=6).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
@@ -78,7 +78,8 @@ def test_dismax_phys_matches_scan(mf_index, pages, query):
 
 def test_dismax_phys_tie_zero(mf_index, pages):
     q = "spark merge window stream"
-    got = dismax_topk(mf_index, q, qf=QF, tie=0.0, k=10, round_to=6).collect()
+    got = wand_topk(mf_index, q, qf=QF, tie=0.0, k=10, round_to=6,
+                    with_url=False).collect()
     want = _scan_dismax(pages, q, tie=0.0).collect()
     assert [(r["doc_id"], r["score"]) for r in got] == pytest.approx(
         [(r["doc_id"], r["score"]) for r in want], abs=1e-6
@@ -88,30 +89,32 @@ def test_dismax_phys_tie_zero(mf_index, pages):
 def test_dismax_phys_min_match(mf_index, pages):
     # mm counts distinct BASE terms: a term matched in both fields is one
     q = "spark merge window"
-    got = dismax_topk(
-        mf_index, q, qf=QF, tie=0.1, k=10, round_to=6, min_match=3
+    got = wand_topk(
+        mf_index, q, qf=QF, tie=0.1, k=10, round_to=6, min_match=3,
+        with_url=False,
     ).collect()
     want = _scan_dismax(pages, q, min_match=3).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
 
 
 def test_dismax_phys_empty_and_unknown(mf_index, spark):
-    assert dismax_topk(mf_index, "", qf=QF).count() == 0
-    assert dismax_topk(mf_index, "zzqqxxyy", qf=QF).count() == 0
+    assert wand_topk(mf_index, "", with_url=False, qf=QF).count() == 0
+    assert wand_topk(mf_index, "zzqqxxyy", with_url=False,
+                     qf=QF).count() == 0
 
 
 def test_dismax_phys_prunes_blocks(mf_index, spark):
     acc = spark.sparkContext.accumulator(0)
-    dismax_topk(
-        mf_index, "the spark merge window stream data", qf=QF,
-        tie=0.1, k=5, round_to=6, skip_acc=acc,
+    wand_topk(
+        mf_index, "the spark merge window stream data", with_url=False,
+        qf=QF, tie=0.1, k=5, round_to=6, skip_acc=acc,
     ).collect()
     assert acc.value >= 0  # smoke: accumulator path wired
 
 
 def test_dismax_tie_range_guard(mf_index):
     with pytest.raises(ValueError):
-        dismax_topk(mf_index, "spark", qf=QF, tie=1.5)
+        wand_topk(mf_index, "spark", with_url=False, qf=QF, tie=1.5)
 
 
 def test_multifield_resume_is_noop(spark, pages, mf_index, tmp_path_factory):

@@ -220,3 +220,28 @@ def test_phrase_duplicate_terms(spark, tmp_path_factory):
     # only u0 has two ADJACENT 'stop' tokens
     url_by_id = {r["doc_id"]: r["url"] for r in idx.docs.collect()}
     assert [url_by_id[d] for d in got] == ["u0"]
+
+
+def test_phrase_topk_with_url_on_urlless_index(spark, tmp_path_factory):
+    """``with_url=True`` over an index keyed on ``doc_id`` (its docs stage
+    has no url column) returns the plain top-k, as ``wand_topk`` does,
+    instead of failing to resolve ``url``; an index with urls gets them."""
+    rows = [(0, "alpha bravo end"), (1, "alpha gap bravo"),
+            (2, "x alpha bravo")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    path = str(tmp_path_factory.mktemp("nourl") / "index")
+    idx = build_index(spark, docs, path, key_col="doc_id", id_col="doc_id",
+                      n_salts=2, block_size=4, chain="simple",
+                      positions=True)
+    assert "url" not in idx.docs.columns
+    got = phrase_topk(idx, "alpha bravo", k=10, with_url=True)
+    assert got.columns == ["doc_id", "score"]
+    assert sorted(r["doc_id"] for r in got.collect()) == [0, 2]
+
+    udocs = spark.createDataFrame(
+        [(f"u{i}", t) for i, t in rows], "url string, text string")
+    upath = str(tmp_path_factory.mktemp("withurl") / "index")
+    uidx = build_index(spark, udocs, upath, n_salts=2, block_size=4,
+                       chain="simple", positions=True)
+    got = phrase_topk(uidx, "alpha bravo", k=10, with_url=True).collect()
+    assert sorted(r["url"] for r in got) == ["u0", "u2"]

@@ -1,11 +1,12 @@
 """One kernel pass per relevance /select (operators/wand.py select_pass,
 plans/select.py solr_select_physical): numFound, the top-k page and the
 index-only facets must equal the composition of the public operators
-(``matching_doc_ids`` count, ``wand_topk``/``dismax_topk`` ranked on
-the rounded score, ``facet_match_counts``) for both index kinds over a
-3-generation chain with tombstones, on both tombstone paths; a request
-on an open handle stays within three Spark jobs; stage reads are
-resolved once per store; requests leave no cached block behind."""
+(``matching_doc_ids`` count, ``wand_topk`` ranked on the rounded score,
+``facet_match_counts``) for both index kinds over a 3-generation chain
+with tombstones, both with the tombstones riding the scan and with them
+applied physically (the chain optimized); a request on an open handle
+stays within three Spark jobs; stage reads are resolved once per store;
+requests leave no cached block behind."""
 
 import shutil
 import tempfile
@@ -15,13 +16,15 @@ from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.functions.analyzer import ANALYZERS
 from marc_solr_profiling_spark.operators.wand import (
-    dismax_topk,
     facet_match_counts,
     matching_doc_ids,
     wand_topk,
 )
 from marc_solr_profiling_spark.plans.build import build_index, open_index
-from marc_solr_profiling_spark.plans.generations import append_delta
+from marc_solr_profiling_spark.plans.generations import (
+    append_delta,
+    merge_generations,
+)
 from marc_solr_profiling_spark.plans.lineage import IndexStore
 from marc_solr_profiling_spark.plans.multifield import build_multifield_index
 from marc_solr_profiling_spark.plans.select import (
@@ -33,7 +36,6 @@ from conftest import SF_DIR
 
 Q = "spark merge window stream"
 QF = {"title": 2.0, "body": 1.0}
-CAP_KEY = "spark.marc.delArrayMaxIds"
 FACETS = ["lang", "source"]
 # (q, fq, start, min_match, facet_fields): q, q+fq, q+fq+facet, page 2,
 # an absent term, mm = AND
@@ -111,8 +113,9 @@ def _composition(idx, q, fq, start, mm, facet_fields, qf, rows=10):
     n_found = matching_doc_ids(idx, q, min_match=mm, filter_queries=fq,
                                term_groups=groups).count()
     if qf:
-        top = dismax_topk(idx, q, qf=qf, tie=0.1, k=start + rows,
-                          min_match=mm, filter_queries=fq, round_to=4)
+        top = wand_topk(idx, q, qf=qf, tie=0.1, k=start + rows,
+                        min_match=mm, filter_queries=fq, round_to=4,
+                        with_url=False)
     else:
         top = wand_topk(idx, q, k=start + rows, with_url=False,
                         min_match=mm, filter_queries=fq).select(
@@ -150,26 +153,40 @@ def _request(idx, q, fq, start, mm, facet_fields, qf, rows=10):
     return resp.num_found, page, facets
 
 
+@pytest.fixture(scope="module")
+def optimized(spark, workdir, chains):
+    """The chains with their tombstones applied physically (built on
+    first use, one per kind)."""
+    built = {}
+
+    def get(kind):
+        if kind not in built:
+            opt = merge_generations(spark, chains[kind],
+                                    f"{workdir}/{kind}_optimized", keep=0)
+            assert opt.deletes_df() is None and len(opt.stores) == 1
+            built[kind] = opt
+        return built[kind]
+
+    return get
+
+
 @pytest.mark.parametrize("kind", ["single", "multi"])
+# postings: the tombstones ride the scan as ``del_segments`` rows; array
+# (the id of the retired driver-array tombstone path): the same chain
+# optimized, its tombstones applied physically and no ``del_segments``.
 @pytest.mark.parametrize("del_path", ["array", "postings"])
-def test_single_pass_equals_operator_composition(spark, chains, kind,
-                                                 del_path):
-    chain = chains[kind]
+def test_single_pass_equals_operator_composition(spark, chains, optimized,
+                                                 kind, del_path):
+    chain = chains[kind] if del_path == "postings" else optimized(kind)
     qf = QF if kind == "multi" else None
-    if del_path == "postings":
-        spark.conf.set(CAP_KEY, "0")
-    try:
-        idx = open_index(spark, chain.store.path)
-        assert (idx.delete_masks()[1] is not None) == (del_path ==
-                                                       "postings")
-        for q, fq, start, mm, ff in SHAPES:
-            got = _request(idx, q, fq, start, mm, ff, qf)
-            want = _composition(idx, q, fq, start, mm, ff, qf)
-            assert got == want, (q, fq, start, mm, ff)
-            if q == Q and not fq and not start:
-                assert got[0] > 10 and len(got[1]) == 10
-    finally:
-        spark.conf.unset(CAP_KEY)
+    idx = open_index(spark, chain.store.path)
+    assert (idx.del_postings() is not None) == (del_path == "postings")
+    for q, fq, start, mm, ff in SHAPES:
+        got = _request(idx, q, fq, start, mm, ff, qf)
+        want = _composition(idx, q, fq, start, mm, ff, qf)
+        assert got == want, (q, fq, start, mm, ff)
+        if q == Q and not fq and not start:
+            assert got[0] > 10 and len(got[1]) == 10
 
 
 def _jobs_in_group(spark, fn, group):

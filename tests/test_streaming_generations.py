@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.corpus import generate_web_pages
-from marc_solr_profiling_spark.operators.wand import dismax_topk, wand_topk
+from marc_solr_profiling_spark.operators.wand import wand_topk
 from marc_solr_profiling_spark.plans.build import build_index
 from marc_solr_profiling_spark.plans.multifield import build_multifield_index
 from marc_solr_profiling_spark.streaming.ingest import (
@@ -129,7 +129,8 @@ def test_stream_generations_end_to_end(spark, workdir, docs):
 
 
 def _multifield_results(ix, q):
-    rows = dismax_topk(ix, q, qf=QF, tie=0.1, k=10, round_to=6).join(
+    rows = wand_topk(ix, q, qf=QF, tie=0.1, k=10, round_to=6,
+                     with_url=False).join(
         ix.docs.select("doc_id", "url"), "doc_id").collect()
     return ({(r["url"], r["score"]) for r in rows},
             sorted((r["score"] for r in rows), reverse=True))

@@ -17,10 +17,16 @@ from marc_solr_profiling_spark.operators.varbyte import (
     delta_encode, varbyte_encode,
 )
 from marc_solr_profiling_spark.operators.wand import (
-    K1, B, _range_max, _score_blocks_bmw, _sparse_table, _topk_exact,
+    K1, B, Mask, QueryPlan, _range_max, _score_blocks_bmw, _sparse_table,
+    _topk_exact,
 )
 
 AVGDL = 40.0
+
+
+def _plan(idf_by_term, min_match=1):
+    return QueryPlan(weights=idf_by_term,
+                     avgdl=dict.fromkeys(idf_by_term, AVGDL), mm=min_match)
 
 
 def _make_corpus(rng, n_docs=300, n_terms=6, df_fracs=None):
@@ -86,8 +92,8 @@ def _bmw_topk(blocks, idf_by_term, k, min_match=1):
     ids_p, sc_p, nskip = [], [], 0
     for _, sub in blocks.groupby("salt", sort=False):
         ids, scores, nsk, theta = _score_blocks_bmw(
-            sub.reset_index(drop=True), idf_by_term, k, AVGDL,
-            min_match=min_match, theta0=theta,
+            sub.reset_index(drop=True), _plan(idf_by_term, min_match), k,
+            theta,
         )
         ids_p.append(ids)
         sc_p.append(scores)
@@ -224,8 +230,8 @@ def test_bmw_exclusion_rank_identical(seed):
     for s, sub in sc_blocks.groupby("salt", sort=False):
         salt_excl = excluded[excluded % 2 == s]  # n_salts=2, salt = doc%2
         ids, scores, _, theta = _score_blocks_bmw(
-            sub.reset_index(drop=True), idf_by_term, 10, AVGDL,
-            theta0=theta, exclude_ids=salt_excl,
+            sub.reset_index(drop=True), _plan(idf_by_term), 10,
+            theta, Mask(exclude=salt_excl),
         )
         ids_p.append(ids)
         sc_p.append(scores)
@@ -234,3 +240,164 @@ def test_bmw_exclusion_rank_identical(seed):
     gsel = _topk_exact(all_ids, all_sc, 10)
     assert all_ids[gsel].tolist() == want_ids.tolist()
     np.testing.assert_allclose(all_sc[gsel], want_sc, rtol=1e-12)
+
+
+def _salt_sets(arrs, salt, n_salts=2):
+    """Per-salt slices of sorted id arrays (salt = doc % n_salts)."""
+    return tuple(a[a % n_salts == salt] for a in arrs)
+
+
+def _kernel_topk(blocks, plan, k, mask_of):
+    theta = -math.inf
+    ids_p, sc_p, nskip = [], [], 0
+    for s, sub in blocks.groupby("salt", sort=False):
+        ids, scores, nsk, theta = _score_blocks_bmw(
+            sub.reset_index(drop=True), plan, k, theta, mask_of(s))
+        ids_p.append(ids)
+        sc_p.append(scores)
+        nskip += nsk
+    all_ids = np.concatenate(ids_p)
+    all_sc = np.concatenate(sc_p)
+    sel = _topk_exact(all_ids, all_sc, k)
+    return all_ids[sel], all_sc[sel], nskip
+
+
+# blocks skipped without decoding by the kernel on the seeded inputs below;
+# pinned so a change to the plan/mask plumbing cannot silently move pruning
+MASK_SKIPS = {(0, 1): 1, (0, 2): 1, (1, 1): 13, (1, 2): 6, (2, 1): 3,
+              (2, 2): 2}
+DISMAX_SKIPS = {(0, 0.0): 6, (0, 0.3): 6, (1, 0.0): 7, (1, 0.3): 7,
+                (2, 0.0): 0, (2, 0.3): 0}
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("min_match", [1, 2])
+def test_bmw_include_exclude_bonus_differential(seed, min_match):
+    """Two fq include sets ∩, a MUST_NOT/tombstone exclude set and two
+    CONSTANT_SCORE bonus sets in one mask: rank-identical to brute force
+    (docs matching no scored term never enter the kernel; each bonus set
+    a matching doc is in adds 1.0), with exact skip counts."""
+    rng = np.random.default_rng(100 + seed)
+    tf, dl = _make_corpus(rng, n_docs=800, n_terms=5,
+                          df_fracs=[0.8, 0.2, 0.08, 0.04, 0.02])
+    n_docs, n_terms = tf.shape
+    df = (tf > 0).sum(axis=0)
+    idf = np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+    idf_by_term = {f"t{t}": float(idf[t]) for t in range(n_terms)}
+    blocks = _blocks_df(tf, dl, idf, n_salts=2, block_size=8)
+
+    def subset(frac):
+        return np.sort(rng.choice(n_docs, size=int(n_docs * frac),
+                                  replace=False)).astype(np.int64)
+
+    inc = (subset(0.8), subset(0.7))
+    exc = subset(0.15)
+    bonus = (subset(0.1), subset(0.05))
+
+    w = np.zeros(tf.shape, dtype=np.float64)
+    for t in range(n_terms):
+        tt = tf[:, t].astype(np.float64)
+        w[:, t] = idf[t] * tt * (K1 + 1) / (
+            tt + K1 * (1 - B + B * dl / AVGDL))
+        w[tf[:, t] == 0, t] = 0.0
+    totals = w.sum(axis=1)
+    for b in bonus:
+        totals[b] += 1.0
+    ok = np.ones(n_docs, dtype=bool)
+    for a in inc:
+        ok &= np.isin(np.arange(n_docs), a)
+    ok[exc] = False
+    ok &= (tf > 0).sum(axis=1) >= min_match
+    cand = np.flatnonzero(ok)
+    sel = _topk_exact(cand, totals[cand], 10)
+    want_ids, want_sc = cand[sel], totals[cand][sel]
+
+    got_ids, got_sc, nskip = _kernel_topk(
+        blocks, _plan(idf_by_term, min_match), 10,
+        lambda s: Mask(_salt_sets(inc, s), _salt_sets((exc,), s)[0],
+                       _salt_sets(bonus, s)))
+    assert got_ids.tolist() == want_ids.tolist()
+    np.testing.assert_allclose(got_sc, want_sc, rtol=1e-12)
+    assert nskip == MASK_SKIPS[(seed, min_match)]
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("tie", [0.0, 0.3])
+def test_bmw_dismax_groups_tie_round_differential(seed, tie):
+    """Dismax groups (two fields x three base terms, per-field avgdl and
+    boosts) with ``tie``, ``round_to`` and ``mm`` counting base terms,
+    under an include ∩ exclude mask: rank-identical to a brute-force
+    ``max + tie * (sum - max)`` per base term, ranked on the rounded
+    total with doc_id tie-break, with exact skip counts."""
+    rng = np.random.default_rng(200 + seed)
+    n_docs, n_base = 600, 3
+    fields = {"title": 2.0, "body": 1.0}
+    tf_f, dl_f = {}, {}
+    for f in fields:
+        tf_f[f], dl_f[f] = _make_corpus(
+            rng, n_docs=n_docs, n_terms=n_base,
+            df_fracs=[0.6, 0.15, 0.05] if f == "body" else [0.3, 0.1, 0.03])
+    dl_f["title"] = np.minimum(dl_f["title"] // 8 + 1, 8)
+    avgdl_f = {f: float(dl_f[f].mean()) for f in fields}
+    rows, weights, avgdl, group_of = [], {}, {}, {}
+    for f, boost in fields.items():
+        df = (tf_f[f] > 0).sum(axis=0)
+        idf = np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        for j in range(n_base):
+            key = f"{f}\x1ft{j}"
+            weights[key] = boost * float(idf[j])
+            avgdl[key] = avgdl_f[f]
+            group_of[key] = j
+            for s in range(2):
+                docs = np.flatnonzero((tf_f[f][:, j] > 0)
+                                      & (np.arange(n_docs) % 2 == s))
+                for b0 in range(0, docs.size, 8):
+                    blk = docs[b0:b0 + 8]
+                    tfs = tf_f[f][blk, j].astype(np.float64)
+                    dls = dl_f[f][blk]
+                    wnorm = tfs * (K1 + 1) / (
+                        tfs + K1 * (1 - B + B * dls / avgdl_f[f]))
+                    rows.append({
+                        "term": key, "salt": s,
+                        "first_doc": int(blk[0]), "last_doc": int(blk[-1]),
+                        "doc_gaps": delta_encode(blk.astype(np.uint64)),
+                        "tfs": varbyte_encode(tfs.astype(np.uint64)),
+                        "dls": varbyte_encode(dls.astype(np.uint64)),
+                        "max_wnorm": float(wnorm.max()),
+                    })
+    blocks = pd.DataFrame(rows)
+    plan = QueryPlan(weights=weights, avgdl=avgdl, group_of=group_of,
+                     n_groups=n_base, mm=2, tie=tie, round_to=4)
+    inc = np.sort(rng.choice(n_docs, size=int(n_docs * 0.75),
+                             replace=False)).astype(np.int64)
+    exc = np.sort(rng.choice(n_docs, size=n_docs // 10,
+                             replace=False)).astype(np.int64)
+
+    total = np.zeros(n_docs)
+    n_match = np.zeros(n_docs, dtype=np.int64)
+    for j in range(n_base):
+        s_f = np.zeros((n_docs, len(fields)))
+        hit = np.zeros((n_docs, len(fields)), dtype=bool)
+        for fi, f in enumerate(fields):
+            tt = tf_f[f][:, j].astype(np.float64)
+            s_f[:, fi] = weights[f"{f}\x1ft{j}"] * tt * (K1 + 1) / (
+                tt + K1 * (1 - B + B * dl_f[f] / avgdl_f[f]))
+            hit[:, fi] = tf_f[f][:, j] > 0
+        s_f[~hit] = 0.0
+        mx = s_f.max(axis=1)
+        total += np.where(hit.any(axis=1),
+                          mx + tie * (s_f.sum(axis=1) - mx), 0.0)
+        n_match += hit.any(axis=1)
+    ok = (n_match >= 2) & np.isin(np.arange(n_docs), inc)
+    ok[exc] = False
+    cand = np.flatnonzero(ok)
+    ranked = np.floor(total[cand] * 1e4 + 0.5) / 1e4
+    sel = _topk_exact(cand, ranked, 10)
+    want_ids, want_sc = cand[sel], ranked[sel]
+
+    got_ids, got_sc, nskip = _kernel_topk(
+        blocks, plan, 10,
+        lambda s: Mask(_salt_sets((inc,), s), _salt_sets((exc,), s)[0]))
+    assert got_ids.tolist() == want_ids.tolist()
+    np.testing.assert_allclose(got_sc, want_sc, atol=1e-12)
+    assert nskip == DISMAX_SKIPS[(seed, tie)]
