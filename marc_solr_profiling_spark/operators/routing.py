@@ -15,8 +15,9 @@ Why not plain hash on the salt value: hashing S values into S partitions
 packs 2-4 salts into some partitions while ~37% sit empty (birthday
 effect) — a 3-salt partition is a 3x straggler at low wave counts.
 
-Used by the query scorer (wand._by_salt) and the packed segment build
-(segments.build_segments_packed).
+Used by the packed segment build (segments.build_segments_packed), which
+writes one salt per file; the query pass (wand._salt_ranges) reads salt
+ranges on the same contiguous placement.
 """
 
 from __future__ import annotations

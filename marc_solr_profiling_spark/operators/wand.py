@@ -12,11 +12,15 @@ three pieces:
   edismax ``qf``), the dictionary lookup of its terms, boosted idf and
   avgdl per scored key, ``mm``, ``tie``, ``round_to``, MUST_NOT terms,
   ``fq`` terms, faceted fields and CONSTANT_SCORE bonus clauses.
-* **The pass** (:func:`_search`): ONE scan of the plan's query-term
-  ``segments`` ∪ fq/facet ``filters`` ∪ ``del_segments`` tombstone rows,
-  repartitioned by salt (:func:`_by_salt`), ONE ``mapInPandas`` that
-  splits each salt into tombstones and postings (:class:`_Salt`) and
-  hands the salts of its partition to a collector.
+* **The pass** (:func:`_search`): ONE Spark job with no exchange. The
+  driver lists, from each stage's manifest, the files that hold the
+  plan's rows: query-term ``segments`` ∪ fq/facet ``filters`` ∪
+  ``del_segments`` tombstones, of every generation. A task frame of one
+  row per salt range (:func:`_salt_ranges`) feeds ONE ``mapInPandas``;
+  each task reads its own salts from those files with pyarrow (term and
+  salt predicates pushed down), splits each salt into tombstones and
+  postings (:class:`_Salt`) and hands its salts to a collector — the
+  per-leaf reader of Lucene's searcher.
 * **The collectors**: top-k (:func:`wand_topk`), the /select DocList +
   DocSet (:func:`select_pass`), the match set
   (:func:`matching_doc_ids`), facet counts (:func:`facet_match_counts`),
@@ -29,10 +33,13 @@ three pieces:
 
 Partitioning invariant that makes this work: blocks are salted by
 hash(doc_id), so every query term's postings for a given document share a
-salt — and so do its filter postings and its tombstone posting.
-Repartitioning matched blocks by salt therefore co-locates complete
-per-document contributions — each partition computes exact totals, match
-sets and masks for its doc subset independently.
+salt — and so do its filter postings and its tombstone posting. The
+build writes ``segments``, ``filters`` and ``del_segments`` one salt per
+file (``operators/segments.py build_segments_packed``), and
+``plans/lineage.py commit_stage`` records each file's salt range, so a
+task reading one salt range from every stage holds complete
+per-document contributions — it computes exact totals, match sets and
+masks for its doc subset independently, without a shuffle.
 
 Block-max pruning (multi-term, EXACT — the document-at-a-time cap-sum
 walk, vectorized block-at-a-time):
@@ -86,10 +93,6 @@ from .varbyte import delta_decode, varbyte_decode
 
 K1 = 1.2
 B = 0.75
-# query keys up to this many are a literal ``isin``; more are a
-# broadcast join — a literal In over thousands of batch terms generates
-# enormous codegen (multi-second compile)
-_ISIN_MAX = 64
 # wand_topk_batch(mode="auto"): below this share of matched posting
 # volume held by terms of several queries, the batch is sparse
 _SPARSE_SHARE = 0.25
@@ -97,11 +100,11 @@ _NO_IDS = np.empty(0, dtype=np.int64)
 
 
 def _salt_partitions(index) -> int:
-    """Salt-repartition width for the scoring stage: ~4 tasks per core for
-    load balance (a straggler then costs 1/4 of a wave, not a whole one),
-    capped at the salt count — with the exact placement of _by_salt each
-    partition owns a contiguous slice of salt values, so n_salts partitions
-    is exact 1:1 and more would sit empty.
+    """Scoring-task count of a query pass: ~4 tasks per core for load
+    balance (a straggler then costs 1/4 of a wave, not a whole one),
+    capped at the salt count — each task owns a contiguous slice of salt
+    values (:func:`_salt_ranges`), so n_salts tasks is exact 1:1 and more
+    would sit empty.
 
     ``spark.marc.saltPartitions`` overrides the auto-size: cluster-size
     comparisons (tools/scaling_bench.py) must hold the data layout CONSTANT
@@ -115,25 +118,17 @@ def _salt_partitions(index) -> int:
     return max(1, min(int(index.n_salts), 4 * cores))
 
 
-def _by_salt(matched: DataFrame, index) -> DataFrame:
-    """Co-locate complete per-document contributions: every row of one salt
-    in exactly one partition, with EXACT balance and no extra pass.
-
-    Plain hash repartitioning on salt packs 2-4 salts into some partitions
-    while ~37% sit empty (birthday effect) — a 3-salt partition is a 3x
-    straggler when the wave count is low. Range partitioning balances
-    exactly but its bound sampler executes the child plan once more (the
-    round-2a shape; it forced a persist of the matched blocks on every
-    batch call). The salt domain is KNOWN — uniform integers in
-    [0, n_salts) — so placement is computed, not sampled (see
-    operators/routing.py). Zero extra jobs per query, one tiny memoized
-    probe job per session per width."""
-    from .routing import exact_route_expr
-
-    n_parts = _salt_partitions(index)
+def _salt_ranges(index) -> list:
+    """The inclusive salt range ``(lo, hi)`` of each scoring task: salt
+    ``s`` belongs to task ``s * n_parts // n_salts`` — contiguous slices,
+    exact balance (the placement ``operators/routing.py`` computes for
+    the segment build, which writes one file per salt). The first range
+    starts at 0 and the last is open above, so a salt outside
+    ``[0, n_salts)`` still has a reader."""
     n_salts = max(1, int(index.n_salts))
-    route = exact_route_expr(index.spark, F.col("salt"), n_salts, n_parts)
-    return matched.repartition(n_parts, route.alias("_salt_route"))
+    n_parts = min(_salt_partitions(index), n_salts)
+    starts = [-(-p * n_salts // n_parts) for p in range(n_parts)]
+    return list(zip(starts, [s - 1 for s in starts[1:]] + [2**31 - 1]))
 
 
 def _analyze_query(query: str, chain: str) -> List[str]:
@@ -246,18 +241,6 @@ class QueryPlan:
     match_all: bool = False
 
 
-def _term_frame(spark, keys) -> DataFrame:
-    return local_frame(spark, [(t,) for t in keys], "term string")
-
-
-def _dictionary_rows(index, keys) -> list:
-    d = index.cached_dictionary()
-    if len(keys) <= _ISIN_MAX:
-        return d.filter(F.col("term").isin(list(keys))).collect()
-    return d.join(F.broadcast(_term_frame(index.spark, keys)),
-                  "term").collect()
-
-
 def resolve_plan(
     index,
     query: "str | None",
@@ -275,8 +258,8 @@ def resolve_plan(
     score: bool = True,
 ) -> QueryPlan:
     """Resolve one query against ``index``: analyze, look its keys up in
-    the dictionary (``score=True``; one small job) and fold boosts into
-    per-key weights.
+    the dictionary (``score=True``; a driver-side read, no job) and fold
+    boosts into per-key weights.
 
     ``pre_analyzed``: ``query`` is whitespace-joined INDEX TERMS (e.g.
     MoreLikeThis interesting terms read back from the index) — not
@@ -338,7 +321,8 @@ def resolve_plan(
     weights: dict[str, float] = {}
     df: dict[str, int] = {}
     avgdl: dict[str, float] = {}
-    for r in _dictionary_rows(index, terms):
+    # the head's dictionary, read on the driver: no job
+    for r in index.store.lookup("dictionary", "term", terms, ["term", "df"]):
         key = r["term"]
         if key in ex_set:
             # a term both scored and prohibited matches no doc that
@@ -796,56 +780,112 @@ class _Salt:
         return out
 
 
+def _term_pred(isin=(), prefixes=(), ranges=()):
+    """A pyarrow filter on ``term``: in ``isin``, or starting with a
+    prefix, or inside an inclusive ``(lo, hi)`` range; None keeps every
+    row. The ``>=`` conjuncts let row-group min/max prune (the stages
+    are sorted by term within each file)."""
+    import pyarrow.compute as pc
+
+    term = pc.field("term")
+    preds = [term.isin(list(isin))] if isin else []
+    preds += [(term >= p) & pc.starts_with(term, pattern=p)
+              for p in prefixes]
+    preds += [(term >= lo) & (term <= hi) for lo, hi in ranges]
+    return reduce(or_, preds) if preds else None
+
+
+def _read_salts(files: list, lo: int, hi: int, where: tuple,
+                scales: dict, sep) -> "pd.DataFrame | None":
+    """The rows of salts ``lo..hi`` in those of ``files`` (``stage_files``
+    entries of one stage of one generation) whose salt range overlaps,
+    filtered by ``where`` (:func:`_term_pred` arguments), with the
+    generation's block caps rescaled by ``scales``
+    (``InvertedIndex._cap_scales``: one factor, or one per field
+    prefix)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    paths = [f for f, flo, fhi in files if flo <= hi and fhi >= lo]
+    if not paths:
+        return None
+    salt = pc.field("salt")
+    pred = (salt >= lo) & (salt <= hi)
+    term = _term_pred(*where)
+    if term is not None:
+        pred = pred & term
+    pdf = ds.dataset(paths, format="parquet").to_table(
+        filter=pred, use_threads=False).to_pandas()
+    if scales and len(pdf):
+        factor = (scales[None] if None in scales else
+                  pdf["term"].str.split(sep, n=1).str[0]
+                  .map(scales).fillna(1.0).to_numpy(dtype=np.float64))
+        pdf["max_wnorm"] = pdf["max_wnorm"].to_numpy(np.float64) * factor
+    return pdf
+
+
 def _search(index, plan: QueryPlan,
             collector: "Callable[[Iterator[_Salt]], Iterator[pd.DataFrame]]",
             schema: str) -> DataFrame:
     """The one salted pass — Lucene's ``IndexSearcher.search(query,
-    collector)``. Scans the plan's query-term (and MUST_NOT / bonus)
-    ``segments`` rows ∪ its fq / faceted-field ``filters`` rows ∪ the
-    ``del_segments`` tombstone rows, co-locates each salt in one
-    partition, and hands the partition's non-empty salts (tombstones
-    split off) to ``collector``, which yields the partition's output
-    frames in ``schema``. Lazy: the caller decides how it is read."""
+    collector)`` with one leaf reader per salt range, and no shuffle.
+
+    The driver lists, from the manifests, the files of every stage the
+    plan reads: the query-term (and MUST_NOT / bonus) ``segments`` of each
+    generation with its cap rescale factors, the fq / faceted-field
+    ``filters`` of each generation and the head's ``del_segments``
+    tombstones. The stages are written one salt per file, and each file's
+    salt range is in the manifest. One Python task per salt range
+    (:func:`_salt_ranges`) reads the overlapping files with pyarrow, term
+    and salt predicates pushed down, and hands its non-empty salts
+    (tombstones split off) to ``collector``, which yields the task's
+    output frames in ``schema``. Completeness does not depend on the
+    clustering: a file spanning many salts is read by every task whose
+    range it overlaps, each keeping only its own salts. Lazy: one Spark
+    job when the caller reads it."""
     keys = list(dict.fromkeys(plan.terms + plan.exclude))
-    bonus = ([F.col("term").startswith(p) for p in plan.bonus_prefixes]
-             + [F.col("term").between(lo, hi)
-                for lo, hi in plan.bonus_ranges])
-    filters = ([F.col("term").startswith(p) for p in plan.facet_prefixes]
-               + [F.col("term") == ft for ft in plan.fq])
-    parts = []
-    if len(keys) > _ISIN_MAX and not bonus:
-        parts.append(index.segments.join(
-            F.broadcast(_term_frame(index.spark, keys)), "term"))
-    elif keys or bonus:
-        parts.append(index.segments.filter(
-            reduce(or_, bonus, F.col("term").isin(keys))))
-    if filters:
+    term_where = (tuple(keys), plan.bonus_prefixes, plan.bonus_ranges)
+    filter_where = (plan.fq, plan.facet_prefixes, ())
+    sources = []  # (files, where, cap scales)
+    if keys or plan.bonus_prefixes or plan.bonus_ranges:
+        sources += [(st.stage_files("segments"), term_where,
+                     index._cap_scales(st)) for st in index.stores]
+    if plan.fq or plan.facet_prefixes:
         # resolve_plan refused fq / facets on an index without them
-        parts.append(index.filters.filter(reduce(or_, filters)))
-    if not parts:
-        parts.append(index.segments.limit(0))
-    tombstones = index.del_postings()
-    if tombstones is not None:
-        parts.append(tombstones)
-    scan = parts[0]
-    for p in parts[1:]:
-        scan = scan.unionByName(p, allowMissingColumns=True)
+        sources += [(st.stage_files("filters"), filter_where, {})
+                    for st in index.stores]
+    if not sources:
+        return local_frame(index.spark, [], schema)
+    if index.del_postings() is not None:
+        sources.append((index.store.stage_files("del_segments"), (), {}))
+    ranges = _salt_ranges(index)
+    sep = getattr(index, "sep", None)
+
+    def salts(batches: Iterator[pd.DataFrame]) -> Iterator[_Salt]:
+        for batch in batches:
+            for task in batch["id"]:
+                lo, hi = ranges[task]
+                parts = [_read_salts(files, lo, hi, where, scales, sep)
+                         for files, where, scales in sources]
+                parts = [p for p in parts if p is not None and len(p)]
+                if not parts:
+                    continue
+                pdf = pd.concat(parts, ignore_index=True)
+                # each salt is complete on its own (block ranges are only
+                # disjoint within a salt, and each doc's full
+                # contribution lives in exactly one salt)
+                for _, sub in pdf.groupby("salt", sort=False):
+                    s = _Salt(sub, plan)
+                    if len(s.rows):
+                        yield s
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lst = list(batches)
-        if not lst:
-            return
-        pdf = pd.concat(lst, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        # a partition may hold several salts; each is complete on its own
-        # (block ranges are only disjoint within a salt, and each doc's
-        # full contribution lives in exactly one salt)
-        salts = (_Salt(sub, plan) for _, sub in pdf.groupby("salt",
-                                                            sort=False))
-        yield from collector(s for s in salts if len(s.rows))
+        yield from collector(salts(batches))
 
-    return _by_salt(scan, index).mapInPandas(run, schema=schema)
+    # the task frame: row i is salt range i, one partition each (a
+    # LocalRelation would slice by the core count instead)
+    n = len(ranges)
+    return index.spark.range(0, n, 1, n).mapInPandas(run, schema=schema)
 
 
 def _topk_frame(index, candidates: DataFrame, k: int,
@@ -959,10 +999,16 @@ def wand_topk(
         bonus_ranges=(term_range,) if term_range is not None else (),
         restrict=(np.unique(np.asarray(list(restrict_ids), dtype=np.int64))
                   if restrict_ids is not None else None))
-    kk = int(k)
+    return _topk_frame(index, _topk_pass(index, plan, int(k), skip_acc),
+                       int(k), with_url)
+
+
+def _topk_pass(index, plan: QueryPlan, kk: int, skip_acc=None) -> DataFrame:
+    """Per-task top-``kk`` candidates ``(doc_id, score)`` of a resolved
+    plan: the :func:`wand_topk` collector on the salted pass."""
 
     def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
-        # theta carries forward across the partition's salts, so later
+        # theta carries forward across the task's salts, so later
         # salts start with a tighter prune bound
         theta = -math.inf
         id_parts, score_parts = [], []
@@ -990,7 +1036,7 @@ def wand_topk(
             skip_acc.add(int(n_skipped))
         if not id_parts:
             return
-        # per-partition bounded top-k across its salts (docs are distinct
+        # per-task bounded top-k across its salts (docs are distinct
         # across salts; a doc's kernel row and bonus-only row max-merge —
         # the kernel total always dominates its own bonus row)
         uniq_ids, inv = np.unique(np.concatenate(id_parts),
@@ -1000,8 +1046,7 @@ def wand_topk(
         sel = _topk_exact(uniq_ids, best, kk)
         yield pd.DataFrame({"doc_id": uniq_ids[sel], "score": best[sel]})
 
-    candidates = _search(index, plan, collect, "doc_id long, score double")
-    return _topk_frame(index, candidates, kk, with_url)
+    return _search(index, plan, collect, "doc_id long, score double")
 
 
 def wand_topk_batch(
@@ -1013,11 +1058,11 @@ def wand_topk_batch(
 ) -> DataFrame:
     """Many queries in one pass: (qid, doc_id, score, rank).
 
-    One segment scan serves all queries (the batch query driver of
-    SURVEY.md §M3): blocks matching ANY query term are repartitioned by
-    salt once. Two collectors, chosen by ``mode``:
+    One salted pass serves all queries (the batch query driver of
+    SURVEY.md §M3): each task reads the blocks of its salts that match
+    ANY query term once. Two collectors, chosen by ``mode``:
 
-    * **dense** — each partition decodes every matched block ONCE and
+    * **dense** — each task decodes every matched block ONCE and
       scores every query against its doc subset. In a dense batch (hot
       terms shared by many queries) every block is needed by some query,
       so decode-once dominates and per-query pruning would only force
@@ -1499,17 +1544,15 @@ def grouped_topk_phys(
     score and returns one row per kept (group, doc):
     ``(group, group_found, rank, doc_id, score)`` — value-identical to
     the logical :func:`..bm25.bm25_grouped_topk`."""
-    from pyspark.sql import Window
-
     if index.filters is None:
         raise ValueError(
             "grouped_topk_phys needs an index built with filter_cols "
             f"covering {group_field!r}")
+    schema = (f"{group_field} string, group_found long, rank long, "
+              "doc_id long, score double")
     plan = resolve_plan(index, query, min_match, facet_fields=[group_field])
     if not plan.weights:
-        return local_frame(
-            index.spark, [], f"{group_field} string, group_found long, "
-                             "rank long, doc_id long, score double")
+        return local_frame(index.spark, [], schema)
     kpg = int(k_per_group)
 
     def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
@@ -1558,26 +1601,24 @@ def grouped_topk_phys(
             yield pd.DataFrame({"gval": g_out, "doc_id": d_out,
                                 "score": s_out, "n": c_out})
 
+    # the per-salt parts are bounded (a count row and k_per_group
+    # candidates per group and salt): collect them once and merge on
+    # the driver — nothing is left cached
     raw = _search(index, plan, collect,
-                  "gval string, doc_id long, score double, n long").persist()
-    counts = (
-        raw.filter(F.col("n") >= 0)
-        .groupBy("gval").agg(F.sum("n").cast("long").alias("group_found"))
-    )
-    cands = raw.filter(F.col("n") < 0)
-    w = Window.partitionBy("gval").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = cands.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= kpg)
-    groups = (
-        cands.groupBy("gval").agg(F.max("score").alias("_top"))
-        .orderBy(F.desc("_top"), F.asc("gval")).limit(int(k_groups))
-    )
-    return (
-        ranked.join(groups, "gval").join(counts, "gval")
-        .select(F.col("gval").alias(group_field), "group_found",
-                F.col("rank").cast("long").alias("rank"),
-                "doc_id", "score")
-    )
+                  "gval string, doc_id long, score double, n long"
+                  ).toPandas()
+    counts = raw[raw["n"] >= 0].groupby("gval")["n"].sum()
+    cands = raw[raw["n"] < 0].sort_values(
+        ["gval", "score", "doc_id"], ascending=[True, False, True])
+    cands["rank"] = cands.groupby("gval").cumcount() + 1
+    best = cands.groupby("gval")["score"].max().reset_index()
+    kept = best.sort_values(["score", "gval"], ascending=[False, True]
+                            )["gval"].head(int(k_groups))
+    out = [(g, int(counts[g]), int(r.rank), int(r.doc_id), float(r.score))
+           for g in kept
+           for r in cands[(cands["gval"] == g)
+                          & (cands["rank"] <= kpg)].itertuples()]
+    return local_frame(index.spark, out, schema)
 
 
 def elevate_topk_phys(
@@ -1642,8 +1683,9 @@ def explain_topk_phys(
     """DebugComponent score explanation FROM THE PHYSICAL INDEX
     (``debug=true`` — Lucene's explain walks the index structures for
     the requested docs, never the stored text): block-max WAND picks the
-    top-``k``, their ids (request-sized) ride a second pass over the
-    same matched postings whose collector emits one (doc, term, tf,
+    top-``k`` (collected once, from the one resolved plan), their ids
+    and scores (request-sized) ride a second pass over the same matched
+    postings whose collector emits one (doc, score, term, tf, df,
     doc_len) row per matched query term, and the BM25 quantities
     (df from the dictionary, collection stats) reassemble Lucene's
     'sum of:' tree rows — ``(doc_id, score, term, tf, df, doc_len,
@@ -1655,32 +1697,35 @@ def explain_topk_phys(
     plan = resolve_plan(index, query)
     if not plan.weights:
         return empty
-    top = wand_topk(index, query, k=k, with_url=False)
-    if round_to is not None:
-        top = top.select("doc_id",
-                         F.round("score", int(round_to)).alias("score"))
-    ids = np.asarray(sorted(r["doc_id"] for r in top.collect()),
-                     dtype=np.int64)
-    if ids.size == 0:
+    hits = _topk_frame(index, _topk_pass(index, plan, int(k)), int(k),
+                       False).collect()
+    if not hits:
         return empty
+    score_of = {r["doc_id"]: r["score"] for r in hits}
+    ids = np.asarray(sorted(score_of), dtype=np.int64)
+    df_of = dict(plan.df)
 
     def collect(salts: Iterator[_Salt]) -> Iterator[pd.DataFrame]:
+        # the request-sized top-k and the plan's dfs ride the collector:
+        # the rows leave the pass complete, with no join after it
         out = []
         for s in salts:
             for t, rows in s.rows.groupby("term", sort=False):
                 dids, tfs, dls = _decode(rows)
                 m = _member(dids, ids)
-                if m.any():
+                if m.any() and t in df_of:
                     out.append(pd.DataFrame({
-                        "doc_id": dids[m], "term": t,
-                        "tf": tfs[m].astype(np.int64),
+                        "doc_id": dids[m],
+                        "score": [score_of[d] for d in dids[m]],
+                        "term": t, "tf": tfs[m].astype(np.int64),
+                        "df": df_of[t],
                         "doc_len": dls[m].astype(np.int64)}))
         if out:
             yield pd.concat(out, ignore_index=True)
 
-    rows = _search(index, plan, collect,
-                   "doc_id long, term string, tf long, doc_len long")
-    d = local_frame(index.spark, list(plan.df.items()), "term string, df long")
+    out = _search(index, plan, collect,
+                  "doc_id long, score double, term string, tf long, "
+                  "df long, doc_len long")
     n_docs, avgdl = float(index.n_docs), float(index.avgdl)
     term_score = (
         F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -1689,19 +1734,13 @@ def explain_topk_phys(
         / (F.col("tf") + F.lit(K1)
            * (F.lit(1.0 - B) + F.lit(B) * F.col("doc_len") / F.lit(avgdl)))
     )
-    out = (
-        rows.join(F.broadcast(d), "term")
-        .join(F.broadcast(top), "doc_id")
-        .withColumn("term_score", term_score)
-    )
+    out = out.withColumn("term_score", term_score)
     if round_to is not None:
-        out = out.withColumn(
-            "term_score", F.round("term_score", int(round_to)))
-    return out.select(
-        "doc_id", "score", "term",
-        F.col("tf").cast("long").alias("tf"),
-        F.col("df").cast("long").alias("df"),
-        F.col("doc_len").cast("long").alias("doc_len"), "term_score")
+        out = (out.withColumn("score", F.round("score", int(round_to)))
+               .withColumn("term_score",
+                           F.round("term_score", int(round_to))))
+    return out.select("doc_id", "score", "term", "tf", "df", "doc_len",
+                      "term_score")
 
 
 def cluster_topk_phys(

@@ -212,34 +212,31 @@ class InvertedIndex:
         self.avgdl = float(self._stats_rows[0]["avgdl"])
         self.has_positions = bool(meta.get("positions", False))
 
-    def _rescaled_segments(self, store: IndexStore) -> DataFrame:
-        """One generation's segments with caps kept upper bounds at the
-        CURRENT avgdl. BM25 weight grows with avgdl, bounded by the ratio
-        w(avgdl_now)/w(avgdl_built) <= avgdl_now/avgdl_built, so scaling
-        a generation's caps by max(1, ratio) keeps block-max pruning
-        exact, merely slackened by the corpus drift since that generation
-        was built (a tiered merge rebuilds caps tight again)."""
-        seg = store.read_stage(self.spark, "segments")
+    def _cap_scales(self, store: IndexStore) -> dict:
+        """How one generation's block caps stay upper bounds at the
+        CURRENT avgdl: ``{None: factor}`` when they must grow, else ``{}``
+        (a multi-field index keys the factors by field). BM25 weight
+        grows with avgdl, bounded by the ratio w(avgdl_now)/w(avgdl_built)
+        <= avgdl_now/avgdl_built, so scaling a generation's caps by
+        max(1, ratio) keeps block-max pruning exact, merely slackened by
+        the corpus drift since that generation was built (a tiered merge
+        rebuilds caps tight again)."""
         built = store.get_meta().get("built_avgdl")
         if built is None:
             built = store.stage_rows("stats")[0]["avgdl"]
         scale = self.avgdl / max(float(built), 1e-12)
-        if scale > 1.0:
-            seg = seg.withColumn(
-                "max_wnorm", F.col("max_wnorm") * F.lit(float(scale))
-            )
-        return seg
+        return {None: scale} if scale > 1.0 else {}
 
     @property
     def segments(self) -> DataFrame:
-        if len(self.stores) == 1:
-            return self.store.read_stage(self.spark, "segments")
-        # chain union. Block-range disjointness within a (term, salt)
-        # group — the kernel invariant — holds across generations because
-        # append_delta assigns doc ids ABOVE every ancestor's max (updated
-        # docs get fresh ids; their old ids are tombstoned, never reused).
+        """The chain's segment blocks as stored (caps at each
+        generation's build; the query pass applies :meth:`_cap_scales`).
+        Block-range disjointness within a (term, salt) group — the kernel
+        invariant — holds across generations because append_delta
+        assigns doc ids ABOVE every ancestor's max (updated docs get
+        fresh ids; their old ids are tombstoned, never reused)."""
         return union_by_name(
-            [self._rescaled_segments(st) for st in self.stores])
+            [st.read_stage(self.spark, "segments") for st in self.stores])
 
     def _live(self, stage: str) -> DataFrame:
         out = union_by_name(

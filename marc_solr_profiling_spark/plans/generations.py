@@ -171,6 +171,12 @@ def _key_expr(df: DataFrame, key_col: str):
     return F.col(key_col)
 
 
+def _has_fresh_ids(index: InvertedIndex) -> bool:
+    """Whether some generation of the chain appended docs under ids
+    that differ from their keys (manifest ``fresh_ids``)."""
+    return any(st.get_meta().get("fresh_ids") for st in index.stores)
+
+
 def _next_doc_id(spark: SparkSession, index: InvertedIndex) -> int:
     """First doc id of a new generation: above every id that any
     generation's docs stage holds, tombstoned rows included (reusing
@@ -248,6 +254,14 @@ def append_delta(
     released on return.
     """
     _guard_out_path(index, out_path)
+    if key_col == "doc_id" and _has_fresh_ids(index):
+        raise ValueError(
+            "append_delta(key_col='doc_id') addresses documents by their "
+            "internal doc id, but a generation of this chain appended docs "
+            "under fresh ids that are not their keys: deletes and upserts "
+            "would hit the wrong documents. Build the base with an "
+            "external key column (key_col='url', id_col=None) and append "
+            "by that key")
     meta = index.store.get_meta()
     n_salts = int(meta.get("n_salts", index.n_salts))
     block_size = int(meta.get("block_size", 128))
@@ -281,6 +295,17 @@ def append_delta(
                 delta_docs = delta_docs.join(
                     F.broadcast(del_keys), key_col, "left_anti")
             delta_docs = keep(_dedup_delta(delta_docs, key_col))
+        # does this generation give docs ids that are not their keys?
+        # (key_col='doc_id': only when its keys are not exactly the fresh
+        # ids next_id, next_id + 1, ...; upserts never are)
+        fresh_ids = delta_docs is not None
+        if fresh_ids and key_col == "doc_id":
+            r = delta_docs.agg(F.min(key_col).alias("lo"),
+                               F.max(key_col).alias("hi"),
+                               F.count("*").alias("n")).collect()[0]
+            first = _next_doc_id(spark, index)
+            fresh_ids = r["n"] > 0 and (r["lo"], r["hi"]) != (
+                first, first + r["n"] - 1)
 
         store = IndexStore(out_path)
         store.set_fingerprint(config_fingerprint({
@@ -434,7 +459,7 @@ def append_delta(
             "parent": index.store.path,
             "n_salts": n_salts, "chain": chain, "block_size": block_size,
             "key_col": key_col, "filter_cols": filter_cols,
-            "generation": len(index.stores),
+            "generation": len(index.stores), "fresh_ids": fresh_ids,
             **index._kind_meta(), **index._built_meta(stats_rows),
         })
         return type(index)(store, spark, chain)
@@ -560,7 +585,7 @@ def merge_generations(
         "n_salts": n_salts, "chain": index.chain, "block_size": bs,
         "key_col": meta.get("key_col"),
         "filter_cols": list(meta.get("filter_cols", []) or []),
-        "generation": keep,
+        "generation": keep, "fresh_ids": _has_fresh_ids(index),
         **index._kind_meta(), **index._built_meta(index._stats_rows),
     })
     return type(index)(store, spark, index.chain)

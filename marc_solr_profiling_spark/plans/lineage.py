@@ -30,6 +30,8 @@ from pyspark.sql.types import StructType
 
 # the key Spark's parquet writer stores its row schema under
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# int columns whose per-file min/max a commit records from the footers
+_RANGED = ("doc_id", "salt")
 
 
 def config_fingerprint(conf: dict[str, Any]) -> str:
@@ -39,22 +41,23 @@ def config_fingerprint(conf: dict[str, Any]) -> str:
 
 
 def _footer_facts(md) -> tuple:
-    """(Spark schema as a JSON dict or None, max of a top-level int
-    ``doc_id`` column or None) from one parquet footer."""
+    """(Spark schema as a JSON dict or None, {column: (min, max)} of the
+    top-level int ``doc_id`` and ``salt`` columns whose statistics the
+    footer holds) from one parquet footer."""
     kv = md.metadata or {}
     schema = (json.loads(kv[_SPARK_SCHEMA_KEY])
               if _SPARK_SCHEMA_KEY in kv else None)
-    doc_max = None
+    bounds: dict = {}
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
         for c in range(rg.num_columns):
             col = rg.column(c)
             st = col.statistics
-            if (col.path_in_schema == "doc_id" and st is not None
-                    and st.has_min_max):
-                doc_max = (st.max if doc_max is None
-                           else max(doc_max, st.max))
-    return schema, doc_max
+            name = col.path_in_schema
+            if name in _RANGED and st is not None and st.has_min_max:
+                lo, hi = bounds.get(name, (st.min, st.max))
+                bounds[name] = (min(lo, st.min), max(hi, st.max))
+    return schema, bounds
 
 
 class IndexStore:
@@ -69,6 +72,8 @@ class IndexStore:
         self._lock = threading.Lock()
         # stage -> (session, committed_at, frame): see read_stage
         self._frames: dict[str, tuple] = {}
+        # (stage, kind) -> (committed_at, driver-side facts): see _memo
+        self._facts: dict[tuple, tuple] = {}
 
     # -- manifest -----------------------------------------------------------
     def _read_manifest(self) -> dict:
@@ -173,6 +178,11 @@ class IndexStore:
                 footers = list(ex.map(_footer, enumerate(names)))
             lineage = [row for row, _ in footers]
             facts = [f for _, f in footers]
+            for row, (_, bounds) in footers:
+                if row["rows"] and "salt" in bounds:
+                    # the file's salt range: a query task reads only the
+                    # files overlapping its own salts (stage_files)
+                    row["salt"] = list(bounds["salt"])
             entry = {
                 "committed_at": time.time(),
                 # stage metrics next to the per-partition lineage rows:
@@ -193,8 +203,8 @@ class IndexStore:
                          for fld in schemas[0]["fields"]}
                 # a file with rows but no min/max statistics leaves the
                 # key out: readers then run the aggregation
-                maxes = [f[1] for f, row in zip(facts, lineage)
-                         if row["rows"]]
+                maxes = [f[1].get("doc_id", (None, None))[1]
+                         for f, row in zip(facts, lineage) if row["rows"]]
                 if (types.get("doc_id") in ("long", "integer")
                         and None not in maxes):
                     entry["doc_id_max"] = max(maxes, default=None)
@@ -244,6 +254,89 @@ class IndexStore:
                 for part in entry["partitions"]
                 for r in pq.read_table(os.path.join(
                     self.stage_path(stage), part["file"])).to_pylist()]
+
+    def _memo(self, stage: str, kind: str, build):
+        """``build(entry)`` of a committed stage's manifest entry, kept
+        per ``committed_at`` like :meth:`read_stage` frames."""
+        entry = self._read_manifest()["stages"][stage]
+        key = (stage, kind)
+        with self._lock:
+            hit = self._facts.get(key)
+        if hit is not None and hit[0] == entry.get("committed_at"):
+            return hit[1]
+        value = build(entry)
+        with self._lock:
+            self._facts[key] = (entry.get("committed_at"), value)
+        return value
+
+    def _paths(self, entry: dict, stage: str) -> list:
+        """Absolute paths of the non-empty files of a stage entry."""
+        root = os.path.abspath(self.stage_path(stage))
+        return [os.path.join(root, p["file"])
+                for p in entry["partitions"] if p["rows"]]
+
+    def stage_files(self, stage: str) -> list:
+        """``(absolute path, salt_lo, salt_hi)`` of each non-empty file of
+        a committed stage — the driver-side file index a salted query
+        task selects its reads from. The ranges come from the manifest; a
+        manifest written before commits recorded them reads the footers
+        once per handle. A file without salt statistics spans every
+        salt, so a reader never misses its rows."""
+        def build(entry: dict) -> list:
+            import pyarrow.parquet as pq
+
+            def salt_range(path: str, part: dict) -> tuple:
+                rng = part.get("salt")
+                if rng is None:
+                    bounds = _footer_facts(pq.ParquetFile(path).metadata)[1]
+                    rng = bounds.get("salt", (0, 2**31 - 1))
+                return (path, int(rng[0]), int(rng[1]))
+
+            parts = [p for p in entry["partitions"] if p["rows"]]
+            return [salt_range(path, part) for path, part
+                    in zip(self._paths(entry, stage), parts)]
+
+        return self._memo(stage, "files", build)
+
+    def lookup(self, stage: str, column: str, keys, columns: list) -> list:
+        """The rows (dicts of ``columns``) of a committed stage whose
+        ``column`` is in ``keys``, read on the driver with pyarrow — no
+        Spark job. Only the row groups whose ``column`` min/max brackets
+        a key are read (the term dictionary is sorted by term within each
+        file); the footers and row-group bounds are kept per
+        ``committed_at``."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        def build(entry: dict) -> list:
+            out = []  # (path, footer, [(row group, min or None, max)])
+            for path in self._paths(entry, stage):
+                md = pq.ParquetFile(path).metadata
+                col = md.schema.names.index(column)
+                bounds = []
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(col).statistics
+                    ok = st is not None and st.has_min_max
+                    bounds.append((g, st.min if ok else None,
+                                   st.max if ok else None))
+                out.append((path, md, bounds))
+            return out
+
+        wanted = sorted(set(keys))
+        rows: list = []
+        for path, md, bounds in self._memo(stage, f"rg:{column}", build):
+            hit = [g for g, lo, hi in bounds
+                   if lo is None or (bisect.bisect_left(wanted, lo)
+                                     < bisect.bisect_right(wanted, hi))]
+            if hit:
+                t = pq.ParquetFile(path, metadata=md).read_row_groups(
+                    hit, columns=columns)
+                rows += t.filter(pc.is_in(
+                    t[column], value_set=pa.array(wanted))).to_pylist()
+        return rows
 
     def lineage(self) -> dict:
         return self._read_manifest()

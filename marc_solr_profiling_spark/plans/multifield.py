@@ -59,27 +59,20 @@ class MultiFieldIndex(InvertedIndex):
         self.n_docs = max((n for n, _ in self.field_stats.values()),
                           default=0)
 
-    def _rescaled_segments(self, store: IndexStore) -> DataFrame:
+    def _cap_scales(self, store: IndexStore) -> dict:
         """Per-FIELD cap rescaling under corpus drift (the single-field
         argument, applied per field since each field has its own avgdl):
-        scale_f = max(1, avgdl_now_f / avgdl_built_f), selected by the
-        term-key's field prefix."""
-        seg = store.read_stage(self.spark, "segments")
+        ``{field: avgdl_now_f / avgdl_built_f}`` for the fields whose
+        ratio exceeds 1; a key's field is its prefix before ``sep``."""
         built = store.get_meta().get("built_field_avgdl") or {
             r["field"]: r["avgdl"]
             for r in store.stage_rows("stats")}
-        fld = F.substring_index(F.col("term"), self.sep, 1)
-        scale_expr = None
+        scales = {}
         for fname, (_, avgdl_now) in self.field_stats.items():
             s = avgdl_now / max(float(built.get(fname, avgdl_now)), 1e-12)
             if s > 1.0:
-                case = (fld == fname, F.lit(s))
-                scale_expr = (F.when(*case) if scale_expr is None
-                              else scale_expr.when(*case))
-        if scale_expr is None:
-            return seg
-        return seg.withColumn(
-            "max_wnorm", F.col("max_wnorm") * scale_expr.otherwise(1.0))
+                scales[fname] = s
+        return scales
 
     def _kind_meta(self) -> dict:
         return {"fields": self.fields, "field_sep": self.sep,

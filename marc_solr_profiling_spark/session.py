@@ -44,6 +44,7 @@ def get_spark(
     shuffle partition is ~128-512 MB (set explicitly via extra_conf).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    resolved = master
     if master is None:
         # the embedded-vs-remote split (SolrCoreLoader.java:26,160 /
         # MarcImporter.java:553-650 analog): under spark-submit the cluster
@@ -51,8 +52,10 @@ def get_spark(
         # (the "embedded" path) falls back to local[N]
         from pyspark import SparkConf
 
-        if not SparkConf().contains("spark.master"):
+        conf = SparkConf()
+        if not conf.contains("spark.master"):
             master = f"local[{cpus}]"
+        resolved = conf.get("spark.master", master)
     if shuffle_partitions is None:
         # local[N] → N; local[*]/cluster → leave a sane floor
         shuffle_partitions = cpus
@@ -107,6 +110,18 @@ def get_spark(
             "InferFiltersFromGenerate",
         )
     )
+    if (resolved or "").startswith("local"):
+        # local workers share this file system: they start from the
+        # engine daemon (pydaemon.py — pyspark's daemon, minus a re-read of
+        # pyspark.zip's directory on every task), found through this
+        # package's root on their path
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder
+            .config("spark.python.daemon.module",
+                    "marc_solr_profiling_spark.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", root)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -5,20 +5,35 @@ index-only facets must equal the composition of the public operators
 ``facet_match_counts``) for both index kinds over a 3-generation chain
 with tombstones, both with the tombstones riding the scan and with them
 applied physically (the chain optimized); a request on an open handle
-stays within three Spark jobs; stage reads are resolved once per store;
-requests leave no cached block behind."""
+stays within three Spark jobs (one, with no exchange, once the handle is
+warm); stage reads are resolved once per store; requests leave no cached
+block behind. The salted pass answers the same for every salt-range
+width, over stages whose files span many salts and over manifests that
+do not record salt ranges; an append by internal id refuses a chain
+whose ids are no longer the keys."""
 
+import json
+import os
 import shutil
 import tempfile
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 import pytest
 from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.functions.analyzer import ANALYZERS
 from marc_solr_profiling_spark.operators.wand import (
+    _topk_pass,
+    explain_topk_phys,
     facet_match_counts,
+    grouped_topk_phys,
     matching_doc_ids,
+    resolve_plan,
+    select_pass,
     wand_topk,
+    wand_topk_batch,
 )
 from marc_solr_profiling_spark.plans.build import build_index, open_index
 from marc_solr_profiling_spark.plans.generations import (
@@ -225,7 +240,34 @@ def test_absent_term_topk_runs_only_the_dictionary_lookup(spark, chains):
     ids, names = _jobs_in_group(
         spark, lambda: wand_topk(idx, "zzqqxxabsent").collect(),
         "absent-topk")
+    # the lookup reads the dictionary files on the driver: no job
+    assert len(ids) == 0, names
+
+
+def test_warm_request_and_topk_are_one_job_without_exchange(spark, chains):
+    idx = open_index(spark, chains["single"].store.path)
+
+    def request(q):
+        resp = solr_select_physical(idx, None, q, fq=["lang:en"],
+                                    rows=10, facet_fields=["lang"])
+        resp.docs.collect()
+        resp.facets.collect()
+
+    request("window stream")
+    ids, names = _jobs_in_group(spark, lambda: request(Q), "select-1job")
     assert len(ids) == 1, names
+    ids, names = _jobs_in_group(
+        spark, lambda: wand_topk(idx, Q, with_url=False).collect(),
+        "topk-1job")
+    assert len(ids) == 1, names
+    plan = resolve_plan(idx, Q, filter_queries=["lang:en"])
+    physical = _topk_pass(idx, plan, 10)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Exchange" not in physical and "Scan parquet" not in physical
+    # explain: one top-k pass collected once, one pass for its term rows
+    ids, names = _jobs_in_group(
+        spark, lambda: explain_topk_phys(idx, Q, k=5).collect(), "explain")
+    assert len(ids) == 2, names
 
 
 def test_multifield_match_all_facets(spark, chains, docs):
@@ -278,6 +320,9 @@ def test_requests_release_what_they_persist(spark, chains, docs):
     before = len(sc._jsc.sc().getRDDStorageInfo())
     requests()  # a leak of any of the six shapes would add a block
     assert len(sc._jsc.sc().getRDDStorageInfo()) == before
+    for q in ("spark merge", "window stream"):  # distinct grouped requests
+        assert grouped_topk_phys(idx, q, "lang").collect()
+    assert len(sc._jsc.sc().getRDDStorageInfo()) == before
 
 
 def test_stage_reads_resolve_once_and_follow_recommits(spark, tmp_path):
@@ -311,3 +356,164 @@ def test_recommitted_index_reopens_with_new_files(spark, docs, tmp_path):
     assert reopened.n_docs == 200
     assert (reopened.docs.count() == 200
             and first.store.read_stage(spark, "docs").count() == 200)
+
+
+def _rounded(rows):
+    """Float fields rounded to 9 places: a task's salts are scored in an
+    order that moves float sums by a few ulp."""
+    return [tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+            for r in rows]
+
+
+def _answers(idx, kind):
+    """Every collector's answer over ``idx``, in comparable form."""
+    qf = QF if kind == "multi" else None
+    groups = _groups(idx, Q) if qf else None
+    sp = select_pass(idx, Q, 10, filter_queries=["lang:en"],
+                     facet_fields=FACETS, qf=qf,
+                     round_to=4 if qf else None)
+    out = {
+        "select": (sp.num_found, sp.doc_ids.tolist(),
+                   _rounded([sp.scores.tolist()]),
+                   sorted(sp.facet_counts.items())),
+        "topk": _rounded(wand_topk(
+            idx, Q, k=10, with_url=False, qf=qf, round_to=4).collect()),
+        "match": sorted(r[0] for r in matching_doc_ids(
+            idx, Q, filter_queries=["lang:en"],
+            term_groups=groups).collect()),
+        "facets": sorted(tuple(r) for r in facet_match_counts(
+            idx, Q, facet_fields=FACETS, term_groups=groups).collect()),
+        "facets_all": sorted(tuple(r) for r in facet_match_counts(
+            idx, None, facet_fields=FACETS).collect()),
+    }
+    if kind == "single":
+        queries = [Q, "merge", "stream window", "zzqqxxabsent spark"]
+        for mode in ("dense", "sparse"):
+            out[mode] = _rounded(wand_topk_batch(
+                idx, queries, k=5, mode=mode).collect())
+        out["explain"] = sorted(_rounded(explain_topk_phys(
+            idx, Q, k=5).collect()))
+    return out
+
+
+def _with_salt_partitions(spark, n, fn):
+    key = "spark.marc.saltPartitions"
+    if n is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, str(n))
+    try:
+        return fn()
+    finally:
+        spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("kind", ["single", "multi"])
+def test_pass_answers_the_same_for_every_salt_range_width(spark, chains,
+                                                          kind):
+    idx = open_index(spark, chains[kind].store.path)
+    want = _answers(idx, kind)
+    assert want["select"][0] > 10 and len(want["topk"]) == 10
+    for n in (1, 3, idx.n_salts):
+        got = _with_salt_partitions(spark, n, lambda: _answers(idx, kind))
+        assert got == want, n
+
+
+def _copy_chain(old_head, new_root):
+    """Copy every store of a chain under ``new_root`` (parents rewired);
+    returns the new store paths, head first."""
+    paths = [st.path for st in old_head.stores]
+    new = [os.path.join(new_root, os.path.basename(p)) for p in paths]
+    for p, q in zip(paths, new):
+        shutil.copytree(p, q)
+        with open(os.path.join(q, "manifest.json")) as f:
+            m = json.load(f)
+        parent = m.get("meta", {}).get("parent")
+        if parent:
+            m["meta"]["parent"] = new[paths.index(parent)]
+        with open(os.path.join(q, "manifest.json"), "w") as f:
+            json.dump(m, f)
+    return new
+
+
+def _rewrite_as_one_file(store_path, stage):
+    """Rewrite a stage as ONE file holding every salt, rows ordered by
+    term so the salts interleave; its manifest entry records no salt
+    range (a footer read finds it)."""
+    mpath = os.path.join(store_path, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    entry = m["stages"][stage]
+    sdir = os.path.join(store_path, stage)
+    table = pa.concat_tables(
+        [pq.read_table(os.path.join(sdir, p["file"]))
+         for p in entry["partitions"]]).sort_by("term")
+    for p in entry["partitions"]:
+        os.remove(os.path.join(sdir, p["file"]))
+    name = "part-00000-onefile.parquet"
+    pq.write_table(table, os.path.join(sdir, name))
+    entry["partitions"] = [{"partition": 0, "file": name,
+                            "rows": table.num_rows,
+                            "bytes": os.path.getsize(os.path.join(sdir,
+                                                                  name))}]
+    entry["committed_at"] = entry["committed_at"] + 1.0
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    return len(set(table.column("salt").to_pylist()))
+
+
+@pytest.mark.parametrize("kind", ["single", "multi"])
+def test_pass_reads_unclustered_files_and_rangeless_manifests(
+        spark, chains, kind, tmp_path):
+    """Completeness never rests on the one-salt-per-file layout: the
+    base's segments and filters rewritten as one file each, every other
+    manifest stripped of its salt ranges — the chain answers as before."""
+    chain = chains[kind]
+    want = _answers(open_index(spark, chain.store.path), kind)
+    paths = _copy_chain(chain, str(tmp_path / "copy"))
+    for stage in ("segments", "filters"):
+        assert _rewrite_as_one_file(paths[-1], stage) == chain.n_salts
+    for p in paths[:-1]:
+        mpath = os.path.join(p, "manifest.json")
+        with open(mpath) as f:
+            m = json.load(f)
+        for entry in m["stages"].values():
+            for part in entry["partitions"]:
+                part.pop("salt", None)
+        with open(mpath, "w") as f:
+            json.dump(m, f)
+    copy = open_index(spark, paths[0])
+    base = copy.stores[-1]
+    assert [f[1:] for f in base.stage_files("segments")] == [
+        (0, chain.n_salts - 1)]
+    # footers give the stripped head's del_segments files their own salts
+    assert all(lo == hi for _, lo, hi in copy.store.stage_files(
+        "del_segments"))
+    for n in (None, 3):
+        got = _with_salt_partitions(spark, n, lambda: _answers(copy, kind))
+        assert got == want, n
+
+
+def test_append_by_internal_id_refuses_a_chain_with_fresh_ids(
+        spark, docs, tmp_path):
+    """The reproduction chain: base keys 0-299 with id = key; keys
+    290-359 appended (ten upserts: their fresh ids 300-369 are not their
+    keys); then deleting keys = 2 mod 16 below 340 by ``doc_id`` would
+    tombstone the docs whose IDS are those numbers — refused."""
+    kw = dict(key_col="doc_id", id_col="doc_id", chain="simple",
+              n_salts=4, block_size=32)
+    base = build_index(spark, docs.filter(F.col("doc_id") < 300),
+                       str(tmp_path / "base"), **kw)
+    g1 = append_delta(
+        spark, base, str(tmp_path / "g1"), key_col="doc_id",
+        delta_docs=docs.filter((F.col("doc_id") >= 290)
+                               & (F.col("doc_id") < 360)))
+    assert g1.store.get_meta()["fresh_ids"] is True
+    assert g1.n_docs == 360
+    with pytest.raises(ValueError, match="fresh ids"):
+        append_delta(
+            spark, g1, str(tmp_path / "g2"), key_col="doc_id",
+            delete_keys=docs.filter((F.col("doc_id") % 16 == 2)
+                                    & (F.col("doc_id") < 340)
+                                    ).select("doc_id"))
+    assert not os.path.exists(str(tmp_path / "g2"))
