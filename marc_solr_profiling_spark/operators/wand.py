@@ -1641,11 +1641,9 @@ def elevate_topk_phys(
     matched-postings scan as an include-set; request-metadata-sized),
     the remainder from the ordinary block-max top-(k+|elevated|). The
     component is a post-scoring sort-key rewrite, exactly like the
-    logical :func:`..bm25.elevate_topk`."""
-    spark = index.spark
+    logical :func:`..bm25.elevate_topk`. Both passes are request-sized,
+    so they are collected and ordered on the driver: two jobs, no join."""
     ids = [int(x) for x in elevate_ids]
-    edf = spark.createDataFrame(
-        [(i, p) for p, i in enumerate(ids)], "doc_id long, elev_pos int")
     es = wand_topk(index, query, k=max(len(ids), 1), with_url=False,
                    restrict_ids=ids)
     rest = wand_topk(index, query, k=int(k) + len(ids), with_url=False)
@@ -1654,24 +1652,15 @@ def elevate_topk_phys(
                        F.round("score", int(round_to)).alias("score"))
         rest = rest.select("doc_id",
                            F.round("score", int(round_to)).alias("score"))
-    elev = edf.join(es, "doc_id", "left" if force else "inner")
-    rest = rest.join(F.broadcast(edf.select("doc_id")), "doc_id",
-                     "left_anti").withColumn(
-        "elev_pos", F.lit(None).cast("int"))
-    allr = elev.select("doc_id", "score", "elev_pos").unionByName(
-        rest.select("doc_id", "score", "elev_pos"))
-    return (
-        allr.orderBy(
-            F.when(F.col("elev_pos").isNotNull(), F.lit(0))
-            .otherwise(F.lit(1)),
-            F.asc_nulls_last("elev_pos"),
-            F.desc_nulls_last("score"),
-            F.asc("doc_id"),
-        )
-        .limit(int(k))
-        .select("doc_id", "score",
-                F.col("elev_pos").isNotNull().alias("elevated"))
-    )
+    scored = {r["doc_id"]: r["score"] for r in es.collect()}
+    # elevate.xml order first, then the rest by (score desc, doc_id asc)
+    out = [(i, scored.get(i), True) for i in ids if force or i in scored]
+    pinned = set(ids)
+    out += sorted(((r["doc_id"], r["score"], False)
+                   for r in rest.collect() if r["doc_id"] not in pinned),
+                  key=lambda t: (-t[1], t[0]))
+    return local_frame(index.spark, out[: int(k)],
+                       "doc_id long, score double, elevated boolean")
 
 
 def explain_topk_phys(
@@ -1753,33 +1742,37 @@ def cluster_topk_phys(
     ``clustering`` searchComponent — Carrot2 reads the hit documents'
     term vectors and index stats, never re-analyzes text): the WAND
     top-``k`` winners' packed tf rows are point-read from the
-    doc_id-sorted tf stage, each doc is labeled by its most salient
+    doc_id-sorted tf stages, each doc is labeled by its most salient
     non-query term (``tf * ln(N/df)``, df from the dictionary, ties by
     term asc). Returns ``(doc_id, label, salience)`` — value-identical
-    to the logical :func:`..bm25.cluster_topk`."""
-    from pyspark.sql import Window
+    to the logical :func:`..bm25.cluster_topk`.
 
+    One job, the top-k pass: the winners' tf rows and their terms' df
+    are row-group-pruned driver reads (``IndexStore.lookup``; the
+    winners are live, so no tombstone mask), and the salience is a
+    projection of a local frame, which Spark folds without a job."""
+    spark = index.spark
     qterms = set(_analyze_query(query, index.chain))
-    top = wand_topk(index, query, k=k, with_url=False).select("doc_id")
-    cand = (
-        index.live_tf().join(F.broadcast(top), "doc_id")
-        .select("doc_id",
-                F.explode(F.arrays_zip("terms", "tfs")).alias("z"))
-        .select("doc_id", F.col("z.terms").alias("term"),
-                F.col("z.tfs").alias("tf"))
-        .filter(~F.col("term").isin(*sorted(qterms)))
-        .join(index.cached_dictionary().select("term", "df"), "term")
-        .withColumn(
-            "salience",
-            F.col("tf") * F.log(F.lit(float(index.n_docs)) / F.col("df")))
-    )
+    top = [r["doc_id"] for r in
+           wand_topk(index, query, k=k, with_url=False).collect()]
+    postings = [(r["doc_id"], t, f) for st in index.stores
+                for r in st.lookup("tf", "doc_id", top,
+                                   ["doc_id", "terms", "tfs"])
+                for t, f in zip(r["terms"], r["tfs"]) if t not in qterms]
+    df_of = {r["term"]: r["df"] for r in index.store.lookup(
+        "dictionary", "term", {t for _, t, _ in postings}, ["term", "df"])}
+    salience = F.col("tf") * F.log(F.lit(float(index.n_docs)) / F.col("df"))
     if round_to is not None:
-        cand = cand.withColumn(
-            "salience", F.round("salience", int(round_to)))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("salience"), F.asc("term"))
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", F.col("term").alias("label"), "salience")
-    )
+        salience = F.round(salience, int(round_to))
+    cand = local_frame(
+        spark, [(d, t, f, df_of[t]) for d, t, f in postings if t in df_of],
+        "doc_id long, term string, tf long, df long",
+    ).select("doc_id", "term", salience.alias("salience")).collect()
+    best: dict = {}
+    for r in cand:
+        cur = best.get(r["doc_id"])
+        if cur is None or (-r["salience"], r["term"]) < (-cur[1], cur[0]):
+            best[r["doc_id"]] = (r["term"], r["salience"])
+    return local_frame(
+        spark, [(d, t, sal) for d, (t, sal) in best.items()],
+        "doc_id long, label string, salience double")

@@ -177,9 +177,9 @@ class InvertedIndex:
     The chain walk, readers and tombstone masks serve every index kind.
     What differs per kind — stats loading, block-max cap rescaling, and
     the few lifecycle hooks the generation code calls (``_tokenize``,
-    ``_doc_rows``, ``_tf_totals``, ``_adjusted_stats``,
+    ``_delta_facts``, ``_removed_totals``, ``_adjusted_stats``,
     ``_build_segments``, ``_kind_meta``, ``_built_meta``, and the
-    ``_stats_schema``) — is overridden by
+    ``_stats_schema``, ``_tf_facts`` and ``_doc_cols``) — is overridden by
     ``plans/multifield.py MultiFieldIndex``.
     """
 
@@ -342,21 +342,28 @@ class InvertedIndex:
             html_col=html_col, positions=self.has_positions,
         )
 
-    def _doc_rows(self, tf: DataFrame) -> DataFrame:
-        """The docs-stage rows of a tf stage (one packed row per doc)."""
-        return tf.select("doc_id", "doc_len")
-
     _stats_schema = STATS_SCHEMA
+    # the per-row columns of a delta's committed tf that the driver reads
+    # back, and the docs-stage columns beside the external key
+    _tf_facts = ("doc_id", "doc_len")
+    _doc_cols = ("doc_id", "doc_len")
 
-    def _tf_totals(self, tf: DataFrame) -> dict:
-        """``{None: (rows, Σ doc_len)}`` of packed tf rows (one job)."""
-        r = tf.agg(F.count("*").alias("n"),
-                   F.sum("doc_len").alias("t")).collect()[0]
-        return {None: (int(r["n"]), int(r["t"] or 0))}
+    def _delta_facts(self, facts) -> tuple:
+        """(docs-stage rows without the key, ``{None: (rows, Σ doc_len)}``)
+        of a delta's tf facts (a pandas frame of ``_tf_facts``; one packed
+        row per doc) — driver arithmetic, no job."""
+        return facts, {None: (len(facts), int(facts["doc_len"].sum()))}
+
+    def _removed_totals(self, dead: list, removed_tf) -> dict:
+        """``{None: (docs, Σ doc_len)}`` of the tombstoned docs, from
+        their docs rows (dicts of ``_doc_cols``) — no job."""
+        if not dead:
+            return {}
+        return {None: (len(dead), sum(int(r["doc_len"]) for r in dead))}
 
     def _adjusted_stats(self, add: dict, removed: dict) -> list:
-        """This index's stats row plus the delta's ``_tf_totals`` minus
-        the tombstoned docs' — driver arithmetic, no job."""
+        """This index's stats row plus the delta's totals minus the
+        tombstoned docs' — driver arithmetic, no job."""
         n_add, t_add = add.get(None, (0, 0))
         n_rm, t_rm = removed.get(None, (0, 0))
         n_docs = self.n_docs - n_rm + n_add

@@ -23,9 +23,10 @@ postings, so this module adds the model Lucene/Solr actually use under
 One lifecycle serves both index kinds — the single-field
 ``InvertedIndex`` (``plans/build.py``) and the multi-field (edismax)
 ``MultiFieldIndex`` (``plans/multifield.py``). They differ only where the
-data differs (how a delta is tokenized, the shape of the stats stage,
-the avgdl segments are built at, the manifest meta), and the handle's
-lifecycle hooks (``_tokenize``, ``_doc_rows``, ``_tf_totals``,
+data differs (how a delta is tokenized, which per-doc facts its tf and
+docs stages carry, the shape of the stats stage, the avgdl segments are
+built at, the manifest meta), and the handle's lifecycle hooks
+(``_tokenize``, ``_delta_facts``, ``_removed_totals``,
 ``_adjusted_stats``, ``_build_segments``, ``_kind_meta``,
 ``_built_meta``) carry exactly those differences; every function here
 returns a handle of the same kind it was given.
@@ -42,18 +43,26 @@ Why scores stay exact (the rank-identity contract vs a full rebuild):
   (excluded docs never score, never raise theta — pruning stays exact);
 - stats (n_docs/avgdl, per field for the multi-field kind) and df/cf
   are re-derived EXACTLY at append time: parent values minus the
-  tombstoned docs' contributions (read from the compact packed tf rows
-  of the chain — a broadcast semi-join, no re-tokenization) plus the
-  delta's; stale block-max caps of old generations are scaled by
-  ``avgdl_now / avgdl_built`` at read time (an upper bound on the weight
-  growth), so pruning remains sound under corpus drift.
+  tombstoned docs' contributions (their docs rows' lengths and their
+  compact packed tf rows, read through a pushed-down ``doc_id`` filter —
+  no re-tokenization) plus the delta's; stale block-max caps of old
+  generations are scaled by ``avgdl_now / avgdl_built`` at read time (an
+  upper bound on the weight growth), so pruning remains sound under
+  corpus drift.
 
-Scale shape of one append: tokenize |delta| docs, shuffle |delta|
-packed rows into delta segments, one broadcast semi-join of the chain tf
-against the tombstone ids (column-pruned compact rows), one
-dictionary-sized outer join for the adjustment. Nothing proportional to
-corpus POSTINGS moves. The dictionary join is the largest term —
-O(vocab) — the same cost Lucene pays writing a merged term dictionary.
+Scale shape of one append: ONE job collects the delta's
+``(key, warc_ts, row hash)`` and the delete keys; in-batch dedup, the
+deletes-win rule and id assignment are then driver arithmetic. The
+driver holds only the sets an append used to broadcast: the delta and
+delete keys, the head's cumulative delete ids, and per-doc scalars of
+those docs (their ids and lengths). Tombstones are looked up in each
+generation's doc_id-sorted ``docs`` stage with pyarrow (ids follow key
+order, so row groups prune) — no job. Term-level work stays in Spark:
+one analyzed pass tokenizes |delta| docs, the delta segments shuffle
+|delta| packed rows, and one dictionary-sized outer join adjusts df/cf.
+Nothing proportional to corpus POSTINGS moves. The dictionary join is
+the largest term — O(vocab) — the same cost Lucene pays writing a
+merged term dictionary.
 """
 
 from __future__ import annotations
@@ -66,11 +75,16 @@ from ..session import local_frame
 from .build import (
     InvertedIndex,
     _filter_packed,
-    assign_doc_ids,
     run_concurrently,
     union_by_name,
 )
 from .lineage import IndexStore, config_fingerprint
+
+# Delta docs per task of the analyzed pass: a delta below this tokenizes
+# in one task and writes one tf file (a file per input partition left a
+# 6-doc generation several tiny tf files, and a larger index); a larger
+# one spreads over up to ``defaultParallelism`` tasks.
+_DOCS_PER_DELTA_TASK = 2048
 
 
 def _guard_out_path(index, out_path: str) -> None:
@@ -99,8 +113,8 @@ def _dels_packed(dels_df: DataFrame) -> DataFrame:
     deleted doc id posts once under the reserved ``DEL_TERM`` — fed to
     the ordinary segment builder so the delete set shares the salt
     layout, block format and scan path of the scored postings. Kernels
-    then decode ONLY their salt's delete ids (per-segment liveDocs; no
-    driver-side collect at any delete-set size)."""
+    then decode ONLY their salt's delete ids (per-segment liveDocs: no
+    query collects the delete set)."""
     from ..operators.segments import DEL_TERM
 
     return dels_df.select(
@@ -111,26 +125,48 @@ def _dels_packed(dels_df: DataFrame) -> DataFrame:
     )
 
 
-def _commit_del_segments(store, dels_df, n_salts: int,
-                         block_size: int) -> None:
+def _deleted_ids(store: IndexStore) -> list:
+    """A store's cumulative tombstoned ids, read on the driver (no job)."""
+    if not store.stage_complete("deletes"):
+        return []
+    return store.stage_table("deletes", ["doc_id"]).column(
+        "doc_id").to_pylist()
+
+
+def _commit_deletes(spark: SparkSession, store: IndexStore, ids: list,
+                    n_salts: int, block_size: int) -> None:
+    """Commit the driver-held cumulative delete set as the ``deletes``
+    stage and its per-salt ``del_segments`` postings, concurrently from
+    one driver frame; an empty set commits neither (readers then see a
+    delete-free head)."""
+    if not ids:
+        return
+    frame = local_frame(spark, [(i,) for i in sorted(ids)],
+                        "doc_id long").coalesce(1)
+    branches = []
+    if not store.stage_complete("deletes"):
+        branches.append(lambda: store.commit_stage(
+            "deletes", frame, partition_sort=["doc_id"]))
     if not store.stage_complete("del_segments"):
-        store.commit_stage("del_segments", build_segments_packed(
-            _dels_packed(dels_df), avgdl=1.0, n_salts=n_salts,
-            block_size=block_size))
+        branches.append(lambda: store.commit_stage(
+            "del_segments", build_segments_packed(
+                _dels_packed(frame), avgdl=1.0, n_salts=n_salts,
+                block_size=block_size)))
+    run_concurrently(spark, *branches)
 
 
-def _rebuild_filters_minus(fout: DataFrame, applied: DataFrame,
+def _rebuild_filters_minus(fout: DataFrame, applied: list,
                            n_salts: int, block_size: int) -> DataFrame:
     """Filter postings minus physically-applied tombstones: decode →
-    anti-join → re-segment (O(filter postings), the shape of the merge
+    filter → re-segment (O(filter postings), the shape of the merge
     itself). Needed because facet counters (``wand.py
     facet_match_counts``) COUNT filter postings directly — once a merge
     drops applied ids from the carried delete set, stale filter rows
     would silently inflate match-all facet counts and fq numFound."""
     from ..operators.segments import decode_segment_doc_ids
 
-    live = decode_segment_doc_ids(fout).join(
-        F.broadcast(applied.select("doc_id")), "doc_id", "left_anti")
+    live = decode_segment_doc_ids(fout).filter(
+        ~F.col("doc_id").isin(applied))
     packed = (
         live.groupBy("doc_id")
         .agg(F.collect_list("term").alias("terms"))
@@ -141,34 +177,140 @@ def _rebuild_filters_minus(fout: DataFrame, applied: DataFrame,
         packed, avgdl=1.0, n_salts=n_salts, block_size=block_size)
 
 
-def _dedup_delta(delta_docs: DataFrame, key_col: str) -> DataFrame:
-    """One live row per key within a delta batch (the reference merger's
-    one-record-per-id contract, ``MarcMerger.java`` min ⋈ merge loop):
-    two same-key rows in one batch would BOTH get fresh doc ids while
-    only the pre-batch id is tombstoned, breaking upsert-by-key
-    uniqueness until some later append. Latest ``warc_ts`` wins when the
-    column is present (re-crawled page semantics); remaining ties go to
-    the smallest hash of the whole row, so the survivor never depends on
-    how the delta is partitioned."""
-    from pyspark.sql import Window
-
-    order = [F.xxhash64(*delta_docs.columns)]
-    if "warc_ts" in delta_docs.columns:
-        order.insert(0, F.desc_nulls_last("warc_ts"))
-    w = Window.partitionBy(key_col).orderBy(*order)
-    return (delta_docs
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+def _better(ts, h, best_ts, best_h) -> bool:
+    """Whether a delta row beats the key's best so far: the latest
+    ``warc_ts`` wins (nulls last), then the smallest row hash."""
+    if ts != best_ts:
+        return best_ts is None or (ts is not None and ts > best_ts)
+    return h < best_h
 
 
-def _key_expr(df: DataFrame, key_col: str):
-    if key_col not in df.columns:
-        raise ValueError(
-            f"append_delta needs the external key column {key_col!r} in the "
-            f"docs stage (build the base with key_col={key_col!r}"
-            ", id_col=None); got columns " + str(df.columns)
-        )
-    return F.col(key_col)
+def _resolve_delta(delta_docs: DataFrame | None,
+                   delete_keys: DataFrame | None, key_col: str,
+                   first_id: int) -> tuple:
+    """Learn the delta in ONE Spark job and resolve it on the driver.
+
+    Collects ``(key, warc_ts, xxhash64(row))`` of ``delta_docs`` and the
+    delete keys together, then:
+
+    - deletes WIN over same-batch upserts — the reference applies the
+      .del file AFTER the import pass (``MarcImporter.java:348-416`` runs
+      deleteRecords after importRecords), so a key in both never
+      survives;
+    - one row per key survives (the reference merger's one-record-per-id
+      contract, ``MarcMerger.java`` min ⋈ merge loop: two same-key rows
+      would BOTH get fresh ids while only the pre-batch id is
+      tombstoned): the latest ``warc_ts`` (re-crawled page semantics,
+      nulls last), then the smallest hash of the whole row, so the
+      survivor never depends on how the delta is partitioned;
+    - the survivors get ids ``first_id + rank`` in key order (doc id
+      ascending == key ascending, nulls first: id tie-breaks equal key
+      tie-breaks, as in a full build).
+
+    Returns ``(ids, delete keys, dups)``: ``ids`` maps each surviving
+    ``(key, row hash)`` to its doc id in key order; ``dups`` says some
+    survivor has exact copies in the batch (one doc must still come of
+    them)."""
+    parts = []
+    key_type = ts_type = None
+    if delta_docs is not None:
+        key_type = delta_docs.schema[key_col].dataType
+        ts = (F.col("warc_ts") if "warc_ts" in delta_docs.columns
+              else F.lit(None).cast("timestamp"))
+        parts.append(delta_docs.select(
+            F.col(key_col).alias("k"), ts.alias("ts"),
+            F.xxhash64(*delta_docs.columns).alias("h"),
+            F.lit(False).alias("d")))
+        ts_type = parts[0].schema["ts"].dataType
+    if delete_keys is not None:
+        k = F.col(delete_keys.columns[0])
+        parts.append(delete_keys.select(
+            (k if key_type is None else k.cast(key_type)).alias("k"),
+            F.lit(None).cast(ts_type or "timestamp").alias("ts"),
+            F.lit(None).cast("long").alias("h"), F.lit(True).alias("d")))
+    rows = union_by_name(parts).collect() if parts else []
+
+    deleted = {r["k"] for r in rows if r["d"] and r["k"] is not None}
+    best: dict = {}  # key -> [warc_ts, row hash, copies]
+    for r in rows:
+        k = r["k"]
+        if r["d"] or k in deleted:
+            continue
+        cur = best.get(k)
+        if cur is None or _better(r["ts"], r["h"], cur[0], cur[1]):
+            best[k] = [r["ts"], r["h"], 1]
+        elif (r["ts"], r["h"]) == (cur[0], cur[1]):
+            cur[2] += 1
+    order = sorted(best, key=lambda k: (k is not None, k))
+    ids = {(k, best[k][1]): first_id + i for i, k in enumerate(order)}
+    dups = any(c > 1 for _, _, c in best.values())
+    return ids, deleted, dups
+
+
+def _with_ids(spark: SparkSession, delta_docs: DataFrame, cols: list,
+              key_col: str, ids: dict, dups: bool) -> DataFrame:
+    """The surviving delta rows (``cols``) with their driver-assigned
+    ``doc_id``: a ``mapInPandas`` carrying the ``(key, row hash) → id``
+    map in its closure keeps each survivor once — no window, sort or
+    join. A small delta runs in one task (one tf file); a large one over
+    up to ``defaultParallelism`` tasks, shuffled by key when its input
+    has fewer partitions. Exact copies of a survivor meet in one task
+    (hash-partitioned by key), which keeps the first."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    rows = delta_docs.select(*cols, F.xxhash64(*delta_docs.columns)
+                             .alias("_h"))
+    tasks = max(1, min(spark.sparkContext.defaultParallelism,
+                       -(-len(ids) // _DOCS_PER_DELTA_TASK)))
+    if dups or (tasks > 1 and rows.rdd.getNumPartitions() < tasks):
+        rows = rows.repartition(tasks, key_col)
+    else:
+        rows = rows.coalesce(tasks)
+    drop = ["_h", "doc_id"]  # a doc_id key is replaced by the fresh id
+    schema = StructType(
+        [f for f in rows.schema.fields if f.name not in drop]
+        + [StructField("doc_id", LongType(), False)])
+
+    def assign(batches):
+        seen: set = set()
+        for pdf in batches:
+            keys = pdf[key_col].astype(object).where(
+                pdf[key_col].notna(), None).tolist()
+            keep, out_ids = [], []
+            for kh in zip(keys, pdf["_h"].tolist()):
+                i = ids.get(kh)
+                fresh = i is not None and i not in seen
+                keep.append(fresh)
+                if fresh:
+                    seen.add(i)
+                    out_ids.append(i)
+            out = pdf.loc[keep].drop(columns=[c for c in drop
+                                              if c in pdf.columns])
+            out["doc_id"] = np.asarray(out_ids, dtype=np.int64)
+            yield out
+
+    return rows.mapInPandas(assign, schema)
+
+
+def _tombstones(index: InvertedIndex, key_col: str, keys: set,
+                deleted: set) -> dict:
+    """The live docs of ``keys``, found on the driver with no job: each
+    generation's docs-stage rows of the keys (``IndexStore.lookup`` reads
+    only the row groups whose key range brackets one — ids follow key
+    order, so they prune), minus the ``deleted`` ids. Returns
+    ``{store: [row, ...]}`` of the generations holding any, each row a
+    dict of ``doc_id``, the key and the kind's per-doc columns."""
+    if not keys:
+        return {}
+    cols = list(dict.fromkeys([*index._doc_cols, key_col]))
+    found = {}
+    for st in index.stores:
+        rows = [r for r in st.lookup("docs", key_col, keys, cols)
+                if r["doc_id"] not in deleted]
+        if rows:
+            found[st] = rows
+    return found
 
 
 def _has_fresh_ids(index: InvertedIndex) -> bool:
@@ -177,16 +319,14 @@ def _has_fresh_ids(index: InvertedIndex) -> bool:
     return any(st.get_meta().get("fresh_ids") for st in index.stores)
 
 
-def _next_doc_id(spark: SparkSession, index: InvertedIndex) -> int:
-    """First doc id of a new generation: above every id that any
-    generation's docs stage holds, tombstoned rows included (reusing
-    their ids would overlap block ranges across generations and break
-    the kernel invariant). Each docs stage's manifest entry records its
-    ``doc_id_max`` from the parquet footers, so this is driver
-    arithmetic; a chain with a store whose manifest predates that key
-    runs the max aggregation instead."""
-    entries = [st.lineage()["stages"].get("docs", {})
-               for st in index.stores]
+def _next_doc_id(spark: SparkSession, stores: list) -> int:
+    """First doc id above every id that any of ``stores``' docs stages
+    holds, tombstoned rows included (reusing their ids would overlap
+    block ranges across generations and break the kernel invariant).
+    Each docs stage's manifest entry records its ``doc_id_max`` from the
+    parquet footers, so this is driver arithmetic; a chain with a store
+    whose manifest predates that key runs the max aggregation instead."""
+    entries = [st.lineage()["stages"].get("docs", {}) for st in stores]
     if all("doc_id_max" in e for e in entries):
         maxes = [e["doc_id_max"] for e in entries
                  if e["doc_id_max"] is not None]
@@ -194,7 +334,7 @@ def _next_doc_id(spark: SparkSession, index: InvertedIndex) -> int:
     else:
         max_id = union_by_name(
             [st.read_stage(spark, "docs").select("doc_id")
-             for st in index.stores]).agg(F.max("doc_id")).collect()[0][0]
+             for st in stores]).agg(F.max("doc_id")).collect()[0][0]
     return 0 if max_id is None else int(max_id) + 1
 
 
@@ -246,12 +386,17 @@ def append_delta(
     stage commit is manifest-gated, so a killed append resumes from its
     last committed stage without re-tokenizing.
 
-    The commits run as a small DAG (:func:`plans.build.run_concurrently`):
-    {tombstones → ``deletes`` → ``del_segments``} beside {doc ids →
-    {``tf`` → ``docs``} ∥ {``filters``}}; then the stats by driver
-    arithmetic; then {``stats``}, {``segments``} and {``dictionary``}
-    side by side. The delta and the delete keys are persisted once and
-    released on return.
+    The DAG: one job learns the delta (:func:`_resolve_delta`: dedup,
+    deletes-win and ids on the driver) and the tombstones are looked up
+    on the driver (:func:`_tombstones`); then, side by side, {``tf``
+    (the one analyzed pass) → its per-doc ids and lengths read back on
+    the driver → {``docs``, ``stats``, ``segments``, ``dictionary``}},
+    {``filters``} and {``deletes``, ``del_segments``} (from one driver
+    frame; neither is committed when the chain has no tombstone). The
+    driver holds the delta and delete keys, the head's delete ids and
+    per-doc scalars of those docs — the sets the shuffle-based append
+    broadcast — never terms. No window, range shuffle, broadcast join or
+    persist.
     """
     _guard_out_path(index, out_path)
     if key_col == "doc_id" and _has_fresh_ids(index):
@@ -274,163 +419,99 @@ def append_delta(
                 f"base index carries filter postings for {filter_cols}; "
                 f"delta_docs lacks column(s) {missing} — fq over the "
                 "chain would silently miss the new generation")
+    docs_schema = index.store.read_stage(spark, "docs").schema
+    for st in index.stores:
+        cols = st.read_stage(spark, "docs").columns
+        if key_col not in cols:
+            raise ValueError(
+                f"append_delta needs the external key column {key_col!r} "
+                f"in the docs stage (build the base with key_col="
+                f"{key_col!r}, id_col=None); got columns {cols}")
 
-    persisted: list = []
-    try:
-        def keep(df: DataFrame) -> DataFrame:
-            cached = df.persist()
-            persisted.append(cached)
-            return cached
+    first_id = _next_doc_id(spark, index.stores)
+    ids, del_keys, dups = _resolve_delta(delta_docs, delete_keys, key_col,
+                                         first_id)
+    # does this generation give docs ids that are not their keys?
+    # (key_col='doc_id': only when its keys are not exactly the fresh
+    # ids first_id, first_id + 1, ...; upserts never are)
+    keys = [k for k, _ in ids]  # key order
+    fresh_ids = bool(keys) and (key_col != "doc_id" or (keys[0], keys[-1])
+                                != (first_id, first_id + len(keys) - 1))
 
-        del_keys = None
-        if delete_keys is not None:
-            del_keys = keep(delete_keys.select(
-                F.col(delete_keys.columns[0]).alias(key_col)).distinct())
-        if delta_docs is not None:
-            if del_keys is not None:
-                # deletes WIN over same-batch upserts — the reference
-                # applies the .del file AFTER the import pass
-                # (MarcImporter.java:348-416 runs deleteRecords after
-                # importRecords), so a key in both never survives
-                delta_docs = delta_docs.join(
-                    F.broadcast(del_keys), key_col, "left_anti")
-            delta_docs = keep(_dedup_delta(delta_docs, key_col))
-        # does this generation give docs ids that are not their keys?
-        # (key_col='doc_id': only when its keys are not exactly the fresh
-        # ids next_id, next_id + 1, ...; upserts never are)
-        fresh_ids = delta_docs is not None
-        if fresh_ids and key_col == "doc_id":
-            r = delta_docs.agg(F.min(key_col).alias("lo"),
-                               F.max(key_col).alias("hi"),
-                               F.count("*").alias("n")).collect()[0]
-            first = _next_doc_id(spark, index)
-            fresh_ids = r["n"] > 0 and (r["lo"], r["hi"]) != (
-                first, first + r["n"] - 1)
+    store = IndexStore(out_path)
+    store.set_fingerprint(config_fingerprint({
+        "parent": index.store.path,
+        "chain": chain,
+        "n_salts": n_salts,
+        "block_size": block_size,
+        "key_col": key_col,
+        "version": 1,
+        **index._kind_meta(),
+    }))
+    need = {st: not store.stage_complete(st)
+            for st in ("tf", "docs", "stats", "segments", "dictionary",
+                       "filters")}
+    need["filters"] = need["filters"] and bool(filter_cols)
 
-        store = IndexStore(out_path)
-        store.set_fingerprint(config_fingerprint({
-            "parent": index.store.path,
-            "chain": chain,
-            "n_salts": n_salts,
-            "block_size": block_size,
-            "key_col": key_col,
-            "version": 1,
-            **index._kind_meta(),
-        }))
-        need_stats = not store.stage_complete("stats")
-        need_dictionary = not store.stage_complete("dictionary")
+    # ---- tombstones: old ids of the deleted and upserted keys ---------
+    deleted = set(_deleted_ids(index.store))
+    tomb = _tombstones(
+        index, key_col, {k for k in keys if k is not None} | del_keys,
+        deleted)
+    dead = [r for rows in tomb.values() for r in rows]
+    dead_ids = sorted(r["doc_id"] for r in dead)
+    removed_tf = None
+    if dead and (need["stats"] or need["dictionary"]):
+        # the tombstoned docs' compact packed rows, from the generations
+        # holding them, through a pushed-down doc_id filter
+        removed_tf = union_by_name(
+            [st.read_stage(spark, "tf").drop("pos") for st in tomb]
+        ).filter(F.col("doc_id").isin(dead_ids))
 
-        # ---- branch: tombstones (old ids of deleted + upserted keys) ----
-        live = index.docs  # chain union minus current deletes
-        _key_expr(live, key_col)
-        keys = del_keys
-        if delta_docs is not None:
-            dk = delta_docs.select(F.col(key_col))
-            keys = dk if keys is None else keys.union(dk)
-        old_dels = index.deletes_df()
+    # ---- the analyzed pass over the surviving delta rows --------------
+    with_ids = None
+    if ids and (need["tf"] or need["filters"]):
+        cols = list(dict.fromkeys(
+            [key_col, text_col] + ([html_col] if html_col else [])
+            + filter_cols))
+        with_ids = _with_ids(spark, delta_docs, cols, key_col, ids, dups)
 
-        def tombstone_branch() -> tuple:
-            """(tombstoned docs' tf rows or None, their ``_tf_totals``)."""
-            tombstones = None
-            if keys is not None:
-                # the delta is driver-small relative to the corpus by
-                # definition of an increment; broadcast it against the docs
-                # table (compact columns only) — the Lucene analog resolves
-                # each delete term against the term dictionary, same
-                # O(|delta|) probe shape
-                tombstones = keep(live.join(
-                    F.broadcast(keys.distinct()), key_col).select("doc_id"))
-            # cumulative deletes stage (ids-only; reclaimed by
-            # merge_generations)
-            new_dels = tombstones
-            if old_dels is not None:
-                new_dels = old_dels.select("doc_id")
-                if tombstones is not None:
-                    new_dels = new_dels.union(tombstones).distinct()
-            if new_dels is not None:
-                if not store.stage_complete("deletes"):
-                    store.commit_stage("deletes", new_dels,
-                                       partition_sort=["doc_id"])
-                # index-resident tombstone postings (per-salt liveDocs):
-                # every query pass reads these in its salted scan
-                _commit_del_segments(store, store.read_stage(spark, "deletes"),
-                                     n_salts, block_size)
-            if tombstones is None or not (need_stats or need_dictionary):
-                return None, {}
-            # the tombstoned docs' tf rows: their removed stats and per-term
-            # (df, cf) contributions, read from the chain's COMPACT packed
-            # rows (docs stages are doc_id-sorted so row-group min/max prunes
-            # most of the scan at scale) — never a re-tokenize
-            chain_tf = union_by_name(
-                [st.read_stage(spark, "tf").drop("pos")
-                 for st in index.stores])
-            removed_tf = keep(chain_tf.join(F.broadcast(tombstones), "doc_id"))
-            return removed_tf, (index._tf_totals(removed_tf) if need_stats
-                                else {})
+    def empty(stage: str) -> DataFrame:
+        # a generation with no docs still commits (empty) tf/docs/filters
+        # stages so chain unions stay uniform
+        return index.store.read_stage(spark, stage).limit(0)
 
-        # ---- branch: delta ingest, fresh ids ABOVE every ancestor's max -
-        def delta_branch() -> tuple:
-            """(the committed delta tf stage, its ``_tf_totals``)."""
-            if delta_docs is None:
-                # a pure-delete generation still needs (empty) tf/docs/filters
-                # stages so chain unions stay uniform
-                empty = ("tf", "docs") + (("filters",) if filter_cols
-                                          else ())
-                for st in empty:
-                    if not store.stage_complete(st):
-                        store.commit_stage(
-                            st, index.store.read_stage(spark, st).limit(0))
-                return store.read_stage(spark, "tf"), {}
-            need_tf = not store.stage_complete("tf")
-            need_docs = not store.stage_complete("docs")
-            need_filters = bool(filter_cols) and not store.stage_complete(
-                "filters")
-            with_ids = None
-            if need_tf or need_filters or (need_docs
-                                           and key_col != "doc_id"):
-                cols = ([key_col, text_col] + ([html_col] if html_col else [])
-                        + filter_cols)
-                with_ids = assign_doc_ids(
-                    delta_docs.select(*dict.fromkeys(cols)), key_col=key_col,
-                    _persist_handle=persisted,
-                ).withColumn("doc_id", F.col("doc_id")
-                             + F.lit(_next_doc_id(spark, index)))
+    def commit_tf() -> None:
+        if need["tf"]:
+            store.commit_stage("tf", index._tokenize(
+                with_ids, text_col, html_col) if ids else empty("tf"))
 
-            def tf_then_docs():
-                if need_tf:
-                    # persisted: a cached plan keeps its un-coalesced shuffle
-                    # partitioning, which fixes the tf stage's file layout
-                    store.commit_stage("tf", keep(
-                        index._tokenize(with_ids, text_col, html_col)))
-                tf_stage = store.read_stage(spark, "tf")
-                if need_docs:
-                    doc_tbl = index._doc_rows(tf_stage)
-                    if key_col != "doc_id":
-                        doc_tbl = doc_tbl.join(
-                            with_ids.select("doc_id", key_col), "doc_id")
-                    store.commit_stage("docs", doc_tbl,
-                                       partition_sort=["doc_id"])
-                return tf_stage
+    def removed_totals() -> dict:
+        return index._removed_totals(dead, removed_tf) if need["stats"] \
+            else {}
 
-            def filters():
-                # fq bitsets for the delta generation (chain fq needs every
-                # generation's stage)
-                store.commit_stage("filters", build_segments_packed(
-                    _filter_packed(with_ids, filter_cols), avgdl=1.0,
-                    n_salts=n_salts, block_size=block_size))
+    def ingest() -> list:
+        removed = run_concurrently(spark, commit_tf, removed_totals)[1]
+        tf_stage = store.read_stage(spark, "tf")
+        # the delta's per-doc facts: the committed tf's ids and lengths,
+        # read on the driver
+        facts = store.stage_table("tf", list(index._tf_facts)).to_pandas()
+        doc_rows, added = index._delta_facts(facts)
+        if sorted(doc_rows["doc_id"]) != sorted(ids.values()):
+            raise RuntimeError(
+                "the committed delta tf does not hold exactly the ids "
+                "assigned to the delta — is delta_docs deterministic?")
+        stats_rows = (index._adjusted_stats(added, removed) if need["stats"]
+                      else store.stage_rows("stats"))
 
-            tf_stage = run_concurrently(
-                spark, tf_then_docs, *([filters] if need_filters else []))[0]
-            return tf_stage, (index._tf_totals(tf_stage) if need_stats else {})
-
-        (tf_stage, added), (removed_tf, removed) = run_concurrently(
-            spark, delta_branch, tombstone_branch)
-
-        # ---- exactly-adjusted global stats: driver arithmetic -----------
-        if need_stats:
-            stats_rows = index._adjusted_stats(added, removed)
-        else:
-            stats_rows = store.stage_rows("stats")
+        def commit_docs():
+            rows = doc_rows
+            if key_col != "doc_id":
+                key_of = {i: k for (k, _), i in ids.items()}
+                rows = rows.assign(**{key_col: rows["doc_id"].map(key_of)})
+            store.commit_stage("docs", local_frame(
+                spark, rows.sort_values("doc_id"), docs_schema
+            ).coalesce(1), partition_sort=["doc_id"])
 
         def commit_stats():
             store.commit_stage("stats", local_frame(
@@ -449,23 +530,38 @@ def append_delta(
                 partition_sort=["term"])
 
         run_concurrently(spark, *[
-            fn for fn, need in ((commit_stats, need_stats),
-                                (commit_segments,
-                                 not store.stage_complete("segments")),
-                                (commit_dictionary, need_dictionary))
-            if need])
+            fn for fn, st in ((commit_docs, "docs"), (commit_stats, "stats"),
+                              (commit_segments, "segments"),
+                              (commit_dictionary, "dictionary"))
+            if need[st]])
 
-        store.set_meta({
-            "parent": index.store.path,
-            "n_salts": n_salts, "chain": chain, "block_size": block_size,
-            "key_col": key_col, "filter_cols": filter_cols,
-            "generation": len(index.stores), "fresh_ids": fresh_ids,
-            **index._kind_meta(), **index._built_meta(stats_rows),
-        })
-        return type(index)(store, spark, chain)
-    finally:
-        for cached in persisted:
-            cached.unpersist()
+        return stats_rows
+
+    def filters() -> None:
+        # fq bitsets for the delta generation (chain fq needs every
+        # generation's stage)
+        store.commit_stage("filters", build_segments_packed(
+            _filter_packed(with_ids, filter_cols), avgdl=1.0,
+            n_salts=n_salts, block_size=block_size)
+            if ids else empty("filters"))
+
+    def deletes() -> None:
+        # the cumulative delete set (ids only; reclaimed by
+        # merge_generations) and its index-resident postings
+        _commit_deletes(spark, store, deleted | set(dead_ids), n_salts,
+                        block_size)
+
+    stats_rows = run_concurrently(
+        spark, ingest, deletes, *([filters] if need["filters"] else []))[0]
+
+    store.set_meta({
+        "parent": index.store.path,
+        "n_salts": n_salts, "chain": chain, "block_size": block_size,
+        "key_col": key_col, "filter_cols": filter_cols,
+        "generation": len(index.stores), "fresh_ids": fresh_ids,
+        **index._kind_meta(), **index._built_meta(stats_rows),
+    })
+    return type(index)(store, spark, chain)
 
 
 def merge_generations(
@@ -490,11 +586,15 @@ def merge_generations(
     deletes: their compact tf rows are unioned (never re-tokenized),
     tombstones falling inside them applied physically (and dropped from
     the carried delete set), and one salted shuffle rebuilds their
-    segments with caps tight at the current stats. Stats/dictionary are
-    copied — a merge does not change the live corpus, so the adjusted
-    values are already correct. The commits run as concurrent branches:
-    {``tf`` → ``segments``}, {``docs``, ``stats``, ``dictionary``},
-    {``deletes`` → ``del_segments``} and {``filters``}.
+    segments with caps tight at the current stats. Ids are append-only,
+    so a tombstone above the kept generations' largest id lives in a
+    merged one: the split of the head's delete ids (read on the driver)
+    into applied and carried is arithmetic, and the applied ones leave
+    through a ``doc_id`` filter. Stats/dictionary are copied — a merge
+    does not change the live corpus, so the adjusted values are already
+    correct. The commits run as concurrent branches: {``tf`` →
+    ``segments``}, {``docs``, ``stats``, ``dictionary``}, {``deletes``,
+    ``del_segments``} and {``filters``}.
     """
     chain_len = len(index.stores)
     if keep < 0 or keep >= chain_len:
@@ -517,30 +617,17 @@ def merge_generations(
     merged_docs = union_by_name(
         [st.read_stage(spark, "docs") for st in merged_stores])
 
-    dels = index.deletes_df()
-    carried = None
-    applied = None
-    if dels is not None:
-        # split tombstones: ids living in a MERGED generation get applied
-        # physically here; ids in a KEPT ancestor stay in the delete set
-        merged_ids = merged_docs.select("doc_id")
-        applied = dels.join(merged_ids, "doc_id", "left_semi").persist()
-        carried = dels.join(merged_ids, "doc_id", "left_anti")
-        if applied.limit(1).count() == 0:
-            applied.unpersist()
-            applied = None
-        else:
-            merged_tf = merged_tf.join(
-                F.broadcast(applied), "doc_id", "left_anti")
-            merged_docs = merged_docs.join(
-                F.broadcast(applied), "doc_id", "left_anti")
-        if keep == 0 or carried.limit(1).count() == 0:
-            carried = None
-
-    def deletes():
-        store.commit_stage("deletes", carried, partition_sort=["doc_id"])
-        _commit_del_segments(
-            store, store.read_stage(spark, "deletes"), n_salts, bs)
+    # split tombstones: ids living in a MERGED generation get applied
+    # physically here; ids in a KEPT ancestor stay in the delete set
+    kept_max = (_next_doc_id(spark, index.stores[chain_len - keep:]) - 1
+                if keep else -1)
+    dels = _deleted_ids(index.store)
+    applied = [i for i in dels if i > kept_max]
+    carried = [i for i in dels if i <= kept_max]
+    if applied:
+        live = ~F.col("doc_id").isin(applied)
+        merged_tf = merged_tf.filter(live)
+        merged_docs = merged_docs.filter(live)
 
     def tf_then_segments():
         store.commit_stage("tf", merged_tf)
@@ -562,23 +649,18 @@ def merge_generations(
         # double-count its rows otherwise). Block re-layout is unneeded
         # for the fq gate, but the facet counters COUNT these postings
         # directly, so rows of the applied docs must leave them too
-        # (decode → anti-join → re-segment, O(merged filter postings))
+        # (decode → filter → re-segment, O(merged filter postings))
         fout = union_by_name(
             [st.read_stage(spark, "filters") for st in merged_stores])
-        if applied is not None:
+        if applied:
             fout = _rebuild_filters_minus(fout, applied, n_salts, bs)
         store.commit_stage("filters", fout)
 
-    branches = [tf_then_segments, docs_stats_dictionary]
-    if carried is not None:
-        branches.append(deletes)
+    branches = [tf_then_segments, docs_stats_dictionary,
+                lambda: _commit_deletes(spark, store, carried, n_salts, bs)]
     if all(st.stage_complete("filters") for st in merged_stores):
         branches.append(filters)
-    try:
-        run_concurrently(spark, *branches)
-    finally:
-        if applied is not None:
-            applied.unpersist()
+    run_concurrently(spark, *branches)
 
     store.set_meta({
         "parent": parent,

@@ -242,18 +242,26 @@ class IndexStore:
             self._frames[stage] = (*key, df)
         return df
 
-    def stage_rows(self, stage: str) -> list:
-        """A driver-sized committed stage (the stats rows) as a list of
-        ``Row``, like ``read_stage(...).collect()`` but read from its
-        parquet files on the driver — no Spark job."""
+    def stage_table(self, stage: str, columns: list | None = None):
+        """``columns`` (default: all) of a committed stage as one pyarrow
+        table, read from its parquet files on the driver — no Spark job.
+        For driver-sized reads: the stats rows, a delta generation's
+        per-doc ids and lengths, a delete set."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql import Row
 
         entry = self._read_manifest()["stages"][stage]
-        return [Row(**r)
-                for part in entry["partitions"]
-                for r in pq.read_table(os.path.join(
-                    self.stage_path(stage), part["file"])).to_pylist()]
+        return pa.concat_tables([
+            pq.read_table(os.path.join(self.stage_path(stage), p["file"]),
+                          columns=columns)
+            for p in entry["partitions"]])
+
+    def stage_rows(self, stage: str) -> list:
+        """A driver-sized committed stage (the stats rows) as a list of
+        ``Row``, like ``read_stage(...).collect()`` — no Spark job."""
+        from pyspark.sql import Row
+
+        return [Row(**r) for r in self.stage_table(stage).to_pylist()]
 
     def _memo(self, stage: str, kind: str, build):
         """``build(entry)`` of a committed stage's manifest entry, kept
@@ -334,8 +342,8 @@ class IndexStore:
             if hit:
                 t = pq.ParquetFile(path, metadata=md).read_row_groups(
                     hit, columns=columns)
-                rows += t.filter(pc.is_in(
-                    t[column], value_set=pa.array(wanted))).to_pylist()
+                rows += t.filter(pc.is_in(t[column], value_set=pa.array(
+                    wanted, type=t.schema.field(column).type))).to_pylist()
         return rows
 
     def lineage(self) -> dict:

@@ -88,16 +88,25 @@ class MultiFieldIndex(InvertedIndex):
             key_col="doc_id", text_col=text_col, chain=self.chain,
             sep=self.sep)
 
-    def _doc_rows(self, tf: DataFrame) -> DataFrame:
-        # one packed row per doc within any single field
-        return tf.filter(F.col("field") == self.fields[0]).select("doc_id")
-
     _stats_schema = ("field string, n_docs long, avgdl double,"
                      " total_tokens long")
+    # one packed tf row per (doc, field); the docs stage has no lengths
+    _tf_facts = ("doc_id", "field", "doc_len")
+    _doc_cols = ("doc_id",)
 
-    def _tf_totals(self, tf: DataFrame) -> dict:
+    def _delta_facts(self, facts) -> tuple:
+        # one packed row per doc within any single field
+        totals = {f: (len(g), int(g["doc_len"].sum()))
+                  for f, g in facts.groupby("field")}
+        return facts.loc[facts["field"] == self.fields[0], ["doc_id"]], totals
+
+    def _removed_totals(self, dead: list, removed_tf) -> dict:
+        # the docs stage holds no per-field lengths: one aggregation of
+        # the tombstoned docs' tf rows
+        if not dead:
+            return {}
         return {r["field"]: (int(r["n"]), int(r["t"] or 0))
-                for r in tf.groupBy("field").agg(
+                for r in removed_tf.groupBy("field").agg(
                     F.count("*").alias("n"),
                     F.sum("doc_len").alias("t")).collect()}
 

@@ -1,7 +1,8 @@
 """The commit DAG of a build and an append (plans/build.py
 run_concurrently, plans/generations.py append_delta): commit threads
-inherit the caller's job group, an append and a searcher commit stay
-within a fixed job budget and never infer a parquet schema, a committed
+inherit the caller's job group, an append, a searcher commit and a
+tiered merge stay within a fixed job budget, neither an append nor a
+commit infers a parquet schema, a committed
 stage reads back with no Spark job, and a chain whose manifests lack the
 recorded schema and doc-id max (as stores written before those keys
 existed) still opens, appends and ranks identically."""
@@ -22,19 +23,25 @@ from marc_solr_profiling_spark.corpus import (
 from marc_solr_profiling_spark.operators.resultcache import SearcherManager
 from marc_solr_profiling_spark.operators.wand import wand_topk
 from marc_solr_profiling_spark.plans.build import build_index, open_index
-from marc_solr_profiling_spark.plans.generations import append_delta
+from marc_solr_profiling_spark.plans.generations import (
+    append_delta,
+    merge_generations,
+)
 from marc_solr_profiling_spark.plans.lineage import IndexStore
 
 BASE = 120
 NEW = 4           # new docs per append, plus one upsert and one delete
 QUERIES = ["the of and", "time new said", "revised"]
-# the most Spark jobs measured for one such append (42-44 over repeated
-# runs on a 4-core host; the count moves with which concurrent branch
-# first materializes a shared cache) and for a searcher commit (open +
-# autowarm one key: 4); the serial commit chain ran 55 (gen 1) and 59
-# (gen 2) appends
-APPEND_JOBS = 44
+# the Spark jobs measured for one such append (14 on 4- and 8-core
+# sessions: the delta collect, the tf pass, the docs, stats and deletes
+# writes, and the filters, del_segments, segments and dictionary
+# commits with their exchanges; the append resolved through shuffles,
+# windows and broadcasts ran 42-44), for a searcher commit (open +
+# autowarm one key: 4) and for the keep=1 merge of the two generations
+# (10; 17 with the probe jobs and broadcast anti-joins)
+APPEND_JOBS = 14
 COMMIT_JOBS = 4
+MERGE_JOBS = 10
 
 
 @pytest.fixture(scope="module")
@@ -122,6 +129,8 @@ def chain(spark, workdir, rows):
             _, ids = _jobs(spark, f"dag-commit{g}", lambda: sm.commit(idx))
             out["commit_jobs"].append(ids)
         out["inferred"] = list(reads.paths)
+    _, out["merge_jobs"] = _jobs(spark, "dag-merge", lambda: merge_generations(
+        spark, idx, f"{workdir}/chain/merged", keep=1))
     out["ungrouped_before"] = before
     out["ungrouped_after"] = max(st.getJobIdsForGroup(None), default=-1)
     out["head"] = idx
@@ -151,6 +160,12 @@ def test_append_and_commit_job_budget(chain):
     commits = [len(ids) for ids in chain["commit_jobs"]]
     assert max(commits) <= COMMIT_JOBS, commits
     assert chain["inferred"] == []
+
+
+def test_merge_job_budget(chain):
+    """The keep=1 merge of the two appended generations stays within the
+    measured job count."""
+    assert len(chain["merge_jobs"]) <= MERGE_JOBS, chain["merge_jobs"]
 
 
 def _strip(head_path, old_root, new_root):

@@ -579,3 +579,200 @@ def test_append_dedups_same_key_within_delta(spark, workdir, docs):
                             for w in ("elderberry", "feijoa")))
     assert len(survivors) == 1
     assert sorted(survivors.pop()) == [0, 1]
+
+
+def _url_of(docs):
+    return {int(r["url"].rsplit("/", 1)[1]): r["url"]
+            for r in docs.select("url").collect()}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_append_resolves_keys_on_the_driver(spark, workdir, docs, kind,
+                                            monkeypatch):
+    """The driver-side resolution of a delta, against a rebuild of the
+    live corpus: a key upserted AND deleted in one batch is gone (deletes
+    win); an upsert of an already-tombstoned key brings it back; a null
+    ``warc_ts`` loses to a set one; exact copies of a row, even in
+    different partitions, give one doc; and replaying a batch on the
+    same head, partitioned differently and analyzed over several tasks,
+    gives identical ids."""
+    n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
+    url = _url_of(docs)
+    schema = "url string, text string, warc_ts timestamp"
+    idx0 = _build(spark, kind, docs.filter(n < 120),
+                  f"{workdir}/drv_base_{kind}")
+    delta1 = docs.filter((n >= 120) & (n < 130)).unionByName(
+        spark.createDataFrame(
+            [(url[3], "doomed upsert nectarine"),
+             (url[7], "fresh content papaya")], "url string, text string"))
+    idx1 = append_delta(
+        spark, idx0, f"{workdir}/drv_g1_{kind}", delta_docs=delta1,
+        delete_keys=spark.createDataFrame([(url[3],), (url[5],)],
+                                          "url string"), key_col="url")
+    import datetime
+
+    ts = datetime.datetime(2024, 6, 1)
+    delta2 = spark.createDataFrame(
+        [(url[5], "resurrected zucchini text", None),
+         (url[9], "stale ocelot words", None),
+         (url[9], "fresh quokka words", ts),
+         (url[13], "twin persimmon text", ts),
+         (url[13], "twin persimmon text", ts)], schema)
+    idx2 = append_delta(spark, idx1, f"{workdir}/drv_g2_{kind}",
+                        delta_docs=delta2, key_col="url")
+
+    keys = [r["url"] for r in idx2.docs.select("url").collect()]
+    assert url[3] not in keys
+    assert all(keys.count(url[i]) == 1 for i in (5, 7, 9, 13))
+    assert len(keys) == len(set(keys)) == 129
+    mods = spark.createDataFrame(
+        [(url[5], "resurrected zucchini text"),
+         (url[7], "fresh content papaya"),
+         (url[9], "fresh quokka words"),
+         (url[13], "twin persimmon text")], "url string, text string")
+    ref = _build(spark, kind, _live(docs.filter(n < 130), {url[3]}, mods),
+                 f"{workdir}/drv_ref_{kind}")
+    assert idx2.n_docs == ref.n_docs
+    got_d = {r["term"]: (r["df"], r["cf"])
+             for r in idx2.dictionary.collect()}
+    assert got_d == {r["term"]: (r["df"], r["cf"])
+                     for r in ref.dictionary.collect()}
+    _assert_same_results(idx2, ref,
+                         QUERIES + ["quokka", "ocelot", "zucchini"])
+
+    from marc_solr_profiling_spark.plans import generations
+
+    monkeypatch.setattr(generations, "_DOCS_PER_DELTA_TASK", 1)
+    replay = append_delta(spark, idx1, f"{workdir}/drv_g2r_{kind}",
+                          delta_docs=delta2.repartition(3), key_col="url")
+    for st in ("docs", "stats", "dictionary"):
+        assert (sorted(map(tuple, replay.store.read_stage(spark,
+                                                          st).collect()))
+                == sorted(map(tuple, idx2.store.read_stage(spark,
+                                                           st).collect()))
+                ), st
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_append_keyed_by_internal_id(spark, workdir, docs, kind):
+    """``key_col="doc_id"``: a delta whose keys are exactly the next ids
+    keeps them as its ids (no ``fresh_ids``), and deletes by id then hit
+    the right documents — equal to a rebuild of the live set."""
+    n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
+    numbered = docs.withColumn("doc_id", n)
+    kw = dict(key_col="doc_id", id_col="doc_id", chain="text", n_salts=4,
+              block_size=32)
+
+    def build(df, path):
+        if kind == "single":
+            return build_index(spark, df, path, **kw)
+        return build_multifield_index(spark, df, path, fields=FIELDS, **kw)
+
+    idx0 = build(numbered.filter(n < 100), f"{workdir}/iid_base_{kind}")
+    idx1 = append_delta(
+        spark, idx0, f"{workdir}/iid_g1_{kind}", key_col="doc_id",
+        delta_docs=numbered.filter((n >= 100) & (n < 120)),
+        delete_keys=spark.createDataFrame([(3,), (50,)], "doc_id long"))
+    assert idx1.store.get_meta()["fresh_ids"] is False
+    idx2 = append_delta(
+        spark, idx1, f"{workdir}/iid_g2_{kind}", key_col="doc_id",
+        delete_keys=spark.createDataFrame([(110,)], "doc_id long"))
+    live = numbered.filter((n < 120) & ~n.isin(3, 50, 110))
+    ref = build(live, f"{workdir}/iid_ref_{kind}")
+    assert (sorted(r["doc_id"] for r in idx2.docs.collect())
+            == sorted(r["doc_id"] for r in live.select("doc_id").collect()))
+    for q in QUERIES:
+        kw_q = dict(qf=QF, tie=0.1) if kind == "multi" else {}
+        got, want = (
+            [(r["doc_id"], round(r["score"], 9)) for r in wand_topk(
+                ix, q, k=10, with_url=False, **kw_q).collect()]
+            for ix in (idx2, ref))
+        assert got == want, q
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_append_on_a_base_whose_ids_are_not_key_ordered(spark, workdir,
+                                                         docs, kind):
+    """A base built with ``id_col`` holds docs in id order, not key
+    order, so the driver's key lookups prune fewer row groups — and
+    still find every key: upserts and deletes by url stay exact."""
+    n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
+    url = _url_of(docs)
+    shuffled = docs.withColumn("rid", (n * 37) % 263)  # a permutation
+    kw = dict(key_col="url", id_col="rid", chain="text", n_salts=4,
+              block_size=32)
+    base_docs = shuffled.filter(n < 200)
+    if kind == "single":
+        idx0 = build_index(spark, base_docs, f"{workdir}/uo_base_{kind}",
+                           **kw)
+    else:
+        idx0 = build_multifield_index(
+            spark, base_docs, f"{workdir}/uo_base_{kind}", fields=FIELDS,
+            **kw)
+    mods = docs.filter(n.isin(4, 77, 150)).withColumn(
+        "text", F.concat(F.lit("fresh content entirely "), F.col("text")))
+    dead = {url[i] for i in (8, 121, 199)}
+    idx1 = append_delta(
+        spark, idx0, f"{workdir}/uo_g1_{kind}", key_col="url",
+        delta_docs=docs.filter(n >= 200).unionByName(mods),
+        delete_keys=spark.createDataFrame([(u,) for u in dead],
+                                          "url string"))
+    assert idx1.n_deletes() == 6
+    ref = _build(spark, kind, _live(docs, dead, mods),
+                 f"{workdir}/uo_ref_{kind}")
+    assert idx1.n_docs == ref.n_docs
+    _assert_same_results(idx1, ref)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_append_that_tombstones_nothing_commits_no_delete_stages(
+        spark, workdir, docs, kind):
+    """New keys only, on a chain without deletes: the generation commits
+    no (empty) ``deletes`` or ``del_segments`` stage, its head reports
+    no tombstones, and it serves what a rebuild serves."""
+    n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
+    idx0 = _build(spark, kind, docs.filter(n < 150),
+                  f"{workdir}/nt_base_{kind}")
+    idx1 = append_delta(
+        spark, idx0, f"{workdir}/nt_g1_{kind}", key_col="url",
+        delta_docs=docs.filter((n >= 150) & (n < 170)),
+        delete_keys=spark.createDataFrame([("http://absent.example/",)],
+                                          "url string"))
+    for st in ("deletes", "del_segments"):
+        assert not idx1.store.stage_complete(st), st
+    assert idx1.n_deletes() == 0
+    assert idx1.del_postings() is None
+    ref = _build(spark, kind, docs.filter(n < 170),
+                 f"{workdir}/nt_ref_{kind}")
+    _assert_same_results(idx1, ref)
+
+
+def test_positional_chain_upsert_and_delete(spark, workdir, docs):
+    """A positional chain resolved on the driver: an upserted doc's old
+    positions leave with its tombstone, its new text serves phrases, and
+    phrase results equal a positional rebuild of the live set."""
+    n = F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long")
+    url = _url_of(docs)
+    kw = dict(key_col="url", chain="text", n_salts=4, block_size=32,
+              positions=True)
+    idx0 = build_index(spark, docs.filter(n < 150), f"{workdir}/pu_base",
+                       **kw)
+    hit = phrase_topk(idx0, "of the", k=1, with_url=True).collect()
+    assert hit, "corpus must contain the probe phrase"
+    victim = hit[0]["url"]
+    mods = spark.createDataFrame(
+        [(victim, "rewritten page of the harbour"),
+         (url[2], "another harbour of the coast")], "url string, text string")
+    idx1 = append_delta(
+        spark, idx0, f"{workdir}/pu_g1", key_col="url",
+        delta_docs=docs.filter((n >= 150) & (n < 170)).unionByName(mods),
+        delete_keys=spark.createDataFrame([(url[6],)], "url string"))
+    ref = build_index(
+        spark, _live(docs.filter(n < 170), {url[6]}, mods),
+        f"{workdir}/pu_ref", **kw)
+    for q in ("of the", "harbour of the"):
+        got, want = (
+            {(r["url"], round(r["score"], 9)) for r in phrase_topk(
+                ix, q, k=20, with_url=True).collect()}
+            for ix in (idx1, ref))
+        assert got == want, q

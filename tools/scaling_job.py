@@ -1,7 +1,8 @@
 """One level of the equal-window scaling measurement (protocol v4).
 
 Launched by tools/scaling_bench.py, one process per parallelism level,
-each pinned (taskset) to a disjoint core set, ALL levels concurrent.
+each pinned (taskset) to a disjoint core set, the levels of one group
+concurrent.
 The level warms up (one full build + one query batch), reports ready,
 then loops the measured job back-to-back inside two coordinator-defined
 wall windows (build window, then query window), recording each rep's
