@@ -179,7 +179,7 @@ class InvertedIndex:
     the few lifecycle hooks the generation code calls (``_tokenize``,
     ``_delta_facts``, ``_removed_totals``, ``_adjusted_stats``,
     ``_build_segments``, ``_kind_meta``, ``_built_meta``, and the
-    ``_stats_schema``, ``_tf_facts`` and ``_doc_cols``) — is overridden by
+    ``_stats_schema`` and ``_tf_facts``) — is overridden by
     ``plans/multifield.py MultiFieldIndex``.
     """
 
@@ -344,9 +344,8 @@ class InvertedIndex:
 
     _stats_schema = STATS_SCHEMA
     # the per-row columns of a delta's committed tf that the driver reads
-    # back, and the docs-stage columns beside the external key
+    # back
     _tf_facts = ("doc_id", "doc_len")
-    _doc_cols = ("doc_id", "doc_len")
 
     def _delta_facts(self, facts) -> tuple:
         """(docs-stage rows without the key, ``{None: (rows, Σ doc_len)}``)
@@ -356,7 +355,7 @@ class InvertedIndex:
 
     def _removed_totals(self, dead: list, removed_tf) -> dict:
         """``{None: (docs, Σ doc_len)}`` of the tombstoned docs, from
-        their docs rows (dicts of ``_doc_cols``) — no job."""
+        their docs-stage rows (dicts with ``doc_len``) — no job."""
         if not dead:
             return {}
         return {None: (len(dead), sum(int(r["doc_len"]) for r in dead))}

@@ -56,13 +56,18 @@ deletes-win rule and id assignment are then driver arithmetic. The
 driver holds only the sets an append used to broadcast: the delta and
 delete keys, the head's cumulative delete ids, and per-doc scalars of
 those docs (their ids and lengths). Tombstones are looked up in each
-generation's doc_id-sorted ``docs`` stage with pyarrow (ids follow key
-order, so row groups prune) — no job. Term-level work stays in Spark:
-one analyzed pass tokenizes |delta| docs, the delta segments shuffle
-|delta| packed rows, and one dictionary-sized outer join adjusts df/cf.
-Nothing proportional to corpus POSTINGS moves. The dictionary join is
-the largest term — O(vocab) — the same cost Lucene pays writing a
-merged term dictionary.
+generation's doc_id-sorted ``docs`` stage with pyarrow, no job, one row
+group at a time and only the row groups whose key range brackets a key.
+That prunes where the stage is in key order (a generation built or
+appended by key; a merged tier is one such run per generation) and the
+keys are few. A base built with ``id_col``, or a delta spread over the
+whole key space, has the driver read every docs row (key, id, length)
+— the scan the shuffle-based append ran as a broadcast join on the
+executors. Term-level work stays in Spark: one analyzed pass tokenizes
+|delta| docs, the delta segments shuffle |delta| packed rows, and one
+dictionary-sized outer join adjusts df/cf. Nothing proportional to
+corpus POSTINGS moves. The dictionary join is the largest term —
+O(vocab) — the same cost Lucene pays writing a merged term dictionary.
 """
 
 from __future__ import annotations
@@ -80,11 +85,14 @@ from .build import (
 )
 from .lineage import IndexStore, config_fingerprint
 
-# Delta docs per task of the analyzed pass: a delta below this tokenizes
-# in one task and writes one tf file (a file per input partition left a
-# 6-doc generation several tiny tf files, and a larger index); a larger
-# one spreads over up to ``defaultParallelism`` tasks.
-_DOCS_PER_DELTA_TASK = 2048
+# A delta of fewer docs than this tokenizes in one task and writes one tf
+# file; from it up, the analyzed pass runs over ``defaultParallelism``
+# tasks. Appends of generated html pages on local[4] (BENCH.md): from 256
+# docs up the wide tf commit was faster in every run (by 0.03-0.2 s at
+# 256-1,024 docs, ~1 s at 4,096); below, the two widths were within the
+# noise, and one task wrote one file where four made the generation ~1%
+# larger.
+_TINY_DELTA_DOCS = 256
 
 
 def _guard_out_path(index, out_path: str) -> None:
@@ -207,10 +215,9 @@ def _resolve_delta(delta_docs: DataFrame | None,
       ascending == key ascending, nulls first: id tie-breaks equal key
       tie-breaks, as in a full build).
 
-    Returns ``(ids, delete keys, dups)``: ``ids`` maps each surviving
-    ``(key, row hash)`` to its doc id in key order; ``dups`` says some
-    survivor has exact copies in the batch (one doc must still come of
-    them)."""
+    Returns ``(ids, delete keys)``: ``ids`` maps each surviving
+    ``(key, row hash)`` to its doc id in key order (exact copies of a
+    survivor share the entry; one doc must still come of them)."""
     parts = []
     key_type = ts_type = None
     if delta_docs is not None:
@@ -231,42 +238,38 @@ def _resolve_delta(delta_docs: DataFrame | None,
     rows = union_by_name(parts).collect() if parts else []
 
     deleted = {r["k"] for r in rows if r["d"] and r["k"] is not None}
-    best: dict = {}  # key -> [warc_ts, row hash, copies]
+    best: dict = {}  # key -> (warc_ts, row hash)
     for r in rows:
         k = r["k"]
         if r["d"] or k in deleted:
             continue
         cur = best.get(k)
-        if cur is None or _better(r["ts"], r["h"], cur[0], cur[1]):
-            best[k] = [r["ts"], r["h"], 1]
-        elif (r["ts"], r["h"]) == (cur[0], cur[1]):
-            cur[2] += 1
+        if cur is None or _better(r["ts"], r["h"], *cur):
+            best[k] = (r["ts"], r["h"])
     order = sorted(best, key=lambda k: (k is not None, k))
     ids = {(k, best[k][1]): first_id + i for i, k in enumerate(order)}
-    dups = any(c > 1 for _, _, c in best.values())
-    return ids, deleted, dups
+    return ids, deleted
 
 
 def _with_ids(spark: SparkSession, delta_docs: DataFrame, cols: list,
-              key_col: str, ids: dict, dups: bool) -> DataFrame:
+              key_col: str, ids: dict) -> DataFrame:
     """The surviving delta rows (``cols``) with their driver-assigned
     ``doc_id``: a ``mapInPandas`` carrying the ``(key, row hash) → id``
     map in its closure keeps each survivor once — no window, sort or
-    join. A small delta runs in one task (one tf file); a large one over
-    up to ``defaultParallelism`` tasks, shuffled by key when its input
-    has fewer partitions. Exact copies of a survivor meet in one task
-    (hash-partitioned by key), which keeps the first."""
+    join. A tiny delta runs in one task (one tf file); a larger one is
+    hash-partitioned by key over ``defaultParallelism`` tasks. Either
+    way the exact copies of a survivor meet in one task, which keeps the
+    first."""
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
     rows = delta_docs.select(*cols, F.xxhash64(*delta_docs.columns)
                              .alias("_h"))
-    tasks = max(1, min(spark.sparkContext.defaultParallelism,
-                       -(-len(ids) // _DOCS_PER_DELTA_TASK)))
-    if dups or (tasks > 1 and rows.rdd.getNumPartitions() < tasks):
-        rows = rows.repartition(tasks, key_col)
+    if len(ids) < _TINY_DELTA_DOCS:
+        rows = rows.coalesce(1)
     else:
-        rows = rows.coalesce(tasks)
+        rows = rows.repartition(spark.sparkContext.defaultParallelism,
+                                key_col)
     drop = ["_h", "doc_id"]  # a doc_id key is replaced by the fresh id
     schema = StructType(
         [f for f in rows.schema.fields if f.name not in drop]
@@ -297,16 +300,16 @@ def _tombstones(index: InvertedIndex, key_col: str, keys: set,
                 deleted: set) -> dict:
     """The live docs of ``keys``, found on the driver with no job: each
     generation's docs-stage rows of the keys (``IndexStore.lookup`` reads
-    only the row groups whose key range brackets one — ids follow key
-    order, so they prune), minus the ``deleted`` ids. Returns
+    only the row groups whose key range brackets one: few on a stage in
+    key order, all of a base built with ``id_col``), minus the
+    ``deleted`` ids. Returns
     ``{store: [row, ...]}`` of the generations holding any, each row a
-    dict of ``doc_id``, the key and the kind's per-doc columns."""
+    dict of the docs stage's columns."""
     if not keys:
         return {}
-    cols = list(dict.fromkeys([*index._doc_cols, key_col]))
     found = {}
     for st in index.stores:
-        rows = [r for r in st.lookup("docs", key_col, keys, cols)
+        rows = [r for r in st.lookup("docs", key_col, keys)
                 if r["doc_id"] not in deleted]
         if rows:
             found[st] = rows
@@ -429,8 +432,8 @@ def append_delta(
                 f"{key_col!r}, id_col=None); got columns {cols}")
 
     first_id = _next_doc_id(spark, index.stores)
-    ids, del_keys, dups = _resolve_delta(delta_docs, delete_keys, key_col,
-                                         first_id)
+    ids, del_keys = _resolve_delta(delta_docs, delete_keys, key_col,
+                                   first_id)
     # does this generation give docs ids that are not their keys?
     # (key_col='doc_id': only when its keys are not exactly the fresh
     # ids first_id, first_id + 1, ...; upserts never are)
@@ -474,7 +477,7 @@ def append_delta(
         cols = list(dict.fromkeys(
             [key_col, text_col] + ([html_col] if html_col else [])
             + filter_cols))
-        with_ids = _with_ids(spark, delta_docs, cols, key_col, ids, dups)
+        with_ids = _with_ids(spark, delta_docs, cols, key_col, ids)
 
     def empty(stage: str) -> DataFrame:
         # a generation with no docs still commits (empty) tf/docs/filters

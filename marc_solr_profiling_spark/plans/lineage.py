@@ -32,6 +32,13 @@ from pyspark.sql.types import StructType
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # int columns whose per-file min/max a commit records from the footers
 _RANGED = ("doc_id", "salt")
+# Row-group bytes of the docs stage, which an append looks up by key on
+# the driver (``IndexStore.lookup``): the parquet default (128 MiB) left
+# a 100k-doc docs stage one row group, so every lookup read all of it; at
+# 1 MiB a 200k-doc docs file has 6 row groups of ~33k rows. A docs stage
+# is doc_id-sorted, which is key order within a generation built or
+# appended by key.
+_DOCS_ROW_GROUP_BYTES = 1 << 20
 
 
 def config_fingerprint(conf: dict[str, Any]) -> str:
@@ -141,11 +148,11 @@ class IndexStore:
             # hashing every value into a per-chunk map. Measured on the
             # 220k-doc tf stage: the write dropped from ~165s of overhead
             # to ~8s (8 cores) with dictionary off, identical reads.
-            (
-                w.write.mode("overwrite")
-                .option("parquet.enable.dictionary", "false")
-                .parquet(staging)
-            )
+            w = w.write.mode("overwrite").option(
+                "parquet.enable.dictionary", "false")
+            if stage == "docs":
+                w = w.option("parquet.block.size", _DOCS_ROW_GROUP_BYTES)
+            w.parquet(staging)
             if os.path.exists(out):
                 shutil.rmtree(out)
             os.replace(staging, out)
@@ -306,13 +313,15 @@ class IndexStore:
 
         return self._memo(stage, "files", build)
 
-    def lookup(self, stage: str, column: str, keys, columns: list) -> list:
-        """The rows (dicts of ``columns``) of a committed stage whose
-        ``column`` is in ``keys``, read on the driver with pyarrow — no
-        Spark job. Only the row groups whose ``column`` min/max brackets
-        a key are read (the term dictionary is sorted by term within each
-        file); the footers and row-group bounds are kept per
-        ``committed_at``."""
+    def lookup(self, stage: str, column: str, keys,
+               columns: list | None = None) -> list:
+        """The rows (dicts of ``columns``, every column when ``None``) of
+        a committed stage whose ``column`` is in ``keys``, read on the
+        driver with pyarrow — no Spark job. Only the row groups whose
+        ``column`` min/max brackets a key are read (the term dictionary is
+        sorted by term within each file), one at a time, so the driver
+        holds one row group beside the matches; the footers and row-group
+        bounds are kept per ``committed_at``."""
         import bisect
 
         import pyarrow as pa
@@ -339,9 +348,11 @@ class IndexStore:
             hit = [g for g, lo, hi in bounds
                    if lo is None or (bisect.bisect_left(wanted, lo)
                                      < bisect.bisect_right(wanted, hi))]
-            if hit:
-                t = pq.ParquetFile(path, metadata=md).read_row_groups(
-                    hit, columns=columns)
+            if not hit:
+                continue
+            f = pq.ParquetFile(path, metadata=md)
+            for g in hit:
+                t = f.read_row_group(g, columns=columns)
                 rows += t.filter(pc.is_in(t[column], value_set=pa.array(
                     wanted, type=t.schema.field(column).type))).to_pylist()
         return rows

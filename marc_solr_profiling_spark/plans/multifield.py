@@ -92,7 +92,6 @@ class MultiFieldIndex(InvertedIndex):
                      " total_tokens long")
     # one packed tf row per (doc, field); the docs stage has no lengths
     _tf_facts = ("doc_id", "field", "doc_len")
-    _doc_cols = ("doc_id",)
 
     def _delta_facts(self, facts) -> tuple:
         # one packed row per doc within any single field

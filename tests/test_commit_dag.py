@@ -277,3 +277,35 @@ def test_run_concurrently_joins_every_branch_before_raising(spark):
     with pytest.raises(ValueError, match="first"):
         run_concurrently(spark, fails, slow, fails_later)
     assert done.is_set()
+
+
+def test_docs_key_lookup_reads_only_the_row_groups_of_its_keys(
+        spark, workdir, monkeypatch):
+    """A ``docs`` stage is written in small row groups, so the driver's
+    key lookup (an append's tombstone search) on a key-ordered stage
+    reads the row group holding its keys, not the whole stage."""
+    import pyarrow.parquet as pq
+
+    store = IndexStore(f"{workdir}/docs_row_groups")
+    store.commit_stage("docs", spark.range(60000).selectExpr(
+        "id AS doc_id", "CAST(id % 500 AS INT) AS doc_len",
+        "format_string('https://k.example/p/%09d', id) AS url",
+    ).coalesce(1), partition_sort=["doc_id"])
+    (name,) = [f for f in os.listdir(store.stage_path("docs"))
+               if f.endswith(".parquet")]
+    groups = pq.ParquetFile(
+        os.path.join(store.stage_path("docs"), name)).metadata.num_row_groups
+    assert groups > 1
+    read = []
+    real = pq.ParquetFile.read_row_group
+
+    def counted(self, i, *a, **k):
+        read.append(i)
+        return real(self, i, *a, **k)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted)
+    keys = [f"https://k.example/p/{i:09d}" for i in (123, 124)]
+    rows = store.lookup("docs", "url", keys)
+    assert sorted((r["doc_id"], r["url"]) for r in rows) == [
+        (123, keys[0]), (124, keys[1])]
+    assert len(read) == 1

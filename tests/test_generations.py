@@ -642,7 +642,7 @@ def test_append_resolves_keys_on_the_driver(spark, workdir, docs, kind,
 
     from marc_solr_profiling_spark.plans import generations
 
-    monkeypatch.setattr(generations, "_DOCS_PER_DELTA_TASK", 1)
+    monkeypatch.setattr(generations, "_TINY_DELTA_DOCS", 0)
     replay = append_delta(spark, idx1, f"{workdir}/drv_g2r_{kind}",
                           delta_docs=delta2.repartition(3), key_col="url")
     for st in ("docs", "stats", "dictionary"):

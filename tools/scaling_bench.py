@@ -32,7 +32,7 @@ this is an unbiased throughput estimate with quantization error bounded
 by 1 rep-fraction at each window edge.
 
 Usage: python tools/scaling_bench.py [n_docs] [build_window_s]
-       [query_window_s] [n_queries]
+       [query_window_s]
 Writes the summary JSON to stdout and /tmp/scale_v4_summary.json.
 """
 
@@ -54,6 +54,10 @@ REPO = os.path.dirname(HERE)
 # north rule's scale batches are far larger still, so amortizing it is
 # measuring the regime the criterion describes.
 N_QUERIES = 20000
+# Levels run one at a time only on a small host, whose local[1] serves
+# ~90 queries/s (4-core host): 2k queries keep a batch near 23 s there, so
+# a query window of a minute or two still holds several batches.
+N_QUERIES_ONE_AT_A_TIME = 2000
 
 
 def levels(n_cores: int) -> list:
@@ -134,8 +138,8 @@ def main() -> None:
         )
         if gen.returncode != 0:
             raise RuntimeError(f"corpus gen failed:\n{gen.stderr[-2000:]}")
-    n_queries = int(sys.argv[4]) if len(sys.argv) > 4 else N_QUERIES
     groups = levels(os.cpu_count() or 1)
+    n_queries = N_QUERIES if len(groups) == 1 else N_QUERIES_ONE_AT_A_TIME
     table: dict = {}
     try:
         for group in groups:
