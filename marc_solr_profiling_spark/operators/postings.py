@@ -199,6 +199,7 @@ def tokenize_and_count_packed(
     chain: str = DEFAULT_CHAIN,
     html_col: str | None = None,
     positions: bool = False,
+    carry=(),
 ) -> DataFrame:
     """Fused analyze+count emitting ONE ROW PER DOCUMENT:
 
@@ -221,6 +222,10 @@ def tokenize_and_count_packed(
 
     Empty docs emit ``(key, 0, [], [])`` — no NULL sentinel needed; the
     doc-side table derives from this output with no dedup shuffle.
+
+    ``carry``: input columns passed through unchanged after the packed
+    ones (a build's key and filter columns), so one pass yields the tf,
+    docs and filter rows.
     """
     import numpy as np
     import pandas as pd
@@ -233,6 +238,7 @@ def tokenize_and_count_packed(
     if positions:
         schema += ", pos array<binary>"
     in_col = html_col if html_col is not None else text_col
+    schema, cols = _with_carry(docs, schema, [key_col, in_col], carry)
 
     def kernel(batches):
         for pdf in batches:
@@ -320,9 +326,22 @@ def tokenize_and_count_packed(
             }
             if positions:
                 data["pos"] = out_pos
+            for c in carry:
+                data[c] = pdf[c].to_numpy()
             yield pd.DataFrame(data)
 
-    return docs.select(key_col, in_col).mapInPandas(kernel, schema=schema)
+    return docs.select(*cols).mapInPandas(kernel, schema=schema)
+
+
+def _with_carry(docs: DataFrame, schema: str, cols: list, carry) -> tuple:
+    """(output StructType: ``schema`` + the ``carry`` columns' input
+    fields, the input columns a kernel reads: ``cols`` + ``carry``)."""
+    from pyspark.sql.types import StructType
+
+    out = StructType.fromDDL(schema)
+    for c in carry:
+        out = out.add(docs.schema[c])
+    return out, list(dict.fromkeys([*cols, *carry]))
 
 
 def _pack_token_lists(token_lists, keys_all, prefix: str | None = None):
@@ -395,6 +414,7 @@ def tokenize_and_count_packed_fields(
     text_col: str = "text",
     chain: str = DEFAULT_CHAIN,
     sep: str = "\x1f",
+    carry=(),
 ) -> DataFrame:
     """Multi-field fused analyze+count: ONE ROW PER (DOCUMENT, FIELD):
 
@@ -416,6 +436,9 @@ def tokenize_and_count_packed_fields(
     EVERY doc emits a row for EVERY field (empty docs too, doc_len=0) —
     per-field collection stats (n_docs, avgdl) derive from this output
     with no second scan, matching Lucene's per-field norms.
+
+    ``carry``: as in :func:`tokenize_and_count_packed`, repeated on each
+    of a doc's field rows.
     """
     import numpy as np
     import pandas as pd
@@ -424,10 +447,10 @@ def tokenize_and_count_packed_fields(
 
     analyze = ANALYZERS[chain]
     field_list = [(str(n), lim) for n, lim in fields]
-    schema = (
+    schema, cols = _with_carry(docs, (
         f"{key_col} long, field string, doc_len int,"
         " terms array<string>, tfs array<int>"
-    )
+    ), [key_col, text_col], carry)
 
     def kernel(batches):
         for pdf in batches:
@@ -450,10 +473,11 @@ def tokenize_and_count_packed_fields(
                     "doc_len": lens.astype(np.int32),
                     "terms": out_terms,
                     "tfs": out_tfs,
+                    **{c: pdf[c].to_numpy() for c in carry},
                 }))
             yield pd.concat(frames, ignore_index=True)
 
-    return docs.select(key_col, text_col).mapInPandas(kernel, schema=schema)
+    return docs.select(*cols).mapInPandas(kernel, schema=schema)
 
 
 def explode_packed_tf(packed: DataFrame,

@@ -11,66 +11,97 @@ publish.
 
 from __future__ import annotations
 
-from typing import Any
-
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.analyzer import ANALYZERS
-from ..operators.postings import (
-    explode_packed_tf,
-    tokenize_and_count,
-    tokenize_and_count_packed,
-    with_tokens,
-)
-from ..operators.segments import build_segments, build_segments_packed
+from ..operators.postings import tokenize_and_count_packed
+from ..operators.segments import build_segments_packed
 from ..session import local_frame
 from .lineage import IndexStore, config_fingerprint
 
 STATS_SCHEMA = "n_docs long, avgdl double, total_tokens long"
 
+# A build's input row ordinal: ``monotonically_increasing_id`` over the
+# key-sorted range partitions, (partition << 33) + position in partition
+_ORD = "_ord"
+_PART_BITS = 33
 
-def assign_doc_ids(docs: DataFrame, key_col: str = "url",
-                   partitions: int | None = None,
-                   _persist_handle: list | None = None) -> DataFrame:
-    """Dense, deterministic numeric docIDs in key order (docid ascending ==
-    url ascending, so docid tie-breaks equal the oracle's url tie-breaks).
+# A build's tf and docs stages are written as one file per this many
+# docs (at most one per analyzed partition): a small build writes each as
+# one file, a large one on every core. Html builds on local[4] (BENCH.md):
+# one tf file was the faster commit at 600 docs (0.17 vs 0.21 s) and the
+# slower from 2,048 up (0.26 vs 0.19 s; 0.71 vs 0.28 s at 16,384).
+_DOCS_PER_FILE = 1024
 
-    Scale shape: range-partition by key, sort within partitions, then
-    per-partition offsets (computed from partition counts, a tiny driver
-    list) + row_number *within* each partition. No single-partition global
-    window — the classic distributed zip-with-index, all-DataFrame.
-    """
-    spark = docs.sparkSession
+
+def _ordinals(docs: DataFrame, key_col: str, id_col: str | None,
+              partitions: int | None, cols: list) -> DataFrame:
+    """``cols`` of the build input plus ``_ord``: the ``id_col`` value,
+    or an ordinal in key order — the input projected first, then range-
+    partitioned and sorted by key, so no other column crosses the
+    shuffle and the analyzed pass runs on every partition."""
+    if id_col is not None:
+        return docs.select(*cols, F.col(id_col).cast("long").alias(_ORD))
     parts = partitions or docs.sparkSession.sparkContext.defaultParallelism
-    arranged = (
-        docs.repartitionByRange(parts, key_col)
+    return (
+        docs.select(*dict.fromkeys([key_col, *cols]))
+        .repartitionByRange(parts, key_col)
         .sortWithinPartitions(key_col)
-        .withColumn("_pid", F.spark_partition_id())
+        .select(*cols, F.monotonically_increasing_id().alias(_ORD))
     )
-    arranged = arranged.persist()
-    if _persist_handle is not None:
-        # caller takes ownership of unpersisting once its stages are done
-        _persist_handle.append(arranged)
-    counts = {
-        r["_pid"]: r["n"]
-        for r in arranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_df = local_frame(
-        spark, list(offsets.items()), "_pid int, _offset long")
-    w = Window.partitionBy("_pid").orderBy(key_col)
-    out = (
-        arranged.join(F.broadcast(offset_df), "_pid")
-        .withColumn(
-            "doc_id", (F.col("_offset") + F.row_number().over(w) - 1).cast("long")
-        )
-        .drop("_pid", "_offset")
-    )
+
+
+def _tally(frame: DataFrame, by: str | None, part: bool = False) -> list:
+    """ONE aggregate over an analyzed frame: rows and Σ doc_len (when
+    the frame has lengths) per ``by`` group and, with ``part``, per input
+    partition with its least ``_ord``."""
+    keys = [F.shiftright(_ORD, _PART_BITS).alias("_part")] if part else []
+    keys += [by] if by else []
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if part:
+        aggs.append(F.min(_ORD).alias("lo"))
+    if "doc_len" in frame.columns:
+        aggs.append(F.sum("doc_len").alias("t"))
+    return frame.groupBy(*keys).agg(*aggs).collect()
+
+
+def _totals(rows: list, by: str | None) -> dict:
+    """``{group: (rows, Σ doc_len)}`` of :func:`_tally` rows (the group
+    is None without ``by``)."""
+    out: dict = {}
+    for r in rows:
+        g = r[by] if by else None
+        n, t = out.get(g, (0, 0))
+        out[g] = (n + r["n"], t + int(r.asDict().get("t") or 0))
     return out
+
+
+def _dense_ids(frame: DataFrame, by: str | None, dense: bool) -> tuple:
+    """(``frame`` with ``doc_id`` in place of ``_ord``, its totals).
+
+    ``dense``: the ids are the ordinals shifted per partition onto
+    0..n-1 in key order — partition p's rows hold ordinals lo_p.. in key
+    order, and range partitions follow the key, so doc_id = _ord - lo_p
+    + the rows of partitions before p; the shifts come from the one
+    aggregate that also totals the lengths (and materializes a cached
+    frame). Otherwise ``_ord`` is the caller's id column."""
+    rows = _tally(frame, by, part=dense)
+    doc_id = F.col(_ORD)
+    if dense and rows:
+        # every group row of a partition counts all its docs (a
+        # multi-field doc has one row per field)
+        first = {r["_part"]: (r["lo"], r["n"]) for r in rows}
+        shifts, acc = [0] * (max(first) + 1), 0
+        for p in sorted(first):
+            lo, n = first[p]
+            shifts[p] = lo - acc
+            acc += n
+        doc_id = doc_id - F.element_at(
+            F.lit(shifts).cast("array<bigint>"),
+            (F.shiftright(_ORD, _PART_BITS) + 1).cast("int"))
+    return (frame.withColumn("doc_id", doc_id.cast("long")).drop(_ORD),
+            _totals(rows, by))
 
 
 # Upper bound on docs per segment-kernel partition under "auto" sizing.
@@ -175,12 +206,13 @@ class InvertedIndex:
     :meth:`del_postings`.
 
     The chain walk, readers and tombstone masks serve every index kind.
-    What differs per kind — stats loading, block-max cap rescaling, and
-    the few lifecycle hooks the generation code calls (``_tokenize``,
-    ``_delta_facts``, ``_removed_totals``, ``_adjusted_stats``,
-    ``_build_segments``, ``_kind_meta``, ``_built_meta``, and the
-    ``_stats_schema`` and ``_tf_facts``) — is overridden by
-    ``plans/multifield.py MultiFieldIndex``.
+    What differs per kind — meta and stats loading, block-max cap
+    rescaling, and the few lifecycle hooks the build and generation code
+    call (``_tokenize``, ``_doc_rows``, ``_stats_of``, ``_delta_facts``,
+    ``_removed_totals``, ``_build_segments``, ``_kind_meta``,
+    ``_built_meta``, and the ``_stats_schema``, ``_tf_facts`` and
+    ``_tf_group``) — is overridden by ``plans/multifield.py
+    MultiFieldIndex``.
     """
 
     def __init__(self, store: IndexStore, spark: SparkSession, chain: str):
@@ -191,8 +223,9 @@ class InvertedIndex:
         # salt repartition from it (n_salts caps useful parallelism)
         meta = self.store.get_meta()
         self.n_salts = int(meta.get("n_salts", 16))
+        self._load_meta(meta)
         self._stats_rows = store.stage_rows("stats")
-        self._load_stats(meta)
+        self._load_stats()
         # generation chain, newest first (self.store == stores[0]); a
         # plain build has exactly one store and every property reduces to
         # the single-stage read
@@ -207,10 +240,21 @@ class InvertedIndex:
             self.stores.append(ps)
             parent = ps.get_meta().get("parent")
 
-    def _load_stats(self, meta: dict) -> None:
+    @classmethod
+    def _for_build(cls, spark: SparkSession, chain: str, meta: dict):
+        """A handle on an index not built yet — its build parameters and
+        no stats: the per-kind hooks a build calls before it commits."""
+        kind = cls.__new__(cls)
+        kind.spark, kind.chain = spark, chain
+        kind._load_meta(meta)
+        return kind
+
+    def _load_meta(self, meta: dict) -> None:
+        self.has_positions = bool(meta.get("positions", False))
+
+    def _load_stats(self) -> None:
         self.n_docs = int(self._stats_rows[0]["n_docs"])
         self.avgdl = float(self._stats_rows[0]["avgdl"])
-        self.has_positions = bool(meta.get("positions", False))
 
     def _cap_scales(self, store: IndexStore) -> dict:
         """How one generation's block caps stay upper bounds at the
@@ -334,18 +378,32 @@ class InvertedIndex:
         """Build parameters every generation of the chain inherits."""
         return {"positions": self.has_positions}
 
-    def _tokenize(self, with_ids: DataFrame, text_col: str,
-                  html_col: str | None) -> DataFrame:
-        """Packed tf rows of a delta, analyzed like the base."""
+    def _tokenize(self, docs: DataFrame, text_col: str,
+                  html_col: str | None, key_col: str = "doc_id",
+                  carry=()) -> DataFrame:
+        """Packed tf rows keyed by ``key_col``, analyzed like this index,
+        with the ``carry`` columns passed through."""
         return tokenize_and_count_packed(
-            with_ids, key_col="doc_id", text_col=text_col, chain=self.chain,
-            html_col=html_col, positions=self.has_positions,
+            docs, key_col=key_col, text_col=text_col, chain=self.chain,
+            html_col=html_col, positions=self.has_positions, carry=carry,
         )
 
     _stats_schema = STATS_SCHEMA
     # the per-row columns of a delta's committed tf that the driver reads
-    # back
+    # back, and the one its totals are grouped by (one tf row per doc)
     _tf_facts = ("doc_id", "doc_len")
+    _tf_group = None
+
+    def _doc_rows(self, analyzed: DataFrame, *cols) -> DataFrame:
+        """One row per doc of analyzed rows: the docs-stage columns and
+        ``cols``."""
+        return analyzed.select("doc_id", "doc_len", *cols)
+
+    def _stats_of(self, totals: dict) -> list:
+        """Stats rows of ``{group: (docs, Σ doc_len)}`` totals."""
+        n, t = totals.get(None, (0, 0))
+        return [Row(n_docs=n, avgdl=(float(t) / n) if n else 0.0,
+                    total_tokens=t)]
 
     def _delta_facts(self, facts) -> tuple:
         """(docs-stage rows without the key, ``{None: (rows, Σ doc_len)}``)
@@ -361,14 +419,16 @@ class InvertedIndex:
         return {None: (len(dead), sum(int(r["doc_len"]) for r in dead))}
 
     def _adjusted_stats(self, add: dict, removed: dict) -> list:
-        """This index's stats row plus the delta's totals minus the
+        """This index's stats rows plus the delta's totals minus the
         tombstoned docs' — driver arithmetic, no job."""
-        n_add, t_add = add.get(None, (0, 0))
-        n_rm, t_rm = removed.get(None, (0, 0))
-        n_docs = self.n_docs - n_rm + n_add
-        total = int(self._stats_rows[0]["total_tokens"]) - t_rm + t_add
-        avgdl = (float(total) / n_docs) if n_docs else 0.0
-        return [Row(n_docs=n_docs, avgdl=avgdl, total_tokens=total)]
+        out = {}
+        for r in self._stats_rows:
+            g = r[self._tf_group] if self._tf_group else None
+            (n_add, t_add), (n_rm, t_rm) = (add.get(g, (0, 0)),
+                                            removed.get(g, (0, 0)))
+            out[g] = (int(r["n_docs"]) + n_add - n_rm,
+                      int(r["total_tokens"]) + t_add - t_rm)
+        return self._stats_of(out)
 
     def _built_meta(self, stats_rows: list) -> dict:
         """Manifest record of the avgdl a generation's caps were built at."""
@@ -440,7 +500,6 @@ def build_index(
     html_col: str | None = None,
     positions: bool = False,
     range_buckets: int | str = "auto",
-    overlap_tf_write: bool = False,
     filter_cols=None,
 ) -> InvertedIndex:
     """Build (or resume building) the physical index at ``path``.
@@ -462,7 +521,7 @@ def build_index(
     payload is ~1 byte per corpus token).
 
     Stages (each a committed snapshot; a re-run skips completed ones):
-      docs        (doc_id, url, doc_len)
+      docs        (doc_id, doc_len, url)
       tf          PACKED per-doc postings:
                   (doc_id, doc_len, terms array, tfs array[, pos array])
                   — one row per document; the exploded (term, doc, tf)
@@ -473,39 +532,42 @@ def build_index(
       stats       (n_docs, avgdl, total_tokens)  [1 row]
       dictionary  (term, df, cf)
       segments    (term, salt, block_id, ..., doc_gaps, tfs, max_wnorm)
+      filters     fq postings of ``filter_cols``, in segment-block form
 
-    Commit order is a small DAG, not a chain: tf, then stats (a driver-
-    held row: its tf rows come from the manifest and Σ doc_len from one
-    scan), then concurrent branches {segments → dictionary}, {docs},
-    {filters} (and {tf} itself in overlap mode), run by
-    :func:`run_concurrently` with the caller's job group inherited. Each
-    commit records its schema in the manifest, so reading a committed
-    stage back (here, on resume, or from any later handle) runs no
-    schema-inference job.
+    The build is ONE analyzed pass and a commit DAG (:func:`_build`).
+    The input is projected to the key, the text (or html) and the filter
+    columns, range-partitioned over ``partitions`` (default
+    ``defaultParallelism``) and sorted by ``key_col``; each row gets an
+    ordinal (``monotonically_increasing_id``) and the tokenizer runs
+    once, carrying the key and filter columns through. That analyzed
+    frame is cached, and one aggregate over it yields per partition the
+    rows, Σ doc_len and the least ordinal: the driver turns those into
+    the dense key-ordered ids (docid ascending == key ascending, so
+    docid tie-breaks equal the oracle's url tie-breaks) — a column
+    expression, ordinal minus a per-partition shift — and the stats row.
+    Then {tf}, {docs}, {stats}, {filters} and {segments → dictionary}
+    commit concurrently from the cache (:func:`run_concurrently`, the
+    caller's job group inherited). tf and docs are written one file per
+    ``_DOCS_PER_FILE`` docs. Each commit records its schema in the
+    manifest, so reading a committed stage back runs no schema-inference
+    job.
+
+    Resume: a build whose ``tf`` is committed never re-tokenizes. Its
+    segments come from the committed tf; missing docs or filters take
+    their ids from the same ordinal pass over the projected input, joined
+    to the committed tf by id.
 
     ``id_col``: pass the name of an existing unique numeric column to use
-    it as doc_id directly (skips the assignment sort); otherwise dense ids
-    are assigned in ``key_col`` order.
+    it as doc_id directly (no range shuffle); otherwise dense ids are
+    assigned in ``key_col`` order.
 
     ``range_buckets``: sub-split each salt by doc-id range in the segment
     shuffle (see ``build_segments_packed``). ``"auto"`` sizes it so the
     segment stage has at least ``defaultParallelism`` partitions on
     non-trivial corpora (>= 64k docs; tiny builds skip the quantile job
     and run one bucket per salt).
-
-    ``overlap_tf_write``: persist the packed tf and run its parquet
-    commit as one more DAG branch, concurrently with the segment shuffle
-    that consumes the same cache — the tf sink stops being a barrier and the
-    snapshot is never read back (it still commits, so stage resume is
-    unchanged). Default OFF: measured a wash-to-slight-loss on this
-    sandbox (an interleaved A/B at 320k docs local[8], interleaved
-    medians 56.4 s strict vs 58.9 s overlapped) because the tmpfs sink
-    makes the tf write pure CPU (parquet encode) — overlapping it just
-    time-slices the same cores while paying the columnar-cache copy.
-    The knob is for I/O-bound sinks (object store / HDFS at cluster
-    scale), where the write has real latency to hide and the cache
-    also saves a full tf read-back.
     """
+    filter_cols = list(filter_cols or [])
     store = IndexStore(path)
     store.set_fingerprint(
         config_fingerprint(
@@ -516,170 +578,125 @@ def build_index(
                 "key_col": key_col,
                 "id_col": id_col,
                 "positions": positions,
-                "filter_cols": list(filter_cols or []),
+                "filter_cols": filter_cols,
                 "version": 3,  # v3: packed per-doc tf stage
             }
         )
     )
-    store.set_meta({"n_salts": n_salts, "chain": chain,
-                    "block_size": block_size, "positions": positions,
-                    "filter_cols": list(filter_cols or [])})
-
-    need_tf = not store.stage_complete("tf")
-    need_docs = not store.stage_complete("docs")
-    need_filters = bool(filter_cols) and not store.stage_complete("filters")
-    persisted: list = []
-    with_ids = None
-    if need_tf or need_filters or (need_docs and key_col != "doc_id"):
-        # ONE id assignment shared by the tf and docs stages (the range-
-        # partition + sort + count pass runs once; round 1 ran it twice and
-        # leaked its persist)
-        if id_col is not None:
-            with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-        else:
-            with_ids = assign_doc_ids(
-                docs, key_col=key_col, partitions=partitions,
-                _persist_handle=persisted,
-            )
-
-    totals = None  # (n_docs, total_tokens) once known on the driver
-    if need_tf:
-        # column pruning before the analyzer stage: the build needs only
-        # (doc_id, text) here — never carry html payloads into the Python
-        # worker (RawRecordReader's project-then-parse discipline,
-        # SURVEY.md §4). Tokenize + per-doc tf counting are FUSED into one
-        # mapInPandas pass and PACKED per doc: token arrays never cross
-        # the Arrow boundary, per-posting rows never exist on the wire,
-        # and the pass is shuffle-free — the only real shuffle of the
-        # whole build is the salted repartition inside
-        # build_segments_packed.
-        tf = tokenize_and_count_packed(
-            with_ids, key_col="doc_id", text_col=text_col, chain=chain,
-            html_col=html_col, positions=positions,
-        )
-        if overlap_tf_write:
-            # OVERLAP MODE: persist the packed tf and commit it as one
-            # branch of the commit DAG below WHILE the segment shuffle
-            # consumes the same cache — the tf write (the build's largest
-            # sink) stops being a barrier in front of the build's only
-            # full-volume exchange, and the committed snapshot is never
-            # read back at all. The cache is columnar and per-executor
-            # (MEMORY_AND_DISK: spills locally, never recomputes unless
-            # an executor is lost — in which case lineage re-tokenizes
-            # just the lost partitions). Stage-level resumability is
-            # unchanged: the tf snapshot still commits, so a failed
-            # segments stage resumes from parquet with no re-tokenize.
-            from pyspark import StorageLevel
-
-            tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(tf)
-            # materialize the cache via the scan stats needs anyway
-            row = tf.agg(
-                F.count("*").alias("n"), F.sum("doc_len").alias("t")
-            ).collect()[0]
-            totals = (int(row["n"]), int(row["t"] or 0))
-        else:
-            # strict mode: commit first, build segments from the snapshot
-            # (no executor memory/disk spent on a cache — the knob for
-            # memory-scarce clusters)
-            store.commit_stage("tf", tf)
-            tf = store.read_stage(spark, "tf")
-    else:
-        tf = store.read_stage(spark, "tf")
-
-    need_stats = not store.stage_complete("stats")
-    if not need_stats:
-        row = store.stage_rows("stats")[0]
-        totals = (int(row["n_docs"]), int(row["total_tokens"]))
-    elif totals is None:
-        # stats straight off the committed tf snapshot: n_docs is the tf
-        # stage's manifest row count (one packed row per doc — zero jobs),
-        # total_tokens = sum(doc_len) (one pruned-column scan over n_docs
-        # ints, scalar partial agg, no shuffle). Decoupling stats from
-        # docs lets the segments stage start right after tf, with the
-        # docs commit running CONCURRENTLY with it
-        totals = (int(store.lineage()["stages"]["tf"]["rows"]),
-                  int(tf.agg(F.sum("doc_len")).collect()[0][0] or 0))
-    n_docs_val, total_tokens = totals
-    avgdl_val = (float(total_tokens) / n_docs_val) if n_docs_val else 0.0
-    if need_stats:
-        store.commit_stage("stats", local_frame(
-            spark, [(n_docs_val, avgdl_val, total_tokens)], STATS_SCHEMA))
-
-    def _commit_docs() -> None:
-        # derived from the tf rows — one packed row per doc, so
-        # (doc_id, doc_len) needs NO dedup shuffle — joined back to the
-        # (pruned) key column of the input; no re-tokenization
-        doc_tbl = tf.select("doc_id", "doc_len")
-        if key_col != "doc_id":
-            doc_tbl = doc_tbl.join(with_ids.select("doc_id", key_col),
-                                   "doc_id")
-        # sorted within partitions (row-group pruning on doc_id) without
-        # a range repartition: the range sampler costs an extra pass, and
-        # the doc table is only ever point-joined, never range-scanned
-        store.commit_stage("docs", doc_tbl, partition_sort=["doc_id"])
-
-    def _commit_segments_then_dictionary() -> None:
-        if not store.stage_complete("segments"):
-            segs = build_segments_packed(
-                tf,
-                avgdl=avgdl_val,
-                n_salts=n_salts,
-                block_size=block_size,
-                range_buckets=_resolve_range_buckets(
-                    range_buckets, spark, n_salts, n_docs_val),
-            )
-            # make_blocks emits rows already sorted by (term, salt, block)
-            # — parquet row-group min/max on term therefore prunes
-            # query-term scans (the Iceberg sort-order analog) with NO
-            # extra shuffle: a repartitionByRange here would re-run the
-            # whole segment build just to sample range bounds.
-            store.commit_stage("segments", segs)
-        if not store.stage_complete("dictionary"):
-            # derived from the (compact) segment blocks instead of a
-            # second full tf scan: df = Σ n_postings, cf = Σ tf_sum per
-            # term. groupBy already hash-partitions by term; a within-
-            # partition sort gives sorted parquet row groups (term
-            # pruning) without an extra range-sampling pass
-            dictionary = store.read_stage(spark, "segments").groupBy(
-                "term").agg(F.sum("n_postings").alias("df"),
-                            F.sum("tf_sum").alias("cf"))
-            store.commit_stage("dictionary", dictionary,
-                               partition_sort=["term"])
-
-    def _commit_filters() -> None:
-        # metadata filter postings (fq bitsets) — same salt layout and
-        # block format as the scored segments, committed as their own
-        # stage so the scoring dictionary/stats never see them
-        store.commit_stage(
-            "filters",
-            build_segments_packed(
-                _filter_packed(with_ids, filter_cols), avgdl=1.0,
-                n_salts=n_salts, block_size=block_size,
-            ),
-        )
-
-    # the commit DAG: segments → dictionary beside the docs, filters and
-    # (overlap mode) tf commits, which share only the cached inputs
-    branches = [_commit_segments_then_dictionary]
-    if need_tf and overlap_tf_write:
-        branches.append(lambda: store.commit_stage("tf", tf))
-    if need_docs:
-        branches.append(_commit_docs)
-    if need_filters:
-        branches.append(_commit_filters)
-    try:
-        run_concurrently(spark, *branches)
-    finally:
-        for cached in persisted:
-            cached.unpersist()
-
+    meta = {"n_salts": n_salts, "chain": chain, "block_size": block_size,
+            "positions": positions, "filter_cols": filter_cols}
+    store.set_meta(meta)
+    stats_rows = _build(
+        spark, store, docs, InvertedIndex._for_build(spark, chain, meta),
+        key_col=key_col, text_col=text_col, html_col=html_col,
+        id_col=id_col, partitions=partitions, filter_cols=filter_cols,
+        n_salts=n_salts, block_size=block_size, range_buckets=range_buckets)
     if "built_avgdl" not in store.get_meta():
         # the avgdl the segment caps were built with — generation-chain
         # readers (append_delta) scale caps by current/built to stay exact
-        store.set_meta({"built_avgdl": avgdl_val})
-
+        store.set_meta({"built_avgdl": float(stats_rows[0]["avgdl"])})
     return InvertedIndex(store, spark, chain)
+
+
+def _build(spark: SparkSession, store: IndexStore, docs: DataFrame, kind,
+           key_col: str, text_col: str, html_col: str | None,
+           id_col: str | None, partitions: int | None, filter_cols: list,
+           n_salts: int, block_size: int,
+           range_buckets: int | str) -> list:
+    """Commit every stage a build at ``store`` still lacks (the shape is
+    in :func:`build_index`'s docstring); ``kind`` is an unbuilt handle of
+    the index kind (:meth:`InvertedIndex._for_build`) whose hooks
+    tokenize, total, lay out docs and build segments. Returns the stats
+    rows."""
+    need = {s for s in ("tf", "docs", "stats", "segments", "dictionary",
+                        *(["filters"] if filter_cols else []))
+            if not store.stage_complete(s)}
+    by = kind._tf_group
+    # the columns riding with each doc (a doc_id key becomes the id)
+    carry = [c for c in dict.fromkeys([key_col, *filter_cols])
+             if c != "doc_id"]
+    tf_stage = None if "tf" in need else store.read_stage(spark, "tf")
+    analyzed, totals, cached = tf_stage, None, None
+    try:
+        if "tf" in need or "filters" in need or (
+                "docs" in need and key_col != "doc_id"):
+            if "tf" in need:
+                tagged = kind._tokenize(
+                    _ordinals(docs, key_col, id_col, partitions,
+                              [*carry, html_col or text_col]),
+                    text_col, html_col, key_col=_ORD, carry=carry)
+            else:
+                tagged = _ordinals(docs, key_col, id_col, partitions, carry)
+            cached = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+            analyzed, totals = _dense_ids(cached, by, dense=id_col is None)
+            if "tf" not in need:
+                # resumed after the tf commit: lengths and postings come
+                # from the committed tf, never a second tokenize pass
+                analyzed = analyzed.join(tf_stage, "doc_id")
+                totals = None
+        if "stats" not in need:
+            stats_rows = store.stage_rows("stats")
+        else:
+            if totals is None:
+                totals = _totals(_tally(tf_stage, by), by)
+            stats_rows = kind._stats_of(totals)
+        n_rows = (sum(n for n, _ in totals.values()) if totals is not None
+                  else int(store.lineage()["stages"]["tf"]["rows"]))
+        # each field row of a multi-field index counts every doc
+        n_docs = max((int(r["n_docs"]) for r in stats_rows), default=0)
+        tf = tf_stage if tf_stage is not None else analyzed.select(
+            "doc_id", *[c for c in cached.columns
+                        if c != _ORD and c not in carry])
+
+        def sized(df: DataFrame) -> DataFrame:
+            return df.coalesce(max(1, -(-n_docs // _DOCS_PER_FILE)))
+
+        def segments_then_dictionary() -> None:
+            if "segments" in need:
+                store.commit_stage("segments", kind._build_segments(
+                    tf, stats_rows, n_salts, block_size, range_buckets,
+                    n_rows))
+            if "dictionary" in need:
+                # derived from the (compact) segment blocks instead of a
+                # second full tf scan: df = Σ n_postings, cf = Σ tf_sum
+                # per term. groupBy already hash-partitions by term; a
+                # within-partition sort gives sorted parquet row groups
+                # (term pruning) without a range-sampling pass
+                store.commit_stage(
+                    "dictionary",
+                    store.read_stage(spark, "segments").groupBy("term").agg(
+                        F.sum("n_postings").alias("df"),
+                        F.sum("tf_sum").alias("cf")),
+                    partition_sort=["term"])
+
+        keys = [key_col] if key_col != "doc_id" else []
+        commits = {
+            "tf": lambda: store.commit_stage("tf", sized(tf)),
+            # sorted within partitions (row-group pruning on doc_id)
+            # without a range repartition: the doc table is only ever
+            # point-looked-up, never range-scanned
+            "docs": lambda: store.commit_stage(
+                "docs", sized(kind._doc_rows(analyzed, *keys)),
+                partition_sort=["doc_id"]),
+            "stats": lambda: store.commit_stage("stats", local_frame(
+                spark, [tuple(r) for r in stats_rows], kind._stats_schema)),
+            # metadata filter postings (fq bitsets) — same salt layout
+            # and block format as the scored segments, their own stage so
+            # the scoring dictionary/stats never see them
+            "filters": lambda: store.commit_stage(
+                "filters", build_segments_packed(
+                    _filter_packed(kind._doc_rows(analyzed, *filter_cols),
+                                   filter_cols),
+                    avgdl=1.0, n_salts=n_salts, block_size=block_size)),
+        }
+        branches = [fn for s, fn in commits.items() if s in need]
+        if need & {"segments", "dictionary"}:
+            branches.append(segments_then_dictionary)
+        run_concurrently(spark, *branches)
+    finally:
+        if cached is not None:
+            cached.unpersist()
+    return stats_rows
 
 
 def incremental_update(

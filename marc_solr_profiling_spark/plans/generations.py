@@ -641,8 +641,11 @@ def merge_generations(
     def docs_stats_dictionary():
         store.commit_stage("docs", merged_docs, partition_sort=["doc_id"])
         # global stats/dictionary are unchanged by a merge — copy the
-        # already adjusted tables from the chain head
-        store.commit_stage("stats", index.store.read_stage(spark, "stats"))
+        # already adjusted tables from the chain head (the stats rows
+        # from the handle, with no scan)
+        store.commit_stage("stats", local_frame(
+            spark, [tuple(r) for r in index._stats_rows],
+            index._stats_schema))
         store.commit_stage("dictionary", index.dictionary,
                            partition_sort=["term"])
 

@@ -11,11 +11,12 @@ This build re-expresses that as a FIELD-PREFIXED TERM KEY over the
 existing packed salted segment machinery (plans/build.py): one fused
 tokenize pass per doc serves every field (the copyField pattern — fields
 are token-limit views of the same analyzed stream), each (doc, field)
-emits one packed row, per-field collection stats come from a tiny
-groupBy(field), and the segment blocks carry per-field block-max norms
-(``build_segments_packed(avgdl_col=...)``). Everything downstream —
-salting, exact routing, varbyte blocks, dictionary df/cf — is the
-single-field code verbatim, so the multi-field index inherits its scale
+emits one packed row, per-field collection stats come from the build's
+one aggregate grouped by field, and the segment blocks carry per-field
+block-max norms (``build_segments_packed(avgdl_col=...)``). The build
+itself — ids, the analyzed pass, the commit DAG, resume — and everything
+downstream — salting, exact routing, varbyte blocks, dictionary df/cf —
+is the single-field code (``plans/build.py _build``), so the multi-field index inherits its scale
 shape: one full-volume shuffle (packed rows by salt), skew-immune at the
 exchange, computed partition placement.
 
@@ -33,7 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.postings import tokenize_and_count_packed_fields
 from ..operators.segments import build_segments_packed
 from ..session import local_frame
-from .build import InvertedIndex, _resolve_range_buckets, assign_doc_ids
+from .build import InvertedIndex, _build, _resolve_range_buckets
 from .lineage import IndexStore, config_fingerprint
 
 FIELD_SEP = "\x1f"
@@ -45,10 +46,12 @@ class MultiFieldIndex(InvertedIndex):
     lifecycle) with per-FIELD collection stats, per-field cap rescaling
     and the per-(doc, field) tf layout behind the lifecycle hooks."""
 
-    def _load_stats(self, meta: dict) -> None:
+    def _load_meta(self, meta: dict) -> None:
         self.sep = meta.get("field_sep", FIELD_SEP)
         self.fields = list(meta.get("fields", []))
         self.field_limits = meta.get("field_limits") or {}
+
+    def _load_stats(self) -> None:
         # per-field (n_docs, avgdl) — a handful of rows, driver-resident
         self.field_stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
@@ -78,20 +81,36 @@ class MultiFieldIndex(InvertedIndex):
         return {"fields": self.fields, "field_sep": self.sep,
                 "field_limits": self.field_limits, "multifield": True}
 
-    def _tokenize(self, with_ids: DataFrame, text_col: str,
-                  html_col: str | None) -> DataFrame:
+    def _tokenize(self, docs: DataFrame, text_col: str,
+                  html_col: str | None, key_col: str = "doc_id",
+                  carry=()) -> DataFrame:
         if html_col is not None:
             raise ValueError("a multi-field index tokenizes text_col; "
                              "html_col is not supported")
         return tokenize_and_count_packed_fields(
-            with_ids, [(n, self.field_limits.get(n)) for n in self.fields],
-            key_col="doc_id", text_col=text_col, chain=self.chain,
-            sep=self.sep)
+            docs, [(n, self.field_limits.get(n)) for n in self.fields],
+            key_col=key_col, text_col=text_col, chain=self.chain,
+            sep=self.sep, carry=carry)
 
     _stats_schema = ("field string, n_docs long, avgdl double,"
                      " total_tokens long")
     # one packed tf row per (doc, field); the docs stage has no lengths
     _tf_facts = ("doc_id", "field", "doc_len")
+    _tf_group = "field"
+
+    def _doc_rows(self, analyzed: DataFrame, *cols) -> DataFrame:
+        # one packed row per doc within any single field
+        return analyzed.filter(F.col("field") == self.fields[0]).select(
+            "doc_id", *cols)
+
+    def _stats_of(self, totals: dict) -> list:
+        out = []
+        for f in self.fields:
+            n, t = totals.get(f, (0, 0))
+            out.append(Row(field=f, n_docs=n,
+                           avgdl=(float(t) / n) if n > 0 else 0.0,
+                           total_tokens=t))
+        return out
 
     def _delta_facts(self, facts) -> tuple:
         # one packed row per doc within any single field
@@ -108,19 +127,6 @@ class MultiFieldIndex(InvertedIndex):
                 for r in removed_tf.groupBy("field").agg(
                     F.count("*").alias("n"),
                     F.sum("doc_len").alias("t")).collect()}
-
-    def _adjusted_stats(self, add: dict, removed: dict) -> list:
-        out = []
-        for r in self._stats_rows:
-            f = r["field"]
-            (n_add, t_add), (n_rm, t_rm) = (add.get(f, (0, 0)),
-                                            removed.get(f, (0, 0)))
-            n = int(r["n_docs"]) + n_add - n_rm
-            t = int(r["total_tokens"]) + t_add - t_rm
-            out.append(Row(field=f, n_docs=n,
-                           avgdl=(float(t) / n) if n > 0 else 0.0,
-                           total_tokens=t))
-        return out
 
     def _built_meta(self, stats_rows: list) -> dict:
         return {"built_field_avgdl": {r["field"]: float(r["avgdl"])
@@ -171,6 +177,7 @@ def build_multifield_index(
       dictionary  (term=field<sep>term, df, cf) — per-field df by key
     """
     field_list = [(str(n), lim) for n, lim in fields]
+    filter_cols = list(filter_cols or [])
     store = IndexStore(path)
     store.set_fingerprint(
         config_fingerprint(
@@ -181,116 +188,29 @@ def build_multifield_index(
                 "key_col": key_col,
                 "id_col": id_col,
                 "fields": field_list,
-                "filter_cols": list(filter_cols or []),
+                "filter_cols": filter_cols,
                 "version": 1,  # multifield v1
             }
         )
     )
-    store.set_meta({
+    meta = {
         "n_salts": n_salts, "chain": chain, "block_size": block_size,
         "fields": [n for n, _ in field_list], "field_sep": FIELD_SEP,
         "field_limits": {n: lim for n, lim in field_list},
         "multifield": True,
-    })
-
-    persisted: list = []
-    with_ids = None
-    need_filters = bool(filter_cols) and not store.stage_complete("filters")
-    if not store.stage_complete("tf") or need_filters or (
-            key_col != "doc_id" and not store.stage_complete("docs")):
-        if id_col is not None:
-            with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-        else:
-            with_ids = assign_doc_ids(
-                docs, key_col=key_col, partitions=partitions,
-                _persist_handle=persisted,
-            )
-    if not store.stage_complete("tf"):
-        tf = tokenize_and_count_packed_fields(
-            with_ids, field_list, key_col="doc_id", text_col=text_col,
-            chain=chain, sep=FIELD_SEP,
-        )
-        store.commit_stage("tf", tf)
-
-    if need_filters:
-        # metadata fq bitsets — same stage contract as the single-field
-        # build (plans/build.py); the edismax handler's fq clauses
-        # intersect these inside the dismax kernel
-        from .build import _filter_packed
-
-        store.commit_stage(
-            "filters",
-            build_segments_packed(
-                _filter_packed(with_ids, filter_cols), avgdl=1.0,
-                n_salts=n_salts, block_size=block_size,
-            ),
-        )
-
-    tf = store.read_stage(spark, "tf")
-
-    if not store.stage_complete("stats"):
-        # per-field collection stats: every doc emits a row per field
-        # (empty docs included), so count/avg over the packed rows is
-        # exactly Lucene's per-field n_docs/avgdl
-        store.commit_stage(
-            "stats",
-            tf.groupBy("field").agg(
-                F.count("*").alias("n_docs"),
-                F.avg("doc_len").alias("avgdl"),
-                F.sum("doc_len").alias("total_tokens"),
-            ),
-        )
-
-    if not store.stage_complete("docs"):
-        # one packed row per doc within any single field — field 0's rows
-        # give (doc_id) with no dedup shuffle; the external key column
-        # rides along when distinct from doc_id (generational appends
-        # upsert by it)
-        f0 = field_list[0][0]
-        doc_tbl = tf.filter(F.col("field") == f0).select("doc_id")
-        if key_col != "doc_id" and with_ids is not None:
-            doc_tbl = doc_tbl.join(
-                with_ids.select("doc_id", key_col), "doc_id")
-        store.commit_stage("docs", doc_tbl, partition_sort=["doc_id"])
-
-    if not store.stage_complete("segments"):
-        favg = store.read_stage(spark, "stats").select(
-            "field", F.col("avgdl").alias("_favgdl")
-        )
-        n_rows = int(store.lineage()["stages"]["tf"]["rows"])
-        segs = build_segments_packed(
-            tf.join(F.broadcast(favg), "field"),
-            avgdl=0.0,  # ignored: per-row _favgdl below
-            n_salts=n_salts,
-            block_size=block_size,
-            range_buckets=_resolve_range_buckets(
-                range_buckets, spark, n_salts, n_rows // max(1, len(field_list)),
-            ),
-            avgdl_col="_favgdl",
-        )
-        store.commit_stage("segments", segs)
-
-    for cached in persisted:
-        cached.unpersist()
-
-    if not store.stage_complete("dictionary"):
-        segs_tbl = store.read_stage(spark, "segments")
-        store.commit_stage(
-            "dictionary",
-            segs_tbl.groupBy("term").agg(
-                F.sum("n_postings").alias("df"), F.sum("tf_sum").alias("cf")
-            ),
-            partition_sort=["term"],
-        )
-
+    }
+    store.set_meta(meta)
+    kind = MultiFieldIndex._for_build(spark, chain, meta)
+    stats_rows = _build(
+        spark, store, docs, kind, key_col=key_col, text_col=text_col,
+        html_col=None, id_col=id_col, partitions=partitions,
+        filter_cols=filter_cols, n_salts=n_salts,
+        block_size=block_size, range_buckets=range_buckets)
     if "built_field_avgdl" not in store.get_meta():
         store.set_meta({
-            "built_field_avgdl": {
-                r["field"]: float(r["avgdl"])
-                for r in store.stage_rows("stats")
-            },
+            **kind._built_meta(stats_rows),
             "key_col": key_col,
-            "filter_cols": list(filter_cols or []),
+            "filter_cols": filter_cols,
         })
 
     return MultiFieldIndex(store, spark, chain)

@@ -2,7 +2,8 @@
 run_concurrently, plans/generations.py append_delta): commit threads
 inherit the caller's job group, an append, a searcher commit and a
 tiered merge stay within a fixed job budget, neither an append nor a
-commit infers a parquet schema, a committed
+commit infers a parquet schema, a build resumed after its tf commit
+does not tokenize, concurrent salt probes run one job, a committed
 stage reads back with no Spark job, and a chain whose manifests lack the
 recorded schema and doc-id max (as stores written before those keys
 existed) still opens, appends and ranks identically."""
@@ -42,6 +43,12 @@ QUERIES = ["the of and", "time new said", "revised"]
 APPEND_JOBS = 14
 COMMIT_JOBS = 4
 MERGE_JOBS = 10
+# the cold build of the base (html input, a filter column): the range
+# sample, the analyzed pass with its one aggregate, the tf, docs and stats
+# writes, the salt probe, and the segments, filters and dictionary commits
+# with their exchanges (25 with the id window, the Σ doc_len scan and the
+# docs join)
+BUILD_JOBS = 15
 
 
 @pytest.fixture(scope="module")
@@ -129,8 +136,9 @@ def chain(spark, workdir, rows):
             _, ids = _jobs(spark, f"dag-commit{g}", lambda: sm.commit(idx))
             out["commit_jobs"].append(ids)
         out["inferred"] = list(reads.paths)
-    _, out["merge_jobs"] = _jobs(spark, "dag-merge", lambda: merge_generations(
-        spark, idx, f"{workdir}/chain/merged", keep=1))
+    out["merged"], out["merge_jobs"] = _jobs(
+        spark, "dag-merge", lambda: merge_generations(
+            spark, idx, f"{workdir}/chain/merged", keep=1))
     out["ungrouped_before"] = before
     out["ungrouped_after"] = max(st.getJobIdsForGroup(None), default=-1)
     out["head"] = idx
@@ -162,10 +170,76 @@ def test_append_and_commit_job_budget(chain):
     assert chain["inferred"] == []
 
 
+def test_build_job_budget(chain):
+    """A cold build stays within the measured job count."""
+    assert len(chain["build_jobs"]) <= BUILD_JOBS, chain["build_jobs"]
+
+
 def test_merge_job_budget(chain):
     """The keep=1 merge of the two appended generations stays within the
-    measured job count."""
+    measured job count, and its stats rows are the head's."""
     assert len(chain["merge_jobs"]) <= MERGE_JOBS, chain["merge_jobs"]
+    merged = IndexStore(chain["merged"].store.path).stage_rows("stats")
+    assert merged == chain["head"]._stats_rows
+
+
+def test_build_resumed_after_tf_does_not_tokenize(spark, workdir, rows,
+                                                  monkeypatch):
+    """A build that crashed right after its tf commit (every other
+    manifest entry lost) resumes without a tokenize pass and commits the
+    stages of an uninterrupted build."""
+    from marc_solr_profiling_spark.plans.build import InvertedIndex
+
+    docs = spark.createDataFrame(rows[:BASE], WEB_PAGES_SCHEMA)
+    kw = dict(html_col="html", filter_cols=["lang"], n_salts=4)
+    full = build_index(spark, docs, f"{workdir}/resume/full", **kw)
+    path = f"{workdir}/resume/crashed"
+    build_index(spark, docs, path, **kw)
+    mpath = os.path.join(path, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["stages"] = {"tf": m["stages"]["tf"]}
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+
+    tokenized = []
+    real = InvertedIndex._tokenize
+    monkeypatch.setattr(InvertedIndex, "_tokenize", lambda self, *a, **k: (
+        tokenized.append(a), real(self, *a, **k))[1])
+    resumed = build_index(spark, docs, path, **kw)
+    assert tokenized == []
+    stages = resumed.store.lineage()["stages"]
+    assert set(stages) == set(full.store.lineage()["stages"])
+    for stage in stages:
+        got = resumed.store.read_stage(spark, stage).collect()
+        want = full.store.read_stage(spark, stage).collect()
+        assert (sorted(repr(tuple(r)) for r in got)
+                == sorted(repr(tuple(r)) for r in want)), stage
+    for q in QUERIES:
+        assert _topk(resumed, q) == _topk(full, q), q
+
+
+def test_concurrent_probes_run_one_job(spark, monkeypatch):
+    """More commit branches than cores asking an empty salt-probe memo
+    for the same width, with a short thread switch interval, run one
+    probe job between them."""
+    import sys
+
+    from marc_solr_profiling_spark.operators import routing
+    from marc_solr_profiling_spark.plans.build import run_concurrently
+
+    monkeypatch.setattr(routing, "_PROBE_KEYS", {})
+    n = 2 * (os.cpu_count() or 4)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        keys, ids = _jobs(spark, "dag-probe", lambda: run_concurrently(
+            spark, *[lambda: routing.probe_keys(spark, 13)] * n))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(keys) == n and all(k == keys[0] for k in keys)
+    assert len(keys[0]) == 13
+    assert len(ids) == 1, ids
 
 
 def _strip(head_path, old_root, new_root):

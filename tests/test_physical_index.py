@@ -8,12 +8,14 @@ import json
 import os
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from marc_solr_profiling_spark.corpus import generate_query_set, generate_web_pages
 from marc_solr_profiling_spark.operators.wand import wand_topk, wand_topk_batch
 from marc_solr_profiling_spark.oracle import OracleIndex
-from marc_solr_profiling_spark.plans.build import assign_doc_ids, build_index
+from marc_solr_profiling_spark.operators.postings import explode_packed_tf
+from marc_solr_profiling_spark.plans.build import build_index
 
 N_DOCS = 200
 
@@ -35,14 +37,6 @@ def index(spark, pages, tmp_path_factory):
 def oracle_index(pages):
     rows = pages.select("url", "text").collect()
     return OracleIndex([(r["url"], r["text"]) for r in rows], chain="text")
-
-
-def test_doc_ids_dense_and_url_ordered(spark, pages):
-    ids = assign_doc_ids(pages, partitions=4).select("doc_id", "url").collect()
-    by_id = sorted(ids, key=lambda r: r["doc_id"])
-    assert [r["doc_id"] for r in by_id] == list(range(len(ids)))
-    urls = [r["url"] for r in by_id]
-    assert urls == sorted(urls)  # docid order == url order (tie-break parity)
 
 
 def test_index_stats_match_oracle(index, oracle_index):
@@ -119,27 +113,42 @@ def test_resume_skips_completed_stages(spark, tmp_path_factory):
         assert m["rows"] > 0 and len(m["partitions"]) >= 1
 
 
-def test_strict_mode_matches_overlap(spark, tmp_path_factory):
-    """overlap_tf_write=True (cached tf, threaded commit concurrent with
-    the segment shuffle) must produce byte-identical stage contents to
-    the default strict snapshot->snapshot build."""
-    pages = generate_web_pages(spark, 80, seed=11, partitions=2)
-    root = tmp_path_factory.mktemp("idx_strict")
-    kw = dict(n_salts=4, block_size=32)
-    idx_a = build_index(
-        spark, pages, str(root / "a"), overlap_tf_write=True, **kw)
-    idx_b = build_index(spark, pages, str(root / "b"), **kw)
-    assert idx_a.n_docs == idx_b.n_docs
-    assert idx_a.avgdl == pytest.approx(idx_b.avgdl)
-    for stage, keys in [("segments", ["term", "salt", "block_id"]),
-                        ("docs", ["doc_id"]), ("dictionary", ["term"])]:
-        a = idx_a.store.read_stage(spark, stage)
-        b = idx_b.store.read_stage(spark, stage)
-        assert a.count() == b.count(), stage
-        assert a.exceptAll(b).count() == 0, stage
-    qa = [r["url"] for r in wand_topk(idx_a, "voyage", k=10).collect()]
-    qb = [r["url"] for r in wand_topk(idx_b, "voyage", k=10).collect()]
-    assert qa == qb
+def test_build_does_not_depend_on_partitioning(spark, tmp_path_factory):
+    """The same pages built over one range partition, over four, and
+    with their key-order ranks as ``id_col``: dense key-ordered doc ids
+    (docid order == url order, the oracle's tie-break) and identical
+    docs/segments/dictionary/filters/stats rows, tf postings and top-k."""
+    pages = generate_web_pages(spark, 80, seed=11, partitions=3)
+    ranked = pages.withColumn(
+        "rank", F.row_number().over(Window.orderBy("url")) - 1)
+    root = tmp_path_factory.mktemp("idx_parts")
+    kw = dict(n_salts=4, block_size=32, filter_cols=["lang"])
+    built = [
+        build_index(spark, pages, str(root / "p1"), partitions=1, **kw),
+        build_index(spark, pages, str(root / "p4"), partitions=4, **kw),
+        build_index(spark, ranked, str(root / "id"), id_col="rank", **kw),
+    ]
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    for idx in built:
+        by_id = sorted(idx.docs.select("doc_id", "url").collect())
+        assert [r["doc_id"] for r in by_id] == list(range(80))
+        urls = [r["url"] for r in by_id]
+        assert urls == sorted(urls)
+    want = built[0]
+    for idx in built[1:]:
+        for stage in ("docs", "segments", "dictionary", "filters", "stats"):
+            assert rows(idx.store.read_stage(spark, stage)) == rows(
+                want.store.read_stage(spark, stage)), stage
+        assert rows(explode_packed_tf(idx.store.read_stage(spark, "tf"))) \
+            == rows(explode_packed_tf(want.store.read_stage(spark, "tf")))
+        for q in ("voyage", "the of and"):
+            assert ([(r["url"], r["score"])
+                     for r in wand_topk(idx, q, k=10).collect()]
+                    == [(r["url"], r["score"])
+                        for r in wand_topk(want, q, k=10).collect()]), q
 
 
 def test_config_change_invalidates(spark, tmp_path_factory):

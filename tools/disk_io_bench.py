@@ -1,11 +1,8 @@
 """Real-I/O evidence run (round-5 VERDICT item 8): the 3.2M-doc index
 build + a 1% generational append with the index store on DISK
-(/tmp on the virtio root disk) vs the usual tmpfs (/dev/shm), crossed
-with the tf-write overlap knob (build_index(overlap_tf_write=)).
+(/tmp on the virtio root disk) vs the usual tmpfs (/dev/shm).
 
-Every prior physical-index number was tmpfs-only; the overlap knob's
-design claim (hide the tf parquet sink behind the segment shuffle) can
-only show up when the sink has real I/O latency. The corpus is read
+Every prior physical-index number was tmpfs-only. The corpus is read
 from tmpfs in all cells so the SINK is the only storage variable.
 
 Cells run in one interleaved rotation (each cell samples the same
@@ -69,14 +66,13 @@ def main() -> None:
 
     roots = {"tmpfs": "/dev/shm", "disk": "/tmp"}
 
-    def build_one(root: str, overlap: bool, keep: bool = False):
+    def build_one(root: str, keep: bool = False):
         idx_dir = tempfile.mkdtemp(prefix="dio_idx_", dir=roots[root])
         shutil.rmtree(idx_dir)
         t0 = time.perf_counter()
         idx = build_index(
             spark, docs, idx_dir, key_col="url", id_col="doc_id",
             chain="text", n_salts=64, block_size=128, html_col="html",
-            overlap_tf_write=overlap,
         )
         wall = time.perf_counter() - t0
         if not keep:
@@ -85,22 +81,22 @@ def main() -> None:
         return wall, idx
 
     # warmup (JVM/codegen/worker pool), discarded
-    build_one("tmpfs", False)
+    build_one("tmpfs")
 
-    cells = [(r, o) for r in ("tmpfs", "disk") for o in (False, True)]
-    walls: dict[str, list[float]] = {f"{r}_{o}": [] for r, o in cells}
+    cells = list(roots)
+    walls: dict[str, list[float]] = {r: [] for r in cells}
     for i in range(reps):
         order = cells if i % 2 == 0 else list(reversed(cells))
-        for r, o in order:
-            w, _ = build_one(r, o)
-            walls[f"{r}_{o}"].append(w)
-            print(f"build store={r} overlap={o}: {w:.1f}s "
+        for r in order:
+            w, _ = build_one(r)
+            walls[r].append(w)
+            print(f"build store={r}: {w:.1f}s "
                   f"({n_docs / w:.0f} docs/s)", flush=True)
 
     # generational append on a kept store, both storage roots
     appends: dict[str, float] = {}
     for r in ("tmpfs", "disk"):
-        w, idx = build_one(r, False, keep=True)
+        w, idx = build_one(r, keep=True)
         gen_dir = tempfile.mkdtemp(prefix="dio_gen_", dir=roots[r])
         shutil.rmtree(gen_dir)
         t0 = time.perf_counter()
