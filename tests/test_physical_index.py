@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import Window
@@ -113,42 +114,82 @@ def test_resume_skips_completed_stages(spark, tmp_path_factory):
         assert m["rows"] > 0 and len(m["partitions"]) >= 1
 
 
-def test_build_does_not_depend_on_partitioning(spark, tmp_path_factory):
-    """The same pages built over one range partition, over four, and
-    with their key-order ranks as ``id_col``: dense key-ordered doc ids
-    (docid order == url order, the oracle's tie-break) and identical
-    docs/segments/dictionary/filters/stats rows, tf postings and top-k."""
+@pytest.fixture(scope="module")
+def partition_builds(spark, tmp_path_factory):
+    """The same 80 pages built over one range partition, over four, and
+    with their key-order ranks as ``id_col``."""
     pages = generate_web_pages(spark, 80, seed=11, partitions=3)
     ranked = pages.withColumn(
         "rank", F.row_number().over(Window.orderBy("url")) - 1)
     root = tmp_path_factory.mktemp("idx_parts")
     kw = dict(n_salts=4, block_size=32, filter_cols=["lang"])
-    built = [
+    return [
         build_index(spark, pages, str(root / "p1"), partitions=1, **kw),
         build_index(spark, pages, str(root / "p4"), partitions=4, **kw),
         build_index(spark, ranked, str(root / "id"), id_col="rank", **kw),
     ]
 
-    def rows(df):
-        return sorted(repr(tuple(r)) for r in df.collect())
 
-    for idx in built:
+def _rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_doc_ids_dense_and_url_ordered(partition_builds):
+    # ids from per-partition ordinal shifts must be dense and follow url
+    # order however the pages were partitioned
+    for idx in partition_builds:
         by_id = sorted(idx.docs.select("doc_id", "url").collect())
         assert [r["doc_id"] for r in by_id] == list(range(80))
         urls = [r["url"] for r in by_id]
-        assert urls == sorted(urls)
-    want = built[0]
-    for idx in built[1:]:
+        assert urls == sorted(urls)  # docid order == url order (tie-break parity)
+
+
+def test_build_does_not_depend_on_partitioning(spark, partition_builds):
+    """Identical docs/segments/dictionary/filters/stats rows, tf postings
+    and top-k whatever the range partitioning or id source."""
+    want = partition_builds[0]
+    for idx in partition_builds[1:]:
         for stage in ("docs", "segments", "dictionary", "filters", "stats"):
-            assert rows(idx.store.read_stage(spark, stage)) == rows(
+            assert _rows(idx.store.read_stage(spark, stage)) == _rows(
                 want.store.read_stage(spark, stage)), stage
-        assert rows(explode_packed_tf(idx.store.read_stage(spark, "tf"))) \
-            == rows(explode_packed_tf(want.store.read_stage(spark, "tf")))
+        assert _rows(explode_packed_tf(idx.store.read_stage(spark, "tf"))) \
+            == _rows(explode_packed_tf(want.store.read_stage(spark, "tf")))
         for q in ("voyage", "the of and"):
             assert ([(r["url"], r["score"])
                      for r in wand_topk(idx, q, k=10).collect()]
                     == [(r["url"], r["score"])
                         for r in wand_topk(want, q, k=10).collect()]), q
+
+
+def test_strict_mode_matches_overlap(spark, tmp_path_factory):
+    """The overlapped build (every stage committed concurrently from the
+    cached analyzed frame) must produce byte-identical stage contents to
+    a strict snapshot->snapshot build, where tf is committed first and
+    docs/stats/segments/dictionary are built from the committed tf."""
+    pages = generate_web_pages(spark, 80, seed=11, partitions=2)
+    root = tmp_path_factory.mktemp("idx_strict")
+    kw = dict(n_salts=4, block_size=32)
+    idx_a = build_index(spark, pages, str(root / "a"), **kw)
+    strict = str(root / "b")
+    build_index(spark, pages, strict, **kw)
+    # keep only the tf snapshot; the rebuild reads every later stage
+    # back from it instead of from the cached analyzed frame
+    with open(os.path.join(strict, "manifest.json")) as f:
+        m = json.load(f)
+    for stage in ("docs", "stats", "segments", "dictionary"):
+        del m["stages"][stage]
+        shutil.rmtree(os.path.join(strict, stage))
+    with open(os.path.join(strict, "manifest.json"), "w") as f:
+        json.dump(m, f)
+    idx_b = build_index(spark, pages, strict, **kw)
+    assert idx_a.n_docs == idx_b.n_docs
+    assert idx_a.avgdl == pytest.approx(idx_b.avgdl)
+    for stage in ("segments", "docs", "dictionary", "stats"):
+        assert _rows(idx_a.store.read_stage(spark, stage)) == _rows(
+            idx_b.store.read_stage(spark, stage)), stage
+    qa = [r["url"] for r in wand_topk(idx_a, "voyage", k=10).collect()]
+    qb = [r["url"] for r in wand_topk(idx_b, "voyage", k=10).collect()]
+    assert qa == qb
 
 
 def test_config_change_invalidates(spark, tmp_path_factory):
